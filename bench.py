@@ -242,9 +242,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     loads: dict[str, list[float]] = {}
-    noops: dict[str, float] = {}
+    noops: dict[str, float | None] = {}
 
-    def time_rows(names: list[str]) -> None:
+    def time_rows(names: list[str], noop: bool = True) -> None:
         for name in names:
             if name not in qs:
                 continue
@@ -265,24 +265,28 @@ def main() -> None:
             # timing — full materialization of every column — recorded
             # in BENCH_DETAIL.json only (never the headline line). A row
             # where noop >> count is being count-pruned out of the
-            # count-based measurement.
-            nruns = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                nruns.append(time.perf_counter() - t0)
-            noops[name] = round(min(nruns), 3)
+            # count-based measurement. Streaming and state-surgery rows
+            # (noop=False) get None, not applicable: their cost is the
+            # query lifecycle, which count() does not prune.
+            noops[name] = None
+            if noop:
+                nruns = []
+                for _ in range(2):
+                    t0 = time.perf_counter()
+                    qs[name](spark, sf_dir).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                    nruns.append(time.perf_counter() - t0)
+                noops[name] = round(min(nruns), 3)
             print(
                 f"# {name}: min={timings[name]:.3f}s max={max(runs):.3f}s"
-                f" noop={noops[name]:.3f}s ({n} rows) load={loads[name]}",
+                f" noop={noops[name]}s ({n} rows) load={loads[name]}",
                 file=sys.stderr,
             )
 
     time_rows(FIXED_COST)
     _drain_barrier()
-    time_rows(RESTART_FLOOR)
+    time_rows(RESTART_FLOOR, noop=False)
 
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -301,7 +305,8 @@ def main() -> None:
                 "spread": spreads,
                 "load": loads,
                 # min-of-2 noop-sink seconds per row (guide §1.4): full
-                # materialization, immune to count() column pruning.
+                # materialization, immune to count() column pruning;
+                # null (not applicable) for the RESTART_FLOOR rows.
                 # Detail-file only — the headline series is unchanged.
                 "noop": noops,
                 "phase_order": {"fixed_cost": FIXED_COST,

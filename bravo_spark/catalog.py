@@ -72,6 +72,8 @@ _SIZE_SUFFIX = {
     "k": 1 << 10, "kb": 1 << 10,
     "m": 1 << 20, "mb": 1 << 20,
     "g": 1 << 30, "gb": 1 << 30,
+    "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
 }
 
 
@@ -93,17 +95,20 @@ def estimated_scan_splits(spark: SparkSession, path: str) -> int | None:
     algorithm: maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     totalBytes / minPartitionNum)); files sliced into maxSplitBytes
     ranges; ranges greedily packed largest-first with openCost padding.
-    Returns None when ``path`` is not locally listable (caller falls back
-    to the RDD probe)."""
+    Returns None when ``path`` is not locally listable or holds a
+    subdirectory (a partitioned or nested layout this flat listing does
+    not replay); the caller then falls back to the RDD probe."""
     try:
         if os.path.isfile(path):
             sizes = [os.path.getsize(path)]
         else:
-            sizes = [
-                e.stat().st_size
-                for e in os.scandir(path)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            ]
+            entries = [e for e in os.scandir(path)
+                       if not e.name.startswith(("_", "."))]
+            if any(e.is_dir() for e in entries):
+                return None
+            sizes = [e.stat().st_size for e in entries if e.is_file()]
+        # Spark's file index drops zero-byte files before the split math
+        sizes = [s for s in sizes if s]
     except OSError:
         return None
     if not sizes:
@@ -126,7 +131,7 @@ def estimated_scan_splits(spark: SparkSession, path: str) -> int | None:
     for s in sizes:
         whole, rest = divmod(s, max_split)
         chunks.extend([max_split] * whole)
-        if rest or not whole:
+        if rest:
             chunks.append(rest)
     parts, cur = 1, 0
     for c in sorted(chunks, reverse=True):

@@ -42,6 +42,7 @@ used here — the framing is the surface under test.
 
 from __future__ import annotations
 
+import io
 import struct
 import zlib
 from typing import Iterable, Iterator
@@ -319,13 +320,17 @@ def parse_zip(data: bytes) -> list[tuple[str, bytes]]:
 
 
 def write_zip(entries: Iterable[tuple[str, bytes]], *,
-              method: str = "deflate", level: int = 6) -> bytes:
+              method: str = "deflate", level: int = 6,
+              out=None) -> bytes | None:
     """Serialize ``(name, payload)`` pairs into one deterministic ZIP
     archive: fixed DOS stamp, UTF-8 name flag only, no extra fields or
     comments, members in input order. ``method`` is ``"deflate"``
     (training text compresses; the default) or ``"stored"``
     (byte-transparent). Refuses by name on empty/duplicate names and on
-    anything that would need zip64."""
+    anything that would need zip64. With a binary file-like ``out``,
+    members stream into it as they are encoded (only the central
+    directory is held) and None is returned; otherwise the archive is
+    returned as bytes."""
     if method == "deflate":
         m = _DEFLATED
     elif method == "stored":
@@ -333,7 +338,7 @@ def write_zip(entries: Iterable[tuple[str, bytes]], *,
     else:
         raise ZipError(f"unsupported write method {method!r} "
                        "(stored/deflate)")
-    locals_: list[bytes] = []
+    sink = io.BytesIO() if out is None else out
     centrals: list[bytes] = []
     offset = 0
     seen: set[str] = set()
@@ -374,13 +379,13 @@ def write_zip(entries: Iterable[tuple[str, bytes]], *,
         crc = zlib.crc32(data)
         common = struct.pack("<HHHHIII", _FLAG_UTF8, m, _DOS_TIME,
                              _DOS_DATE, crc, csize, usize)
-        locals_.append(_LOC_SIG + struct.pack("<H", 20) + common
-                       + struct.pack("<HH", len(raw_name), 0)
-                       + raw_name + body)
+        local = (_LOC_SIG + struct.pack("<H", 20) + common
+                 + struct.pack("<HH", len(raw_name), 0) + raw_name + body)
+        sink.write(local)
         centrals.append(_CEN_SIG + struct.pack("<HH", 20, 20) + common
                         + struct.pack("<HHHHHII", len(raw_name), 0, 0,
                                       0, 0, 0, offset) + raw_name)
-        offset += len(locals_[-1])
+        offset += len(local)
         if offset >= _MAX_U32:
             raise ZipError("archive exceeds 4 GiB — zip64 territory; "
                            "repartition the writer's input")
@@ -388,4 +393,5 @@ def write_zip(entries: Iterable[tuple[str, bytes]], *,
     cd = b"".join(centrals)
     eocd = _EOCD_SIG + struct.pack("<HHHHIIH", 0, 0, n, n, len(cd),
                                    offset, 0)
-    return b"".join(locals_) + cd + eocd
+    sink.write(cd + eocd)
+    return sink.getvalue() if out is None else None

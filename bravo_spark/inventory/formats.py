@@ -387,6 +387,21 @@ _WARC_INGEST_ORACLE = (
 )
 
 
+def _write_fixture_shards(docs, out, name_fmt, write, record) -> None:
+    """Pack each ``docs`` partition into ONE shard ``write([record(row),
+    ...])`` under ``out`` through sources/shards.py (executor-side —
+    never a driver loop), then mark the directory complete."""
+    from bravo_spark.sources.shards import write_shards
+
+    def encode(rows, f):
+        recs = [record(r) for r in rows]
+        f.write(write(recs))
+        return len(recs)
+
+    write_shards(docs, out, name_fmt, encode)
+    open(os.path.join(out, "_SUCCESS"), "w").close()
+
+
 def _warc_fixture(spark, sf_dir) -> str:
     """Write-once-per-process WET-style archive fixture: each
     ``documents`` partition packed into ONE .warc.gz (executor-side —
@@ -408,31 +423,12 @@ def _warc_fixture(spark, sf_dir) -> str:
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
-        def _write(pid, rows):
-            recs = [
-                (
-                    {
-                        "WARC-Type": "conversion",
-                        "WARC-Target-URI": f"doc://{r.doc_id}",
-                        "WARC-Date": "2026-01-01T00:00:00Z",
-                    },
-                    r.text.encode("utf-8"),
-                )
-                for r in rows
-            ]
-            if recs:
-                with open(os.path.join(out, f"shard_{pid:05d}.warc.gz"),
-                          "wb") as f:
-                    f.write(write_warc(recs))
-            return iter(())
-
-        # fixture-only RDD use: partition-indexed shard names need
-        # mapPartitionsWithIndex; production archives arrive on shared
-        # storage, they are not written by this query
-        docs.rdd.mapPartitionsWithIndex(_write).count()
-        open(marker, "w").close()
+        _write_fixture_shards(docs, out, "shard_{:05d}.warc.gz", write_warc,
+                              lambda r: ({
+                                  "WARC-Type": "conversion",
+                                  "WARC-Target-URI": f"doc://{r['doc_id']}",
+                                  "WARC-Date": "2026-01-01T00:00:00Z",
+                              }, r["text"].encode("utf-8")))
     return out
 
 
@@ -665,29 +661,14 @@ def _warc_response_fixture(spark, sf_dir) -> str:
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
-        def _write(pid, rows):
-            recs = [
-                (
-                    {
-                        "WARC-Type": "response",
-                        "WARC-Target-URI": f"doc://{r.doc_id}",
-                        "WARC-Date": "2026-01-01T00:00:00Z",
-                        "Content-Type": "application/http; msgtype=response",
-                    },
-                    _http_response_bytes(int(r.doc_id), r.text),
-                )
-                for r in rows
-            ]
-            if recs:
-                with open(os.path.join(out, f"shard_{pid:05d}.warc.gz"),
-                          "wb") as f:
-                    f.write(write_warc(recs))
-            return iter(())
-
-        docs.rdd.mapPartitionsWithIndex(_write).count()
-        open(marker, "w").close()
+        _write_fixture_shards(docs, out, "shard_{:05d}.warc.gz", write_warc,
+                              lambda r: ({
+                                  "WARC-Type": "response",
+                                  "WARC-Target-URI": f"doc://{r['doc_id']}",
+                                  "WARC-Date": "2026-01-01T00:00:00Z",
+                                  "Content-Type":
+                                      "application/http; msgtype=response",
+                              }, _http_response_bytes(r["doc_id"], r["text"])))
     return out
 
 
@@ -812,31 +793,16 @@ def _tfrecord_fixture(spark, sf_dir) -> str:
     out = scratch_path(f"tfrec_{tag}")
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
+        from bravo_spark.codecs.tfrecord import encode_example, write_tfrecords
+
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
-        def _write(pid, rows):
-            from bravo_spark.codecs.tfrecord import (
-                encode_example,
-                write_tfrecords,
-            )
-
-            recs = [
-                encode_example({
-                    "doc_id": int(r.doc_id),
-                    "text": r.text.encode("utf-8"),
-                    "n_bytes": len(r.text.encode("utf-8")),
-                })
-                for r in rows
-            ]
-            if recs:
-                with open(os.path.join(out, f"shard_{pid:05d}.tfrecord"),
-                          "wb") as f:
-                    f.write(write_tfrecords(recs))
-            return iter(())
-
-        docs.rdd.mapPartitionsWithIndex(_write).count()
-        open(marker, "w").close()
+        _write_fixture_shards(docs, out, "shard_{:05d}.tfrecord",
+                              write_tfrecords,
+                              lambda r: encode_example({
+                                  "doc_id": r["doc_id"],
+                                  "text": r["text"].encode("utf-8"),
+                                  "n_bytes": len(r["text"].encode("utf-8")),
+                              }))
     return out
 
 

@@ -20,314 +20,36 @@ ORACLES: dict[str, str] = {}
 # Everything else stays registered and is verified by the local mirror
 # (tools/check_oracle.py); test_registry pins this list's integrity.
 GATE_PRIORITY = [
-    # §2.3 projections: p1/p4/p5 rotated out in r8 after SEVEN driver-green
-    # rounds each (r1-r7) — their decode paths stay driver-covered by the
-    # retained snapshot/checkpoint roundtrips and the DataSource scans,
-    # and rocksdb_state_read (in) re-exercises the SST value path.
-    # §2 filters (f2/f3 rotated out in r6 after 5 driver-green rounds —
-    # the F-path stays driver-covered by snapshot_state_filter's pushdown
-    # and the DataSource scan contracts below)
-    # §2.1/2.2 savepoint lifecycle S1-S9 + E1-E2 (window_state_min rotated
-    # out in r8 after 7 driver-green rounds; P7 shares the P1 decode path
-    # plus pytest-pinned TimeWindow bounds). r13 rotation: e1_keygroup /
-    # e2_operator_index (11 driver-green rounds r1-r12) and
-    # snapshot_state_filter (11 rounds) rotated out — murmur keygroup
-    # parity stays golden-pinned in test_codecs and runs inside every
-    # retained roundtrip; the pushdown stays plan-pinned in
-    # test_datasource/test_plans. In their slots: checkpoint_rewind (the
-    # state-surgery rewind path a real user hits daily),
-    # streaming_static_join (stream-static broadcast enrichment), and
-    # retention_cohorts (cohort analytics) — first driver checks.
-    # r16 rotation: the r13 wave (checkpoint_rewind, streaming_static_join,
-    # retention_cohorts, per_key_trend, kmeans_lloyd_centroids, the
-    # text-cleaning tail, the embedding pair, approx_sketch_accuracy,
-    # funnel_conversion) rotated out after 3 consecutive driver-green
-    # rounds (r13-r15) along with the two 9-green-plus spine rows whose
-    # slots the r15 net-new registrations take (pair-with-staging rule);
-    # rewind/static-join/surgery paths stay pytest-restart-proven and the
-    # retained rocksdb/join/schema/nested surgery rows keep the family in
-    # the gate. In: the remaining r2 relational wave (12 re-proof rows,
-    # last driver-proven r2, 14 rounds ago) + the three r15 net-new INs.
-    # r18 rotation (the r17-staged 16-swap flip, executed as r18's first
-    # commit; all 16 OUTs confirmed green in CORRECTNESS_r17): the r15
-    # wave rotated out after 3 consecutive driver-green rounds (r15-r17)
-    # — its relational/join/window/surgery paths stay pytest/plan-pinned
-    # and mirror-verified. In their slots: periodic re-proof of the two
-    # r3-last rows (p6_map_values, f4_named_subset) and eight r4-last
-    # rows from the early dedup/text/decontamination and PQ/recall waves,
-    # plus first driver checks for the six r17 net-new registrations
-    # (pair-with-staging rule): warc_stream_ingest, avro_stream_ingest,
-    # ngram_lm_persist_score, multimodal_exif_redact, ann_ivf_index_stats,
-    # dedup_url_canonical.
-    # r19 rotation (the r18-staged 15-swap flip, executed as r19's first
-    # commit; all 15 OUTs confirmed green in CORRECTNESS_r18): the r16
-    # wave rotated out after 3 consecutive driver-green rounds (r16-r18)
-    # — its relational/window/streaming-diff/chunking/semantic-dedup
-    # paths stay pytest/plan-pinned and mirror-verified. In their slots:
-    # periodic re-proof, oldest last driver check first — the four
-    # r4-last streaming/sessionization rows, ten r5-last conformance
-    # rows (F2/F3, P2/P3, relational/dedup/ANN baselines), the deferred
-    # text_quality re-proof, and the r18 net-new warc_html_extract
-    # (pair-with-staging rule).
     "snapshot_roundtrip", "checkpoint_roundtrip",
     "f2_isin_filter", "f3_anti_filter", "a2_count_sum_per_key",
-    # §2.4-2.8 relational core: a1/last_write_wins rotated out in r8 after
-    # 7 driver-green rounds — grouped sort-reduce stays driver-covered by
-    # the savepoint writer inside snapshot_roundtrip, window functions by
-    # sessionize-family mirror rows + tpch_q2 (in, window-decorrelated)
-    # r10 rotation: the DataSource contracts rotated out after 4
-    # driver-green rounds (r6-r9) — pushFilters absorption and the Arrow
-    # batch path stay plan-pinned in test_datasource/test_plans, and the
-    # underlying scan/write code runs inside the retained roundtrips.
-    # Spark state-store read/rewrite surgery (the bravo workflow on Spark's
-    # own checkpoints). r11 rotation: rocksdb_state_read and
-    # checkpoint_write_roundtrip rotated out after 3 driver-green rounds
-    # (r8-r10) — the SST/changelog read path stays driver-covered by
-    # rocksdb_state_rewrite (which reads before surgery) and the
-    # checkpoint write loop by checkpoint_roundtrip + pytest.
-    # r13 rotation: spark_state_read / spark_state_rewrite rotated out
-    # after 10 driver-green rounds (r2-r12; read is rewrite's first
-    # phase) — rocksdb_state_rewrite keeps state-store surgery in the
-    # gate and checkpoint_rewind (in, above) covers the same family's
-    # rewind path; restart-continuation stays pytest-proven. In their
-    # slots: per_key_trend (grouped linear-regression slopes) and
-    # kmeans_lloyd_centroids (the IVF clustering fixed-point) — first
-    # driver checks.
     "sort_topk", "join_enrich", "rocksdb_state_rewrite",
-    # r11 rotation: the format/layout contracts' first driver check — the
-    # json/csv/orc source roundtrips, the co-located bucketed join, and
-    # partition pruning on a hive-layout write. r14 rotation: the three
-    # source roundtrips rotated out after 3 driver-green rounds (r11-r13,
-    # the eligibility precedent) — scan/write paths stay pytest-pinned in
-    # test_formats. In their slots, the same family's newer formats'
-    # first driver check: JSON-variant extraction, XML roundtrip,
-    # binaryFile ingest.
     "phrase_search_index", "avro_source_roundtrip", "warc_ingest",
-    # r15 rotation: bucketed_join / partitioned_prune_scan rotated out
-    # after 4 driver-green rounds (r11-r14) — bucketed co-location and
-    # hive-layout pruning stay plan-pinned in test_plans/test_formats. In
-    # their slots (the pair-with-staging rule for the r14 net-new
-    # registrations): join_state_rewrite (stream-stream join named-store
-    # surgery, restart-proven) and state_schema_migration (schema-
-    # evolution surgery, the X2 analog on Spark's own backend).
-    # r18: join_state_rewrite / state_schema_migration rotated out
-    # (r15-r17 green; both surgery paths stay restart-proven in
-    # test_spark_state/test_rocksdb_state). In: the r17 IVF-maintenance
-    # and URL-canonicalization registrations, first driver checks.
     "ann_ivf_index_stats", "dedup_url_canonical",
-    # reference-fidelity conformance analogs (r5 rotation). r8: pojo/kryo
-    # value rows, the compressed-snapshot variant, and custom_reader_expand
-    # rotated out after three driver-green rounds (r5-r7) — kryo_custom_class
-    # retains the full Kryo path incl. registrations, snapshot_roundtrip
-    # the uncompressed sibling of the same section codec, and the UDTF
-    # expand shape stays pytest-pinned in test_custom_readers. r10:
-    # ttl_state_roundtrip rotated out after 5 driver-green rounds (r5-r9);
-    # the TTL unwrap/write-back codecs stay golden-tested in
-    # test_codecs/test_staterows/test_vectorized. r12: type_change_migration
-    # / operator_state_roundtrip / file_sink_rewind rotated out after 6
-    # driver-green rounds (r5-r11) — kryo_custom_class keeps the codec
-    # path, snapshot_roundtrip the savepoint lifecycle, and the rewind /
-    # operator-state paths stay pytest-restart-proven. In their slots:
-    # the r10 corpus-maintenance additions' first driver check
-    # (merge-upsert CDC, schema-evolution union, float-WAV features).
-    # r14: kryo_custom_class rotated out after 6 driver-green rounds
-    # (r8-r13) — the full Kryo path stays JVM-cross-validated in
-    # test_kryo. In its slot: nested_state_rewrite (r13-registered
-    # nested-UnsafeRow surgery proof — array state patched inside the
-    # nested struct, real-query restart, SQL oracle), first driver check.
-    # r15 rotation: the r12 wave reached 3 consecutive driver-green
-    # rounds (r12-r14) and rotated out; with the never-checked pool at
-    # zero, INs are periodic re-proof rows, oldest last driver check
-    # first — the five r1-only rows (last proven r1, 14 rounds ago) and
-    # nine of the r2 relational wave (last proven r2). Rotated out here:
-    # corpus_merge_upsert / schema_evolution_merge / audio_float_features
-    # (CDC merge + union-evolution + float-WAV paths stay pytest-pinned).
-    # r18: text_fingerprint / text_token_count / anti_join rotated out
-    # (r15-r17 green; fingerprint+token paths stay benched and
-    # mirror-verified, anti-join plan-pinned in test_plans). In: the
-    # lang-id re-proof (last r4), the F4 named-subset filter re-proof
-    # (last r3), and pipeline_clean_corpus — its contract CHANGED this
-    # round (the composed url_dup stage per the r17 verdict's task 3),
-    # and a changed-contract row re-proves in the SAME round's gate, so
-    # it takes the slot text_quality was staged for; text_quality (last
-    # r4, its rule set runs INSIDE the composed pipeline's quality
-    # stage) moves to the r19 staging below.
     "text_lang_id",
     "pipeline_clean_corpus",
     "f4_named_subset", "token_budget_pack",
-    # r19: dedup_semantic_clusters rotated out (r16-r18 green; SemDeDup
-    # stays mirror-verified). In: dedup_exact — the exact-hash dedup
-    # baseline every LSH/semantic variant rescores against, last
-    # driver-proven r5.
-    # dedup family (dedup_exact rotated out in r6 after 5 driver-green
-    # rounds; dedup_minhash_lsh rotated out in r8 after 7 — its band-bucket
-    # equi-join survives inside dedup_lsh_quality_eval and dedup_clusters'
-    # pair input; embedding_cosine is the exact baseline of embedding_lsh).
-    # r12: dedup_embedding_lsh / dedup_clusters rotated out after 8
-    # driver-green rounds (r3-r10 + r11) — dedup_ngram_jaccard keeps the
-    # dedup spine (inverted index + self-join) in the gate. In their
-    # slots: audio_resample_features (integer polyphase decimate) and
-    # snapshot_rescale — the last reference use-case (README.md:44)
-    # without driver proof (re-key + keygroup re-shard, api.py:251).
     "dedup_exact",
-    # r15: audio_resample_features / snapshot_rescale rotated out
-    # (r12-r14 green; polyphase decimate stays golden-tested in
-    # test_audio, re-key/re-shard in test_api). In: r2 re-proof rows.
-    # r18: cube_agg / distinct_agg rotated out (r15-r17 green; both
-    # stay mirror-verified). In: the r4-last PQ/sketch rescore rows —
-    # their recall evals rotated out in r17, so these return the
-    # PQ/ADC and Hamming-rank contracts to the gate.
     "ann_pq_topk",
     "ann_sketch_recall_eval",
-    # r10 rotation: the r6 dedup additions (dedup_lines,
-    # dedup_substring_clean, dedup_keep_corpus, dedup_lsh_quality_eval)
-    # rotated out after 4 driver-green rounds (r6-r9) — their inverted-index
-    # and cluster-contraction paths stay exercised by the retained
-    # ngram row and the mirror. r12: pipeline_clean_corpus rotated out
-    # after 6 driver-green rounds (r6-r11); its composed stages are
-    # individually retained or mirror-verified. In its slot: the r10
-    # per-source quality calibration (grouped distribution stats).
-    # r15: quality_calibration_by_source rotated out (r12-r14 green;
-    # decile calibration stays mirror-verified). In: the event-time
-    # range join, last driver-proven r2.
-    # r18: range_join_clicks_before_purchase rotated out (r15-r17
-    # green; the event-time range join stays mirror-verified). In: the
-    # r17 column-level redact_exif registration incl. its quarantine
-    # contract, first driver check.
     "multimodal_exif_redact",
-    # ANN + retrieval family (ann_cosine_topk rotated out in r6 — it is
-    # the exact baseline the retained lsh/ivf rows rescore against;
-    # ann_sketch_topk rotated out in r8 after 7 driver-green rounds, its
-    # Hamming-rank path recall-gated in pytest; ann_knn_label_eval
-    # rotated out in r11 after 3 driver-green rounds r8-r10 — its exact
-    # top-k core is ann_lsh/ivf's rescore path). r12: ann_lsh_bucket /
-    # ann_ivf_topk / text_bm25_topk rotated out after 9 driver-green
-    # rounds (r3-r11) — the recall evals keep the rescore contract
-    # mirror-verified. In their slots: the r10 media additions' first
-    # driver check (bilinear resize, phash dedup, audio fingerprint).
-    # r15: the r12 media wave (bilinear resize, phash dedup, audio
-    # fingerprint) rotated out after r12-r14 green — kernels stay
-    # golden-tested in test_multimodal/test_phash_grid/test_audio. In:
-    # r2 re-proof rows (full outer join, exact percentiles, semi join).
-    # r18: full_outer_join / percentiles / semi_join rotated out
-    # (r15-r17 green; all three stay mirror-verified). In: the
-    # substring-dedup re-proof (last r4) and the r17 streaming halves
-    # of the WARC/Avro ingest surfaces, first driver checks.
     "dedup_substring", "warc_stream_ingest",
     "avro_stream_ingest",
-    # streaming (plain window_counts rotated out in r6 after 5 driver-green
-    # rounds — the retained watermarked variant runs the same micro-batch
-    # window path plus bounded state; static_join/dedup/session/ss-join
-    # rotated out in r5). r12: streaming_stateful_counts rotated out
-    # after 9 driver-green rounds (r3-r11) — the watermarked window row
-    # keeps Structured Streaming in the gate. In its slot: corpus
-    # drift-TV (128-bit integer total-variation between corpus snapshots).
-    # r19: spark_state_diff rotated out (r16-r18 green; the cross-version
-    # state delta stays restart-proven in test_spark_state). In: the
-    # r4-last streaming exactly-once dedup lifecycle.
     "streaming_dedup_counts",
-    # r15: corpus_drift_tv rotated out (r12-r14 green; 128-bit TV math
-    # stays pinned in test_drift_tv). In: window analytics, last r2.
-    # r18: window_analytics rotated out (r15-r17 green; window
-    # functions stay mirror-verified + plan-pinned). In: the r17
-    # persisted-LM lifecycle registration, first driver check.
     "ngram_lm_persist_score",
-    # TPC-H: headline q3 + the most distinctive long-tail plans. r11
-    # rotation: the r8 wave q2/q19/q20/q22 rotated out after 3
-    # driver-green rounds (r8-r10); q17 (correlated avg-quantity
-    # threshold — the last never-driver-checked TPC-H row) rotated in.
-    # r12: q6/q9/q21 rotated out after 7 driver-green rounds (r5-r11) —
-    # q3 + the r10/r11 TPC-H waves keep the TPC-H spine in the gate. In
-    # their slots: pagerank_centrality (Pregel-shaped fixed-point),
-    # savepoint_diff (cross-savepoint state delta), and the r11-hardened
-    # heavy_hitters_two_phase (vectorized SpaceSaving + coverage guard).
-    # r14: tpch_q17_small_qty rotated out after 3 driver-green rounds
-    # (r11-r13) — q3 keeps the TPC-H spine in the gate. In its slot:
-    # text_length_histogram (binned length distribution), first driver
-    # check.
     "tpch_q3",
-    # r15: pagerank_centrality / savepoint_diff / heavy_hitters_two_phase
-    # rotated out (r12-r14 green; the Pregel fixed-point, state diff, and
-    # SpaceSaving coverage guard stay pytest/mirror-verified). In: three
-    # of the five r1-only rows — driver-proven exactly once, 14 rounds
-    # ago (dedup_embedding_cosine is the exact-cosine dedup baseline,
-    # minhash signature extraction, and the multimodal metadata plumbing).
-    # r18: dedup_embedding_cosine / dedup_minhash_signatures /
-    # multimodal_meta rotated out (re-proven r15-r17). In: simhash +
-    # incremental-batch dedup re-proofs (last r4) and the P6
-    # map-values projection re-proof (last r3).
     "dedup_simhash", "dedup_incremental_batch",
     "p6_map_values",
     "text_hash_features_classify",
-    # r10 rotation: the remaining never-driver-checked TPC-H tail — q7
-    # dual-role nation join, q8 market share, q11 grouped threshold, q12
-    # shipmode buckets, q13 outer-join custdist, q15 window-max revenue
-    # view, q16 distinct-count with NOT IN. (The r5 text/sampling wave —
-    # text_rarity, embedding_quantize, shard_shuffle, bpe_pair_counts,
-    # source_mixture_report — rotated out after 4 driver-green rounds
-    # r6-r9.) r13 rotation: that whole r10 TPC-H wave rotated out after
-    # 3 driver-green rounds (r10-r12, the r11 eligibility precedent) —
-    # tpch_q3 + tpch_q17 keep the TPC-H spine in the gate. In their
-    # slots, first driver checks for: approx_sketch_accuracy (HLL/KLL
-    # sketch error vs exact), the text-cleaning tail (quality_filter
-    # pipeline, NFKC-style normalize, PII redaction, word-frequency
-    # top-k), and the embedding family (doc↔embedding join, norms).
-    # r19: the remaining r16-wave relational re-proof block rotated out
-    # (r16-r18 green; JSON extraction, pivot, scalar subqueries, outer
-    # join, gap-fill, and the TPC-H q4/q5 shapes all stay
-    # mirror-verified). In their slots: the r4-last sessionization /
-    # micro-batch lifecycles (window sessionize, session_window gap
-    # merge, watermarked stream-stream interval join), the r5-last
-    # F/P conformance rows, the exact-cosine ANN baseline, and the
-    # deferred text_quality re-proof (its rule set runs inside the
-    # composed pipeline's quality stage, gated above).
     "sessionize", "p2_value_only", "p3_list_flatten",
     "ann_cosine_topk", "streaming_session_windows",
     "streaming_stream_stream_join",
     "text_quality",
-    # r11 rotation: the sampling family's first driver check — salted
-    # hash sampling, per-stratum exact rates, deterministic train/val
-    # hashing, temperature-weighted domain mixture, group-atomic
-    # leakage-safe splits, plus the funnel sessionization plan. (The r8
-    # wave multimodal_pixel_resize / text_dup_ngram_stats /
-    # text_langid_accuracy / source_mixture_temperature / sequence_pack
-    # rotated out after 3 driver-green rounds r8-r10.)
-    # r14: the r11 sampling wave (hash_sample, stratified_sample,
-    # train_val_split, domain_mixture_sample, leakage_safe_split) rotated
-    # out after 3 driver-green rounds (r11-r13) — hash-split determinism
-    # stays pytest-pinned in test_sampling. In their slots, first driver
-    # checks for the rescore/merge contracts only the mirror has seen:
-    # the four ANN recall evals (exact-vs-LSH/IVF/PQ/clustered overlap)
-    # and the full BPE trainer.
     "scalar_functions", "tpch_q10_returns", "tpch_q14_promo",
     "tpch_q18_having", "ann_ivf_index_search",
-    # r19: text_chunk_overlap rotated out (r16-r18 green; char-window
-    # chunking stays mirror-verified). In: the r18 net-new
-    # warc_html_extract (pair-with-staging rule — mirror-green at all
-    # three SFs the day it landed).
     "warc_html_extract",
-    # r10 rotation: the r8 media-codec additions' first driver check —
-    # pure-Python JPEG/GIF roundtrips, real GIF frame sampling, the audio
-    # feature path (WAV containers + integer DSP), and MJPEG-AVI demux
-    # with real per-frame JPEG decode. r14: that whole media wave rotated
-    # out after 4 driver-green rounds (r10-r13) — the codec paths stay
-    # golden-pinned in test_jpeg/test_gif/test_audio/test_avi. In their
-    # slots, first driver checks for: the engine-API layer over the same
-    # codecs (tier-select resize, frame sampling, deterministic embed
-    # stub) and the text tail (banded Levenshtein pairs, repetition
-    # ratios).
     "multimodal_orientation_normalize", "multimodal_exif_audit",
     "text_lm_perplexity_filter", "text_markup_strip",
     "text_chunk_tokens",
-    # text / multimodal flagships (lang_id rotated out in r5). r12:
-    # multimodal_decode rotated out after 9 driver-green rounds
-    # (r1, r3-r11) — the tier-selector source column stays pinned by the
-    # retained jpeg/gif/audio/video rows. r15: video_dib_frame_sample
-    # rotated out (r12-r14 green; DIB demux stays golden-tested in
-    # test_avi). In: the as-of join, last driver-proven r2.
-    # r18: asof_join rotated out (re-proven r15-r17; stays
-    # plan-pinned in test_plans). In: the decontamination-overlap
-    # re-proof (last r4).
     "decontaminate_overlap",
 ]
 

@@ -19,9 +19,9 @@ same rule the flat-file roundtrips follow.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from bravo_spark.sources.shards import read_shards, write_shards
 
 
 def _parse_batches_factory(columns: list[str]):
@@ -55,14 +55,8 @@ def read_avro(
 ) -> DataFrame:
     """Batch OCF ingest: shard-grain tasks, Arrow-batched decode, zero
     shuffles. ``schema`` is Spark DDL (``"id long, s string"``)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return files.select("content").mapInPandas(
-        _parse_batches_factory(_columns_of(schema)), schema
-    )
+    return read_shards(spark, path, glob,
+                       _parse_batches_factory(_columns_of(schema)), schema)
 
 
 def read_avro_stream(
@@ -75,13 +69,10 @@ def read_avro_stream(
 ) -> DataFrame:
     """Streaming OCF ingest: each micro-batch decodes newly landed
     shards exactly once per checkpoint."""
-    from bravo_spark.sources.warc_source import _binaryfile_stream
-
-    return _binaryfile_stream(
-        spark, path, glob, max_files_per_trigger
-    ).select("content").mapInPandas(
-        _parse_batches_factory(_columns_of(schema)), schema
-    )
+    return read_shards(spark, path, glob,
+                       _parse_batches_factory(_columns_of(schema)), schema,
+                       stream=True,
+                       max_files_per_trigger=max_files_per_trigger)
 
 
 def write_avro(
@@ -91,51 +82,28 @@ def write_avro(
     *,
     codec: str = "deflate",
 ) -> None:
-    """Distributed OCF write: one shard per partition, each produced
-    executor-side by the pure-Python writer. ``avro_schema`` is the
-    Avro record schema (dict form); its field names must exist as
-    DataFrame columns. LOCAL-MODE NOTE: like the fixture writers, the
-    per-task ``open()`` lands on the executor's filesystem — on a real
-    cluster point ``path`` at shared storage mounted on every executor
-    (or adapt to the object-store client); the read half is unaffected."""
+    """Distributed OCF write: one ``part_{partition:05d}.avro`` shard per
+    non-empty partition, each produced executor-side by the pure-Python
+    writer, which streams OCF blocks into the shard as they are encoded.
+    ``avro_schema`` is the Avro record schema (dict form); its field
+    names must exist as DataFrame columns."""
     fields = [f["name"] for f in avro_schema["fields"]]
     missing = [f for f in fields if f not in df.columns]
     if missing:
         raise ValueError(f"DataFrame lacks Avro schema fields: {missing}")
-    os.makedirs(path, exist_ok=True)
 
-    # r19 (guide §4.1): the previous ``df.rdd.mapPartitionsWithIndex``
-    # write pickled every Row across the JVM→Python boundary one at a
-    # time; Arrow batches + ``RecordBatch.to_pylist`` (C path, native
-    # Python values incl. None for nulls — same dict shape the pickled
-    # Rows produced) cut the boundary cost. The shard-per-partition
-    # naming contract is preserved via TaskContext.partitionId().
-    # r20 (guide §5): records stream INTO the OCF encoder (write_ocf
-    # consumes lazily, block by block, straight into the open file) —
-    # the previous whole-partition ``recs`` list bounded peak memory by
-    # partition size; now it is one Arrow batch + one OCF block
-    # regardless of how large a partition is.
-    def _write(batches):
-        import itertools
-
-        from pyspark import TaskContext
-
+    def encode(rows, out):
         from bravo_spark.codecs.avro import write_ocf
 
-        recs = itertools.chain.from_iterable(
-            batch.to_pylist() for batch in batches
-        )
-        try:
-            first = next(recs)
-        except StopIteration:
-            return  # empty partition: no shard file (unchanged contract)
-        pid = TaskContext.get().partitionId()
-        with open(os.path.join(path, f"part_{pid:05d}.avro"), "wb") as f:
-            write_ocf(
-                avro_schema, itertools.chain([first], recs),
-                codec=codec, out=f,
-            )
-        return
-        yield  # pragma: no cover - marks _write as a generator
+        count = 0
 
-    df.select(*fields).mapInArrow(_write, "part int").count()
+        def counted():
+            nonlocal count
+            for r in rows:
+                count += 1
+                yield r
+
+        write_ocf(avro_schema, counted(), codec=codec, out=out)
+        return count
+
+    write_shards(df.select(*fields), path, "part_{:05d}.avro", encode)

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bravo_spark.codecs import fastpath
 from bravo_spark.codecs import flink as fc
 from bravo_spark.sources.staterows import (
     STATE_ROW_SCHEMA,
@@ -52,33 +53,12 @@ from bravo_spark.sources.staterows import (
 METADATA_FILE = "_bravo_metadata"
 
 
-def _frame_compress(buf: bytes) -> bytes:
-    """Per-key-group Snappy compression (StateMetadataUtils.java:142-146 /
-    RocksDBSavepointWriter.java:71-72 analog): sections are framed-Snappy
-    streams. Dispatch order: the python-snappy C binding if installed,
-    else codecs/fastpath.py (pyarrow's libsnappy chunks + numpy-batched
-    chunk CRCs inside our framing writer), else the pure-Python codec —
-    same wire format all three ways (pinned against org.xerial framed
-    streams in tests/test_snappy.py)."""
-    try:
-        import snappy  # type: ignore
-
-        return snappy.StreamCompressor().compress(buf)
-    except ImportError:
-        from bravo_spark.codecs import fastpath
-
-        return fastpath.frame_compress(buf)
-
-
-def _frame_decompress(buf: bytes) -> bytes:
-    try:
-        import snappy  # type: ignore
-
-        return snappy.StreamDecompressor().decompress(buf)
-    except ImportError:
-        from bravo_spark.codecs import fastpath
-
-        return fastpath.frame_decompress(buf)
+# Per-key-group Snappy compression (StateMetadataUtils.java:142-146 /
+# RocksDBSavepointWriter.java:71-72 analog): sections are framed-Snappy
+# streams, wire format pinned against org.xerial framed streams in
+# tests/test_snappy.py.
+_frame_compress = fastpath.frame_compress
+_frame_decompress = fastpath.frame_decompress
 
 
 @dataclass

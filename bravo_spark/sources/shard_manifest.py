@@ -29,7 +29,7 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import _resolve_fs
 
 MANIFEST_NAME = "_MANIFEST.json"
 

@@ -6,11 +6,9 @@ format); this module is the Spark half over ``codecs/tfrecord.py``:
 
 - :func:`encode_examples` — typed columns → an ``example`` binary
   column (one Arrow-batched map stage, deterministic bytes);
-- :func:`write_tfrecord_shards` — one shard per partition through
-  pyarrow.fs (plain paths or object-store URIs, the
-  ``write_warc_shards`` posture exactly);
-- :func:`read_tfrecords` — ``binaryFile`` → Arrow-batched record split
-  (archive-grain tasks, zero shuffles);
+- :func:`write_tfrecord_shards` / :func:`read_tfrecords` /
+  :func:`read_tfrecord_stream` — record framing over the shared shard
+  IO path (``sources/shards.py``);
 - :func:`decode_examples` — record bytes → typed columns under an
   explicit, caller-declared schema (a reader must state what it
   expects; silent schema drift is how training runs ingest garbage).
@@ -26,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import read_shards, write_shards
 
 RECORD_SCHEMA = "archive string, rec_index long, record binary"
 
@@ -124,39 +122,33 @@ def write_tfrecord_shards(
     compression: str = "none",
 ) -> int:
     """Each partition becomes ONE ``shard_{partition:05d}.tfrecord[.gz]``
-    under ``path`` (plain path or filesystem URI — pyarrow.fs, so
-    executors reach object storage). ``compression="gzip"`` emits
-    whole-file gzip (TF's ``TFRecordOptions(compression_type="GZIP")``
-    layout) with mtime pinned to 0 so shards stay byte-deterministic.
-    Returns the number of records written."""
+    under ``path`` (plain path or filesystem URI) through
+    :func:`~bravo_spark.sources.shards.write_shards`.
+    ``compression="gzip"`` emits whole-file gzip (TF's
+    ``TFRecordOptions(compression_type="GZIP")`` layout) with mtime
+    pinned to 0 so shards stay byte-deterministic. NULL payloads are
+    skipped. Returns the number of records written."""
     if compression not in ("none", "gzip"):
         raise ValueError(f"unsupported TFRecord compression {compression!r}")
     suffix = "tfrecord.gz" if compression == "gzip" else "tfrecord"
-    fs, base = _resolve_fs(path)
-    fs.create_dir(base, recursive=True)
-    src = records.select(F.col(payload_col).alias("rec"))
 
-    def _write(pid, rows):
+    def encode(rows, out):
+        import contextlib
+        import gzip
+
         from bravo_spark.codecs.tfrecord import write_tfrecords
 
-        recs = [bytes(r.rec) for r in rows if r.rec is not None]
-        if recs:
-            blob = write_tfrecords(recs)
-            if compression == "gzip":
-                import gzip
-                import io
+        n = 0
+        with (gzip.GzipFile(filename="", fileobj=out, mode="wb", mtime=0)
+              if compression == "gzip" else contextlib.nullcontext(out)) as f:
+            for r in rows:
+                if r["rec"] is not None:
+                    f.write(write_tfrecords([r["rec"]]))
+                    n += 1
+        return n
 
-                buf = io.BytesIO()
-                with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as g:
-                    g.write(blob)
-                blob = buf.getvalue()
-            tfs, tbase = _resolve_fs(path)
-            shard = tbase.rstrip("/") + f"/shard_{pid:05d}.{suffix}"
-            with tfs.open_output_stream(shard, compression=None) as f:
-                f.write(blob)
-        yield len(recs)
-
-    return sum(src.rdd.mapPartitionsWithIndex(_write).collect())
+    return write_shards(records.select(F.col(payload_col).alias("rec")),
+                        path, "shard_{:05d}." + suffix, encode)
 
 
 def _parse_batches(batches):
@@ -200,14 +192,7 @@ def read_tfrecords(
     container has no sync markers, so a shard IS the parallelism
     grain), zero shuffles. CRCs verified per record; torn shards fail
     the task loudly."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return files.select("path", "content").mapInPandas(
-        _parse_batches, RECORD_SCHEMA
-    )
+    return read_shards(spark, path, glob, _parse_batches, RECORD_SCHEMA)
 
 
 def read_tfrecord_stream(
@@ -224,11 +209,9 @@ def read_tfrecord_stream(
     SAME Arrow parse stage as the batch reader — a continuously
     arriving training-shard feed consumed without a rescan.
     ``max_files_per_trigger`` bounds a batch for backfill."""
-    from bravo_spark.sources.warc_source import _binaryfile_stream
-
-    return _binaryfile_stream(
-        spark, path, glob, max_files_per_trigger
-    ).select("path", "content").mapInPandas(_parse_batches, RECORD_SCHEMA)
+    return read_shards(spark, path, glob, _parse_batches, RECORD_SCHEMA,
+                       stream=True,
+                       max_files_per_trigger=max_files_per_trigger)
 
 
 def decode_examples(

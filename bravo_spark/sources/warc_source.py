@@ -20,51 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_BINARYFILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-
-
-def _binaryfile_stream(spark, path: str, glob: str,
-                       max_files_per_trigger: int | None):
-    """The shared drop-directory streaming scan every container twin
-    builds on (WARC, Avro, TFRecord, ZIP): a Structured Streaming
-    binaryFile source — exactly-once per checkpoint at file grain —
-    with the explicit schema a streaming source requires. One
-    implementation so a future option (latestFirst, cleanSource, …)
-    lands in every twin at once."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
-        .option("pathGlobFilter", glob)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
-
-
-def _resolve_fs(path: str):
-    """``(pyarrow FileSystem, fs-internal path)`` for a plain path or a
-    filesystem URI (``file:/...``, ``s3://...``, ``hdfs://...``, ...).
-
-    This is the EXECUTOR-SAFE half of the repo's filesystem plumbing:
-    ``llmops._hadoop_fs`` goes through the driver's py4j gateway into
-    the JVM Hadoop FS API, which a ``mapPartitions`` task does not have
-    — executors are plain Python workers. ``pyarrow.fs`` resolves the
-    same URI schemes natively in-process, so shard writers inside tasks
-    reach object storage instead of silently scattering output across
-    executor-local disks (the multi-node failure a bare ``open()``
-    invites)."""
-    import re as _re
-
-    from pyarrow import fs as pafs
-
-    if path.startswith("file:/") and not path.startswith("file://"):
-        # Hadoop-style single-slash file URI → proper RFC 3986 form
-        path = "file://" + path[len("file:"):]
-    if _re.match(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", path):
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
+from bravo_spark.sources.shards import _resolve_fs, read_shards, write_shards
 
 RECORD_SCHEMA = (
     "archive string, uri string, warc_type string,"
@@ -94,12 +50,6 @@ def _parse_batches(batches):
         )
 
 
-def _records(files: DataFrame) -> DataFrame:
-    return files.select("path", "content").mapInPandas(
-        _parse_batches, RECORD_SCHEMA
-    )
-
-
 def read_warc(
     spark: SparkSession,
     path: str,
@@ -112,12 +62,8 @@ def read_warc(
     matches FILENAMES (pathGlobFilter); ``recursive=True`` descends into
     subdirectories — e.g. the ``batch_*/`` tree
     :func:`wet_convert_stream` writes."""
-    return _records(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", str(recursive).lower())
-        .load(path)
-    )
+    return read_shards(spark, path, glob, _parse_batches, RECORD_SCHEMA,
+                       recursive=recursive)
 
 
 def read_warc_stream(
@@ -131,8 +77,9 @@ def read_warc_stream(
     archives exactly once per checkpoint (Structured Streaming's file
     source log). ``max_files_per_trigger`` bounds a batch for backfill
     over a large drop directory."""
-    return _records(
-        _binaryfile_stream(spark, path, glob, max_files_per_trigger))
+    return read_shards(spark, path, glob, _parse_batches, RECORD_SCHEMA,
+                       stream=True,
+                       max_files_per_trigger=max_files_per_trigger)
 
 
 def write_warc_shards(
@@ -158,52 +105,38 @@ def write_warc_shards(
     size is controlled the Spark way: ``repartition(n)`` upstream picks
     the shard count (keep archives ~1 GiB at crawl scale).
 
-    ``path`` may be a plain path or a filesystem URI — each task opens
-    its shard through :func:`_resolve_fs` (pyarrow.fs), so a WET
+    ``path`` may be a plain path or a filesystem URI — the shards go
+    through :func:`~bravo_spark.sources.shards.write_shards`, so a WET
     conversion at crawl scale writes to object storage, not just a
-    shared POSIX mount.
-
-    Per-partition imperative IO is the one legitimate RDD-adjacent use:
-    shard naming needs the partition index, so this is
-    ``mapPartitionsWithIndex`` writing through the pure-Python codec —
-    the plan ABOVE it stays declarative."""
+    shared POSIX mount."""
     from bravo_spark.codecs.warc import write_warc
 
     ext = {"gzip": "warc.gz", "zstd": "warc.zst", "none": "warc"}
     if compression not in ext:
         raise ValueError(f"unsupported WARC compression {compression!r}")
-    suffix = ext[compression]
     base_headers = {"WARC-Type": warc_type, "WARC-Date": warc_date}
     base_headers.update(extra_headers or {})
-    fs, base = _resolve_fs(path)
-    fs.create_dir(base, recursive=True)
     src = records.select(
         F.col(uri_col).cast("string").alias("uri"),
         F.col(payload_col).alias("payload"),
     )
 
-    def _write(pid, rows):
-        recs = []
+    def encode(rows, out):
+        n = 0
         for r in rows:
-            payload = r.payload
+            payload = r["payload"]
             if isinstance(payload, str):
                 payload = payload.encode("utf-8")
-            recs.append((
-                {**base_headers, "WARC-Target-URI": r.uri},
-                bytes(payload) if payload is not None else b"",
-            ))
-        if recs:
-            # resolve from the path STRING inside the task (executors
-            # never receive driver-side handles); compression=None — the
-            # codec already emitted the gzip/zstd members, and pyarrow's
-            # extension sniffing would double-compress a .gz name
-            tfs, tbase = _resolve_fs(path)
-            shard = tbase.rstrip("/") + f"/shard_{pid:05d}.{suffix}"
-            with tfs.open_output_stream(shard, compression=None) as f:
-                f.write(write_warc(recs, compression=compression))
-        yield len(recs)
+            # one gzip member / zstd frame per record: record-at-a-time
+            # writes are byte-identical to encoding the shard at once
+            out.write(write_warc(
+                [({**base_headers, "WARC-Target-URI": r["uri"]},
+                  bytes(payload) if payload is not None else b"")],
+                compression=compression))
+            n += 1
+        return n
 
-    return sum(src.rdd.mapPartitionsWithIndex(_write).collect())
+    return write_shards(src, path, "shard_{:05d}." + ext[compression], encode)
 
 
 def wet_convert(

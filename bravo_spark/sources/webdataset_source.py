@@ -25,9 +25,9 @@ adds on top:
   must contain; a missing part refuses by name — silent schema drift
   is how a training run ingests garbage).
 
-Shard IO goes through pyarrow.fs (``_resolve_fs``) so executor tasks
-reach object storage, and shard count is controlled the Spark way
-(``repartition(n)`` upstream).
+Shard IO goes through the shared shard path (``sources/shards.py``),
+and shard count is controlled the Spark way (``repartition(n)``
+upstream).
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ import tarfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import read_shards, write_shards
 
 
 class WebDatasetError(ValueError):
@@ -78,34 +78,34 @@ def write_webdataset_shards(
     )
     n_parts = len(part_cols)
 
-    def _write(pid, rows):
+    def encode(rows, out):
         count = 0
-        buf = io.BytesIO()
-        tar = tarfile.open(fileobj=buf, mode="w",
-                           format=tarfile.USTAR_FORMAT)
+        tar = tarfile.TarFile(fileobj=out, mode="w",
+                              format=tarfile.USTAR_FORMAT)
         for r in rows:
-            if not r.key:
+            key = r["key"]
+            if not key:
                 raise WebDatasetError("NULL/empty sample key")
-            if "." in r.key or "/" in r.key:
+            if "." in key or "/" in key:
                 # the reader's grouping rules (basename, key up to the
                 # FIRST dot) would silently mutate such a key on the way
                 # back — 'v1.2' reads as key 'v1', 'logs/0001' as
                 # '0001' — so the writer refuses it by name
                 raise WebDatasetError(
-                    f"sample key {r.key!r} contains '.' or '/' — the "
+                    f"sample key {key!r} contains '.' or '/' — the "
                     "WebDataset key grammar cannot round-trip it")
-            if len(r.key) + 1 + max(len(e) for e in exts) > 100:
+            if len(key) + 1 + max(len(e) for e in exts) > 100:
                 raise WebDatasetError(
-                    f"sample key {r.key!r} makes a member name past "
+                    f"sample key {key!r} makes a member name past "
                     "USTAR's 100-char limit")
             for i in range(n_parts):
-                v = r[i + 1]
+                v = r[f"p{i}"]
                 if v is None:
                     raise WebDatasetError(
-                        f"NULL part {exts[i]!r} for key {r.key!r} — a "
+                        f"NULL part {exts[i]!r} for key {key!r} — a "
                         "sample part cannot be null; filter upstream")
                 data = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-                info = tarfile.TarInfo(name=f"{r.key}.{exts[i]}")
+                info = tarfile.TarInfo(name=f"{key}.{exts[i]}")
                 info.size = len(data)
                 info.mtime = 0
                 info.uid = info.gid = 0
@@ -114,16 +114,9 @@ def write_webdataset_shards(
                 tar.addfile(info, io.BytesIO(data))
             count += 1
         tar.close()
-        if count:
-            tfs, tbase = _resolve_fs(path)
-            shard = tbase.rstrip("/") + f"/shard_{pid:05d}.tar"
-            with tfs.open_output_stream(shard, compression=None) as f:
-                f.write(buf.getvalue())
-        yield count
+        return count
 
-    fs, base = _resolve_fs(path)
-    fs.create_dir(base, recursive=True)
-    return sum(src.rdd.mapPartitionsWithIndex(_write).collect())
+    return write_shards(src, path, "shard_{:05d}.tar", encode)
 
 
 def read_webdataset(
@@ -180,8 +173,8 @@ def read_webdataset(
 
             for apath, blob in zip(pdf["path"], pdf["content"]):
                 try:
-                    tar = tarfile.open(fileobj=io.BytesIO(bytes(blob)),
-                                       mode="r:")
+                    tar = tarfile.TarFile(fileobj=io.BytesIO(bytes(blob)),
+                                          mode="r")
                     members = tar.getmembers()
                 except tarfile.TarError as exc:
                     raise WebDatasetError(
@@ -211,9 +204,4 @@ def read_webdataset(
                     flush(apath, cur_key, got, seen)
             yield pd.DataFrame(out)
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return files.select("path", "content").mapInPandas(_parse, schema)
+    return read_shards(spark, path, glob, _parse, schema)

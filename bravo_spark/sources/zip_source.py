@@ -10,11 +10,9 @@ in the pure-Python codec; this module is only the scale shape:
   honest unit anyway), so shard count — set upstream by the writer's
   partitioning — is the knob, exactly as for the tar and TFRecord
   surfaces;
-- reading is one Arrow-batched ``mapInPandas`` stage over the
-  binaryFile scan: zero shuffles, zero joins at any corpus size;
-- writing is ``mapPartitionsWithIndex`` through the deterministic
-  codec writer, shard IO through pyarrow.fs (``_resolve_fs``) so
-  executor tasks reach object storage, not executor-local disks.
+- reading and writing go through the shared shard IO path
+  (``sources/shards.py``): zero shuffles, zero joins at any corpus
+  size, each shard committed by temp name + rename.
 """
 
 from __future__ import annotations
@@ -22,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import read_shards, write_shards
 
 
 def write_zip_shards(
@@ -39,44 +37,33 @@ def write_zip_shards(
     UTF-8). NULL names/payloads refuse by name (filter upstream);
     duplicate names within a shard and zip64-scale inputs refuse inside
     the codec. Returns members written."""
-    from bravo_spark.codecs.zipfmt import ZipError, write_zip
-
     src = df.select(
         F.col(name_col).cast("string").alias("name"),
         F.col(data_col).alias("data"),
     )
 
-    def _write(pid, rows):
-        def entries():
-            for r in rows:
-                if r.name is None:
-                    raise ZipError("NULL member name — filter upstream")
-                v = r.data
-                if v is None:
-                    raise ZipError(f"NULL payload for member {r.name!r} "
-                                   "— filter upstream")
-                yield r.name, (v.encode("utf-8") if isinstance(v, str)
-                               else bytes(v))
+    def encode(rows, out):
+        from bravo_spark.codecs.zipfmt import ZipError, write_zip
 
         count = 0
 
-        def counted():
+        def entries():
             nonlocal count
-            for name, data in entries():
+            for r in rows:
+                if r["name"] is None:
+                    raise ZipError("NULL member name — filter upstream")
+                v = r["data"]
+                if v is None:
+                    raise ZipError(f"NULL payload for member {r['name']!r} "
+                                   "— filter upstream")
                 count += 1
-                yield name, data
+                yield r["name"], (v.encode("utf-8") if isinstance(v, str)
+                                  else bytes(v))
 
-        blob = write_zip(counted(), method=method)
-        if count:
-            tfs, tbase = _resolve_fs(path)
-            shard = tbase.rstrip("/") + f"/shard_{pid:05d}.zip"
-            with tfs.open_output_stream(shard, compression=None) as f:
-                f.write(blob)
-        yield count
+        write_zip(entries(), method=method, out=out)
+        return count
 
-    fs, base = _resolve_fs(path)
-    fs.create_dir(base, recursive=True)
-    return sum(src.rdd.mapPartitionsWithIndex(_write).collect())
+    return write_shards(src, path, "shard_{:05d}.zip", encode)
 
 
 _MEMBER_SCHEMA = "archive string, name string, data binary"
@@ -111,13 +98,7 @@ def read_zip_shards(
     name; foreign zip64 archives (>65535 members / >4 GiB — the
     ImageNet shape) READ fine. Shard-grain binaryFile tasks, one
     Arrow-batched map stage, zero shuffles."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return files.select("path", "content").mapInPandas(
-        _parse_batches, _MEMBER_SCHEMA)
+    return read_shards(spark, path, glob, _parse_batches, _MEMBER_SCHEMA)
 
 
 def read_zip_stream(
@@ -134,11 +115,9 @@ def read_zip_stream(
     SAME Arrow parse stage as the batch reader.
     ``max_files_per_trigger`` bounds a batch for backfill over a large
     drop directory."""
-    from bravo_spark.sources.warc_source import _binaryfile_stream
-
-    return _binaryfile_stream(
-        spark, path, glob, max_files_per_trigger
-    ).select("path", "content").mapInPandas(_parse_batches, _MEMBER_SCHEMA)
+    return read_shards(spark, path, glob, _parse_batches, _MEMBER_SCHEMA,
+                       stream=True,
+                       max_files_per_trigger=max_files_per_trigger)
 
 
 __all__ = ["write_zip_shards", "read_zip_shards", "read_zip_stream"]

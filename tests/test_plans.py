@@ -947,3 +947,31 @@ def test_webdataset_roundtrip_is_shuffle_free_arrow(plans):
     assert "Join" not in p
     assert "BatchEvalPython" not in p
     assert p.lower().count("mapinpandas") == 1
+
+
+def test_shard_write_is_one_map_in_arrow_and_read_is_one_scan(spark, tmp_path):
+    """sources/shards.py: a shard write runs as ONE MapInArrow over the
+    caller's plan — no Exchange and no RDD conversion added — and the
+    shared reader is a binaryFile scan plus ONE MapInPandas with zero
+    shuffles."""
+    from bravo_spark.sources.tfrecord_source import (
+        read_tfrecords,
+        write_tfrecord_shards,
+    )
+
+    src = spark.range(0, 40, 1, 4).selectExpr(
+        "CAST(CAST(id AS string) AS binary) AS example")
+    out = str(tmp_path / "tfr")
+    assert write_tfrecord_shards(src, out) == 40
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(store.executionsCount() - 1, 1).apply(0)
+    w = last.physicalPlanDescription().split("\n\n")[0]  # the tree only
+    assert w.count("MapInArrow") == 1 and "Range" in w
+    assert "Exchange" not in w
+    assert "ExistingRDD" not in w and "SerializeFromObject" not in w
+
+    r = read_tfrecords(spark, out)._jdf.queryExecution().executedPlan()
+    r = r.toString()
+    assert "FileScan binaryFile" in r
+    assert r.count("MapInPandas") == 1
+    assert "Exchange" not in r

@@ -214,6 +214,27 @@ def test_estimated_scan_splits_matches_rdd_probe(spark, sf_dir, tmp_path):
     assert est == spark.read.parquet(many).rdd.getNumPartitions()
     assert est >= 2
 
+    # a 'tb'-suffixed open cost: every file becomes its own split
+    spark.conf.set("spark.sql.files.openCostInBytes", "1tb")
+    try:
+        est = catalog.estimated_scan_splits(spark, many)
+        assert est == spark.read.parquet(many).rdd.getNumPartitions() == 8
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+
+    # zero-byte files add neither a split nor an open cost
+    for i in range(4):
+        open(os.path.join(many, f"zz_empty_{i}.parquet"), "wb").close()
+    est = catalog.estimated_scan_splits(spark, many)
+    assert est == spark.read.schema("id long").parquet(
+        many).rdd.getNumPartitions()
+
+    # a partitioned layout is not replayed: the caller probes instead
+    nested = str(tmp_path / "nested.parquet")
+    spark.range(100).selectExpr("id", "id % 2 AS p").write.partitionBy(
+        "p").parquet(nested)
+    assert catalog.estimated_scan_splits(spark, nested) is None
+
 
 def test_table_spread_spreads_fixture_and_noop_on_many_splits(
     spark, sf_dir, tmp_path
