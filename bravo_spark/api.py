@@ -42,9 +42,9 @@ from bravo_spark.sources import staterows as sr
 class OperatorStateReader:
     """EP1 — read & analyze keyed state (OperatorStateReader.java:72-158).
 
-    The scan is built lazily and memoized (the reference memoizes
-    ``allKeyedStateRows``, :125-158); every typed reader filters + decodes
-    from the same scan DataFrame.
+    The all-state scan is built lazily and memoized (the reference
+    memoizes ``allKeyedStateRows``, :125-158); each typed reader scans
+    only its own state, with the name pushed into the byte scan.
     """
 
     def __init__(self, spark: SparkSession, path: str, uid: str | None = None):
@@ -66,8 +66,10 @@ class OperatorStateReader:
         return self._rows
 
     def keyed_state_rows(self, names: list[str]) -> DataFrame:
-        """F4 — named subset (OperatorStateReader.java:148-152)."""
-        return sr.filter_states(self.all_keyed_state_rows(), names)
+        """F4 — named subset (OperatorStateReader.java:148-152). The names
+        are pushed into the byte scan, so other states are never decoded
+        or sent across the Arrow edge."""
+        return sp.read_savepoint(self.spark, self.path, state_names=names)
 
     def unread_state_rows(self) -> DataFrame:
         """F3 — complement of everything parsed so far

@@ -191,17 +191,15 @@ def lz4_java_encode_stream(payload: bytes, block_size: int = 32 * 1024) -> bytes
 
 
 def frame_compress(data: bytes) -> bytes:
-    """Snappy FRAMING format with fast chunk compression and numpy-batched
-    chunk CRCs; falls back to the pure framing writer. Output is a valid
+    """Snappy FRAMING format with fast chunk compression; falls back to
+    the pure chunk compressor. Output is a valid
     framed stream either way (the chunk payload bytes differ — libsnappy
     finds back-references the literal-only pure compressor doesn't)."""
     from bravo_spark.codecs import snappy as ps
 
     if _codecs() is None:
         return ps.frame_compress(data)
-    return ps.frame_compress(
-        data, _compress=snappy_compress, _crc_batch=_crc_batch
-    )
+    return ps.frame_compress(data, _compress=snappy_compress)
 
 
 def frame_decompress(data: bytes) -> bytes:
@@ -209,12 +207,4 @@ def frame_decompress(data: bytes) -> bytes:
 
     if _codecs() is None:
         return ps.frame_decompress(data)
-    return ps.frame_decompress(
-        data, _decompress=snappy_decompress, _crc_batch=_crc_batch
-    )
-
-
-def _crc_batch(chunks: list[bytes]) -> list[int]:
-    from bravo_spark.codecs import crc32c
-
-    return crc32c.crc32c_batch(chunks)
+    return ps.frame_decompress(data, _decompress=snappy_decompress)

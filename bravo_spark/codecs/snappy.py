@@ -127,23 +127,19 @@ _CHUNK_UNCOMPRESSED = 0x01
 _MAX_UNCOMPRESSED_CHUNK = 65536
 
 
-def frame_compress(data: bytes, *, _compress=None, _crc_batch=None) -> bytes:
+def frame_compress(data: bytes, *, _compress=None) -> bytes:
     """Whole-buffer framed compression (stream identifier + data chunks).
 
-    ``_compress`` / ``_crc_batch`` let codecs/fastpath.py swap in the
-    native chunk compressor and the numpy-batched CRC while this module
-    keeps sole ownership of the FRAMING layout (the part pinned against
-    org.xerial streams in tests/test_snappy.py)."""
+    ``_compress`` lets codecs/fastpath.py swap in the native chunk
+    compressor while this module keeps sole ownership of the FRAMING
+    layout (the part pinned against org.xerial streams in
+    tests/test_snappy.py)."""
     chunk_compress = _compress or compress
     chunks = [
         data[pos : pos + _MAX_UNCOMPRESSED_CHUNK]
         for pos in range(0, len(data), _MAX_UNCOMPRESSED_CHUNK)
     ]
-    crcs = (
-        _crc_batch(chunks)
-        if _crc_batch is not None
-        else [crc32c.crc32c(c) for c in chunks]
-    )
+    crcs = crc32c.crc32c_batch(chunks)
     out = bytearray(STREAM_IDENTIFIER)
     for chunk, crc in zip(chunks, crcs):
         crc = crc32c.mask(crc)
@@ -160,16 +156,15 @@ def frame_compress(data: bytes, *, _compress=None, _crc_batch=None) -> bytes:
     return bytes(out)
 
 
-def frame_decompress(data: bytes, *, _decompress=None, _crc_batch=None) -> bytes:
+def frame_decompress(data: bytes, *, _decompress=None) -> bytes:
     """Whole-buffer framed decompression; verifies chunk CRCs.
 
-    ``_decompress`` / ``_crc_batch`` are fastpath injection points, same
-    contract as :func:`frame_compress`. Verification stays INCREMENTAL on
-    both paths: the scalar path checks every chunk as it decodes (exactly
-    the pre-batching behavior), the batched path flushes a pending window
-    of at most ``_CRC_WINDOW`` chunks — and before any parse error — so a
+    ``_decompress`` is the fastpath injection point, same contract as
+    :func:`frame_compress`. Verification is INCREMENTAL: a pending
+    window of at most ``_CRC_WINDOW`` chunks is checked in one
+    ``crc32c_batch`` call, and flushed before any parse error, so a
     corrupt early chunk raises "CRC mismatch" without first decoding a
-    multi-GB stream, and CRC errors still win over later parse errors."""
+    multi-GB stream, and CRC errors win over later parse errors."""
     chunk_decompress = _decompress or decompress
     pos = 0
     out: list[bytes] = []
@@ -179,7 +174,7 @@ def frame_decompress(data: bytes, *, _decompress=None, _crc_batch=None) -> bytes
     def flush_pending() -> None:
         if not pending:
             return
-        for stored, a in zip(pending_crcs, _crc_batch(pending)):
+        for stored, a in zip(pending_crcs, crc32c.crc32c_batch(pending)):
             if crc32c.mask(a) != stored:
                 raise ValueError("snappy frame CRC mismatch")
         out.extend(pending)
@@ -197,19 +192,18 @@ def frame_decompress(data: bytes, *, _decompress=None, _crc_batch=None) -> bytes
                 raise ValueError("bad snappy stream identifier")
             continue
         if ctype in (_CHUNK_COMPRESSED, _CHUNK_UNCOMPRESSED):
-            (crc,) = struct.unpack("<I", body[:4])
-            chunk = body[4:]
-            if ctype == _CHUNK_COMPRESSED:
-                chunk = chunk_decompress(chunk)
-            if _crc_batch is None:
-                if crc32c.mask(crc32c.crc32c(chunk)) != crc:
-                    raise ValueError("snappy frame CRC mismatch")
-                out.append(chunk)
-            else:
-                pending.append(chunk)
-                pending_crcs.append(crc)
-                if len(pending) >= _CRC_WINDOW:
-                    flush_pending()
+            try:
+                (crc,) = struct.unpack("<I", body[:4])
+                chunk = body[4:]
+                if ctype == _CHUNK_COMPRESSED:
+                    chunk = chunk_decompress(chunk)
+            except Exception:
+                flush_pending()  # earlier CRC corruption outranks this
+                raise
+            pending.append(chunk)
+            pending_crcs.append(crc)
+            if len(pending) >= _CRC_WINDOW:
+                flush_pending()
         elif 0x02 <= ctype <= 0x7F:  # unskippable reserved
             flush_pending()  # earlier CRC corruption outranks this
             raise ValueError(f"unskippable snappy chunk type {ctype:#x}")

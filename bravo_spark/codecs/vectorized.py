@@ -76,6 +76,11 @@ def vector_key_groups(keys: np.ndarray, key_codec: fc.Codec, max_parallelism: in
     return vector_murmur(vector_java_hash(keys, kind)) % max_parallelism
 
 
+def _key_dtype(prefix: int, kdt: str) -> np.dtype:
+    kg = "u1" if prefix == 1 else ">u2"
+    return np.dtype([("kg", kg), ("key", kdt), ("ns", "u1")])
+
+
 def encode_kv_fixed(
     keys,
     values,
@@ -97,10 +102,7 @@ def encode_kv_fixed(
     prefix = fc.key_group_prefix_bytes(max_parallelism)
     kgs = vector_key_groups(karr, key_codec, max_parallelism)
 
-    if prefix == 1:
-        key_dt = np.dtype([("kg", "u1"), ("key", kdt), ("ns", "u1")])
-    else:
-        key_dt = np.dtype([("kg", ">u2"), ("key", kdt), ("ns", "u1")])
+    key_dt = _key_dtype(prefix, kdt)
     krec = np.zeros(len(karr), dtype=key_dt)
     krec["kg"] = kgs
     krec["key"] = karr.astype(np.dtype(kdt).newbyteorder("="))
@@ -123,6 +125,25 @@ def encode_kv_fixed(
     return key_ns, vals
 
 
+def _native(col: np.ndarray, codec: fc.Codec) -> np.ndarray:
+    """A big-endian field column as the scalar codec decodes it."""
+    if codec.name == "boolean":
+        return col != 0
+    return col.astype(col.dtype.newbyteorder("="))
+
+
+def _decode_keys_fixed(key_ns_list, key_codec: fc.Codec, max_parallelism: int):
+    """Keys of ``[key group][key][void namespace]`` rows, or None if the
+    rows don't add up to that fixed width."""
+    kdt, kw = FIXED_DTYPES[key_codec.name]
+    prefix = fc.key_group_prefix_bytes(max_parallelism)
+    kbuf = b"".join(key_ns_list)
+    if len(kbuf) != len(key_ns_list) * (prefix + kw + 1):
+        return None
+    krec = np.frombuffer(kbuf, dtype=_key_dtype(prefix, kdt))
+    return _native(krec["key"], key_codec)
+
+
 def decode_kv_fixed(
     key_ns_list,
     value_list,
@@ -136,27 +157,53 @@ def decode_kv_fixed(
     the layout isn't uniformly fixed-width (caller falls back)."""
     if not (is_fixed(key_codec) and is_fixed(value_codec)):
         return None
-    n = len(key_ns_list)
-    if n == 0:
+    if len(key_ns_list) == 0:
         return np.array([]), np.array([])
-    kdt, kw = FIXED_DTYPES[key_codec.name]
     vdt, vw = FIXED_DTYPES[value_codec.name]
-    prefix = fc.key_group_prefix_bytes(max_parallelism)
-    klen = prefix + kw + 1
-    vlen = (8 if ttl else 0) + vw
-    kbuf = b"".join(key_ns_list)
     vbuf = b"".join(value_list)
-    if len(kbuf) != n * klen or len(vbuf) != n * vlen:
+    if len(vbuf) != len(value_list) * ((8 if ttl else 0) + vw):
         return None  # ragged — not pure fixed-width rows
-    if prefix == 1:
-        key_dt = np.dtype([("kg", "u1"), ("key", kdt), ("ns", "u1")])
-    else:
-        key_dt = np.dtype([("kg", ">u2"), ("key", kdt), ("ns", "u1")])
-    krec = np.frombuffer(kbuf, dtype=key_dt)
-    if ttl:
-        vrec = np.frombuffer(vbuf, dtype=np.dtype([("ts", ">i8"), ("v", vdt)]))
-    else:
-        vrec = np.frombuffer(vbuf, dtype=np.dtype([("v", vdt)]))
-    keys = krec["key"].astype(np.dtype(kdt).newbyteorder("="))
-    values = vrec["v"].astype(np.dtype(vdt).newbyteorder("="))
-    return keys, values
+    keys = _decode_keys_fixed(key_ns_list, key_codec, max_parallelism)
+    if keys is None:
+        return None
+    fields = ([("ts", ">i8")] if ttl else []) + [("v", vdt)]
+    vrec = np.frombuffer(vbuf, dtype=np.dtype(fields))
+    return keys, _native(vrec["v"], value_codec)
+
+
+def decode_list_fixed(
+    key_ns_list,
+    value_list,
+    key_codec: fc.Codec,
+    element_codec: fc.Codec,
+    max_parallelism: int,
+    *,
+    ttl: bool = False,
+):
+    """Vectorized P3 decode of list-state rows. Returns (keys, elements,
+    counts): one key per element (each row's key repeated by its element
+    count), the elements, and the per-row counts. None if the codecs
+    aren't fixed-width or the batch isn't uniformly laid out — a row whose
+    value isn't a whole number of ``[ts?][element]`` records joined by
+    ``LIST_SEPARATOR`` (an empty list included) — so the caller falls back
+    to the scalar codec."""
+    if not (is_fixed(key_codec) and is_fixed(element_codec)):
+        return None
+    if len(key_ns_list) == 0:
+        return np.array([]), np.array([]), np.array([], dtype=np.int64)
+    edt, _ew = FIXED_DTYPES[element_codec.name]
+    fields = ([("ts", ">i8")] if ttl else []) + [("v", edt), ("sep", "u1")]
+    rec_dt = np.dtype(fields)
+    # each row plus one trailing separator is a whole number of records
+    lens = np.fromiter(map(len, value_list), np.int64, len(value_list)) + 1
+    counts = lens // rec_dt.itemsize
+    if (counts * rec_dt.itemsize != lens).any():
+        return None
+    keys = _decode_keys_fixed(key_ns_list, key_codec, max_parallelism)
+    if keys is None:
+        return None
+    sep = bytes([fc.LIST_SEPARATOR])
+    rec = np.frombuffer(sep.join(value_list) + sep, dtype=rec_dt)
+    if (rec["sep"] != fc.LIST_SEPARATOR).any():
+        return None
+    return np.repeat(keys, counts), _native(rec["v"], element_codec), counts

@@ -674,8 +674,8 @@ class SstWriter:
         # memory is bounded by _CHECKSUM_BATCH blocks (~4 MB at the 4 KB
         # default block size, plus whatever single oversized block — e.g.
         # the monolithic index at finish() — is in flight; crc32c_batch
-        # routes such outliers to the scalar loop so they never inflate
-        # the vectorization matrix).
+        # checksums in slabs of ~0.5 MiB, so an outlier never inflates its
+        # temporaries).
         handle = BlockHandle(self._offset, len(content))
         self._pending.append(content + bytes([ctype]))
         self._offset += len(content) + 5

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -38,6 +39,7 @@ from pyspark.sql.types import (
 
 from bravo_spark.codecs import flink as fc
 from bravo_spark.codecs import hashes as kh
+from bravo_spark.codecs import vectorized as vz
 
 STATE_ROW_SCHEMA = StructType(
     [
@@ -102,18 +104,13 @@ def exclude_states(rows: DataFrame, names: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _decode_batches(
-    rows_iter: Iterator[pd.DataFrame],
-    decode_row,
-    out_cols: list[str],
-):
-    for pdf in rows_iter:
-        out: dict[str, list] = {c: [] for c in out_cols}
-        for key_ns, value in zip(pdf["key_ns"], pdf["value"]):
-            for rec in decode_row(bytes(key_ns), bytes(value)):
-                for c, v in zip(out_cols, rec):
-                    out[c].append(v)
-        yield pd.DataFrame(out, columns=out_cols)
+def _decode_batch(pdf: pd.DataFrame, decode_row, out_cols: list[str]) -> pd.DataFrame:
+    out: dict[str, list] = {c: [] for c in out_cols}
+    for key_ns, value in zip(pdf["key_ns"], pdf["value"]):
+        for rec in decode_row(bytes(key_ns), bytes(value)):
+            for c, v in zip(out_cols, rec):
+                out[c].append(v)
+    return pd.DataFrame(out, columns=out_cols)
 
 
 def _reader(
@@ -121,12 +118,28 @@ def _reader(
     state_name: str,
     decode_row,
     schema: StructType,
+    fast=None,
 ) -> DataFrame:
+    """filter → one Arrow-batched decode. ``fast(key_ns list, value
+    list)`` returns the batch's output columns, or None when the batch
+    must take the scalar ``decode_row`` instead (ragged layout)."""
     filtered = rows.filter(F.col("state_name") == state_name).select("key_ns", "value")
     cols = [f.name for f in schema.fields]
-    return filtered.mapInPandas(
-        lambda it: _decode_batches(it, decode_row, cols), schema=schema
-    )
+
+    def run(batches: Iterator[pd.DataFrame]):
+        for pdf in batches:
+            got = None
+            if fast is not None:
+                got = fast(
+                    [bytes(b) for b in pdf["key_ns"]],
+                    [bytes(b) for b in pdf["value"]],
+                )
+            if got is None:
+                yield _decode_batch(pdf, decode_row, cols)
+            else:
+                yield pd.DataFrame(dict(zip(cols, got)), columns=cols)
+
+    return filtered.mapInPandas(run, schema=schema)
 
 
 def read_value_kv(
@@ -159,28 +172,13 @@ def read_value_kv(
         ]
     )
 
-    from bravo_spark.codecs import vectorized as vz
-
-    if vz.is_fixed(key_codec) and vz.is_fixed(value_codec):
-        filtered = rows.filter(F.col("state_name") == state_name).select(
-            "key_ns", "value"
+    def fast(key_ns, values):
+        return vz.decode_kv_fixed(
+            key_ns, values, key_codec, value_codec, max_parallelism, ttl=ttl
         )
 
-        def decode_fast(batches: Iterator[pd.DataFrame]):
-            for pdf in batches:
-                fast = vz.decode_kv_fixed(
-                    [bytes(b) for b in pdf["key_ns"]],
-                    [bytes(b) for b in pdf["value"]],
-                    key_codec, value_codec, max_parallelism, ttl=ttl,
-                )
-                if fast is None:  # ragged rows — scalar fallback
-                    yield from _decode_batches(iter([pdf]), decode, ["key", "value"])
-                else:
-                    yield pd.DataFrame({"key": fast[0], "value": fast[1]})
-
-        return filtered.mapInPandas(decode_fast, schema=schema)
-
-    return _reader(rows, state_name, decode, schema)
+    fixed = vz.is_fixed(key_codec) and vz.is_fixed(value_codec)
+    return _reader(rows, state_name, decode, schema, fast if fixed else None)
 
 
 def read_value_values(
@@ -209,7 +207,10 @@ def read_list_flatten(
     ttl: bool = False,
 ) -> DataFrame:
     """P3 — list state exploded to (key, element)
-    (reader/ListStateFlattenReader.java:39-63)."""
+    (reader/ListStateFlattenReader.java:39-63).
+
+    Fixed-width key and element codecs decode through the numpy fast
+    path (codecs.vectorized); everything else uses the scalar codecs."""
     key_codec = fc.unwrap_tuple1_key(key_codec)  # reference Tuple1 parity
     prefix = fc.key_group_prefix_bytes(max_parallelism)
 
@@ -219,13 +220,20 @@ def read_list_flatten(
         for el in fc.decode_list_state(value, element_codec, ttl=ttl):
             yield (key, el)
 
+    def fast(key_ns, values):
+        got = vz.decode_list_fixed(
+            key_ns, values, key_codec, element_codec, max_parallelism, ttl=ttl
+        )
+        return None if got is None else got[:2]
+
     schema = StructType(
         [
             StructField("key", spark_type_for(key_codec), True),
             StructField("value", spark_type_for(element_codec), True),
         ]
     )
-    return _reader(rows, state_name, decode, schema)
+    fixed = vz.is_fixed(key_codec) and vz.is_fixed(element_codec)
+    return _reader(rows, state_name, decode, schema, fast if fixed else None)
 
 
 def read_list_as_list(
@@ -237,7 +245,8 @@ def read_list_as_list(
     max_parallelism: int = 128,
     ttl: bool = False,
 ) -> DataFrame:
-    """P4 — list state as (key, ARRAY<V>) (reader/ListStateListReader.java:43-60)."""
+    """P4 — list state as (key, ARRAY<V>) (reader/ListStateListReader.java:43-60).
+    Same numpy fast path and fallback as :func:`read_list_flatten`."""
     key_codec = fc.unwrap_tuple1_key(key_codec)  # reference Tuple1 parity
     prefix = fc.key_group_prefix_bytes(max_parallelism)
 
@@ -246,13 +255,24 @@ def read_list_as_list(
         key = key_codec.decode(r)
         yield (key, fc.decode_list_state(value, element_codec, ttl=ttl))
 
+    def fast(key_ns, values):
+        got = vz.decode_list_fixed(
+            key_ns, values, key_codec, element_codec, max_parallelism, ttl=ttl
+        )
+        if got is None:
+            return None
+        keys, elements, counts = got
+        starts = np.cumsum(counts) - counts
+        return keys[starts], np.split(elements, starts[1:])
+
     schema = StructType(
         [
             StructField("key", spark_type_for(key_codec), True),
             StructField("value", ArrayType(spark_type_for(element_codec)), True),
         ]
     )
-    return _reader(rows, state_name, decode, schema)
+    fixed = vz.is_fixed(key_codec) and vz.is_fixed(element_codec)
+    return _reader(rows, state_name, decode, schema, fast if fixed else None)
 
 
 def read_map_entries(
@@ -376,8 +396,6 @@ def kv_to_state_rows(
     key_codec = fc.unwrap_tuple1_key(key_codec)  # reference Tuple1 parity
 
     def encode(batches: Iterator[pd.DataFrame]):
-        from bravo_spark.codecs import vectorized as vz
-
         for pdf in batches:
             if (
                 kind == "value"

@@ -464,3 +464,72 @@ def test_audit_savepoint_deep_on_compressed(spark, tmp_path):
     rows_found = mt.audit_savepoint(spark, base, deep=True).collect()
     checks = {r["check"] for r in rows_found}
     assert checks & {"decode_failure", "offset_out_of_bounds"}, checks
+
+
+def test_typed_reader_scans_only_its_state(spark, tmp_path):
+    """keyed_state_rows pushes the names into the byte scan: a typed read
+    never decodes the other states, while the all-state scan and the
+    unread complement still see them."""
+    base = _bootstrap(spark, tmp_path)
+    extra = spark.createDataFrame([(9, 9)], "key int, value int")
+    rows = sr.kv_to_state_rows(extra, "Other", api.INT, api.INT)
+    sp.write_savepoint(
+        sp.read_savepoint(spark, base).unionByName(rows),
+        str(tmp_path / "two"), max_parallelism=128, parallelism=2,
+    )
+    reader = api.OperatorStateReader(spark, str(tmp_path / "two"))
+    names = [r[0] for r in reader.keyed_state_rows(["Count"]).collect()]
+    assert names == ["Count"] * 3
+    assert "Other" not in reader.keyed_state_rows(["Count"])._jdf.queryExecution().toString()
+    got = sorted(tuple(r) for r in reader.read_value_values("Count", api.INT).collect())
+    assert got == [(1,), (2,), (5,)]
+    unread = {r[0] for r in reader.unread_state_rows().select("state_name").collect()}
+    assert unread == {"Other"}
+    assert reader.all_keyed_state_rows().count() == 4
+
+
+def test_corrupt_compressed_section_refuses_through_reader(spark, tmp_path):
+    """One flipped byte inside a Snappy-framed section fails the read
+    with the frame CRC error. The flipped byte is the first literal byte
+    of the first chunk, so the chunk still decompresses and only the
+    checksum can catch it."""
+    import os
+
+    import pytest
+
+    from bravo_spark.codecs import snappy
+
+    kv = spark.createDataFrame(
+        [(k, [k, k * 7, k * 11]) for k in range(200)], "key long, value array<long>"
+    )
+    rows = sr.kv_to_state_rows(kv, "L", api.LONG, api.LONG, kind="list")
+    base = str(tmp_path / "c")
+    sp.write_savepoint(
+        rows, base, max_parallelism=128, parallelism=2, compression=True,
+        state_ids={"L": 0},
+    )
+    reader = api.OperatorStateReader(spark, base)
+    assert reader.read_list_flatten("L", api.LONG, api.LONG).count() == 600
+
+    meta = sp.read_savepoint_meta(base)
+    fmeta = meta.files[0]
+    start = min(int(v) for v in fmeta["offsets"].values())
+    with open(fmeta["path"], "rb") as f:
+        f.seek(start)
+        head = f.read(64)
+    ident = len(snappy.STREAM_IDENTIFIER)
+    assert head[:ident] == snappy.STREAM_IDENTIFIER
+    at = ident + 8  # chunk type + 3-byte length + masked CRC
+    if head[ident] == 0x00:  # compressed: skip the length varint ...
+        _n, at = snappy._read_uvarint(head, at)
+        assert head[at] & 3 == 0  # ... to the first literal's bytes
+        at += 1 + max(0, (head[at] >> 2) - 59)
+    with open(fmeta["path"], "rb+") as f:
+        f.seek(start + at)
+        byte = f.read(1)[0]
+        f.seek(start + at)
+        f.write(bytes([byte ^ 0x01]))
+
+    reader = api.OperatorStateReader(spark, base)
+    with pytest.raises(Exception, match="snappy frame CRC mismatch"):
+        reader.read_list_flatten("L", api.LONG, api.LONG).collect()

@@ -192,9 +192,11 @@ try:
     @given(st.lists(st.binary(min_size=0, max_size=5000), max_size=40))
     @settings(max_examples=40, deadline=None)
     def test_prop_crc32c_batch_matches_scalar(blobs):
-        from bravo_spark.codecs.crc32c import crc32c, crc32c_batch
+        from bravo_spark.codecs.crc32c import crc32c, crc32c_batch, crc32c_bytewise
 
-        assert crc32c_batch(blobs) == [crc32c(b) for b in blobs]
+        want = [crc32c_bytewise(b) for b in blobs]
+        assert crc32c_batch(blobs) == want
+        assert [crc32c(b) for b in blobs] == want
 
 except ImportError:  # hypothesis is baked into this container; belt+braces
     pass

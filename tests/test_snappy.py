@@ -15,12 +15,30 @@ from bravo_spark.codecs import crc32c, snappy
 # --- crc32c golden vectors (rfc 3720 / kat values) ---
 
 
+# RFC 3720 B.4 vectors, plus the "123456789" check value and the empty
+# message; each runs through the byte loop and the numpy kernel
+_CRC32C_VECTORS = [
+    (b"123456789", 0xE3069283),
+    (b"", 0),
+    (b"\x00" * 32, 0x8A9136AA),
+    (b"\xff" * 32, 0x62A8AB43),
+    (bytes(range(32)), 0x46DD794E),
+    (bytes(range(31, -1, -1)), 0x113FDB5C),
+    (bytes.fromhex(
+        "01c00000000000000000000000000000"
+        "14000000000004000000001400000018"
+        "28000000000000000200000000000000"),
+     0xD9963A56),
+]
+
+
 def test_crc32c_golden():
-    # well-known check value for "123456789"
-    assert crc32c.crc32c(b"123456789") == 0xE3069283
-    assert crc32c.crc32c(b"") == 0
-    # 32 bytes of zeros (iSCSI test vector)
-    assert crc32c.crc32c(b"\x00" * 32) == 0x8A9136AA
+    for data, want in _CRC32C_VECTORS:
+        assert crc32c.crc32c(data) == want
+        assert crc32c.crc32c_bytewise(data) == want
+        assert crc32c.crc32c_batch([data]) == [want]
+        if len(data) >= 4:  # the kernel takes messages of 4+ bytes
+            assert int(crc32c._registers([data], 0xFFFFFFFF)[0]) ^ 0xFFFFFFFF == want
 
 
 def test_crc32c_mask_roundtrip():

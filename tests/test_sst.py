@@ -734,26 +734,39 @@ def test_writer_property_fuzz_roundtrip():
 
 
 def test_crc32c_batch_matches_scalar():
-    """The numpy-vectorized batch CRC (used for deferred block trailers in
-    SstWriter) must be bit-identical to the scalar table loop on every
-    shape that matters: empty blobs, 1-byte, sub-word, exact block size,
-    mixed lengths, small batches (scalar fallback), and the hypothesis-ish
-    deterministic fuzz below. A mismatch would corrupt every trailer in a
-    written SST — the rocksdbjni verifyChecksum tests would catch it too,
-    but this pins the codec in isolation."""
+    """The blocked numpy kernel (used by ``crc32c`` above its size
+    constant and by ``crc32c_batch`` for the deferred block trailers in
+    SstWriter) must be bit-identical to the table-driven byte loop on
+    every shape that matters: the byte-loop/kernel boundary, the block
+    size L and its neighbours, the 64 KiB snappy chunk, the kernel's
+    slab and past it, single-message batches and mixed batches. A mismatch
+    would corrupt every trailer in a written SST — the rocksdbjni
+    verifyChecksum tests would catch it too, but this pins the codec in
+    isolation against an oracle that is not the kernel."""
     import random
 
-    from bravo_spark.codecs.crc32c import crc32c, crc32c_batch
+    from bravo_spark.codecs import crc32c as C
+    from bravo_spark.codecs.crc32c import crc32c, crc32c_batch, crc32c_bytewise
 
     rng = random.Random(0xC32C)
-    shapes = [0, 1, 2, 3, 7, 8, 17, 255, 256, 4093, 4096, 4099]
-    blobs = [rng.randbytes(rng.choice(shapes)) for _ in range(257)]
-    assert crc32c_batch(blobs) == [crc32c(b) for b in blobs]
-    # batch < 8 takes the scalar fallback branch — pin it explicitly
-    small = blobs[:5]
-    assert crc32c_batch(small) == [crc32c(b) for b in small]
+    L, kmin, slab = C._L, C._KERNEL_MIN, C._SLAB
+    lengths = [0, 1, 2, 3, L - 1, L, L + 1, 2 * L - 1, 2 * L + 1,
+               kmin - 1, kmin, kmin + 1, 4096, 65536, slab - 1, slab,
+               slab + 1, 2 * slab + 3]
+    blobs = [rng.randbytes(n) for n in lengths]
+    want = [crc32c_bytewise(b) for b in blobs]
+    assert [crc32c(b) for b in blobs] == want
+    assert crc32c_batch(blobs) == want
+    for b, w in zip(blobs, want):
+        assert crc32c_batch([b]) == [w]
+    # continuation from a nonzero register, across the slab cut too
+    for b in blobs:
+        assert crc32c(b, 0x9E3779B9) == crc32c_bytewise(b, 0x9E3779B9)
+    shapes = [0, 1, 2, 3, 7, 8, 17, 255, 256, 4093, 4096, 4099, 70000]
+    mixed = [rng.randbytes(rng.choice(shapes)) for _ in range(257)]
+    assert crc32c_batch(mixed) == [crc32c_bytewise(b) for b in mixed]
     assert crc32c_batch([]) == []
-    assert crc32c_batch([b""] * 12) == [crc32c(b"")] * 12
+    assert crc32c_batch([b""] * 12) == [0] * 12
 
 
 def test_sst_writer_deferred_trailers_byte_identical(tmp_path):

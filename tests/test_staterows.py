@@ -62,6 +62,35 @@ def test_list_state_flatten_and_list_duality(spark):
     assert aslist == {1: [1, 2, 1], 2: [3]}
 
 
+@pytest.mark.parametrize("ttl", [False, True])
+def test_list_readers_fast_path_and_fallback(spark, ttl):
+    """Both list readers give the scalar codec's rows whether a batch
+    takes the numpy fast path (fixed-width LONG elements) or falls back
+    (an empty list in the batch; STRING elements)."""
+    ts = 5 if ttl else None
+    lists = {1: [10, -2, 10], 2: [3], 3: [2**40, 0]}
+    full = spark.createDataFrame(
+        pd.DataFrame({"key": list(lists), "value": list(lists.values())}),
+        schema="key long, value array<long>",
+    ).coalesce(1)
+    with_empty = full.unionByName(
+        spark.createDataFrame([(4, [])], "key long, value array<long>")
+    ).coalesce(1)
+    for kv, want in ((full, lists), (with_empty, {**lists, 4: []})):
+        rows = sr.kv_to_state_rows(kv, "L", fc.LONG, fc.LONG, kind="list", ttl_ts=ts)
+        flat = sr.read_list_flatten(rows, "L", fc.LONG, fc.LONG, ttl=ttl).collect()
+        assert sorted(tuple(r) for r in flat) == sorted(
+            (k, e) for k, v in want.items() for e in v
+        )
+        aslist = sr.read_list_as_list(rows, "L", fc.LONG, fc.LONG, ttl=ttl).collect()
+        assert {r["key"]: r["value"] for r in aslist} == want
+
+    skv = spark.createDataFrame([(1, ["a", "bc"])], "key int, value array<string>")
+    srows = sr.kv_to_state_rows(skv, "S", fc.INT, fc.STRING, kind="list", ttl_ts=ts)
+    got = sr.read_list_as_list(srows, "S", fc.INT, fc.STRING, ttl=ttl).collect()
+    assert [tuple(r) for r in got] == [(1, ["a", "bc"])]
+
+
 def test_map_state_entries_and_values(spark):
     # FIXTURES 2.4: {(1,'1',2),(1,'2',1),(2,'3',1)}
     rows_src = [(1, "1", 2), (1, "2", 1), (2, "3", 1)]

@@ -72,3 +72,68 @@ def test_vector_murmur_parity(codes):
     got = vz.vector_murmur(arr)
     for c, g in zip(codes, got):
         assert kh.flink_murmur_hash(c) == g
+
+
+_FIXED_VALUES = {
+    "int": st.integers(min_value=-(2**31), max_value=2**31 - 1),
+    "long": st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    "short": st.integers(min_value=-(2**15), max_value=2**15 - 1),
+    "boolean": st.booleans(),
+    "double": st.floats(allow_nan=False, width=64),
+    "float": st.floats(allow_nan=False, width=32),
+}
+
+
+@given(
+    st.data(),
+    st.sampled_from(sorted(vz.FIXED_DTYPES)),
+    st.sampled_from(["int", "long"]),
+    st.booleans(),
+    st.sampled_from([128, 4096]),
+)
+def test_list_decode_parity(data, element, key, ttl, maxp):
+    """decode_list_fixed against the scalar decode_list_state for every
+    fixed element dtype, TTL on and off. A batch holding an empty list or
+    a ragged row (one stray byte) must decline so the caller falls back."""
+    ec, kc = fc.CODECS[element], fc.CODECS[key]
+    lists = data.draw(
+        st.lists(st.lists(_FIXED_VALUES[element], max_size=6), min_size=1, max_size=12)
+    )
+    keys = data.draw(
+        st.lists(_FIXED_VALUES[key], min_size=len(lists), max_size=len(lists))
+    )
+    kns = [fc.encode_key_ns(k, kc, maxp) for k in keys]
+    raw = [fc.encode_list_state(v, ec, ttl_ts=7 if ttl else None) for v in lists]
+    filled = [i for i, v in enumerate(lists) if v]
+    if filled and data.draw(st.booleans()):
+        # one stray byte on a non-empty row leaves it between record
+        # boundaries (on an empty boolean row it would be one element)
+        raw[data.draw(st.sampled_from(filled))] += b"\x00"
+        assert vz.decode_list_fixed(kns, raw, kc, ec, maxp, ttl=ttl) is None
+        return
+    got = vz.decode_list_fixed(kns, raw, kc, ec, maxp, ttl=ttl)
+    if any(not v for v in lists):
+        assert got is None
+        return
+    out_keys, elements, counts = got
+    want = [fc.decode_list_state(r, ec, ttl=ttl) for r in raw]
+    assert counts.tolist() == [len(w) for w in want]
+    assert out_keys.tolist() == [k for k, w in zip(keys, want) for _ in w]
+    assert elements.tolist() == [e for w in want for e in w]
+    assert elements.dtype == (bool if element == "boolean" else
+                              np.dtype(vz.FIXED_DTYPES[element][0]).newbyteorder("="))
+
+
+def test_list_decode_checks_separators():
+    """The scalar decoder skips separator bytes unread; the fast path
+    declines a batch whose separators aren't LIST_SEPARATOR, so that
+    batch decodes exactly as the scalar path would."""
+    kns = [fc.encode_key_ns(1, fc.INT, 128)]
+    raw = bytearray(fc.encode_list_state([1, 2, 3], fc.INT))
+    raw[4] = 0x00
+    assert fc.decode_list_state(bytes(raw), fc.INT) == [1, 2, 3]
+    assert vz.decode_list_fixed(kns, [bytes(raw)], fc.INT, fc.INT, 128) is None
+    ok = fc.encode_list_state([1, 2, 3], fc.INT)
+    keys, elements, counts = vz.decode_list_fixed(kns, [ok], fc.INT, fc.INT, 128)
+    assert (keys.tolist(), elements.tolist(), counts.tolist()) == ([1, 1, 1], [1, 2, 3], [3])
+
