@@ -627,10 +627,9 @@ def snapshot_datasource_scan(spark, sf_dir):
     directions: ``df.write.format("bravo_savepoint")`` serializes the
     state rows (S7 through the engine's sink contract), then
     ``spark.read.format("bravo_savepoint")`` scans them back with a decoy
-    state present — the ``state_name`` predicate is absorbed by
-    ``pushFilters`` into the byte scan (F1 through the engine's pushdown
-    contract), so the decoy's payloads are length-skipped, never decoded,
-    and the result equals the plain grouped count the oracle computes."""
+    state present — ``.option("state_names", "Count")`` narrows the byte
+    scan, so the decoy's payloads are length-skipped, never decoded, and
+    the result equals the plain grouped count the oracle computes."""
     import json as _json
 
     from bravo_spark.sources import datasource as ds
@@ -657,8 +656,8 @@ def snapshot_datasource_scan(spark, sf_dir):
     )
     scanned = (
         spark.read.format("bravo_savepoint")
+        .option("state_names", "Count")
         .load(out)
-        .filter(F.col("state_name") == "Count")
     )
     return sr.read_value_kv(scanned, "Count", fc.LONG, fc.LONG)
 
@@ -670,11 +669,10 @@ def snapshot_datasource_scan(spark, sf_dir):
 def checkpoint_datasource_scan(spark, sf_dir):
     """The incremental-checkpoint scan through Spark's OWN source
     integration: ``spark.read.format("bravo_checkpoint")`` yields the raw
-    per-version SST relation, the ``state_name`` predicate is absorbed by
-    ``pushFilters`` into COLUMN-FAMILY pruning (a decoy CF's files cost a
-    footer+properties read, their data blocks never touched), and
-    ``resolve_lsm`` + the value reader recover the grouped counts the
-    oracle computes."""
+    per-version SST relation, ``.option("state_names", "Count")`` becomes
+    COLUMN-FAMILY pruning (a decoy CF's files cost a footer+properties
+    read, their data blocks never touched), and ``resolve_lsm`` + the
+    value reader recover the grouped counts the oracle computes."""
     from bravo_spark.sources import checkpoint as ck
     from bravo_spark.sources import datasource as ds
 
@@ -697,8 +695,8 @@ def checkpoint_datasource_scan(spark, sf_dir):
     ds.register(spark)
     raw = (
         spark.read.format("bravo_checkpoint")
+        .option("state_names", "Count")
         .load(out)
-        .filter(F.col("state_name") == "Count")
     )
     return sr.read_value_kv(ck.resolve_lsm(raw), "Count", fc.LONG, fc.LONG)
 

@@ -39,9 +39,6 @@ def tune(spark: SparkSession) -> SparkSession:
         # SMJ for anything bigger.
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # lets EqualTo/In predicates reach Python DataSource pushFilters
-        # (the bravo_savepoint format's F1 byte-scan pushdown)
-        "spark.sql.python.filterPushdown.enabled": "true",
         "spark.sql.shuffle.partitions": str(max(_cpus(), 8)),
         # fixture parquet uses TIMESTAMP(NANOS); read as epoch-nanos long
         # and convert in the catalog (catalog.table)

@@ -6,16 +6,23 @@ executor-local scratch dirs per RocksDBKeyedStateInputFormat.java:70-84).
 RocksDB does the LSM resolution transparently; here the same semantics are
 computed AS A DATAFLOW, which is the shape that scales:
 
-1. **Parallel SST scan** — one Spark task per SST file (mapInPandas over a
-   file-list frame), emitting raw ``(state_name, key_ns, seq, vtype,
-   value)``. Column-family pushdown skips whole files from the footer +
-   properties block alone, before any data-block I/O.
-2. **One shuffle on (state_name, key_ns)** groups every version of a user
-   key — across levels, across files.
-3. **JVM-side resolution** (builtin array expressions, no Python):
-   newest non-merge entry is the base (highest seq wins — LSM shadowing);
-   tombstones (type 0/7) delete; merge operands (type 2) newer than the
-   base concatenate onto it with the ','-delimiter of Flink's
+1. **Plan-time column-family grouping** — the driver reads each SST's
+   footer, metaindex and properties block (ranged reads, no data block)
+   and groups the files by column family; unselected families and
+   Flink's unused 'default' family are dropped here, and a damaged file
+   is refused by name before any job runs. In RocksDB every SST belongs
+   to exactly one column family, and Flink gives each state its own.
+2. **One scan per column family** — one Spark task per SST
+   (``mapInPandas`` over ``spark.range``), emitting raw ``(key_ns, seq,
+   vtype, value)``; ``state_name`` is a literal on each scan and the
+   scans are combined with ``unionByName``. A reader's
+   ``state_name = X`` filter constant-folds the other families' branches
+   away, so their scan, shuffle and fold never run.
+3. **One JVM-side LSM fold** (:func:`resolve_lsm`, no Python) after one
+   shuffle on (state_name, key_ns): the newest non-merge version is the
+   barrier (highest seq wins — LSM shadowing); a put there survives, a
+   tombstone (type 0/7) there deletes; merge operands (type 2) newer than
+   it are appended in seq order with the ','-delimiter of Flink's
    StringAppendOperator (list state appends —
    RocksDBCheckpointIterator.java:62-63 sets the same operator).
 
@@ -26,17 +33,19 @@ unchanged on incremental checkpoints.
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bravo_spark.sources import sst as sstmod
 
-_RAW_SCHEMA = "state_name string, key_ns binary, seq long, vtype int, value binary"
+_SCAN_SCHEMA = "key_ns binary, seq long, vtype int, value binary"
+_RAW_SCHEMA = "state_name string, " + _SCAN_SCHEMA
 
 
 def sst_files_from_flink_metadata(metadata_path: str) -> list[str]:
@@ -87,78 +96,58 @@ def discover_sst_files(ckpt_dir: str) -> list[str]:
     return list_sst_files(ckpt_dir)
 
 
-def iter_sst_entries(
-    path: str,
-    state_filter: Callable[[str], bool],
-    *,
-    verify_checksums: bool = False,
-):
-    """Scan ONE SST with CF pruning → (state_name, key_ns, seq, vtype,
-    value) rows. The column family named in the properties block decides
-    in O(footer+props) whether any data block is read at all; 'default'
-    (Flink's unused CF 0) is always skipped. The one per-file loop both
-    scan front doors (mapInPandas and the DataSource) share.
+def group_by_column_family(
+    paths: list[str], state_filter: Callable[[str], bool] | None = None
+) -> dict[str, list[str]]:
+    """Driver-side plan step: ``{column family: [sst paths]}`` for the
+    families ``state_filter`` selects (all when None), read from each
+    file's footer, metaindex and properties block only; 'default'
+    (Flink's unused CF 0) is always dropped. A truncated or foreign file
+    raises ``ValueError`` naming it here, before any Spark job runs."""
+    groups: dict[str, list[str]] = {}
+    for path in paths:
+        with sstmod.SstReader(path) as reader:
+            name = reader.column_family_name
+        if name != "default" and (state_filter is None or state_filter(name)):
+            groups.setdefault(name, []).append(path)
+    return groups
+
+
+def sst_columns(path: str, verify_checksums: bool = False) -> tuple:
+    """Every entry of ONE SST as four columns (key_ns, seq, vtype, value),
+    or ``()`` for an empty file — the per-file loop of both scan front
+    doors (``read_incremental_checkpoint`` and the DataSource).
 
     ``verify_checksums=True`` verifies every block trailer (all four
     RocksDB checksum types, incl. kXXH3's modifiers) before decoding —
     the integrity-audit mode for checkpoints of uncertain provenance;
     off by default because verification is per-byte Python work on top
     of the scan."""
-    reader = sstmod.SstReader(path, verify_checksums=verify_checksums)
-    name = reader.column_family_name
-    if name == "default" or not state_filter(name):
-        return  # CF pushdown: footer+props read, data blocks skipped
-    for user_key, seq, vtype, value in reader.iter_entries():
-        yield name, user_key, seq, vtype, value
+    with sstmod.SstReader(path, verify_checksums=verify_checksums) as reader:
+        return tuple(zip(*reader.iter_entries()))
 
 
-def _scan_ssts(
-    pdf_iter: Iterator[pd.DataFrame],
-    state_filter: Callable[[str], bool],
-    verify_checksums: bool = False,
-):
+def _scan_ssts(pdf_iter: Iterator[pd.DataFrame], verify_checksums: bool):
     for pdf in pdf_iter:
         for path in pdf["path"]:
-            names, keys, seqs, types, vals = [], [], [], [], []
-            for name, user_key, seq, vtype, value in iter_sst_entries(
-                path, state_filter, verify_checksums=verify_checksums
-            ):
-                names.append(name)
-                keys.append(user_key)
-                seqs.append(seq)
-                types.append(vtype)
-                vals.append(value)
-            if not names:
-                continue
-            yield pd.DataFrame(
-                {
-                    "state_name": names,
-                    "key_ns": keys,
-                    "seq": seqs,
-                    "vtype": types,
-                    "value": vals,
-                },
-                columns=["state_name", "key_ns", "seq", "vtype", "value"],
-            )
+            columns = sst_columns(path, verify_checksums)
+            if columns:
+                yield pd.DataFrame(dict(zip(("key_ns", "seq", "vtype", "value"), columns)))
 
 
-# LSM resolution over the per-key version array, entirely in builtin
-# expressions. ``es`` is collect_list(struct(seq, vtype, value)).
-_PARTS_SQL = """
-CASE WHEN _base IS NOT NULL AND _base.vtype = 1 THEN array(_base.value)
-     ELSE cast(array() AS array<binary>) END
-|| transform(
-     array_sort(filter(es, x -> x.vtype = 2
-                           AND (_barrier IS NULL OR x.seq > _barrier))),
-     x -> x.value)
-"""
-
-_VALUE_SQL = """
-CASE WHEN size(parts) = 0 THEN NULL
-     ELSE aggregate(slice(parts, 2, size(parts) - 1), element_at(parts, 1),
-                    (acc, x) -> concat(acc, X'2C', x))
-END
-"""
+def _scan_column_family(
+    spark: SparkSession, name: str, paths: list[str], verify_checksums: bool
+) -> DataFrame:
+    """One task per SST of one column family; ``state_name`` is a literal,
+    so a filter on another state folds this whole branch away."""
+    n = len(paths)
+    frame = spark.range(n, numPartitions=n).select(
+        F.element_at(F.lit(paths), (F.col("id") + 1).cast("int")).alias("path")
+    )
+    scanned = frame.mapInPandas(
+        lambda it: _scan_ssts(it, verify_checksums), schema=_SCAN_SCHEMA
+    )
+    return scanned.select(F.lit(name).alias("state_name"), "key_ns", "seq", "vtype", "value")
 
 
 def read_incremental_checkpoint(
@@ -169,196 +158,51 @@ def read_incremental_checkpoint(
     state_names: list[str] | None = None,
     files: list[str] | None = None,
     verify_checksums: bool = False,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Incremental checkpoint → universal state-row relation.
     ``verify_checksums=True`` block-verifies every SST during the scan
     (integrity audit; corrupt blocks fail the task loudly instead of
-    decoding garbage). LSM resolution defaults to the linear
-    :func:`resolve_lsm_streamed` fold (r15 — a merge-heavy key is safe by
-    DEFAULT, nobody has to remember a flag on the one checkpoint that has
-    one); ``skew_safe=False`` opts back into the JVM-side collect_list
-    fold, faster on uniformly tiny per-key version counts but per-key
-    QUADRATIC in merge-operand count — see :func:`resolve_lsm_collected`."""
+    decoding garbage). Damaged SST metadata raises ``ValueError`` naming
+    the file from this call, before any job runs."""
     if state_names is not None:
-        selected = set(state_names)
-        state_filter = lambda n: n in selected  # noqa: E731
-    elif state_filter is None:
-        state_filter = lambda _n: True  # noqa: E731
+        state_filter = set(state_names).__contains__
 
     paths = files if files is not None else discover_sst_files(ckpt_dir)
-    frame = spark.createDataFrame(
-        [(p,) for p in paths], schema="path string"
-    ).repartition(max(1, len(paths)))  # one SST per task
-
-    raw = frame.mapInPandas(
-        lambda it: _scan_ssts(it, state_filter, verify_checksums),
-        schema=_RAW_SCHEMA,
+    scans = [
+        _scan_column_family(spark, name, cf_paths, verify_checksums)
+        for name, cf_paths in sorted(group_by_column_family(paths, state_filter).items())
+    ]
+    raw = (
+        functools.reduce(DataFrame.unionByName, scans)
+        if scans
+        else spark.createDataFrame([], _RAW_SCHEMA)
     )
-    return resolve_lsm(raw, skew_safe=skew_safe)
+    return resolve_lsm(raw)
 
 
-def resolve_lsm(raw: DataFrame, *, skew_safe: bool = True) -> DataFrame:
+def resolve_lsm(raw: DataFrame) -> DataFrame:
     """LSM resolution over the raw per-version SST relation
-    (state_name, key_ns, seq, vtype, value): newest-seq shadowing,
-    tombstones, StringAppend merge-operand folding — one shuffle on
+    (state_name, key_ns, seq, vtype, value), JVM-side, one shuffle on
     (state_name, key_ns). Shared by ``read_incremental_checkpoint`` and
-    the ``bravo_checkpoint`` DataSource front door
-    (sources/datasource.py), whose scan yields the same raw relation.
+    the ``bravo_checkpoint`` DataSource front door.
 
-    Routes to the linear :func:`resolve_lsm_streamed` fold by DEFAULT
-    (r15): its time and per-key memory are linear in a key's version
-    count, so a checkpoint with one merge-heavy key (millions of
-    StringAppend operands) resolves safely without anyone remembering a
-    flag. ``skew_safe=False`` opts into :func:`resolve_lsm_collected`,
-    the JVM-side collect_list fold — marginally faster when every key's
-    version count is tiny, but per-key quadratic (measured: 14 s at 5k
-    operands, 189 s at 20k); equivalence between the two is
-    pytest-pinned to 100k operands."""
-    return resolve_lsm_streamed(raw) if skew_safe else resolve_lsm_collected(raw)
-
-
-def resolve_lsm_collected(raw: DataFrame) -> DataFrame:
-    """The pre-r15 default: LSM resolution with ``collect_list`` + builtin
-    expressions, everything JVM-side.
-
-    PER-KEY BOUNDS: ``collect_list`` gathers every surviving version of a
-    key into ONE array row, so peak per-key memory is
-    O(sum of all version payloads + per-element struct overhead) — for a
-    pathological key that accumulated millions of merge operands this is
-    a single-row executor-memory bound (RocksDB itself degrades on such a
-    key, but it streams; this doesn't). Worse, the JVM concat fold over
-    that array recopies the accumulated buffer per operand, so time is
-    QUADRATIC in a key's merge-operand count (measured: 14 s at 5k
-    operands, 189 s at 20k). Both bounds are per-key, so the normal case
-    — bounded operand counts between compactions — is unaffected; that is
-    why this variant remains available behind ``skew_safe=False``."""
-    resolved = (
-        raw.groupBy("state_name", "key_ns")
-        .agg(F.collect_list(F.struct("seq", "vtype", "value")).alias("es"))
-        .withColumn(
-            "_barrier",
-            F.expr("array_max(transform(filter(es, x -> x.vtype != 2), x -> x.seq))"),
+    The barrier is the newest non-merge version of the key (window max of
+    ``seq``): a put there survives, a tombstone there does not, and every
+    merge operand newer than it is appended in ``seq`` order with the ','
+    delimiter of Flink's StringAppendOperator. Keys with nothing left
+    (tombstoned, no newer merge) drop out. ``listagg`` gathers a key's
+    surviving values once and joins them once, so time and memory are
+    linear in the key's operand count."""
+    key = Window.partitionBy("state_name", "key_ns")
+    return (
+        raw.withColumn("_barrier", F.max(F.when(F.col("vtype") != 2, F.col("seq"))).over(key))
+        .filter(
+            "(vtype = 1 AND seq = _barrier)"
+            " OR (vtype = 2 AND (_barrier IS NULL OR seq > _barrier))"
         )
-        .withColumn(
-            "_base",
-            # try_element_at: ANSI-safe on the empty array when every
-            # version of the key is a merge operand (no base yet)
-            F.expr(
-                "try_element_at(filter(es, x -> x.vtype != 2 AND x.seq = _barrier), 1)"
-            ),
-        )
-        .withColumn("parts", F.expr(_PARTS_SQL))
-        .withColumn("value", F.expr(_VALUE_SQL))
-        .filter(F.col("value").isNotNull())
-        .select("state_name", "key_ns", "value")
+        .groupBy("state_name", "key_ns")
+        .agg(F.expr("listagg(value, X'2C') WITHIN GROUP (ORDER BY seq)").alias("value"))
     )
-    return resolved
-
-
-def resolve_lsm_streamed(raw: DataFrame) -> DataFrame:
-    """The default LSM fold since r15: same shuffle on
-    (state_name, key_ns) as :func:`resolve_lsm_collected`, but instead of
-    ``collect_list`` the versions are sorted within each partition by
-    (key, seq) and folded in Arrow-batch order — ascending seq means each
-    non-merge entry simply RESETS the fold (a put replaces the buffer, a
-    tombstone clears it) and each merge operand appends, so peak per-key
-    memory is just the folded value bytes, never the full version array.
-    A key with millions of merge operands streams through ~10k-row
-    batches instead of materializing one giant array row. Output and
-    semantics are identical to ``resolve_lsm_collected`` (equivalence is
-    pytest-pinned, including the 100k-operand skew case).
-
-    r20 (guide §4): batches with NO merge operands — the overwhelmingly
-    common case for value state, every version a put or a tombstone —
-    resolve vectorized: ascending seq within a key means the LAST row of
-    each key group wins outright, so group boundaries come from one
-    shifted equality over the batch and the winners from a mask, no
-    per-row Python. A batch carrying any merge operand falls back to the
-    row fold; the cross-batch carry (``cur_key``/``buf``) is shared by
-    both paths, so keys spanning batch or path boundaries resolve
-    identically (pytest-pinned against the row fold, mixed batches
-    included)."""
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cur_key: tuple | None = None
-        buf: bytearray | None = None
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_names: list[str] = []
-            out_keys: list[bytes] = []
-            out_vals: list[bytes] = []
-            vt = pdf["vtype"].to_numpy()
-            if (vt == 2).any():
-                # row fold: merge operands need the running concatenation
-                for name, key_ns, vtype, value in zip(
-                    pdf["state_name"], pdf["key_ns"], vt, pdf["value"]
-                ):
-                    k = (name, bytes(key_ns))
-                    if k != cur_key:
-                        if cur_key is not None and buf is not None:
-                            out_names.append(cur_key[0])
-                            out_keys.append(cur_key[1])
-                            out_vals.append(bytes(buf))
-                        cur_key, buf = k, None
-                    if vtype == 1:  # put: replaces everything older
-                        buf = bytearray(value)
-                    elif vtype == 2:  # merge operand: StringAppend fold
-                        if buf is None:
-                            buf = bytearray(value)
-                        else:
-                            buf += b"," + bytes(value)
-                    else:  # tombstone (0/7): clears
-                        buf = None
-            else:
-                names = pdf["state_name"].to_numpy()
-                keys = pdf["key_ns"].to_numpy()
-                vals = pdf["value"].to_numpy()
-                first_key = (names[0], bytes(keys[0]))
-                if cur_key is not None and first_key != cur_key:
-                    # previous batch's final key ended at the boundary
-                    if buf is not None:
-                        out_names.append(cur_key[0])
-                        out_keys.append(cur_key[1])
-                        out_vals.append(bytes(buf))
-                # else: the carry's key continues into this batch, and
-                # with only puts/tombstones present every newer version
-                # RESETS the fold — the carry is simply superseded
-                if len(pdf) > 1:
-                    same = (names[1:] == names[:-1]) & (keys[1:] == keys[:-1])
-                    # row i ends a key group iff row i+1 starts a new one
-                    ends = np.flatnonzero(~same)
-                else:
-                    ends = np.empty(0, dtype=np.int64)
-                for i in ends:
-                    if vt[i] == 1:  # winner is a put -> the key survives
-                        out_names.append(names[i])
-                        out_keys.append(bytes(keys[i]))
-                        out_vals.append(bytes(vals[i]))
-                # the batch's final group carries into the next batch
-                cur_key = (names[-1], bytes(keys[-1]))
-                buf = bytearray(vals[-1]) if vt[-1] == 1 else None
-            if out_vals:
-                yield pd.DataFrame(
-                    {"state_name": out_names, "key_ns": out_keys, "value": out_vals}
-                )
-        if cur_key is not None and buf is not None:
-            yield pd.DataFrame(
-                {
-                    "state_name": [cur_key[0]],
-                    "key_ns": [cur_key[1]],
-                    "value": [bytes(buf)],
-                }
-            )
-
-    shaped = raw.repartition("state_name", "key_ns").sortWithinPartitions(
-        "state_name", "key_ns", "seq"
-    )
-    return shaped.mapInPandas(fold, schema="state_name string, key_ns binary, value binary")
 
 
 def write_sst_fixture(

@@ -6,14 +6,14 @@ integration (``pyspark.sql.datasource``, Spark 4.x) instead of the
 mapInPandas fallback — same bytes, same splits, but the scan now
 participates in Spark's planning like any native source:
 
-- **Filter pushdown (F1 through the engine API)**: ``EqualTo``/``In``
-  predicates on ``state_name`` reach :meth:`DataSourceReader.pushFilters`
-  (Spark 4.1) and are translated into the byte-scan's state filter — the
-  decoder then length-skips non-selected states' payloads, and the
-  pushed predicate disappears from Spark's post-scan filter. The
-  reference achieves the same effect inside its InputFormat
-  (reader/inputformat/RocksDBKeyedStateInputFormat.java:46-47); here it
-  is the engine's own pushdown contract doing it.
+- **State selection per load**: ``.option("state_names", "A,B")``
+  narrows the byte scan to those states — the decoder length-skips every
+  other state's payloads. The reference achieves the same effect inside
+  its InputFormat (reader/inputformat/RocksDBKeyedStateInputFormat.java:
+  46-47). ``state_name`` filters are not pushed into the source: Spark
+  keeps one mutable pushdown state per loaded relation, so two filters on
+  one ``load()`` would overwrite each other's selection; they stay
+  ordinary Spark filters instead.
 - **Byte-targeted partition planning**: one :class:`InputPartition` per
   ``_plan_scan`` split (the ``maxPartitionBytes``-posture sizing shared
   with ``read_savepoint``), so tiny savepoints are one task per file and
@@ -36,8 +36,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceArrowWriter,
-    EqualTo,
-    In,
     InputPartition,
     WriterCommitMessage,
 )
@@ -70,10 +68,10 @@ class SavepointDataSource(DataSource):
         return SavepointWriter(self.options, overwrite)
 
 
-class _StateNamePushdownReader(DataSourceReader):
-    """Shared base for the bravo scan readers: path/state_names option
-    parsing and the ``state_name`` EqualTo/In pushdown contract live in
-    ONE place, so both formats absorb predicates identically."""
+class _StateNameReader(DataSourceReader):
+    """Shared base for the bravo scan readers: ``path`` and the
+    ``state_names`` narrowing option are parsed in ONE place, so both
+    formats select states identically."""
 
     _WHAT = "a directory"
 
@@ -86,36 +84,19 @@ class _StateNamePushdownReader(DataSourceReader):
             )
         self.path = path
         names = options.get("state_names")
-        # option-level narrowing composes with pushed filters (AND)
         self.state_names: set[str] | None = (
             {n.strip() for n in names.split(",") if n.strip()} if names else None
         )
 
-    def _narrow(self, names: set[str]) -> None:
-        self.state_names = (
-            names if self.state_names is None else self.state_names & names
-        )
 
-    def pushFilters(self, filters):
-        """Absorb state_name equality/membership predicates into the byte
-        scan; everything else stays with Spark."""
-        for f in filters:
-            if isinstance(f, EqualTo) and f.attribute == ("state_name",):
-                self._narrow({f.value})
-            elif isinstance(f, In) and f.attribute == ("state_name",):
-                self._narrow(set(f.value))
-            else:
-                yield f
-
-
-class SavepointScanReader(_StateNamePushdownReader):
+class SavepointScanReader(_StateNameReader):
     _WHAT = "a savepoint directory"
 
     def partitions(self):
         from bravo_spark.sources.savepoint import _plan_scan
 
         if self.state_names is not None and not self.state_names:
-            # option ∩ pushed filters is provably empty — no bytes to scan
+            # the option names no state — no bytes to scan
             return [InputPartition(json.dumps(
                 {"ids": {}, "names": [], "compressed": False,
                  "file": None, "spans": []}))]
@@ -386,16 +367,14 @@ class CheckpointDataSource(DataSource):
     incremental-checkpoint (RocksDB SST) scan through the engine's source
     contract. Yields the RAW per-version relation (state_name, key_ns,
     seq, vtype, value): apply :func:`bravo_spark.sources.checkpoint.
-    resolve_lsm` on top for the merged view, exactly as
-    ``read_incremental_checkpoint`` does — which since r15 defaults to
-    the linear streamed fold (merge-heavy keys are safe by default;
-    ``resolve_lsm(raw, skew_safe=False)`` opts back into the JVM
-    collect_list fold).
+    resolve_lsm` on top for the merged view, the same JVM-side fold
+    ``read_incremental_checkpoint`` uses.
 
-    ``state_name`` EqualTo/In predicates reach ``pushFilters`` and become
-    COLUMN-FAMILY pruning: each SST names its column family in its
-    properties block, so a non-selected file costs a footer+properties
-    read and its data blocks are never touched.
+    ``.option("state_names", "A,B")`` becomes COLUMN-FAMILY pruning at
+    plan time: each SST names its column family in its properties block,
+    so a non-selected file costs one footer+properties read on the driver
+    and gets no task. A damaged SST is refused by name when the scan is
+    planned.
 
     ``.option("verify_checksums", "true")`` switches on the
     integrity-audit mode (same contract as the functional API's kwarg):
@@ -415,7 +394,7 @@ class CheckpointDataSource(DataSource):
         return CheckpointScanReader(self.options)
 
 
-class CheckpointScanReader(_StateNamePushdownReader):
+class CheckpointScanReader(_StateNameReader):
     _WHAT = "a checkpoint directory"
 
     def __init__(self, options):
@@ -427,58 +406,45 @@ class CheckpointScanReader(_StateNamePushdownReader):
         )
 
     def partitions(self):
-        from bravo_spark.sources.checkpoint import discover_sst_files
+        from bravo_spark.sources.checkpoint import (
+            discover_sst_files,
+            group_by_column_family,
+        )
 
-        if self.state_names is not None and not self.state_names:
-            return [InputPartition(json.dumps(
-                {"file": None, "names": [],
-                 "verify": self.verify_checksums}))]
-        names = sorted(self.state_names) if self.state_names is not None else None
         # either layout: a Flink checkpoint (_metadata walk) or a
-        # transferred/self-written directory (glob) — same discovery the
-        # library path uses
-        # metadata that references no .sst files (heap-state / full
-        # savepoints) must still yield a well-formed empty relation:
-        # Spark replaces an empty partitions list with [None], which
-        # would crash read(None) — mirror SavepointScanReader's
-        # {file: None} fallback partition
-        # the fallback partition carries the verify flag too: read()
-        # returns immediately on file=None today, but a refactor that
-        # makes it non-trivial must not silently drop the audit mode
+        # transferred/self-written directory (glob) — same discovery and
+        # the same plan-time column-family grouping as the library path
+        groups = group_by_column_family(
+            discover_sst_files(self.path),
+            None if self.state_names is None else self.state_names.__contains__,
+        )
+        # no selected file (a metadata referencing no .sst, or no matching
+        # state) must still yield a well-formed empty relation: Spark
+        # replaces an empty partitions list with [None], which would crash
+        # read(None) — mirror SavepointScanReader's {file: None} sentinel
         return [
             InputPartition(json.dumps(
-                {"file": p, "names": names, "verify": self.verify_checksums}))
-            for p in discover_sst_files(self.path)
+                {"file": p, "state_name": name, "verify": self.verify_checksums}))
+            for name, paths in sorted(groups.items())
+            for p in paths
         ] or [InputPartition(json.dumps(
-            {"file": None, "names": names,
-             "verify": self.verify_checksums}))]
+            {"file": None, "state_name": None, "verify": self.verify_checksums}))]
 
     def read(self, partition: InputPartition):
         import pyarrow as pa
 
-        from bravo_spark.sources.checkpoint import iter_sst_entries
+        from bravo_spark.sources.checkpoint import sst_columns
 
         spec = json.loads(partition.value)
         if spec["file"] is None:
             return
-        allowed = set(spec["names"]) if spec["names"] is not None else None
-        state_filter = (
-            (lambda n: n in allowed) if allowed is not None else (lambda _n: True)
-        )
-        names, keys, seqs, types, vals = [], [], [], [], []
-        for name, user_key, seq, vtype, value in iter_sst_entries(
-            spec["file"], state_filter, verify_checksums=spec["verify"]
-        ):
-            names.append(name)
-            keys.append(user_key)
-            seqs.append(seq)
-            types.append(vtype)
-            vals.append(value)
-        if not names:
+        columns = sst_columns(spec["file"], spec["verify"])
+        if not columns:
             return
+        keys, seqs, types, vals = columns
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(names, type=pa.string()),
+                pa.array([spec["state_name"]] * len(keys), type=pa.string()),
                 pa.array(keys, type=pa.binary()),
                 pa.array(seqs, type=pa.int64()),
                 pa.array(types, type=pa.int32()),

@@ -240,30 +240,54 @@ def make_internal_key(user_key: bytes, seq: int, vtype: int) -> bytes:
 
 
 class SstReader:
-    """One BlockBasedTable file. Parses the footer/metaindex/properties on
-    open (cheap — no data blocks touched), so column-family pushdown can
-    skip whole files before any data I/O."""
+    """One BlockBasedTable file, read by ranged ``seek``/``read`` calls.
+    Opening reads the footer, metaindex and properties block only, so the
+    column family is known before any data block is touched; data blocks
+    are read as :meth:`iter_entries` reaches them. The file stays open
+    until :meth:`close` (or the end of a ``with`` block)."""
 
     def __init__(self, path: str, *, verify_checksums: bool = False):
         self.path = path
         self.verify_checksums = verify_checksums
-        with open(path, "rb") as f:
-            self._buf = f.read()
-        if len(self._buf) < _FOOTER_LEGACY:
-            raise ValueError(f"{path}: too short to be an SST")
-        self._parse_footer()
-        self.properties = self._read_properties()
+        self._f = open(path, "rb")
+        try:
+            self.size = self._f.seek(0, 2)
+            if self.size < _FOOTER_LEGACY:
+                raise ValueError(f"{path}: too short to be an SST")
+            self._parse_footer()
+            self.properties = self._read_properties()
+        except (struct.error, IndexError) as exc:
+            self._f.close()
+            raise ValueError(f"{path}: corrupt SST metadata ({exc})") from exc
+        except BaseException:
+            self._f.close()
+            raise
+
+    def close(self) -> None:
+        self._f.close()
+
+    def __enter__(self) -> "SstReader":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def _read_at(self, offset: int, n: int) -> bytes:
+        self._f.seek(offset)
+        return self._f.read(n)
 
     # --- structure ---
 
     def _parse_footer(self) -> None:
-        buf = self._buf
+        buf = self._read_at(max(0, self.size - _FOOTER_NEW), _FOOTER_NEW)
         (magic,) = struct.unpack("<Q", buf[-8:])
         if magic == BLOCK_BASED_MAGIC:
             (version,) = struct.unpack("<I", buf[-12:-8])
             if version == 0:
-                raise ValueError("format_version 0 with new magic")
+                raise ValueError(f"{self.path}: format_version 0 with new magic")
             footer = buf[-_FOOTER_NEW:]
+            if len(footer) < _FOOTER_NEW:
+                raise ValueError(f"{self.path}: too short to be an SST")
             self.checksum_type = footer[0]
             self.format_version = version
             if version >= 6:
@@ -274,7 +298,7 @@ class SstReader:
                     )
                 self.base_context_checksum = struct.unpack("<I", footer[9:13])[0]
                 (meta_size,) = struct.unpack("<I", footer[13:17])
-                meta_off = len(buf) - _FOOTER_NEW - 5 - meta_size
+                meta_off = self.size - _FOOTER_NEW - 5 - meta_size
                 if meta_off < 0:
                     raise ValueError(f"{self.path}: v6 metaindex out of range")
                 self.metaindex_handle = BlockHandle(meta_off, meta_size)
@@ -296,8 +320,8 @@ class SstReader:
             raise ValueError(f"{self.path}: not a block-based SST (bad magic)")
 
     def read_block(self, handle: BlockHandle) -> bytes:
-        raw = self._buf[handle.offset : handle.offset + handle.size]
-        trailer = self._buf[handle.offset + handle.size : handle.offset + handle.size + 5]
+        block = self._read_at(handle.offset, handle.size + 5)
+        raw, trailer = block[: handle.size], block[handle.size :]
         if len(raw) != handle.size or len(trailer) != 5:
             raise ValueError(f"{self.path}: block handle out of range")
         compression = trailer[0]

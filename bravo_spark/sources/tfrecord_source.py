@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from bravo_spark.sources.shards import read_shards, write_shards
 
 RECORD_SCHEMA = "archive string, rec_index long, record binary"
+_WRITE_CHUNK = 1024  # records framed per write_tfrecords call
 
 
 def encode_examples(
@@ -135,16 +136,19 @@ def write_tfrecord_shards(
     def encode(rows, out):
         import contextlib
         import gzip
+        import itertools
 
         from bravo_spark.codecs.tfrecord import write_tfrecords
 
+        recs = (r["rec"] for r in rows if r["rec"] is not None)
         n = 0
         with (gzip.GzipFile(filename="", fileobj=out, mode="wb", mtime=0)
               if compression == "gzip" else contextlib.nullcontext(out)) as f:
-            for r in rows:
-                if r["rec"] is not None:
-                    f.write(write_tfrecords([r["rec"]]))
-                    n += 1
+            # one write_tfrecords call per chunk: its checksums share one
+            # crc32c_batch pass
+            while chunk := list(itertools.islice(recs, _WRITE_CHUNK)):
+                f.write(write_tfrecords(chunk))
+                n += len(chunk)
         return n
 
     return write_shards(records.select(F.col(payload_col).alias("rec")),

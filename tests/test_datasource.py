@@ -1,5 +1,6 @@
-"""The bravo_savepoint Python DataSource: spark.read integration, filter
-pushdown into the byte scan, split planning, option narrowing."""
+"""The bravo_savepoint / bravo_checkpoint Python DataSources: spark.read
+integration, split planning, state_names option narrowing, and
+state_name filters that stay correct Spark-side."""
 
 from __future__ import annotations
 
@@ -40,13 +41,17 @@ def test_datasource_scan_and_decode(spark, tmp_path):
     )
     assert got == [(k, k * 10) for k in range(40)]
 
-    # the pushed predicate is ABSORBED: the post-scan Filter keeps only
-    # the isnotnull guard, no state_name equality remains Spark-side
-    plan = filt._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan bravo_savepoint" in plan
-    assert "= Count" not in plan and "Count)" not in plan
+    # the option narrows the byte scan itself: same rows, and no
+    # state_name comparison is left for Spark to evaluate
+    narrowed = spark.read.format("bravo_savepoint").option("state_names", "Count").load(out)
+    assert sorted(
+        tuple(r)
+        for r in sr.read_value_kv(narrowed, "Count", fc.INT, fc.INT).collect()
+    ) == got
+    plan = narrowed._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan bravo_savepoint" in plan and "Count" not in plan.split("BatchScan")[0]
 
-    # re-register is a no-op, and In() pushdown returns both states
+    # re-register is a no-op, and an In() filter returns both states
     ds.register(spark)
     assert df.filter(F.col("state_name").isin("Count", "Other")).count() == 80
 
@@ -60,22 +65,61 @@ def test_datasource_compressed_and_option_narrowing(spark, tmp_path):
         .load(out)
     )
     assert narrowed.count() == 40
-    # option + contradictory pushed filter intersect to the empty set
+    # option + contradictory Spark-side filter: the empty set
     assert narrowed.filter(F.col("state_name") == "Count").count() == 0
 
 
 def test_push_filters_unit():
+    """The readers do not absorb pushed filters: every filter, state_name
+    ones included, goes back to Spark, and the selection comes from the
+    state_names option alone."""
     from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, In
 
-    r = ds.SavepointScanReader({"path": "/nonexistent"})
-    other = GreaterThanOrEqual(("key_ns",), b"")
-    remaining = list(
-        r.pushFilters(
-            [EqualTo(("state_name",), "A"), In(("state_name",), ("A", "B")), other]
-        )
+    for reader in (ds.SavepointScanReader, ds.CheckpointScanReader):
+        r = reader({"path": "/nonexistent", "state_names": "A, B"})
+        filters = [
+            EqualTo(("state_name",), "A"),
+            In(("state_name",), ("A", "B")),
+            GreaterThanOrEqual(("key_ns",), b""),
+        ]
+        assert list(r.pushFilters(filters)) == filters
+        assert r.state_names == {"A", "B"}
+        assert reader({"path": "/nonexistent"}).state_names is None
+
+
+def test_state_filters_on_one_load_stay_separate(spark, tmp_path):
+    """One loaded relation filtered on two different state names in one
+    query: each branch returns its own state's rows. When state_name
+    filters were pushed into the reader, Spark 4.1's single mutable
+    pushdown state per loaded relation let the last pushed filter win
+    for both branches."""
+    from bravo_spark.sources import checkpoint as ck
+
+    kv = spark.createDataFrame([(k, k) for k in range(30)], "key int, value int")
+    counts = sr.kv_to_state_rows(kv, "counts", fc.INT, fc.INT)
+    decoy = sr.kv_to_state_rows(kv.filter("key < 10"), "decoy", fc.INT, fc.INT)
+    rows = counts.unionByName(decoy)
+    sp_dir = str(tmp_path / "sp")
+    sp.write_savepoint(
+        rows, sp_dir, max_parallelism=128, parallelism=2,
+        state_ids={"counts": 0, "decoy": 1},
     )
-    assert remaining == [other]  # name predicates absorbed, rest yielded
-    assert r.state_names == {"A"}  # EqualTo({A}) ∩ In({A,B})
+    ck_dir = str(tmp_path / "ck")
+    ck.write_incremental_checkpoint(
+        rows, ck_dir, max_parallelism=128, parallelism=2,
+        state_ids={"counts": 0, "decoy": 1},
+    )
+    ds.register(spark)
+    for fmt, path in (("bravo_savepoint", sp_dir), ("bravo_checkpoint", ck_dir)):
+        s = spark.read.format(fmt).load(path)
+        got = (
+            s.filter("state_name='counts'")
+            .unionAll(s.filter("state_name='decoy'"))
+            .groupBy("state_name")
+            .count()
+            .collect()
+        )
+        assert sorted(tuple(r) for r in got) == [("counts", 30), ("decoy", 10)], fmt
 
 
 def test_datasource_requires_path():
@@ -212,9 +256,9 @@ def test_datasource_empty_selection_short_circuits(spark, tmp_path):
         .filter(F.col("state_name") == "Count")
     )
     assert empty.count() == 0
-    # provably-empty selection plans the single no-op sentinel partition
-    r = ds.SavepointScanReader({"path": out, "state_names": "Other"})
-    list(r.pushFilters([__import__("pyspark").sql.datasource.EqualTo(("state_name",), "Count")]))
+    # an option that names no state plans the single no-op sentinel
+    # partition
+    r = ds.SavepointScanReader({"path": out, "state_names": " , "})
     parts = r.partitions()
     assert len(parts) == 1
     import json as _json
@@ -241,8 +285,9 @@ def test_checkpoint_datasource_scan(spark, tmp_path):
     )
     ds.register(spark)
 
-    raw = spark.read.format("bravo_checkpoint").load(out)
-    only = raw.filter(F.col("state_name") == "Count")
+    only = (
+        spark.read.format("bravo_checkpoint").option("state_names", "Count").load(out)
+    )
     got = sorted(
         tuple(r)
         for r in sr.read_value_kv(
@@ -259,13 +304,24 @@ def test_checkpoint_datasource_scan(spark, tmp_path):
         ).collect()
     )
     assert got == lib
-    # the pushed predicate is absorbed (only the isnotnull guard remains)
+    # the option prunes column families in the scan: only Count's
+    # versions come out, with no state_name comparison left for Spark
+    assert [r[0] for r in only.select("state_name").distinct().collect()] == ["Count"]
     plan = only._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan bravo_checkpoint" in plan and "= Count" not in plan
+    assert "BatchScan bravo_checkpoint" in plan
+    assert "Count" not in plan.split("BatchScan")[0]
+    # a Spark-side filter on the unnarrowed load gives the same rows
+    raw = spark.read.format("bravo_checkpoint").load(out)
+    assert sorted(
+        tuple(r)
+        for r in sr.read_value_kv(
+            ck.resolve_lsm(raw.filter(F.col("state_name") == "Count")),
+            "Count", fc.LONG, fc.LONG,
+        ).collect()
+    ) == got
 
-    # provably-empty selection plans the no-op sentinel
-    r = ds.CheckpointScanReader({"path": out, "state_names": "Decoy"})
-    list(r.pushFilters([__import__("pyspark").sql.datasource.EqualTo(("state_name",), "Count")]))
+    # an option that names no state plans the no-op sentinel
+    r = ds.CheckpointScanReader({"path": out, "state_names": " , "})
     parts = r.partitions()
     assert len(parts) == 1 and _json.loads(parts[0].value)["file"] is None
 

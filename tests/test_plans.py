@@ -316,6 +316,59 @@ def test_snapshot_write_plan_is_single_shuffle(spark, tmp_path):
     assert "pythonUDF" not in p.lower() or "MapInPandas" in p
 
 
+def test_checkpoint_typed_reads_scan_only_their_column_family(spark, tmp_path):
+    """Two typed reads of a two-column-family checkpoint: the state_name
+    filter of each reader constant-folds the other family's branch away,
+    so each branch scans only its own SSTs (one scan node carrying its
+    own state literal), shuffles once, and folds in the JVM."""
+    from pyspark.sql import functions as F
+
+    from bravo_spark.codecs import flink as fc
+    from bravo_spark.sources import checkpoint as ck
+    from bravo_spark.sources import staterows as sr
+
+    kv = spark.createDataFrame([(k, k) for k in range(20)], "key long, value long")
+    lists = spark.createDataFrame(
+        [(k, [k, k + 1]) for k in range(10)], "key long, value array<long>"
+    )
+    rows = sr.kv_to_state_rows(kv, "counts", fc.LONG, fc.LONG).unionByName(
+        sr.kv_to_state_rows(lists, "events", fc.LONG, fc.LONG, kind="list")
+    )
+    out = str(tmp_path / "ck")
+    ck.write_incremental_checkpoint(
+        rows, out, max_parallelism=128, parallelism=2,
+        state_ids={"counts": 0, "events": 1},
+    )
+    raw = ck.read_incremental_checkpoint(spark, out)
+    counts = sr.read_value_kv(raw, "counts", fc.LONG, fc.LONG)
+    events = sr.read_list_flatten(raw, "events", fc.LONG, fc.LONG)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    scan = "MapInPandas <lambda>(path#"
+    for df, own, other in ((counts, "counts", "events"), (events, "events", "counts")):
+        p = plan(df)
+        assert p.count(scan) == 1, p
+        assert f"{own} AS state_name" in p and f"{other} AS state_name" not in p, p
+        assert p.count("Exchange hashpartitioning(state_name") == 1, p
+
+    b = (F.col("key") % 4).alias("b")
+    q = counts.groupBy(b).count().join(
+        events.groupBy(b).agg(F.sum("value")), "b", "full_outer"
+    )
+    p = plan(q)
+    assert p.count(scan) == 2
+    assert "RoundRobinPartitioning" not in p
+    assert " fold(" not in p and "collect_list" not in p
+    # MapInPandas nodes: the two SST scans and the two typed decoders
+    assert p.count("MapInPandas") == 4
+    assert p.count("Exchange hashpartitioning(state_name") == 2
+    assert sorted(tuple(r) for r in q.collect()) == [
+        (0, 5, 27), (1, 5, 33), (2, 5, 18), (3, 5, 22)
+    ]
+
+
 def test_q2_min_cost_window_after_broadcast_dims(plans):
     # region restriction broadcasts; the correlated-min decorrelation is a
     # window over p_partkey (one shuffle), never a self-join of the cost
@@ -456,10 +509,10 @@ def test_bpe_pair_counts_topk_is_distributed(plans):
 
 
 def test_datasource_isin_pushdown_fully_absorbed(spark, tmp_path):
-    """The engine front door (spark.read.format("bravo_savepoint")) with
-    an isin(state_name) predicate: the filter must be ABSORBED by
-    pushFilters into the byte scan — no state_name comparison may remain
-    in a post-scan Filter (only the isnotnull guard Spark keeps). Guards
+    """The engine front door (spark.read.format("bravo_savepoint")): an
+    isin(state_name) filter returns exactly the selected states' rows
+    (it stays a Spark-side filter), and the state_names option narrows
+    the byte scan so no state_name comparison remains above it. Guards
     the DataSource contract against Spark upgrades, mirroring the
     library-path pin in test_snapshot_write_plan_is_single_shuffle."""
     from pyspark.sql import functions as F
@@ -472,23 +525,31 @@ def test_datasource_isin_pushdown_fully_absorbed(spark, tmp_path):
     kv = spark.createDataFrame([(k, k) for k in range(8)], "key int, value int")
     rows = sr.kv_to_state_rows(kv, "Count", fc.INT, fc.INT).unionByName(
         sr.kv_to_state_rows(kv, "Other", fc.INT, fc.INT)
-    )
+    ).unionByName(sr.kv_to_state_rows(kv, "Decoy", fc.INT, fc.INT))
     out = str(tmp_path / "sp")
     sp.write_savepoint(
         rows, out, max_parallelism=128, parallelism=2,
-        state_ids={"Count": 0, "Other": 1},
+        state_ids={"Count": 0, "Other": 1, "Decoy": 2},
     )
     ds.register(spark)
-    df = spark.read.format("bravo_savepoint").load(out).filter(
-        F.col("state_name").isin("Count", "Other")
+    loaded = spark.read.format("bravo_savepoint").load(out)
+    df = loaded.filter(F.col("state_name").isin("Count", "Other"))
+    assert sorted(
+        tuple(r) for r in df.groupBy("state_name").count().collect()
+    ) == [("Count", 8), ("Other", 8)]
+
+    narrowed = (
+        spark.read.format("bravo_savepoint")
+        .option("state_names", "Count,Other")
+        .load(out)
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = narrowed._jdf.queryExecution().executedPlan().toString()
     assert "BatchScan bravo_savepoint" in plan
-    # the isin comparison is gone from the Spark-side Filter: neither
-    # value literal survives above the scan
     post_scan = plan.split("BatchScan")[0]
     assert "Count" not in post_scan and "Other" not in post_scan
-    assert df.count() == 16
+    assert sorted(
+        tuple(r) for r in narrowed.groupBy("state_name").count().collect()
+    ) == [("Count", 8), ("Other", 8)]
 
 
 def test_q20_semi_join_chain(plans):

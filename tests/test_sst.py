@@ -9,6 +9,7 @@ operands."""
 
 from __future__ import annotations
 
+import re
 import struct
 from os import path as os_path
 
@@ -207,8 +208,9 @@ def test_writer_zlib_bzip2_roundtrip(tmp_path, ctype):
     r = sst.SstReader(p, verify_checksums=True)
     assert list(r.iter_entries()) == rows
     # at least one block actually stored compressed
+    data = open(p, "rb").read()
     assert any(
-        r._buf[h.offset + h.size] == ctype for h in r.iter_data_handles()
+        data[h.offset + h.size] == ctype for h in r.iter_data_handles()
     )
 
 
@@ -353,8 +355,9 @@ def test_writer_lz4_roundtrip(tmp_path):
                 w.add(k, s, t, v)
         r = sst.SstReader(p, verify_checksums=True)
         assert list(r.iter_entries()) == rows
+        data = open(p, "rb").read()
         assert any(
-            r._buf[h.offset + h.size] == ctype for h in r.iter_data_handles()
+            data[h.offset + h.size] == ctype for h in r.iter_data_handles()
         )
 
 
@@ -828,10 +831,62 @@ def test_checkpoint_scan_verify_checksums(tmp_path, spark):
         ).count()
 
 
-def test_resolve_lsm_streamed_equivalence(spark, tmp_path):
-    """The skew-safe sort-fold variant must produce the exact relation the
-    collect_list formulation does — across puts, shadowing, tombstones,
-    merge-only keys, and merges both before and after the base."""
+@pytest.mark.parametrize("damage", ["truncated", "bad_magic"])
+def test_read_checkpoint_refuses_damaged_sst_by_name(spark, tmp_path, damage):
+    """A truncated or bad-magic SST among good ones is refused at plan
+    time: read_incremental_checkpoint itself raises ValueError naming
+    the file, before any Spark job runs."""
+    d = str(tmp_path / "ck")
+    files = ck.write_sst_fixture(
+        d,
+        {
+            "a": [(_kns(i), 1, sst.TYPE_VALUE, b"v") for i in range(50)],
+            "b": [(_kns(i), 1, sst.TYPE_VALUE, b"w") for i in range(50)],
+        },
+    )
+    bad = files[1]
+    data = open(bad, "rb").read()
+    with open(bad, "wb") as f:
+        if damage == "truncated":
+            f.write(data[: len(data) // 2])
+        else:
+            f.write(data[:-8] + b"\x00" * 8)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match=re.escape(bad)):
+        ck.read_incremental_checkpoint(spark, d)
+    assert set(tracker.getJobIdsForGroup(None)) == jobs_before
+
+
+def _fold_oracle(rows):
+    """Reference LSM fold in pure Python over (state_name, key_ns, seq,
+    vtype, value) versions: per key in ascending seq, a put replaces the
+    value, a tombstone clears it, a merge operand appends with ','.
+    Returns the sorted (state_name, key_ns, value) of surviving keys."""
+    out: dict[tuple[str, bytes], bytes | None] = {}
+    for name, key, _seq, vtype, value in sorted(rows, key=lambda r: r[:3]):
+        k = (name, bytes(key))
+        if vtype == sst.TYPE_VALUE:
+            out[k] = bytes(value)
+        elif vtype == sst.TYPE_MERGE:
+            prev = out.get(k)
+            out[k] = bytes(value) if prev is None else prev + b"," + bytes(value)
+        else:
+            out[k] = None
+    return sorted((n, k, v) for (n, k), v in out.items() if v is not None)
+
+
+def _resolved(df):
+    return sorted(
+        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"])) for r in df.collect()
+    )
+
+
+def test_resolve_lsm_equivalence(spark, tmp_path):
+    """read_incremental_checkpoint over a two-level fixture matches the
+    pure-Python fold of the same SST entries — across puts, shadowing,
+    tombstones, merge-only keys, and merges both before and after the
+    base — and resolve_lsm over the raw relation agrees."""
     d = str(tmp_path / "ckpt_eq")
     ck.write_sst_fixture(
         d,
@@ -854,110 +909,61 @@ def test_resolve_lsm_streamed_equivalence(spark, tmp_path):
             ]
         },
     )
-    paths = ck.discover_sst_files(d)
-    frame = spark.createDataFrame([(p,) for p in paths], schema="path string")
-    raw = frame.mapInPandas(
-        lambda it: ck._scan_ssts(it, lambda _n: True, False), schema=ck._RAW_SCHEMA
-    )
-    want = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.resolve_lsm_collected(raw).collect()
-    )
-    got = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.resolve_lsm_streamed(raw).collect()
-    )
-    assert got == want
-    assert len(got) == 2  # key 2 tombstoned
-    # the DEFAULT front door (no flag) routes to the streamed fold since
-    # r15 — and still produces the identical relation
-    front = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.read_incremental_checkpoint(spark, d).collect()
-    )
-    assert front == want
-    # and the opt-out routes to the collected fold, same relation
-    legacy = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.read_incremental_checkpoint(
-            spark, d, skew_safe=False
-        ).collect()
-    )
-    assert legacy == want
+    versions = [
+        ("s", *e) for p in ck.discover_sst_files(d) for e in sst.SstReader(p).iter_entries()
+    ]
+    want = _fold_oracle(versions)
+    assert want == [("s", _kns(1), b"new,tail"), ("s", _kns(3), b"m0,m1")]
+    assert _resolved(ck.read_incremental_checkpoint(spark, d)) == want
+    raw = spark.createDataFrame(versions, schema=ck._RAW_SCHEMA)
+    assert _resolved(ck.resolve_lsm(raw)) == want
 
 
-def test_resolve_lsm_default_is_streamed(spark):
-    """The r15 default flip, pinned at the plan level: resolve_lsm with no
-    flag must route to the streamed fold (MapInPandas, no collect_list
-    aggregate); skew_safe=False must route to the JVM collect_list fold."""
+def test_resolve_lsm_is_one_jvm_fold(spark):
+    """resolve_lsm is JVM expressions only: no Python worker
+    (MapInPandas) and no per-key collect_list array fold."""
     raw = spark.createDataFrame(
         [("s", b"\x00k", 1, sst.TYPE_VALUE, b"v")], schema=ck._RAW_SCHEMA
     )
-    default_plan = ck.resolve_lsm(raw)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in default_plan
-    assert "collect_list" not in default_plan
-    legacy_plan = (
-        ck.resolve_lsm(raw, skew_safe=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "collect_list" in legacy_plan
-    assert "MapInPandas" not in legacy_plan
+    plan = ck.resolve_lsm(raw)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert "collect_list" not in plan
+    assert "listagg" in plan
 
 
-def test_resolve_lsm_streamed_skewed_key_100k_operands(spark):
-    """The documented resolve_lsm bound: one key accumulating 100k merge
-    operands. The streamed variant folds it in Arrow-batch order (peak
-    per-key memory = folded value bytes, linear time); the collect_list
-    formulation is QUADRATIC in operand count on such a key (each JVM
-    concat step recopies the accumulated buffer — measured 14s at 5k,
-    189s at 20k operands), so the 100k case runs streamed-only against a
-    Python-computed expectation and the byte-for-byte cross-check against
-    the collected fold runs at 2k where the quadratic path is still
-    cheap."""
+def test_resolve_lsm_skewed_key_100k_operands(spark):
+    """One key accumulating 100k merge operands on top of a put resolves
+    byte-for-byte like the pure-Python fold (linear in operand count), and
+    a second key in the same state is untouched by it."""
     n = 100_000
     rows = [("s", b"\x00hot", 1, sst.TYPE_VALUE, b"base")] + [
         ("s", b"\x00hot", 2 + i, sst.TYPE_MERGE, str(i).encode()) for i in range(n)
     ]
-    # a second, normal key proves the fold doesn't bleed state across keys
     rows.append(("s", b"\x00cold", 5, sst.TYPE_VALUE, b"v"))
     raw = spark.createDataFrame(rows, schema=ck._RAW_SCHEMA)
-    got = {
-        bytes(r["key_ns"]): bytes(r["value"])
-        for r in ck.resolve_lsm_streamed(raw).collect()
-    }
+    got = {bytes(r["key_ns"]): bytes(r["value"]) for r in ck.resolve_lsm(raw).collect()}
     expect = b"base," + b",".join(str(i).encode() for i in range(n))
     assert got[b"\x00hot"] == expect
     assert got[b"\x00cold"] == b"v"
-
-    # byte-for-byte equivalence vs the collect_list formulation, at a
-    # size where its quadratic fold is still fast
-    small = spark.createDataFrame(rows[:2001] + rows[-1:], schema=ck._RAW_SCHEMA)
-    want = {
-        bytes(r["key_ns"]): bytes(r["value"])
-        for r in ck.resolve_lsm_collected(small).collect()
-    }
-    got_small = {
-        bytes(r["key_ns"]): bytes(r["value"])
-        for r in ck.resolve_lsm_streamed(small).collect()
-    }
-    assert got_small == want
+    assert sorted(got.items()) == [(k, v) for _n, k, v in _fold_oracle(rows)]
 
 
 def test_resolve_lsm_fold_equivalence_fuzz(spark):
-    """Property fuzz over random LSM version graphs: for ANY multiset of
-    (key, seq, vtype) versions — puts, StringAppend merges, tombstones,
-    single-deletes, duplicate seqs across keys, merge-before-base,
-    merge-only keys — the streamed sort-fold and the collect_list fold
-    produce the identical resolved relation. Seeded RNG (no
-    Date/random-in-worker), one Spark round per case batch."""
+    """Property fuzz over random LSM version graphs with two states
+    sharing key bytes: for ANY multiset of (key, seq, vtype) versions —
+    puts, StringAppend merges, tombstones, single-deletes, merge-before-
+    base, merge-only keys — resolve_lsm equals the pure-Python fold.
+    Seeded RNG; all 30 cases run in one Spark job, one state-name pair
+    per case."""
     import random
 
     rng = random.Random(48151623)
-    for case in range(6):
+    rows = []
+    for case in range(30):
         keys = [f"k{i}".encode() for i in range(rng.randint(1, 8))]
-        rows = []
         seq = 1
         for _ in range(rng.randint(1, 60)):
+            state = f"c{case}-{rng.choice('ab')}"
             k = rng.choice(keys)
             vtype = rng.choice(
                 [sst.TYPE_VALUE, sst.TYPE_MERGE, sst.TYPE_MERGE,
@@ -966,60 +972,47 @@ def test_resolve_lsm_fold_equivalence_fuzz(spark):
             val = f"v{seq}".encode() if vtype in (
                 sst.TYPE_VALUE, sst.TYPE_MERGE
             ) else b""
-            rows.append(("s", b"\x00" + k, seq, vtype, val))
+            rows.append((state, b"\x00" + k, seq, vtype, val))
             seq += rng.randint(1, 3)
-        raw = spark.createDataFrame(rows, schema=ck._RAW_SCHEMA)
-        collected = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_collected(raw).collect()
-        )
-        streamed = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_streamed(raw).collect()
-        )
-        assert streamed == collected, f"case {case}: {rows}"
-
-
-def test_resolve_lsm_streamed_vectorized_batch_boundaries(spark):
-    """r20: the streamed fold's vectorized no-merge fast path must match
-    the collect_list fold exactly when key groups span Arrow batch
-    boundaries and when merge-carrying batches (row-fold path) interleave
-    with merge-free ones (vectorized path). Forced with a tiny
-    maxRecordsPerBatch so every boundary case actually occurs."""
-    rows = []
-    # 40 keys x 3 versions: put, shadowing put, and for every 4th key a
-    # tombstone on top; keys 37..39 additionally carry merge operands so
-    # some batches take the row-fold path
-    for k in range(40):
-        kns = b"\x00" + bytes([k])
-        rows.append(("s", kns, 1, sst.TYPE_VALUE, b"v1-%d" % k))
-        rows.append(("s", kns, 2, sst.TYPE_VALUE, b"v2-%d" % k))
-        if k % 4 == 0:
-            rows.append(("s", kns, 3, sst.TYPE_DELETION, b""))
-        if k >= 37:
-            rows.append(("s", kns, 4, sst.TYPE_MERGE, b"m-%d" % k))
     raw = spark.createDataFrame(rows, schema=ck._RAW_SCHEMA)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "7")  # groups of 2-4 rows straddle every batch
+    assert _resolved(ck.resolve_lsm(raw)) == _fold_oracle(rows)
+
+
+def test_resolve_lsm_keys_across_files_and_partitions(spark, tmp_path):
+    """Versions of one key spread over three SST files of two column
+    families, with few shuffle partitions so every partition folds many
+    keys: the checkpoint read equals the pure-Python fold, tombstoned keys
+    stay absent unless a newer merge re-creates them, and shadowing keeps
+    only the newest put."""
+    d = str(tmp_path / "ckpt_parts")
+    levels = [{}, {}, {}]
+    for state in ("a", "b"):
+        for k in range(40):
+            kns = b"\x00" + bytes([k])
+            levels[0].setdefault(state, []).append((kns, 1, sst.TYPE_VALUE, b"v1-%d" % k))
+            levels[1].setdefault(state, []).append((kns, 2, sst.TYPE_VALUE, b"v2-%d" % k))
+            if k % 4 == 0:
+                levels[2].setdefault(state, []).append((kns, 3, sst.TYPE_DELETION, b""))
+            if k >= 37 or k == 8:
+                levels[2].setdefault(state, []).append((kns, 4, sst.TYPE_MERGE, b"m-%d" % k))
+    for level in levels:
+        ck.write_sst_fixture(d, level, cf_ids={"a": 1, "b": 2})
+    versions = [
+        (r.column_family_name, *e)
+        for p in ck.discover_sst_files(d)
+        for r in [sst.SstReader(p)]
+        for e in r.iter_entries()
+    ]
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
     try:
-        want = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_collected(raw).collect()
-        )
-        got = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_streamed(raw).collect()
-        )
+        got = _resolved(ck.read_incremental_checkpoint(spark, d))
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    assert got == want
-    # sanity on the semantics themselves: tombstoned keys absent unless a
-    # newer merge re-created them; shadowing keeps only v2
-    d = {k: v for _, k, v in got}
-    assert d[b"\x00\x01"] == b"v2-1"
-    assert b"\x00\x04" not in d  # tombstoned, no merge after
-    assert d[b"\x00" + bytes([38])] == b"v2-38,m-38"
+        spark.conf.set(key, old)
+    assert got == _fold_oracle(versions)
+    by_key = {(n, k): v for n, k, v in got}
+    assert by_key[("a", b"\x00\x01")] == b"v2-1"
+    assert ("b", b"\x00\x04") not in by_key  # tombstoned, no merge after
+    assert by_key[("b", b"\x00\x08")] == b"m-8"  # tombstone, then merge
+    assert by_key[("a", b"\x00" + bytes([38]))] == b"v2-38,m-38"
