@@ -224,13 +224,14 @@ class OperatorStateWriter:
         rows = parts[0]
         for df in parts[1:]:
             rows = rows.unionByName(df)
-        meta = sp.write_savepoint(
+        meta = sp.stage_savepoint(
             rows,
             self.new_path,
             max_parallelism=self.max_parallelism,
             parallelism=self.parallelism,
         )
         # EP3 write side: carry over (optionally transformed) operator state
+        # before the metadata commits, so no reader opens a savepoint without it
         if self.source is not None:
             if self._nk_transform is not None:
                 ops.transform_operator_state(
@@ -247,7 +248,7 @@ class OperatorStateWriter:
             for i, b in enumerate(backends):
                 self._nk_transform(i, b)
             ops.write_operator_state(self.new_path, backends)
-        return meta
+        return sp.commit_savepoint(self.new_path, meta, overwrite=True)
 
 
 def rescale_savepoint(
@@ -297,7 +298,7 @@ def rescale_savepoint(
             new_max_parallelism=maxp,
         )
 
-    meta = sp.write_savepoint(
+    meta = sp.stage_savepoint(
         rows,
         dst_path,
         max_parallelism=maxp,
@@ -307,7 +308,7 @@ def rescale_savepoint(
     backends = ops.read_operator_state(src_path, parallelism=new_parallelism)
     if backends:
         ops.write_operator_state(dst_path, backends)
-    return meta
+    return sp.commit_savepoint(dst_path, meta, overwrite=True)
 
 
 # codec shortcuts for API users

@@ -36,6 +36,8 @@ from __future__ import annotations
 import functools
 import glob
 import os
+import shutil
+import uuid
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -43,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bravo_spark.sources import sst as sstmod
+from bravo_spark.sources.atomic import atomic_write
 
 _SCAN_SCHEMA = "key_ns binary, seq long, vtype int, value binary"
 _RAW_SCHEMA = "state_name string, " + _SCAN_SCHEMA
@@ -267,18 +270,20 @@ def write_incremental_checkpoint(
     ``_bravo_checkpoint.json``)."""
     import json as _json
 
+    import pyarrow as pa
+
+    from bravo_spark.sources.rocksdb_manifest import build_db_dir_multi_cf
+    from bravo_spark.sources.savepoint import route_state_rows
     from bravo_spark.sources.staterows import (
         with_key_group_column,
         with_operator_index_column,
     )
-    from bravo_spark.sources.rocksdb_manifest import build_db_dir_multi_cf
 
-    spark = rows.sparkSession
     os.makedirs(path, exist_ok=True)
     if state_ids is None:
         # deriving the mapping needs a names pass; a CALLER-supplied
-        # mapping is validated executor-side instead (below) so the
-        # upstream pipeline runs exactly once
+        # mapping is validated executor-side instead, so the upstream
+        # pipeline runs exactly once
         names = [r[0] for r in rows.select("state_name").distinct().collect()]
         state_ids = {n: i for i, n in enumerate(sorted(names))}
     cf_ids = {n: i + 1 for n, i in state_ids.items()}  # CF 0 = default
@@ -289,43 +294,48 @@ def write_incremental_checkpoint(
     )
     shuffled = routed.repartition(parallelism, "op_index")
 
-    def write_partition(pdf_iter):
+    def write_partition(batches):
+        # gather the whole task first: route_state_rows refuses unmapped
+        # states and out-of-range key groups before the first byte is built
         by_op: dict[int, dict[str, list]] = {}
-        for pdf in pdf_iter:
-            for sn, kns, val, op in zip(
-                pdf["state_name"], pdf["key_ns"], pdf["value"], pdf["op_index"]
-            ):
-                by_op.setdefault(int(op), {}).setdefault(sn, []).append(
-                    (bytes(kns), 1, sstmod.TYPE_VALUE, bytes(val))
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            _kg, ops, _sid = route_state_rows(batch, cf_ids, max_parallelism, parallelism)
+            cols = (batch.column(c).to_pylist() for c in ("state_name", "key_ns", "value"))
+            for op, sn, kns, val in zip(ops.tolist(), *cols):
+                by_op.setdefault(op, {}).setdefault(sn, []).append(
+                    (kns, 1, sstmod.TYPE_VALUE, val)
                 )
-        # validate EVERY operator's states before writing the first byte:
-        # per-op validation inside the write loop would leave earlier ops'
-        # db dirs in the shared output path when a later op aborts the task
-        unmapped = sorted(
-            {n for fams in by_op.values() for n in fams} - set(cf_ids)
-        )
-        if unmapped:
-            raise ValueError(
-                f"state_ids missing entries for: {unmapped} "
-                f"(provided: {sorted(cf_ids)})"
-            )
-        out = []
-        for op, families in by_op.items():
+        # each op-<i> is built under a hidden name and renamed only once
+        # every directory of the task is complete: list_sst_files globs
+        # op-*/*.sst, so a partial directory would be read as data
+        tmps = {op: os.path.join(path, f".op-{op}.{uuid.uuid4().hex}.tmp") for op in by_op}
+        try:
+            sizes = {
+                op: build_db_dir_multi_cf(
+                    tmps[op], families, cf_ids=cf_ids, compression=compression
+                )
+                for op, families in by_op.items()
+            }
+        except BaseException:
+            for tmp in tmps.values():
+                shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        for op, tmp in tmps.items():
             dbdir = os.path.join(path, f"op-{op}")
-            sizes = build_db_dir_multi_cf(
-                dbdir, families, cf_ids=cf_ids, compression=compression
-            )
-            out.append(
-                pd.DataFrame(
-                    {"op_index": [op], "files": [_json.dumps(sizes)]}
-                )
-            )
-        if out:
-            yield from out
+            shutil.rmtree(dbdir, ignore_errors=True)
+            os.rename(tmp, dbdir)
+            yield pa.record_batch({
+                "op_index": pa.array([op], pa.int32()),
+                "files": pa.array([_json.dumps(sizes[op])]),
+            })
 
-    manifests = shuffled.mapInPandas(
-        write_partition, schema="op_index int, files string"
-    ).collect()  # handle-only collect, data stays in executors
+    manifests = (
+        shuffled.select("state_name", "key_ns", "value")
+        .mapInArrow(write_partition, schema="op_index int, files string")
+        .collect()  # handle-only collect, data stays in executors
+    )
 
     meta = {
         "version": 1,
@@ -336,6 +346,6 @@ def write_incremental_checkpoint(
             str(r["op_index"]): _json.loads(r["files"]) for r in manifests
         },
     }
-    with open(os.path.join(path, "_bravo_checkpoint.json"), "w") as f:
+    with atomic_write(os.path.join(path, "_bravo_checkpoint.json"), "w") as f:
         _json.dump(meta, f, indent=1)
     return meta

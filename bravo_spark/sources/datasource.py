@@ -43,7 +43,7 @@ from pyspark.sql.datasource import (
 
 @dataclass
 class SavepointCommit(WriterCommitMessage):
-    files: str  # JSON list of {path, op_index, offsets}
+    files: list  # the task's file handles: {path, op_index, offsets}
 
 def _state_row_schema():
     """The canonical universal state-row schema, imported lazily so this
@@ -145,26 +145,21 @@ class SavepointScanReader(_StateNameReader):
 
 class SavepointWriter(DataSourceArrowWriter):
     """``df.write.format("bravo_savepoint")`` — S7 through the engine's
-    sink contract. Each task receives Arrow batches (no per-row pickling),
-    sorts ITS rows by (op_index, key_group, state_id), and streams section
-    files (several tasks may contribute files for the same operator index;
-    the scan concatenates partial key-group sections, so results are
-    correct under ANY upstream partitioning). For the one-file-per-operator
-    layout a Flink restore expects, pre-shape with
-    ``repartition(parallelism, "op_index")`` — or use ``write_savepoint``,
-    which owns its shuffle AND sorts engine-side (this writer holds one
-    task partition in memory for the sort; size upstream partitions
-    accordingly).
+    sink contract: a thin front door over ``write_savepoint``'s task
+    writer and commit (sources/savepoint.py). Each task sorts ITS rows by
+    (op_index, key_group, state_id) with a numpy ``lexsort`` — it
+    holds one task partition in memory, so size upstream partitions
+    accordingly — and hands them to ``write_task_sections``. Tasks may
+    write several files for one operator index (the scan concatenates
+    partial key-group sections); pre-shape with ``repartition(parallelism,
+    "op_index")`` for the one-file-per-operator layout a Flink restore
+    expects, or use ``write_savepoint``, which shuffles and sorts in the JVM.
 
-    Durability protocol: new files land under unique names next to the
-    existing savepoint; nothing pre-existing is touched until ``commit``.
-    - overwrite: commit writes the new metadata FIRST, then deletes the
-      files the old metadata referenced — a failed job aborts cleanly
-      (only the new files are removed) and the original savepoint stays
-      readable throughout, so read-then-overwrite of the same path works.
-    - append: commit MERGES metadata — max_parallelism/compression must
-      match and state_ids must agree on shared names; prior files remain
-      listed, so earlier appends stay visible.
+    New files stay unreachable until ``commit`` writes ``_bravo_metadata``
+    through ``commit_savepoint``: overwrite deletes the old files only
+    after that, append merges the metadata (max_parallelism, parallelism
+    and compression must match, state_ids must agree). A failed task
+    deletes its own files; ``abort`` deletes those of finished tasks.
 
     ``state_ids`` and ``max_parallelism`` are REQUIRED options: tasks
     cannot collect the global name→id mapping, and a defaulted
@@ -205,161 +200,50 @@ class SavepointWriter(DataSourceArrowWriter):
         os.makedirs(path, exist_ok=True)
 
     def write(self, batches):
-        import os
-        import uuid as _uuid
+        import numpy as np
+        import pyarrow as pa
 
-        from bravo_spark.codecs import flink as fc
-        from bravo_spark.sources.savepoint import _frame_compress
+        from bravo_spark.sources import savepoint as sp
 
-        prefix = fc.key_group_prefix_bytes(self.max_parallelism)
-        mask = 0x7F if prefix == 1 else 0x7FFF
-        buffered = []
-        for batch in batches:
-            d = batch.to_pydict()
-            for sn, kns, val in zip(d["state_name"], d["key_ns"], d["value"]):
-                kns = bytes(kns)
-                kg = int.from_bytes(kns[:prefix], "big") & mask
-                if not 0 <= kg < self.max_parallelism:
-                    raise ValueError(
-                        f"derived key group {kg} is outside "
-                        f"[0, {self.max_parallelism}) — rows were encoded with "
-                        "a different max_parallelism than the writer was given"
-                    )
-                sid = self.state_ids.get(sn)
-                if sid is None:
-                    raise ValueError(
-                        f"state_ids has no entry for {sn!r} "
-                        f"(provided: {sorted(self.state_ids)})"
-                    )
-                op = kg * self.parallelism // self.max_parallelism
-                buffered.append((op, kg, sid, kns, bytes(val)))
-        buffered.sort(key=lambda t: t[:3])
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return SavepointCommit([])
+        routed = [
+            sp.route_state_rows(b, self.state_ids, self.max_parallelism, self.parallelism)
+            for b in batches
+        ]
+        kg, op, sid = (np.concatenate(a) for a in zip(*routed))
+        # the take concatenates the task's batches: 64-bit offsets let a
+        # column pass the 2 GiB that 32-bit binary offsets can address
+        large = pa.schema([("state_name", pa.large_string()),
+                           ("key_ns", pa.large_binary()), ("value", pa.large_binary())])
+        tbl = pa.Table.from_batches(batches).select(large.names).cast(large)
+        return SavepointCommit(sp.write_task_sections(
+            tbl.take(np.lexsort((sid, kg, op))).to_batches(), self.path,
+            state_ids=self.state_ids, max_parallelism=self.max_parallelism,
+            parallelism=self.parallelism, compression=self.compression,
+        ))
 
-        files = []
-        i, n = 0, len(buffered)
-        while i < n:
-            op = buffered[i][0]
-            fpath = os.path.join(self.path, f"op-{op}-{_uuid.uuid4().hex}")
-            offsets: dict[int, int] = {}
-            with open(fpath, "wb") as f:
-                while i < n and buffered[i][0] == op:
-                    kg = buffered[i][1]
-                    entries = []
-                    while i < n and buffered[i][0] == op and buffered[i][1] == kg:
-                        _op, _kg, sid, kns, val = buffered[i]
-                        entries.append((sid, kns, val))
-                        i += 1
-                    offsets[kg] = f.tell()
-                    buf = fc.write_key_group_section(entries)
-                    if self.compression:
-                        buf = _frame_compress(buf)
-                    f.write(buf)
-            files.append(
-                {"path": fpath, "op_index": op,
-                 "offsets": {str(k): v for k, v in offsets.items()}}
-            )
-        return SavepointCommit(json.dumps(files))
-
-    def _new_files(self, messages):
-        out = []
-        for m in messages or []:
-            if m is None:
-                continue
-            out.extend(json.loads(m.files))
-        return out
+    @staticmethod
+    def _new_files(messages):
+        return [h for m in messages or [] if m is not None for h in m.files]
 
     def commit(self, messages):
-        import os
+        from bravo_spark.sources import savepoint as sp
 
-        from bravo_spark.sources.savepoint import (
-            METADATA_FILE,
-            SavepointMeta,
-            read_savepoint_meta,
+        sp.commit_savepoint(
+            self.path,
+            sp.SavepointMeta(
+                self.max_parallelism, self.parallelism, dict(self.state_ids),
+                compression=self.compression, files=self._new_files(messages),
+            ),
+            overwrite=self.overwrite,
         )
-
-        meta_path = os.path.join(self.path, METADATA_FILE)
-        prior = read_savepoint_meta(self.path) if os.path.exists(meta_path) else None
-
-        meta = SavepointMeta(
-            self.max_parallelism, self.parallelism, dict(self.state_ids),
-            compression=self.compression,
-        )
-        if prior is not None and not self.overwrite:
-            # append: refuse silent incompatibility, keep prior files listed
-            if prior.max_parallelism != self.max_parallelism:
-                raise ValueError(
-                    f"append with max_parallelism={self.max_parallelism} onto "
-                    f"a savepoint written at {prior.max_parallelism} — the "
-                    "key-group prefix widths disagree"
-                )
-            if prior.compression != self.compression:
-                raise ValueError(
-                    "append cannot mix compressed and uncompressed sections "
-                    f"(existing savepoint compression={prior.compression})"
-                )
-            if prior.parallelism != self.parallelism:
-                raise ValueError(
-                    f"append with parallelism={self.parallelism} onto a "
-                    f"savepoint written at {prior.parallelism} — the prior "
-                    "files' op-index layout was computed with the old value"
-                )
-            for name, sid in prior.state_ids.items():
-                ours = meta.state_ids.get(name)
-                if ours is not None and ours != sid:
-                    raise ValueError(
-                        f"append state_ids conflict for {name!r}: existing id "
-                        f"{sid}, new id {ours}"
-                    )
-                meta.state_ids.setdefault(name, sid)
-            by_id: dict[int, str] = {}
-            for name, sid in meta.state_ids.items():
-                if sid in by_id:
-                    raise ValueError(
-                        f"append state_ids conflict: id {sid} maps to both "
-                        f"{by_id[sid]!r} and {name!r}"
-                    )
-                by_id[sid] = name
-            meta.files.extend(prior.files)
-        for fm in self._new_files(messages):
-            meta.files.append(
-                {"path": fm["path"], "op_index": int(fm["op_index"]),
-                 "offsets": {k: int(v) for k, v in fm["offsets"].items()}}
-            )
-        # the metadata swap must be atomic: a crash mid-write would
-        # otherwise truncate _bravo_metadata and leave the savepoint
-        # unreadable, breaking the durability protocol documented above
-        tmp_path = meta_path + ".tmp"
-        with open(tmp_path, "w") as f:
-            f.write(meta.to_json())
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_path, meta_path)
-        # the rename itself is only durable once the PARENT DIRECTORY's
-        # entry is flushed — without this a power loss after replace can
-        # resurface the old (or no) _bravo_metadata on ext4/xfs
-        dir_fd = os.open(os.path.dirname(meta_path) or ".", os.O_RDONLY)
-        try:
-            os.fsync(dir_fd)
-        finally:
-            os.close(dir_fd)
-        if prior is not None and self.overwrite:
-            # old data is dropped only AFTER the new metadata is durable
-            keep = {fm["path"] for fm in meta.files}
-            for old in prior.files:
-                if old["path"] not in keep:
-                    try:
-                        os.remove(old["path"])
-                    except OSError:
-                        pass
 
     def abort(self, messages):
-        import os
+        from bravo_spark.sources import savepoint as sp
 
-        for fm in self._new_files(messages):
-            try:
-                os.remove(fm["path"])
-            except OSError:
-                pass
+        sp.discard_files(self._new_files(messages))
 
 
 class CheckpointDataSource(DataSource):

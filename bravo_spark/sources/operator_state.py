@@ -24,6 +24,8 @@ import os
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from bravo_spark.sources.atomic import atomic_write
+
 OPERATOR_STATE_FILE = "_bravo_operator_state"
 
 
@@ -78,7 +80,7 @@ def write_operator_state(path: str, backends: list[OperatorStateBackend]) -> Non
         }
         for b in backends
     ]
-    with open(os.path.join(path, OPERATOR_STATE_FILE), "w") as f:
+    with atomic_write(os.path.join(path, OPERATOR_STATE_FILE), "w") as f:
         json.dump({"version": 1, "subtasks": payload}, f, indent=1)
 
 

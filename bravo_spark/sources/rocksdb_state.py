@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from bravo_spark.sources import sst as sstmod
+from bravo_spark.sources.atomic import atomic_write
 from bravo_spark.sources.spark_state import (
     _check_schema,
     decode_unsafe_row,
@@ -444,10 +445,8 @@ def _rewrite_changelog_version(
             payload += struct.pack(">i", len(kb)) + kb
             payload += struct.pack(">i", -1)
     payload += struct.pack(">i", -1)
-    tmp = os.path.join(pdir, f".{version}.changelog.tmp")
-    with open(tmp, "wb") as f:
+    with atomic_write(clog) as f:
         f.write(encode_stream_like(old_raw, bytes(payload)))
-    os.replace(tmp, clog)
     _finalize_state_file(clog)
 
 
@@ -468,7 +467,6 @@ def _rewrite_zip_version(
     import shutil
     import tempfile
     import uuid as _uuid
-    import zipfile
 
     from bravo_spark.sources.rocksdb_manifest import build_db_dir
     from bravo_spark.sources.spark_state import _finalize_state_file
@@ -497,14 +495,13 @@ def _rewrite_zip_version(
             "columnFamilyTypeMap": {},
             "maxColumnFamilyId": 0,
         }
-        ztmp = os.path.join(pdir, f".{version}.zip.tmp")
-        with zipfile.ZipFile(ztmp, "w", zipfile.ZIP_DEFLATED) as z:
+        with atomic_write(os.path.join(pdir, f"{version}.zip")) as f, \
+                zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as z:
             for name in sizes:
                 if name.endswith(".sst"):
                     continue  # SSTs travel via SSTs/, not the zip
                 z.write(os.path.join(tmp, name), name)
             z.writestr("metadata", "v1\n" + _json.dumps(meta))
-        os.replace(ztmp, os.path.join(pdir, f"{version}.zip"))
         _finalize_state_file(os.path.join(pdir, f"{version}.zip"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -3,17 +3,23 @@
 Mirrors the reference's savepoint lifecycle (SURVEY.md §2.1 S2/S3/S7/S8,
 §3 EP2) with Spark-native physics:
 
-- **Write** (S7): the only shuffle in the pipeline —
-  ``repartition(parallelism, op_index) → sortWithinPartitions(key_group,
-  state_id) → mapInPandas`` streaming one file per operator index in the
-  key-group section format (writer/functions/RocksDBSavepointWriter.java:
-  132-175: per-keygroup sections, state-id shorts, metadata-follows flag on
-  the last key of a run, 0xFFFF end-of-key-group mark, per-keygroup offset
-  bookkeeping). Only per-file handle metadata is collected to the driver,
-  never data rows (OperatorStateWriter.java:253 collects handles only).
+- **Write** (S7): one task writer, :func:`write_task_sections`, behind
+  both front doors. ``write_savepoint`` runs the only shuffle in the
+  pipeline — ``repartition(parallelism, op_index) →
+  sortWithinPartitions(op_index, key_group, state_id) → mapInArrow`` —
+  and the ``bravo_savepoint`` sink sorts each task's rows with numpy. The
+  task writer routes each batch with numpy and streams one section per
+  key group into one file per operator index
+  (writer/functions/RocksDBSavepointWriter.java:132-175: per-keygroup
+  sections, state-id shorts, metadata-follows flag on the last key of a
+  run, 0xFFFF end-of-key-group mark, per-keygroup offset bookkeeping).
+  Only per-file handles reach the driver, never data rows
+  (OperatorStateWriter.java:253 collects handles only).
 - **Metadata** (S8): a driver-side JSON ``_bravo_metadata`` carrying
   max_parallelism/parallelism, the state-name↔id mapping and per-file
   key-group offsets (StateMetadataUtils.java:103-125,189-194 analog).
+  :func:`commit_savepoint` writes it last and atomically; readers find
+  section files only through it, so a savepoint exists once it commits.
 - **Read** (S2/S3/S5): splits are (file, key-group-ranges); empty key groups
   (no offset recorded) are skipped like ValidOffsetsIterator.java:25-46. One
   Spark partition per split; finer-than-subtask parallelism (split by key
@@ -34,16 +40,21 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from contextlib import suppress
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Callable, Iterable
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bravo_spark.codecs import fastpath
 from bravo_spark.codecs import flink as fc
+from bravo_spark.sources.atomic import atomic_write
 from bravo_spark.sources.staterows import (
     STATE_ROW_SCHEMA,
     with_key_group_column,
@@ -51,14 +62,6 @@ from bravo_spark.sources.staterows import (
 )
 
 METADATA_FILE = "_bravo_metadata"
-
-
-# Per-key-group Snappy compression (StateMetadataUtils.java:142-146 /
-# RocksDBSavepointWriter.java:71-72 analog): sections are framed-Snappy
-# streams, wire format pinned against org.xerial framed streams in
-# tests/test_snappy.py.
-_frame_compress = fastpath.frame_compress
-_frame_decompress = fastpath.frame_decompress
 
 
 @dataclass
@@ -105,17 +108,27 @@ def write_savepoint(
     state_ids: dict[str, int] | None = None,
     compression: bool = False,
 ) -> SavepointMeta:
-    """Shuffle state rows to their operator index, sort by (key_group,
-    state_id), stream one section file per operator index; assemble metadata
-    on the driver from per-file handles.
+    """Write ``rows`` as the savepoint at ``path``, replacing any savepoint
+    there: :func:`stage_savepoint`, then :func:`commit_savepoint`.
 
-    ``max_parallelism`` MUST equal the value the rows were encoded with
-    (``kv_to_state_rows`` and friends embed a 1- or 2-byte key-group
-    prefix inside ``key_ns`` sized by it); the writer re-derives each
-    row's key group from that prefix, so a mismatch mis-reads key bytes
-    as group bytes. Sections whose derived group falls outside
-    ``[0, max_parallelism)`` are refused by name rather than written."""
-    spark = rows.sparkSession
+    ``max_parallelism`` MUST equal the value the rows were encoded with:
+    the writer re-derives each row's key group from the 1- or 2-byte
+    prefix it sized inside ``key_ns``, and refuses groups outside
+    ``[0, max_parallelism)`` by name."""
+    meta = stage_savepoint(
+        rows, path, max_parallelism=max_parallelism, parallelism=parallelism,
+        state_ids=state_ids, compression=compression,
+    )
+    return commit_savepoint(path, meta, overwrite=True)
+
+
+def stage_savepoint(
+    rows, path, *, max_parallelism, parallelism, state_ids=None, compression=False
+) -> SavepointMeta:
+    """:func:`write_savepoint` without the commit: shuffle state rows to
+    their operator index, sort by (key_group, state_id), stream one section
+    file per operator index through :func:`write_task_sections`, and return
+    the new files' metadata, which no reader sees until it is committed."""
     os.makedirs(path, exist_ok=True)
     if state_ids is None:
         names = [r[0] for r in rows.select("state_name").distinct().collect()]
@@ -128,7 +141,7 @@ def write_savepoint(
     )
     sid_map = F.create_map(*[x for k, v in ids.items() for x in (F.lit(k), F.lit(v))])
     # a caller-supplied state_ids mapping is validated EXECUTOR-side via a
-    # -1 sentinel (checked per section below), not by a driver-side
+    # -1 sentinel (the task writer refuses it by name), not by a driver-side
     # distinct() — that pre-check re-ran the entire upstream pipeline (a
     # second full pass over the state relation at 100 TB) just to name
     # missing states before the real one
@@ -141,107 +154,195 @@ def write_savepoint(
     # partition can receive several operator indexes (hash collision); the
     # in-partition sort leads with op_index and the writer rolls to a new
     # file whenever it changes — still exactly one file per operator index.
+    # The sort runs in the JVM and spills, so task memory stays bounded.
     shuffled = routed.repartition(parallelism, "op_index").sortWithinPartitions(
         "op_index", "key_group", "state_id"
     )
 
-    def write_partition(batches: Iterator[pd.DataFrame]):
-        # Streaming single-pass writer: rows arrive sorted by (op_index,
-        # key_group, state_id); emit one section per key group, track
-        # offsets. Mirrors RocksDBSavepointWriter.java:132-166 but writes
-        # sections via the codec layer.
-        state = {"fh": None, "path": None, "op": None, "kg": None}
-        offsets: dict[int, int] = {}
-        entries: list[tuple[int, bytes, bytes]] = []
-        done: list[tuple[int, str, dict[int, int]]] = []
+    def write_task(batches):
+        handles = write_task_sections(
+            batches, path, state_ids=ids, max_parallelism=max_parallelism,
+            parallelism=parallelism, compression=compression,
+        )
+        yield pa.record_batch({"handle": pa.array(map(json.dumps, handles), pa.string())})
 
-        def flush_kg():
-            if state["fh"] is not None and entries:
-                offsets[state["kg"]] = state["fh"].tell()
-                buf = fc.write_key_group_section(entries)
-                if compression:
-                    buf = _frame_compress(buf)
-                state["fh"].write(buf)
-            entries.clear()
-
-        def close_file():
-            flush_kg()
-            if state["fh"] is not None:
-                state["fh"].close()
-                done.append((state["op"], state["path"], dict(offsets)))
-                offsets.clear()
-                state.update(fh=None, path=None, op=None, kg=None)
-
-        for pdf in batches:
-            for kg, opi, sid, kns, val in zip(
-                pdf["key_group"], pdf["op_index"], pdf["state_id"],
-                pdf["key_ns"], pdf["value"],
-            ):
-                opi, kg, sid = int(opi), int(kg), int(sid)
-                if sid < 0:
-                    raise ValueError(
-                        "rows contain a state_name with no state_ids "
-                        f"entry (provided: {sorted(ids)}) — cover every "
-                        "state present, or omit state_ids to derive the "
-                        "mapping from the data"
-                    )
-                # range-check EVERY row, not just group changes: the first
-                # group of a section file is recorded at file open, and a
-                # single-group file would otherwise never re-compare
-                if not 0 <= kg < max_parallelism:
-                    raise ValueError(
-                        f"derived key group {kg} is outside "
-                        f"[0, {max_parallelism}) — rows were encoded "
-                        "with a different max_parallelism than "
-                        "write_savepoint was given (the key-group "
-                        "prefix width inside key_ns no longer matches)"
-                    )
-                if state["op"] is not None and opi != state["op"]:
-                    close_file()
-                if state["fh"] is None:
-                    fpath = os.path.join(path, f"op-{opi}-{uuid.uuid4().hex}")
-                    state.update(fh=open(fpath, "wb"), path=fpath, op=opi, kg=kg)
-                if kg != state["kg"]:
-                    flush_kg()
-                    state["kg"] = kg
-                entries.append((sid, bytes(kns), bytes(val)))
-        close_file()
-        if done:
-            yield pd.DataFrame(
-                {
-                    "op_index": [d[0] for d in done],
-                    "file": [d[1] for d in done],
-                    "offsets": [
-                        json.dumps({str(k): v for k, v in d[2].items()}) for d in done
-                    ],
-                }
-            )
-
-    handle_schema = "op_index int, file string, offsets string"
     handles = (
-        shuffled.select("key_group", "op_index", "state_id", "key_ns", "value")
-        .mapInPandas(write_partition, schema=handle_schema)
+        shuffled.select("state_name", "key_ns", "value")
+        .mapInArrow(write_task, schema="handle string")
         .collect()  # handles only — KB-scale, like OperatorStateWriter.java:253
     )
+    return SavepointMeta(
+        max_parallelism, parallelism, ids, compression=compression,
+        files=[json.loads(h[0]) for h in handles],
+    )
 
-    meta = SavepointMeta(max_parallelism, parallelism, ids, compression=compression)
-    for h in handles:
-        meta.files.append(
-            {
-                "path": h["file"],
-                "op_index": int(h["op_index"]),
-                "offsets": {k: int(v) for k, v in json.loads(h["offsets"]).items()},
-            }
+
+def route_state_rows(batch: pa.RecordBatch, state_ids, max_parallelism, parallelism):
+    """``(key_group, op_index, state_id)`` numpy arrays for a non-empty batch
+    of state rows. The key group is read from the ``key_ns`` buffers: the
+    1- or 2-byte big-endian prefix, metadata-follows bit masked; the
+    operator index is ``key_group * parallelism // max_parallelism``
+    (types/KeyedStateRow.java:65-68). A group outside ``[0,
+    max_parallelism)`` or a state name missing from ``state_ids`` is
+    refused by name."""
+    prefix = fc.key_group_prefix_bytes(max_parallelism)
+    kns = batch.column("key_ns")
+    width = np.int64 if pa.types.is_large_binary(kns.type) else np.int32
+    offs = np.frombuffer(kns.buffers()[1], width)[kns.offset : kns.offset + len(kns) + 1]
+    if (np.diff(offs) < prefix).any():
+        raise ValueError(f"key_ns shorter than its {prefix}-byte key-group prefix")
+    data = np.frombuffer(kns.buffers()[2], np.uint8)
+    kg = data[offs[:-1]].astype(np.int64)
+    if prefix == 2:
+        kg = (kg << 8) | data[offs[:-1] + 1]
+    kg &= 0x7F if prefix == 1 else 0x7FFF
+    if (kg >= max_parallelism).any():
+        raise ValueError(
+            f"derived key group {kg.max()} is outside [0, {max_parallelism}) "
+            "— rows were encoded with a different max_parallelism than the "
+            "writer was given (the key-group prefix width inside key_ns no "
+            "longer matches)"
         )
-    with open(os.path.join(path, METADATA_FILE), "w") as f:
+    names = sorted(state_ids)
+    idx = pc.index_in(batch.column("state_name"), value_set=pa.array(names, pa.string()))
+    if idx.null_count:
+        missing = batch.column("state_name").filter(idx.is_null())[0].as_py()
+        raise ValueError(
+            "rows contain a state_name with no state_ids entry: state_ids "
+            f"has no entry for {missing!r} (provided: {names})"
+        )
+    sid = np.array([state_ids[s] for s in names], np.int64)[idx.to_numpy()]
+    return kg, kg * parallelism // max_parallelism, sid
+
+
+def write_task_sections(
+    batches, path, *, state_ids, max_parallelism, parallelism, compression=False
+) -> list[dict]:
+    """The one savepoint task writer, behind ``write_savepoint`` and the
+    ``bravo_savepoint`` sink: Arrow batches of (state_name, key_ns, value)
+    ordered by (op_index, key_group) — other orders are refused — become
+    one ``op-<i>-<uuid4 hex>`` file per operator index holding one section
+    per key group, framed Snappy when ``compression``
+    (RocksDBSavepointWriter.java:132-166). Returns one handle per file,
+    ``{"path", "op_index", "offsets": {key_group (str): byte offset}}``.
+    On any exception the files it opened are deleted and it re-raises."""
+    handles: list[dict] = []
+    entries: list[tuple[int, bytes, bytes]] = []
+    f = cur = None  # open file; (op_index, key_group) being gathered
+
+    def end_section(run):
+        # write the section of `cur`; close its file unless `run` (None at
+        # the end) continues the same operator index
+        if cur is not None:
+            handles[-1]["offsets"][str(cur[1])] = f.tell()
+            buf = fc.write_key_group_section(entries)
+            f.write(fastpath.frame_compress(buf) if compression else buf)
+            entries.clear()
+            if run is None or run[0] != cur[0]:
+                f.flush()
+                os.fsync(f.fileno())
+                f.close()
+
+    try:
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            kg, op, sid = route_state_rows(batch, state_ids, max_parallelism, parallelism)
+            keys = batch.column("key_ns").to_pylist()
+            vals = batch.column("value").to_pylist()
+            sids = sid.tolist()
+            cuts = (np.flatnonzero((kg[1:] != kg[:-1]) | (op[1:] != op[:-1])) + 1).tolist()
+            for s, e in zip([0, *cuts], [*cuts, len(kg)]):
+                run = (int(op[s]), int(kg[s]))
+                if run != cur:
+                    if cur is not None and run < cur:
+                        raise ValueError(
+                            "savepoint task input is not ordered by "
+                            f"(op_index, key_group): {run} follows {cur}"
+                        )
+                    end_section(run)
+                    if cur is None or run[0] != cur[0]:
+                        fpath = os.path.join(path, f"op-{run[0]}-{uuid.uuid4().hex}")
+                        f = open(fpath, "wb")
+                        handles.append({"path": fpath, "op_index": run[0], "offsets": {}})
+                    cur = run
+                entries.extend(zip(sids[s:e], keys[s:e], vals[s:e]))
+        end_section(None)
+    except BaseException:
+        if f is not None:
+            f.close()
+        discard_files(handles)
+        raise
+    return handles
+
+
+def commit_savepoint(path: str, meta: SavepointMeta, *, overwrite: bool) -> SavepointMeta:
+    """The one savepoint commit: write ``meta`` as ``_bravo_metadata``
+    through :func:`atomic_write` and return what was committed. Readers
+    reach section files only through it, so the savepoint exists once this
+    commits. ``overwrite`` deletes the prior files only after that, so a
+    failed write, or one that reads the path it replaces, leaves the prior
+    savepoint readable; otherwise ``meta`` is appended (:func:`_append_meta`)."""
+    mpath = os.path.join(path, METADATA_FILE)
+    prior = None
+    if os.path.exists(mpath):
+        try:
+            prior = read_savepoint_meta(path)
+        except ValueError:
+            if not overwrite:
+                raise  # an overwrite may replace damaged metadata
+    if prior is not None and not overwrite:
+        meta = _append_meta(prior, meta)
+    with atomic_write(mpath, "w") as f:
         f.write(meta.to_json())
-    _ = spark  # session retained for API symmetry
+    if prior is not None and overwrite:
+        keep = {fm["path"] for fm in meta.files}
+        discard_files([fm for fm in prior.files if fm["path"] not in keep])
     return meta
 
 
+def _append_meta(prior: SavepointMeta, meta: SavepointMeta) -> SavepointMeta:
+    """``meta`` merged onto ``prior``: max_parallelism (the key-group prefix
+    width), parallelism (the prior files' op-index layout) and compression
+    must match, and state_ids must agree on shared names and ids."""
+    for field_ in ("max_parallelism", "parallelism", "compression"):
+        if getattr(prior, field_) != getattr(meta, field_):
+            raise ValueError(
+                f"append with {field_}={getattr(meta, field_)} onto a "
+                f"savepoint written with {getattr(prior, field_)}"
+            )
+    ids = {**meta.state_ids, **prior.state_ids}
+    by_id: dict[int, str] = {}
+    for name, sid in ids.items():
+        if meta.state_ids.get(name, sid) != sid or by_id.setdefault(sid, name) != name:
+            raise ValueError(
+                f"append state_ids conflict for {name!r}: existing ids "
+                f"{prior.state_ids}, new ids {meta.state_ids}"
+            )
+    return SavepointMeta(
+        meta.max_parallelism, meta.parallelism, ids,
+        compression=meta.compression, files=prior.files + meta.files,
+    )
+
+
+def discard_files(handles: Iterable[dict]) -> None:
+    """Delete the section files ``handles`` name, skipping missing ones."""
+    for h in handles:
+        with suppress(OSError):
+            os.remove(h["path"])
+
+
 def read_savepoint_meta(path: str) -> SavepointMeta:
-    with open(os.path.join(path, METADATA_FILE)) as f:
-        return SavepointMeta.from_json(f.read())
+    """The savepoint's metadata. A missing ``_bravo_metadata`` raises
+    ``FileNotFoundError``; a truncated or malformed one a ``ValueError``
+    naming it."""
+    mpath = os.path.join(path, METADATA_FILE)
+    with open(mpath) as f:
+        text = f.read()
+    try:
+        return SavepointMeta.from_json(text)
+    except (ValueError, KeyError, TypeError, AttributeError) as ex:
+        raise ValueError(f"{mpath}: unreadable savepoint metadata ({ex!r})") from ex
 
 
 def read_savepoint(
@@ -345,7 +446,7 @@ def iter_file_spans(fpath, spans, id_to_name, state_filter, compressed=False):
             f.seek(off)
             buf = f.read(end - off)
             if compressed:
-                buf = _frame_decompress(buf)
+                buf = fastpath.frame_decompress(buf)
             yield from fc.iter_key_group_section(buf, id_to_name, state_filter)
 
 
@@ -471,7 +572,7 @@ def streaming_savepoint_sink(
     of a streaming aggregation's state: every micro-batch (complete-mode
     output) is serialized as a full savepoint under
     ``{path}/batch-{id}/`` and ``{path}/LATEST`` flips to it atomically
-    (write-temp + ``os.replace``), so a Flink-side consumer — or this
+    (``atomic_write``), so a Flink-side consumer — or this
     engine's own savepoint source — always sees one consistent snapshot
     and never a half-written one. ``keep_history=False`` deletes the
     superseded batch dir after the pointer flip (the pointer is already
@@ -500,10 +601,8 @@ def streaming_savepoint_sink(
             max_parallelism=max_parallelism, parallelism=parallelism,
         )
         prev = latest_savepoint_path(path)
-        tmp = os.path.join(path, f".{LATEST_POINTER}.tmp")
-        with open(tmp, "w") as f:
+        with atomic_write(os.path.join(path, LATEST_POINTER), "w") as f:
             f.write(f"batch-{batch_id}")
-        os.replace(tmp, os.path.join(path, LATEST_POINTER))
         if not keep_history and prev is not None and prev != target:
             shutil.rmtree(prev, ignore_errors=True)
 
@@ -516,4 +615,5 @@ def latest_savepoint_path(path: str) -> str | None:
     p = os.path.join(path, LATEST_POINTER)
     if not os.path.exists(p):
         return None
-    return os.path.join(path, open(p).read().strip())
+    with open(p) as f:
+        return os.path.join(path, f.read().strip())

@@ -57,6 +57,7 @@ import time
 
 from bravo_spark.codecs import fastpath
 from bravo_spark.codecs.crc32c import crc32c
+from bravo_spark.sources.atomic import atomic_write
 
 SNAPPY_MAGIC = b"\x82SNAPPY\x00"
 LZ4_MAGIC = b"LZ4Block"
@@ -527,7 +528,7 @@ def _finalize_state_file(path: str) -> None:
         "mainFileSize": len(data),
         "timestampMs": int(time.time() * 1000),
     }
-    with open(path + ".crc", "w") as f:
+    with atomic_write(path + ".crc", "w") as f:
         json.dump(doc, f, separators=(",", ":"))
     d, name = os.path.split(path)
     for stale in (f".{name}.crc", f".{name}.crc.crc"):
@@ -995,10 +996,8 @@ def _rewrite_partition_version(
             payload += struct.pack(">i", len(kb)) + kb
             payload += struct.pack(">i", -1)
     payload += struct.pack(">i", -1)
-    tmp = os.path.join(pdir, f".{version}.delta.tmp")
-    with open(tmp, "wb") as f:
+    with atomic_write(old_delta) as f:
         f.write(encode_stream_like(old_raw, bytes(payload)))
-    os.replace(tmp, old_delta)
     _finalize_state_file(old_delta)
 
     snap = os.path.join(pdir, f"{version}.snapshot")
@@ -1009,10 +1008,8 @@ def _rewrite_partition_version(
             spayload += struct.pack(">i", len(kb)) + kb
             spayload += struct.pack(">i", len(vb)) + vb
         spayload += struct.pack(">i", -1)
-        stmp = os.path.join(pdir, f".{version}.snapshot.tmp")
-        with open(stmp, "wb") as f:
+        with atomic_write(snap) as f:
             f.write(encode_stream_like(old_snap, bytes(spayload)))
-        os.replace(stmp, snap)
         _finalize_state_file(snap)
 
 
@@ -1086,11 +1083,8 @@ def _rewind_compactible_log(d: str, cut: int, removed: list[str]) -> None:
         if int(entry["batchId"]) <= cut:
             kept.append(ln)
     if cut >= 0:
-        target = os.path.join(d, f"{cut}.compact")
-        tmp = target + ".tmp"
-        with open(tmp, "w") as fh:
+        with atomic_write(os.path.join(d, f"{cut}.compact"), "w") as fh:
             fh.write("\n".join([version] + kept))
-        os.replace(tmp, target)
     # the rewritten compact supersedes any plain file at the cut id and any
     # stale Hadoop checksum sidecars for either name
     for stale in (str(cut), f".{cut}.crc", f".{cut}.compact.crc"):
@@ -1204,10 +1198,8 @@ def rewind_file_sink(output_dir: str, batch_id: int) -> list[str]:
     if rebuild is not None:
         version, keep = rebuild
         target = os.path.join(md, f"{batch_id}.compact")
-        tmp = target + ".tmp"
-        with open(tmp, "w") as fh:
+        with atomic_write(target, "w") as fh:
             fh.write("\n".join([version] + [json.dumps(e) for e in keep]))
-        os.replace(tmp, target)
         # the rebuilt compact supersedes the plain file at the cut id
         for stale in (str(batch_id), f".{batch_id}.crc",
                       f".{batch_id}.compact.crc"):
@@ -1421,10 +1413,8 @@ def compact_spark_checkpoint(
             if os.path.exists(c):
                 like = open(c, "rb").read()
                 break
-        tmp = os.path.join(pdir, f".{version}.snapshot.tmp")
-        with open(tmp, "wb") as f:
+        with atomic_write(snap) as f:
             f.write(encode_stream_like(like, bytes(payload)))
-        os.replace(tmp, snap)
         _finalize_state_file(snap)
         return pid
 
@@ -1473,10 +1463,8 @@ def patch_watermark(
             len(lines), line_idx + 1
         )]
         lines[line_idx] = json.dumps(meta, separators=(",", ":"))
-        tmp = path + ".bravo_tmp"
-        with open(tmp, "w") as f:
+        with atomic_write(path, "w") as f:
             f.write("\n".join(lines))
-        os.replace(tmp, path)
         name = os.path.basename(path)
         dot = os.path.join(os.path.dirname(path), f".{name}.crc")
         if os.path.exists(f"{path}.crc"):
