@@ -230,25 +230,27 @@ class OperatorStateWriter:
             max_parallelism=self.max_parallelism,
             parallelism=self.parallelism,
         )
-        # EP3 write side: carry over (optionally transformed) operator state
-        # before the metadata commits, so no reader opens a savepoint without it
-        if self.source is not None:
-            if self._nk_transform is not None:
-                ops.transform_operator_state(
-                    self.source.path, self.new_path, self._nk_transform
-                )
-            else:
-                backends = ops.read_operator_state(self.source.path)
-                if backends:
-                    ops.write_operator_state(self.new_path, backends)
-        elif self._nk_transform is not None:
-            backends = [
-                ops.OperatorStateBackend() for _ in range(self.parallelism)
-            ]
-            for i, b in enumerate(backends):
-                self._nk_transform(i, b)
-            ops.write_operator_state(self.new_path, backends)
-        return sp.commit_savepoint(self.new_path, meta, overwrite=True)
+        with sp.discard_on_failure(self.new_path, meta):
+            # EP3 write side: carry over (optionally transformed) operator
+            # state before the metadata commits, so no reader opens a
+            # savepoint without it
+            if self.source is not None:
+                if self._nk_transform is not None:
+                    ops.transform_operator_state(
+                        self.source.path, self.new_path, self._nk_transform
+                    )
+                else:
+                    backends = ops.read_operator_state(self.source.path)
+                    if backends:
+                        ops.write_operator_state(self.new_path, backends)
+            elif self._nk_transform is not None:
+                backends = [
+                    ops.OperatorStateBackend() for _ in range(self.parallelism)
+                ]
+                for i, b in enumerate(backends):
+                    self._nk_transform(i, b)
+                ops.write_operator_state(self.new_path, backends)
+            return sp.commit_savepoint(self.new_path, meta, overwrite=True)
 
 
 def rescale_savepoint(
@@ -305,10 +307,11 @@ def rescale_savepoint(
         parallelism=new_parallelism,
         state_ids=dict(reader.meta.state_ids),
     )
-    backends = ops.read_operator_state(src_path, parallelism=new_parallelism)
-    if backends:
-        ops.write_operator_state(dst_path, backends)
-    return sp.commit_savepoint(dst_path, meta, overwrite=True)
+    with sp.discard_on_failure(dst_path, meta):
+        backends = ops.read_operator_state(src_path, parallelism=new_parallelism)
+        if backends:
+            ops.write_operator_state(dst_path, backends)
+        return sp.commit_savepoint(dst_path, meta, overwrite=True)
 
 
 # codec shortcuts for API users

@@ -3,7 +3,7 @@
 The Kafka-dump / data-lake interchange format. Spark's SQL ``avro``
 source lives in the separate spark-avro module (not bundled in this
 distribution), so this codec supplies the read/write halves the same way
-the repo's other pure-Python codecs do (SST, zstd, JPEG, WARC) — and the
+the repo's other pure-Python codecs do (SST, JPEG, WARC) — and the
 bundled REAL ``avro-1.12.1.jar`` in Spark's JVM cross-validates both
 directions in ``tests/test_avro.py``.
 
@@ -21,12 +21,12 @@ record, enum, array, map, union, fixed. Codecs: ``null``, ``deflate``
 CRC32 of the UNcompressed payload, per spec), and — since r17 —
 ``bzip2`` (stdlib bz2, one complete bzip2 stream per block), ``xz``
 (stdlib lzma, one .xz stream per block), and ``zstandard`` (one zstd
-frame per block, via codecs/fastpath: pyarrow's bundled libzstd with
-the pure RFC 8878 decoder as fallback) — each cross-validated both
-directions against the real avro jar in ``tests/test_avro.py``. An
-unknown codec name still refuses BY NAME — never wrong bytes. All
-block decompressors are output-bounded (MAX_BLOCK_BYTES) so a crafted
-few-KB bomb block cannot allocate unbounded memory; relatedly, a block
+frame per block, via codecs/fastpath: pyarrow's bundled libzstd) —
+each cross-validated both directions against the real avro jar in
+``tests/test_avro.py``. An unknown codec name still refuses BY NAME —
+never wrong bytes. All block decompressors are output-bounded
+(MAX_BLOCK_BYTES) so a crafted few-KB bomb block cannot allocate
+unbounded memory; relatedly, a block
 claiming more than ``max(len(payload), 65536)`` records is refused as
 a count bomb — a documented tightening over the spec, which permits a
 single block of arbitrarily many ZERO-byte records (null / empty-record
@@ -364,7 +364,7 @@ def _matches(schema: Any, v: Any) -> bool:
 # container file
 # --------------------------------------------------------------------------
 
-_CODECS = ("null", "deflate", "snappy", "bzip2", "xz", "zstandard")
+_CODEC_NAMES = ("null", "deflate", "snappy", "bzip2", "xz", "zstandard")
 
 
 def _bounded_obj_decompress(d, payload: bytes, pos: int, name: str) -> bytes:
@@ -423,7 +423,7 @@ def read_ocf(data: bytes) -> tuple[dict[str, Any], Iterator[dict[str, Any]]]:
         raise AvroError("container missing avro.schema metadata")
     schema = _norm_schema(schema, {})
     codec = _utf8(meta.get("avro.codec", b"null"), d.pos)
-    if codec not in _CODECS:
+    if codec not in _CODEC_NAMES:
         raise AvroError(f"unsupported avro.codec {codec!r}")
     sync = d.raw(16)
 
@@ -531,7 +531,7 @@ def write_ocf(
     into it as they are encoded (returns None) — peak memory is then one
     block plus the encoder's buffers regardless of record count; with the
     default ``out=None`` the whole OCF is returned as bytes, unchanged."""
-    if codec not in _CODECS:
+    if codec not in _CODEC_NAMES:
         raise AvroError(f"unsupported avro.codec {codec!r}")
     schema_json = schema if isinstance(schema, str) else json.dumps(schema)
     norm = _norm_schema(json.loads(schema_json), {})
@@ -587,10 +587,8 @@ def write_ocf(
             try:
                 payload = fastpath.zstd_compress(payload)
             except ValueError as e:
-                # refusal-by-name contract: callers catch AvroError; the
-                # fastpath's bare ValueError (no zstd COMPRESSOR in a
-                # pyarrow-less environment — the pure codec only
-                # decodes) must surface as one
+                # refusal-by-name contract: callers catch AvroError, so
+                # a compressor refusal must surface as one
                 raise AvroError(
                     f"cannot write zstandard codec: {e}") from e
         hdr = _Encoder()

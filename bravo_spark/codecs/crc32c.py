@@ -7,9 +7,9 @@ rocksdb util/crc32c.h Mask/Unmask).
 One blocked numpy kernel checksums single messages and batches alike.
 Only a kernel pass of fewer than ``_KERNEL_MIN`` bytes (one short
 message, or a batch that small) and a message under 4 bytes take the
-table-driven byte loop (:func:`crc32c_bytewise`, also the reference the
-tests check the kernel against). The CRC register update is linear over
-GF(2), so the kernel:
+table-driven byte loop, which the tests' reference
+(tests/codec_oracles/crc32c.py) also runs. The CRC register update is
+linear over GF(2), so the kernel:
 
 - right-aligns each message into ``_L``-byte blocks (leading zero bytes
   leave a zero register unchanged) and folds the initial register in by
@@ -57,11 +57,6 @@ def _byte_loop(data, c: int) -> int:
     for b in data:
         c = _TABLE[(c ^ b) & 0xFF] ^ (c >> 8)
     return c
-
-
-def crc32c_bytewise(data: bytes, crc: int = 0) -> int:
-    """CRC-32C by the table-driven byte loop."""
-    return _byte_loop(data, crc ^ 0xFFFFFFFF) ^ 0xFFFFFFFF
 
 
 def crc32c(data: bytes, crc: int = 0) -> int:

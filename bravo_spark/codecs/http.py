@@ -289,12 +289,10 @@ def decode_content_encoding(headers: dict[str, str], body: bytes) -> bytes:
 
         cap = max(len(body) * _MAX_INFLATE_RATIO, _MIN_INFLATE_CAP)
         try:
-            # libzstd when pyarrow is present, the pure RFC 8878
-            # decoder otherwise; both paths enforce the bound DURING
-            # the decode (per read / per block+sequence), so a bomb
-            # frame never materializes past the ceiling — and raise
-            # the bound as a TYPE, so corruption can't be mislabeled
-
+            # libzstd enforces the bound DURING the decode (per
+            # read), so a bomb frame never materializes past the
+            # ceiling, and raises it as a TYPE, so corruption can't
+            # be mislabeled
             return fastpath.zstd_decompress_stream(body, max_bytes=cap)
         except ZstdBoundError as exc:
             raise HttpError(

@@ -1,133 +1,35 @@
-"""Pure-Python raw LZ4 block codec (lz4_Block_format.md).
+"""LZ4: the raw block codec (pyarrow's liblz4) and lz4-java's stream framing.
 
-Used for RocksDB SST blocks (kLZ4Compression / kLZ4HCCompression — HC
-changes only the encoder's match search, the block format is identical)
-and for lz4-java's LZ4BlockOutputStream framing in Spark state files.
-``compress_block`` is a greedy single-candidate encoder — spec-valid
-output any LZ4 decoder accepts, tuned for correctness not ratio; it
-exists so ``SstWriter`` can emit lz4 blocks for fixtures and bootstrap.
-Pure Python is fine here — state and SST blocks are tens of KB and the
-engine's hot data path (parquet, shuffle) never goes through this module.
+Raw blocks are RocksDB's SST block format for kLZ4Compression /
+kLZ4HCCompression (HC changes only the encoder's match search, the block
+format is identical). :func:`encode_stream` frames a payload the way
+lz4-java's ``LZ4BlockOutputStream`` does, which is how Spark's state-store
+files are written under the default lz4 codec. The pure-Python block
+codec is a test oracle (tests/codec_oracles/lz4.py).
 """
 
 from __future__ import annotations
 
 import struct as _struct
 
-# spec end-of-block rules (lz4_Block_format.md): the last 5 bytes are
-# always literals, and the last match must start >= 12 bytes before the
-# end of the block — inputs shorter than 13 bytes are literal-only.
-_MFLIMIT = 12
-_LAST_LITERALS = 5
-_MAX_OFFSET = 0xFFFF
+import pyarrow as pa
+
+from bravo_spark.codecs.xxh import xxh32
+
+_CODEC = pa.Codec("lz4_raw")
 
 
-def _ext_len(out: bytearray, v: int) -> None:
-    # extended length: the token nibble holds 15, then 255-bytes + final
-    rem = v - 15
-    while rem >= 255:
-        out.append(255)
-        rem -= 255
-    out.append(rem)
+def compress_block(data: bytes) -> bytes:
+    """Raw LZ4 block (no frame, no length header — RocksDB block shape)."""
+    return _CODEC.compress(data, asbytes=True)
 
 
-def _emit(
-    out: bytearray,
-    literals: bytes | memoryview,
-    offset: int | None = None,
-    mlen: int = 0,
-) -> None:
-    lit = len(literals)
-    tok_lit = 15 if lit >= 15 else lit
-    if offset is None:  # final sequence: literals only, no match part
-        out.append(tok_lit << 4)
-        if lit >= 15:
-            _ext_len(out, lit)
-        out += literals
-        return
-    m = mlen - 4  # minmatch is 4, encoded as 0
-    tok_m = 15 if m >= 15 else m
-    out.append((tok_lit << 4) | tok_m)
-    if lit >= 15:
-        _ext_len(out, lit)
-    out += literals
-    out.append(offset & 0xFF)
-    out.append(offset >> 8)
-    if m >= 15:
-        _ext_len(out, m)
-
-
-def compress_block(src: bytes) -> bytes:
-    """Encode ``src`` as one raw LZ4 block (greedy, 4-byte hash matches)."""
-    n = len(src)
-    out = bytearray()
-    if n < 13:
-        _emit(out, src)
-        return bytes(out)
-    table: dict[bytes, int] = {}
-    anchor = 0
-    i = 0
-    match_limit = n - _MFLIMIT
-    end_limit = n - _LAST_LITERALS
-    while i <= match_limit:
-        key = src[i : i + 4]
-        cand = table.get(key)
-        table[key] = i
-        if cand is None or i - cand > _MAX_OFFSET or src[cand : cand + 4] != key:
-            i += 1
-            continue
-        mlen = 4
-        cap = end_limit - i
-        while mlen < cap and src[cand + mlen] == src[i + mlen]:
-            mlen += 1
-        _emit(out, src[anchor:i], i - cand, mlen)
-        i += mlen
-        anchor = i
-    _emit(out, src[anchor:])
-    return bytes(out)
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    """XXH32 — lz4-java's per-block checksum (LZ4BlockOutputStream uses
-    seed 0x9747b28c over the UNCOMPRESSED data)."""
-    P1, P2, P3, P4, P5 = (
-        2654435761, 2246822519, 3266489917, 668265263, 374761393)
-    M = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & M
-
-    n = len(data)
-    idx = 0
-    if n >= 16:
-        v1 = (seed + P1 + P2) & M
-        v2 = (seed + P2) & M
-        v3 = seed & M
-        v4 = (seed - P1) & M
-        while idx <= n - 16:
-            a, b, c, d = _struct.unpack_from("<IIII", data, idx)
-            v1 = (rotl((v1 + a * P2) & M, 13) * P1) & M
-            v2 = (rotl((v2 + b * P2) & M, 13) * P1) & M
-            v3 = (rotl((v3 + c * P2) & M, 13) * P1) & M
-            v4 = (rotl((v4 + d * P2) & M, 13) * P1) & M
-            idx += 16
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + n) & M
-    while idx <= n - 4:
-        (w,) = _struct.unpack_from("<I", data, idx)
-        h = (rotl((h + w * P3) & M, 17) * P4) & M
-        idx += 4
-    while idx < n:
-        h = (rotl((h + data[idx] * P5) & M, 11) * P1) & M
-        idx += 1
-    h ^= h >> 15
-    h = (h * P2) & M
-    h ^= h >> 13
-    h = (h * P3) & M
-    h ^= h >> 16
-    return h
+def decompress_block(block: bytes, dlen: int) -> bytes:
+    """Decode one raw LZ4 block to exactly ``dlen`` bytes."""
+    try:
+        return _CODEC.decompress(block, dlen, asbytes=True)
+    except Exception as e:
+        raise ValueError(f"corrupt lz4 block: {e}") from e
 
 
 LZ4_BLOCK_MAGIC = b"LZ4Block"
@@ -136,29 +38,22 @@ _METHOD_RAW = 0x10
 _METHOD_LZ4 = 0x20
 
 
-def encode_stream(
-    payload: bytes, block_size: int = 32 * 1024, *, _compress=None
-) -> bytes:
+def encode_stream(payload: bytes, block_size: int = 32 * 1024) -> bytes:
     """Frame ``payload`` as an lz4-java ``LZ4BlockOutputStream`` stream —
     the layout Spark's state-store files use under the default
     ``spark.sql.streaming.stateStore.compression.codec=lz4``. Per block:
     magic, token (method | log2(blockSize)-10), compressedLen,
     originalLen, XXH32(seed 0x9747b28c) of the original bytes (all LE
     ints), then the block; terminated by an empty RAW block. lz4-java's
-    reader verifies the checksum, so it must be bit-exact.
-
-    ``_compress`` is the codecs/fastpath.py injection point for the raw
-    block compressor (the checksum covers the ORIGINAL bytes, so any
-    valid LZ4 block encoder yields a stream lz4-java accepts — pinned by
+    reader verifies the checksum, so it must be bit-exact (pinned by
     decoding with the real LZ4BlockInputStream in test_spark_state)."""
-    block_compress = _compress or compress_block
     level = max((block_size - 1).bit_length() - 10, 0)
     token_raw = _METHOD_RAW | level
     token_lz4 = _METHOD_LZ4 | level
     out = bytearray()
     for i in range(0, len(payload), block_size):
         chunk = payload[i : i + block_size]
-        comp = block_compress(chunk)
+        comp = compress_block(chunk)
         # lz4-java keeps only the low 28 bits of the hash
         check = xxh32(chunk, _LZ4_JAVA_SEED) & 0xFFFFFFF
         if len(comp) >= len(chunk):
@@ -175,43 +70,3 @@ def encode_stream(
     out += bytes([token_raw])
     out += _struct.pack("<iii", 0, 0, 0)
     return bytes(out)
-
-
-def decompress_block(src: bytes, dlen: int) -> bytes:
-    """Decode one raw LZ4 block to exactly ``dlen`` bytes."""
-    dst = bytearray()
-    i, n = 0, len(src)
-    while i < n:
-        token = src[i]
-        i += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = src[i]
-                i += 1
-                lit += b
-                if b != 255:
-                    break
-        dst += src[i : i + lit]
-        i += lit
-        if i >= n:
-            break  # last sequence: literals only
-        off = src[i] | (src[i + 1] << 8)
-        i += 2
-        ml = token & 0xF
-        if ml == 15:
-            while True:
-                b = src[i]
-                i += 1
-                ml += b
-                if b != 255:
-                    break
-        ml += 4
-        start = len(dst) - off
-        if start < 0:
-            raise ValueError("corrupt LZ4 block: offset before start")
-        for k in range(ml):  # may overlap — must copy byte-wise
-            dst.append(dst[start + k])
-    if len(dst) != dlen:
-        raise ValueError(f"LZ4 block decoded {len(dst)} bytes, expected {dlen}")
-    return bytes(dst)

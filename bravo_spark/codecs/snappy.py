@@ -1,7 +1,6 @@
-"""Pure-Python Snappy: raw block format + the official framing format.
+"""Snappy: the raw block codec (pyarrow's libsnappy) and the framing format.
 
-Two consumers, neither of which can assume the ``python-snappy`` C binding
-(absent from this environment):
+Two consumers:
 
 - **raw blocks** — RocksDB compresses each SST block with raw Snappy by
   default, so the incremental-checkpoint reader (sources/sst.py) must
@@ -13,10 +12,10 @@ Two consumers, neither of which can assume the ``python-snappy`` C binding
   RocksDBSavepointWriter.java:71-72 use Flink's snappy stream decorator,
   which writes the framing format).
 
-Decompression implements the full format (literals + all three copy
-element kinds). Compression emits literal-only output — valid Snappy any
-decoder accepts, chosen for simplicity over ratio; the decompressor is the
-interoperability-critical half.
+The framing layout is this module's own and is pinned against
+org.xerial framed streams in tests/test_snappy.py; the chunk payloads are
+libsnappy blocks. The pure-Python block codec is a test oracle
+(tests/codec_oracles/snappy.py).
 
 Format: google/snappy format_description.txt and framing_format.txt
 (public). Framing CRCs are masked CRC-32C of the UNCOMPRESSED data.
@@ -26,97 +25,29 @@ from __future__ import annotations
 
 import struct
 
+import pyarrow as pa
+
 from bravo_spark.codecs import crc32c
+from bravo_spark.codecs.varint import read_uvarint
 
-# --- varint (LEB128, unsigned) ---
-
-
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("uvarint too long")
-
-
-def _write_uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        if v < 0x80:
-            out.append(v)
-            return bytes(out)
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
+_CODEC = pa.Codec("snappy")
 
 
 # --- raw block format ---
 
 
-def decompress(buf: bytes) -> bytes:
-    """Raw-Snappy decompress (format_description.txt §2-4)."""
-    n, pos = _read_uvarint(buf, 0)
-    out = bytearray()
-    end = len(buf)
-    while pos < end:
-        tag = buf[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:  # 60..63 → 1..4 extra length bytes (LE)
-                extra = length - 59
-                length = int.from_bytes(buf[pos : pos + extra], "little")
-                pos += extra
-            length += 1
-            out += buf[pos : pos + length]
-            pos += length
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x7) + 4
-            offset = ((tag & 0xE0) << 3) | buf[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            offset = int.from_bytes(buf[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            offset = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("corrupt snappy: bad copy offset")
-        # overlapping copies are legal and meaningful (RLE-style)
-        start = len(out) - offset
-        for i in range(length):
-            out.append(out[start + i])
-    if len(out) != n:
-        raise ValueError(f"corrupt snappy: length {len(out)} != declared {n}")
-    return bytes(out)
+def compress(data: bytes) -> bytes:
+    """Raw-snappy stream: varint length preamble + libsnappy stream."""
+    return _CODEC.compress(data, asbytes=True)
 
 
-def compress(buf: bytes) -> bytes:
-    """Literal-only raw Snappy (always valid; no back-references)."""
-    out = bytearray(_write_uvarint(len(buf)))
-    pos = 0
-    while pos < len(buf):
-        chunk = buf[pos : pos + 65536]
-        n = len(chunk)
-        if n <= 60:
-            out.append((n - 1) << 2)
-        elif n <= 0xFF:
-            out.append(60 << 2)
-            out.append(n - 1)
-        else:
-            out.append(61 << 2)
-            out += (n - 1).to_bytes(2, "little")
-        out += chunk
-        pos += n
-    return bytes(out)
+def decompress(stream: bytes) -> bytes:
+    """Decode a raw-snappy stream (the declared size is in its preamble)."""
+    try:
+        size, _pos = read_uvarint(stream, 0)
+        return _CODEC.decompress(stream, size, asbytes=True)
+    except Exception as e:  # pyarrow raises OSError on corruption
+        raise ValueError(f"corrupt snappy: {e}") from e
 
 
 # --- framing format (framing_format.txt) ---
@@ -127,14 +58,8 @@ _CHUNK_UNCOMPRESSED = 0x01
 _MAX_UNCOMPRESSED_CHUNK = 65536
 
 
-def frame_compress(data: bytes, *, _compress=None) -> bytes:
-    """Whole-buffer framed compression (stream identifier + data chunks).
-
-    ``_compress`` lets codecs/fastpath.py swap in the native chunk
-    compressor while this module keeps sole ownership of the FRAMING
-    layout (the part pinned against org.xerial streams in
-    tests/test_snappy.py)."""
-    chunk_compress = _compress or compress
+def frame_compress(data: bytes) -> bytes:
+    """Whole-buffer framed compression (stream identifier + data chunks)."""
     chunks = [
         data[pos : pos + _MAX_UNCOMPRESSED_CHUNK]
         for pos in range(0, len(data), _MAX_UNCOMPRESSED_CHUNK)
@@ -143,7 +68,7 @@ def frame_compress(data: bytes, *, _compress=None) -> bytes:
     out = bytearray(STREAM_IDENTIFIER)
     for chunk, crc in zip(chunks, crcs):
         crc = crc32c.mask(crc)
-        comp = chunk_compress(chunk)
+        comp = compress(chunk)
         if len(comp) < len(chunk):
             body = struct.pack("<I", crc) + comp
             ctype = _CHUNK_COMPRESSED
@@ -156,16 +81,14 @@ def frame_compress(data: bytes, *, _compress=None) -> bytes:
     return bytes(out)
 
 
-def frame_decompress(data: bytes, *, _decompress=None) -> bytes:
+def frame_decompress(data: bytes) -> bytes:
     """Whole-buffer framed decompression; verifies chunk CRCs.
 
-    ``_decompress`` is the fastpath injection point, same contract as
-    :func:`frame_compress`. Verification is INCREMENTAL: a pending
-    window of at most ``_CRC_WINDOW`` chunks is checked in one
-    ``crc32c_batch`` call, and flushed before any parse error, so a
-    corrupt early chunk raises "CRC mismatch" without first decoding a
-    multi-GB stream, and CRC errors win over later parse errors."""
-    chunk_decompress = _decompress or decompress
+    Verification is INCREMENTAL: a pending window of at most
+    ``_CRC_WINDOW`` chunks is checked in one ``crc32c_batch`` call, and
+    flushed before any parse error, so a corrupt early chunk raises "CRC
+    mismatch" without first decoding a multi-GB stream, and CRC errors
+    win over later parse errors."""
     pos = 0
     out: list[bytes] = []
     pending: list[bytes] = []
@@ -196,7 +119,7 @@ def frame_decompress(data: bytes, *, _decompress=None) -> bytes:
                 (crc,) = struct.unpack("<I", body[:4])
                 chunk = body[4:]
                 if ctype == _CHUNK_COMPRESSED:
-                    chunk = chunk_decompress(chunk)
+                    chunk = decompress(chunk)
             except Exception:
                 flush_pending()  # earlier CRC corruption outranks this
                 raise

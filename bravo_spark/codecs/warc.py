@@ -128,9 +128,8 @@ def parse_warc(data: bytes) -> Iterator[tuple[dict[str, str], bytes]]:
         # record) and sum the declared content sizes — this refuses
         # declared-size bombs for free and validates the frame framing
         # itself. Frames that omit the content-size field are covered
-        # by the decoder's own bound, which both the pyarrow path and
-        # the pure RFC 8878 decoder now enforce DURING the decode
-        # (per block / per sequence), never post-hoc.
+        # by the decoder's own bound, enforced DURING the decode (per
+        # read), never post-hoc.
         pos, declared = 0, 0
         try:
             while pos < len(data):
@@ -221,8 +220,7 @@ def write_warc(
     legacy ``gzip_per_record`` flag), ``"zstd"`` (one frame per record —
     the ``.warc.zst`` layout), or ``"none"``; one member/frame per
     record keeps archives splittable. gzip members pin mtime/OS to zero
-    so output is byte-deterministic; zstd write requires the native
-    codec (fastpath) and refuses by name without it."""
+    so output is byte-deterministic."""
     if compression is None:
         compression = "gzip" if gzip_per_record else "none"
     if compression not in ("gzip", "zstd", "none"):

@@ -11,8 +11,9 @@ themselves. Implemented from the public xxHash specification
 cross-validated against lz4-java's XXHashFactory in-JVM and XXH3 against
 rocksdbjni-written SST files (tests/test_rocksdb_native.py).
 
-Pure Python is fine: these run only when ``verify_checksums=True`` on SST
-reads — a diagnostic path, not the engine's hot path.
+Pure Python is fine: these run when ``verify_checksums=True`` on SST
+reads (a diagnostic path) and, for XXH32, over each 32 KiB block of an
+lz4-java state-file stream (codecs/lz4.py) — not the engine's hot path.
 """
 
 from __future__ import annotations

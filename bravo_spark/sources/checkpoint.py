@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import functools
 import glob
+import json
 import os
 import shutil
 import uuid
@@ -47,6 +48,7 @@ from pyspark.sql import functions as F
 from bravo_spark.sources import sst as sstmod
 from bravo_spark.sources.atomic import atomic_write
 
+CHECKPOINT_MANIFEST = "_bravo_checkpoint.json"
 _SCAN_SCHEMA = "key_ns binary, seq long, vtype int, value binary"
 _RAW_SCHEMA = "state_name string, " + _SCAN_SCHEMA
 
@@ -77,10 +79,25 @@ def list_sst_files(ckpt_dir: str) -> list[str]:
     """SSTs of a transferred incremental checkpoint (shared state). Sorted
     for determinism; MANIFEST/CURRENT/OPTIONS (private state) are not needed
     because each SST carries its column family in its properties block and
-    a checkpoint references live files only."""
+    a checkpoint references live files only. Top-level SSTs are always
+    read; of the ``op-<i>`` subtask directories, only those the
+    :data:`CHECKPOINT_MANIFEST` lists when one exists, so the directories
+    of an older write at a higher parallelism are never read as data."""
+    mpath = os.path.join(ckpt_dir, CHECKPOINT_MANIFEST)
+    if os.path.exists(mpath):
+        with open(mpath) as f:
+            try:
+                subtasks = json.load(f)["subtasks"]
+            except (ValueError, KeyError, TypeError) as ex:
+                raise ValueError(
+                    f"{mpath}: unreadable checkpoint manifest ({ex!r})"
+                ) from ex
+        op_dirs = [os.path.join(ckpt_dir, f"op-{i}") for i in subtasks]
+    else:
+        op_dirs = glob.glob(os.path.join(ckpt_dir, "op-*"))
     files = sorted(
         glob.glob(os.path.join(ckpt_dir, "*.sst"))
-        + glob.glob(os.path.join(ckpt_dir, "op-*", "*.sst"))
+        + [p for d in op_dirs for p in glob.glob(os.path.join(d, "*.sst"))]
     )
     if not files:
         raise FileNotFoundError(f"no .sst files under {ckpt_dir}")
@@ -268,8 +285,6 @@ def write_incremental_checkpoint(
     single pass per subtask; only {filename: size} manifests return to the
     driver. Returns the checkpoint manifest (also written as
     ``_bravo_checkpoint.json``)."""
-    import json as _json
-
     import pyarrow as pa
 
     from bravo_spark.sources.rocksdb_manifest import build_db_dir_multi_cf
@@ -308,8 +323,9 @@ def write_incremental_checkpoint(
                     (kns, 1, sstmod.TYPE_VALUE, val)
                 )
         # each op-<i> is built under a hidden name and renamed only once
-        # every directory of the task is complete: list_sst_files globs
-        # op-*/*.sst, so a partial directory would be read as data
+        # every directory of the task is complete: list_sst_files reads
+        # every listed op-<i>/*.sst, so a partial directory would be read
+        # as data
         tmps = {op: os.path.join(path, f".op-{op}.{uuid.uuid4().hex}.tmp") for op in by_op}
         try:
             sizes = {
@@ -328,7 +344,7 @@ def write_incremental_checkpoint(
             os.rename(tmp, dbdir)
             yield pa.record_batch({
                 "op_index": pa.array([op], pa.int32()),
-                "files": pa.array([_json.dumps(sizes[op])]),
+                "files": pa.array([json.dumps(sizes[op])]),
             })
 
     manifests = (
@@ -343,9 +359,13 @@ def write_incremental_checkpoint(
         "parallelism": parallelism,
         "state_ids": state_ids,
         "subtasks": {
-            str(r["op_index"]): _json.loads(r["files"]) for r in manifests
+            str(r["op_index"]): json.loads(r["files"]) for r in manifests
         },
     }
-    with atomic_write(os.path.join(path, "_bravo_checkpoint.json"), "w") as f:
-        _json.dump(meta, f, indent=1)
+    with atomic_write(os.path.join(path, CHECKPOINT_MANIFEST), "w") as f:
+        json.dump(meta, f, indent=1)
+    # an older write's op-<i> beyond this one's subtasks is no longer read
+    for d in glob.glob(os.path.join(path, "op-*")):
+        if os.path.basename(d)[len("op-"):] not in meta["subtasks"]:
+            shutil.rmtree(d, ignore_errors=True)
     return meta

@@ -36,6 +36,7 @@ import os
 import struct
 
 from bravo_spark.codecs import crc32c as _crc
+from bravo_spark.codecs.varint import write_uvarint
 from bravo_spark.sources import sst as sstmod
 
 LOG_BLOCK_SIZE = 32 * 1024
@@ -53,18 +54,8 @@ TAG_MAX_COLUMN_FAMILY = 203
 DEFAULT_COMPARATOR = b"leveldb.BytewiseComparator"
 
 
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        if v < 0x80:
-            out.append(v)
-            return bytes(out)
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-
-
 def _lenpref(b: bytes) -> bytes:
-    return _varint(len(b)) + b
+    return write_uvarint(len(b)) + b
 
 
 def encode_version_edit(
@@ -85,24 +76,24 @@ def encode_version_edit(
     receives."""
     out = bytearray()
     if comparator is not None:
-        out += _varint(TAG_COMPARATOR) + _lenpref(comparator)
+        out += write_uvarint(TAG_COMPARATOR) + _lenpref(comparator)
     if log_number is not None:
-        out += _varint(TAG_LOG_NUMBER) + _varint(log_number)
+        out += write_uvarint(TAG_LOG_NUMBER) + write_uvarint(log_number)
     if next_file_number is not None:
-        out += _varint(TAG_NEXT_FILE_NUMBER) + _varint(next_file_number)
+        out += write_uvarint(TAG_NEXT_FILE_NUMBER) + write_uvarint(next_file_number)
     if last_sequence is not None:
-        out += _varint(TAG_LAST_SEQUENCE) + _varint(last_sequence)
+        out += write_uvarint(TAG_LAST_SEQUENCE) + write_uvarint(last_sequence)
     if max_column_family is not None:
-        out += _varint(TAG_MAX_COLUMN_FAMILY) + _varint(max_column_family)
+        out += write_uvarint(TAG_MAX_COLUMN_FAMILY) + write_uvarint(max_column_family)
     for level, fno, size, smallest, largest, sseq, lseq in new_files:
-        out += _varint(TAG_NEW_FILE2)
-        out += _varint(level) + _varint(fno) + _varint(size)
+        out += write_uvarint(TAG_NEW_FILE2)
+        out += write_uvarint(level) + write_uvarint(fno) + write_uvarint(size)
         out += _lenpref(smallest) + _lenpref(largest)
-        out += _varint(sseq) + _varint(lseq)
+        out += write_uvarint(sseq) + write_uvarint(lseq)
     if column_family is not None:
-        out += _varint(TAG_COLUMN_FAMILY) + _varint(column_family)
+        out += write_uvarint(TAG_COLUMN_FAMILY) + write_uvarint(column_family)
     if column_family_add is not None:
-        out += _varint(TAG_COLUMN_FAMILY_ADD) + _lenpref(column_family_add)
+        out += write_uvarint(TAG_COLUMN_FAMILY_ADD) + _lenpref(column_family_add)
     return bytes(out)
 
 

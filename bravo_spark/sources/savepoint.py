@@ -40,7 +40,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from contextlib import suppress
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass, field
 from typing import Callable, Iterable
 
@@ -119,7 +119,8 @@ def write_savepoint(
         rows, path, max_parallelism=max_parallelism, parallelism=parallelism,
         state_ids=state_ids, compression=compression,
     )
-    return commit_savepoint(path, meta, overwrite=True)
+    with discard_on_failure(path, meta):
+        return commit_savepoint(path, meta, overwrite=True)
 
 
 def stage_savepoint(
@@ -330,6 +331,23 @@ def discard_files(handles: Iterable[dict]) -> None:
     for h in handles:
         with suppress(OSError):
             os.remove(h["path"])
+
+
+@contextmanager
+def discard_on_failure(path: str, staged: SavepointMeta):
+    """Run the steps between :func:`stage_savepoint` and the metadata
+    commit; if they raise, delete the ``staged`` section files that the
+    metadata at ``path`` does not list, so a failed commit leaves no
+    orphans and never removes a file a committed savepoint reads."""
+    try:
+        yield
+    except BaseException:
+        try:
+            listed = {fm["path"] for fm in read_savepoint_meta(path).files}
+        except (OSError, ValueError):
+            listed = set()
+        discard_files(h for h in staged.files if h["path"] not in listed)
+        raise
 
 
 def read_savepoint_meta(path: str) -> SavepointMeta:

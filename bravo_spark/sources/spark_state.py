@@ -110,7 +110,7 @@ def decode_stream(raw: bytes) -> bytes:
         return bytes(out)
     if raw[:4] == ZSTD_FRAME_MAGIC:
         # content size is absent from streaming-written frame headers, so
-        # this takes the stream decoder (native via pyarrow, else pure)
+        # this takes the stream decoder
         return fastpath.zstd_decompress_stream(raw)
     raise ValueError(
         "unrecognized state-file framing (supported: xerial snappy, "
@@ -139,13 +139,6 @@ def encode_stream_like(original: bytes | None, payload: bytes) -> bytes:
     if original is not None and original[:8] == SNAPPY_MAGIC:
         return encode_stream_snappy(payload)
     if original is not None and original[:4] == ZSTD_FRAME_MAGIC:
-        if not fastpath.available:
-            raise ValueError(
-                "cannot rewrite a zstd-compressed state file: the pure "
-                "zstd codec is decode-only and pyarrow (whose libzstd "
-                "provides the encoder) is unavailable; rerun the query "
-                "with codec lz4 or snappy to make its state rewritable"
-            )
         # Spark's ZSTDCompressionCodec reads any standard frame
         return fastpath.zstd_compress(payload)
     return fastpath.lz4_java_encode_stream(payload)

@@ -41,6 +41,7 @@ from typing import Iterator
 from bravo_spark.codecs import crc32c
 from bravo_spark.codecs import fastpath
 from bravo_spark.codecs import xxh
+from bravo_spark.codecs.varint import read_uvarint, write_uvarint
 
 # rocksdb/table/format.cc
 BLOCK_BASED_MAGIC = 0x88E241B785F4CFF7
@@ -94,7 +95,7 @@ def _sized_decompress(raw: bytes, decompress) -> bytes:
     don't carry it natively (zlib, bzip2, lz4, zstd); format version 1 is the
     bare stream. Try the sized layout first and fall back, so both read."""
     try:
-        size, pos = _read_uvarint(raw, 0)
+        size, pos = read_uvarint(raw, 0)
         out = decompress(raw[pos:])
         if len(out) == size:
             return out
@@ -103,41 +104,18 @@ def _sized_decompress(raw: bytes, decompress) -> bytes:
     return decompress(raw)
 
 
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("uvarint too long")
-
-
-def _write_uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        if v < 0x80:
-            out.append(v)
-            return bytes(out)
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-
-
 @dataclass(frozen=True)
 class BlockHandle:
     offset: int
     size: int
 
     def encode(self) -> bytes:
-        return _write_uvarint(self.offset) + _write_uvarint(self.size)
+        return write_uvarint(self.offset) + write_uvarint(self.size)
 
     @staticmethod
     def decode(buf: bytes, pos: int = 0) -> tuple["BlockHandle", int]:
-        off, pos = _read_uvarint(buf, pos)
-        size, pos = _read_uvarint(buf, pos)
+        off, pos = read_uvarint(buf, pos)
+        size, pos = read_uvarint(buf, pos)
         return BlockHandle(off, size), pos
 
 
@@ -163,7 +141,7 @@ def iter_block_entries(block: bytes) -> Iterator[tuple[bytes, bytes]]:
     # 128 bytes, so decode that case inline (no function call, no loop) —
     # ~2x whole-file decode throughput (tools/bench_sst.py); the slow
     # path handles multi-byte lengths exactly as before
-    read_uv = _read_uvarint
+    read_uv = read_uvarint
     while pos < restarts_off:
         shared = block[pos]
         if shared < 0x80:
@@ -205,17 +183,17 @@ def iter_index_handles_delta(block: bytes) -> Iterator[BlockHandle]:
     pos = 0
     prev: BlockHandle | None = None
     while pos < restarts_off:
-        shared, pos = _read_uvarint(block, pos)
-        non_shared, pos = _read_uvarint(block, pos)
+        shared, pos = read_uvarint(block, pos)
+        non_shared, pos = read_uvarint(block, pos)
         pos += non_shared  # separator key — not needed for a full scan
         if shared == 0:
-            off, pos = _read_uvarint(block, pos)
-            size, pos = _read_uvarint(block, pos)
+            off, pos = read_uvarint(block, pos)
+            size, pos = read_uvarint(block, pos)
             prev = BlockHandle(off, size)
         else:
             if prev is None:
                 raise ValueError("corrupt index block: delta before restart")
-            zz, pos = _read_uvarint(block, pos)
+            zz, pos = read_uvarint(block, pos)
             delta = (zz >> 1) ^ -(zz & 1)  # zigzag-signed size delta
             prev = BlockHandle(prev.offset + prev.size + 5, prev.size + delta)
         yield prev
@@ -396,18 +374,14 @@ class SstReader:
             # version 1 (legacy tables) memcpy's the native size_t — an
             # 8-byte little-endian length on every platform RocksDB ships.
             if self.format_version >= 2:
-                size, pos = _read_uvarint(raw, 0)
+                size, pos = read_uvarint(raw, 0)
             else:
                 (size,) = struct.unpack("<Q", raw[:8])
                 pos = 8
             return fastpath.lz4_decompress_block(raw[pos:], size)
         if compression == ZSTD_COMPRESSION:
-            if fastpath.available:
-                size, pos = _read_uvarint(raw, 0)
-                return fastpath.zstd_decompress(raw[pos:], size)
-            from bravo_spark.codecs import zstd as pzstd
-
-            return _sized_decompress(raw, pzstd.decompress)
+            size, pos = read_uvarint(raw, 0)
+            return fastpath.zstd_decompress(raw[pos:], size)
         name = _UNSUPPORTED_COMPRESSION.get(compression, str(compression))
         raise ValueError(
             f"{self.path}: block compressed with {name}, no {name} codec in "
@@ -441,7 +415,7 @@ class SstReader:
         raw = self.properties.get(PROP_CF_ID)
         if raw is None:
             return 0
-        v, _ = _read_uvarint(raw, 0)
+        v, _ = read_uvarint(raw, 0)
         return v
 
     @property
@@ -449,7 +423,7 @@ class SstReader:
         raw = self.properties.get(PROP_INDEX_TYPE)
         if raw is None:
             return INDEX_BINARY_SEARCH
-        v, _ = _read_uvarint(raw, 0)
+        v, _ = read_uvarint(raw, 0)
         return v
 
     def _decode_handle(self, hval: bytes, what: str) -> BlockHandle:
@@ -556,16 +530,16 @@ class _BlockBuilder:
         value_len = len(value)
         # inline 1-byte varints (the overwhelmingly common case); the
         # encoder keeps byte-identical output for the rest
-        buf += _B1[shared] if shared < 0x80 else _write_uvarint(shared)
+        buf += _B1[shared] if shared < 0x80 else write_uvarint(shared)
         buf += (
             _B1[non_shared]
             if non_shared < 0x80
-            else _write_uvarint(non_shared)
+            else write_uvarint(non_shared)
         )
         buf += (
             _B1[value_len]
             if value_len < 0x80
-            else _write_uvarint(value_len)
+            else write_uvarint(value_len)
         )
         buf += key[shared:]
         buf += value
@@ -666,20 +640,17 @@ class SstWriter:
             import zlib
 
             # compress_format_version 2: varint32 decompressed size + stream
-            comp = _write_uvarint(len(content)) + zlib.compress(content)
+            comp = write_uvarint(len(content)) + zlib.compress(content)
         elif compression == BZIP2_COMPRESSION:
             import bz2
 
-            comp = _write_uvarint(len(content)) + bz2.compress(content)
+            comp = write_uvarint(len(content)) + bz2.compress(content)
         elif compression in (LZ4_COMPRESSION, LZ4HC_COMPRESSION):
-            comp = _write_uvarint(len(content)) + fastpath.lz4_compress_block(
+            comp = write_uvarint(len(content)) + fastpath.lz4_compress_block(
                 content
             )
         elif compression == ZSTD_COMPRESSION:
-            # write support exists only through the native codec (the
-            # pure zstd implementation is decode-only); fastpath raises
-            # a named error when pyarrow is unavailable
-            comp = _write_uvarint(len(content)) + fastpath.zstd_compress(
+            comp = write_uvarint(len(content)) + fastpath.zstd_compress(
                 content
             )
         elif compression == NO_COMPRESSION:
@@ -744,15 +715,15 @@ class SstWriter:
     def _properties_block(self) -> bytes:
         props: dict[bytes, bytes] = {
             PROP_CF_NAME: self.cf_name.encode(),
-            PROP_CF_ID: _write_uvarint(self.cf_id),
-            PROP_INDEX_TYPE: _write_uvarint(self.index_type),
-            b"rocksdb.num.entries": _write_uvarint(self._num_entries),
-            b"rocksdb.raw.key.size": _write_uvarint(self._raw_key_size),
-            b"rocksdb.raw.value.size": _write_uvarint(self._raw_value_size),
-            b"rocksdb.deleted.keys": _write_uvarint(self._num_deletions),
-            b"rocksdb.num.range-deletions": _write_uvarint(0),
-            b"rocksdb.merge.operands": _write_uvarint(self._num_merges),
-            b"rocksdb.data.size": _write_uvarint(self._data_bytes),
+            PROP_CF_ID: write_uvarint(self.cf_id),
+            PROP_INDEX_TYPE: write_uvarint(self.index_type),
+            b"rocksdb.num.entries": write_uvarint(self._num_entries),
+            b"rocksdb.raw.key.size": write_uvarint(self._raw_key_size),
+            b"rocksdb.raw.value.size": write_uvarint(self._raw_value_size),
+            b"rocksdb.deleted.keys": write_uvarint(self._num_deletions),
+            b"rocksdb.num.range-deletions": write_uvarint(0),
+            b"rocksdb.merge.operands": write_uvarint(self._num_merges),
+            b"rocksdb.data.size": write_uvarint(self._data_bytes),
         }
         if self.merge_operator:
             props[PROP_MERGE_OPERATOR] = self.merge_operator.encode()

@@ -497,7 +497,7 @@ def test_corrupt_compressed_section_refuses_through_reader(spark, tmp_path):
 
     import pytest
 
-    from bravo_spark.codecs import snappy
+    from codec_oracles import snappy
 
     kv = spark.createDataFrame(
         [(k, [k, k * 7, k * 11]) for k in range(200)], "key long, value array<long>"

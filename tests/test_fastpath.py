@@ -1,18 +1,17 @@
 """codecs/fastpath.py — native (pyarrow) codec fast paths must be
-format-identical to the pure-Python spec implementations: every stream one
-side writes, the other decodes, and the framing layers produce streams the
-pure parser accepts bit-for-bit at the layout level. pyarrow is baked into
-this environment, so the fast branch is the one actually exercised; the
-pure-fallback branch is covered by forcing ``_CODECS = None``."""
+format-identical to the pure-Python spec implementations
+(tests/codec_oracles/): every stream one side writes, the other decodes,
+and the framing layers produce streams the pure parser accepts
+bit-for-bit at the layout level."""
 
 from __future__ import annotations
 
 import pytest
 
 from bravo_spark.codecs import fastpath
-from bravo_spark.codecs import lz4 as plz4
-from bravo_spark.codecs import snappy as psnappy
-from bravo_spark.codecs import zstd as pzstd
+from codec_oracles import lz4 as plz4
+from codec_oracles import snappy as psnappy
+from codec_oracles import zstd as pzstd
 
 DATA = [
     b"",
@@ -24,9 +23,9 @@ DATA = [
 
 
 def test_fastpath_is_active_in_this_environment():
-    # the container bakes pyarrow in; if this ever trips, the hot paths
-    # silently degraded to pure Python — worth failing loudly
-    assert fastpath.available
+    # libsnappy finds back-references; the literal-only pure compressor
+    # would return more than the input
+    assert len(fastpath.snappy_compress(b"a" * 4096)) < 1024
 
 
 @pytest.mark.parametrize("data", DATA, ids=range(len(DATA)))
@@ -105,29 +104,6 @@ def test_corruption_raises_valueerror():
         fastpath.lz4_decompress_block(lf[: max(1, len(lf) // 2)], 300)
 
 
-def test_pure_fallback_branch(monkeypatch):
-    """With the native codecs masked off, every entry point must fall
-    back to the pure implementations (zstd_compress raises by contract —
-    the pure codec is decode-only)."""
-    monkeypatch.setattr(fastpath, "_CODECS", None)
-    data = b"fallback " * 1000
-    assert psnappy.decompress(fastpath.snappy_compress(data)) == data
-    assert fastpath.snappy_decompress(psnappy.compress(data)) == data
-    assert (
-        plz4.decompress_block(fastpath.lz4_compress_block(data), len(data))
-        == data
-    )
-    import pyarrow as pa
-
-    native_frame = bytes(pa.Codec("zstd").compress(data))
-    assert fastpath.zstd_decompress(native_frame, len(data)) == data
-    assert fastpath.zstd_decompress_stream(native_frame) == data
-    assert psnappy.frame_decompress(fastpath.frame_compress(data)) == data
-    assert fastpath.frame_decompress(psnappy.frame_compress(data)) == data
-    with pytest.raises(ValueError, match="decode-only"):
-        fastpath.zstd_compress(data)
-
-
 def test_sst_zstd_write_roundtrip(tmp_path):
     """SstWriter zstd blocks (fastpath-only capability) round-trip through
     our reader with checksums verified."""
@@ -192,7 +168,8 @@ try:
     @given(st.lists(st.binary(min_size=0, max_size=5000), max_size=40))
     @settings(max_examples=40, deadline=None)
     def test_prop_crc32c_batch_matches_scalar(blobs):
-        from bravo_spark.codecs.crc32c import crc32c, crc32c_batch, crc32c_bytewise
+        from bravo_spark.codecs.crc32c import crc32c, crc32c_batch
+        from codec_oracles.crc32c import crc32c_bytewise
 
         want = [crc32c_bytewise(b) for b in blobs]
         assert crc32c_batch(blobs) == want
@@ -202,14 +179,13 @@ except ImportError:  # hypothesis is baked into this container; belt+braces
     pass
 
 
-def test_stream_bound_holds_on_pure_path(monkeypatch):
-    """zstd_decompress_stream's max_bytes must bound the PURE fallback
-    too (r17 ADVICE): with pyarrow masked off, a no-Frame_Content_Size
+def test_stream_bound_holds_on_pure_path():
+    """The pure decoder's max_bytes bound holds on a no-Frame_Content_Size
     bomb frame — the shape the WARC/Avro declared-size pre-checks can't
-    see — refuses at the ceiling instead of materializing the output."""
+    see — refusing at the ceiling instead of materializing the output."""
     import pyarrow as pa
 
-    from bravo_spark.codecs import zstd as pz
+    from codec_oracles import zstd as pz
 
     data = b"bomb " * 40_000
     buf = pa.BufferOutputStream()
@@ -217,29 +193,26 @@ def test_stream_bound_holds_on_pure_path(monkeypatch):
         s.write(data)
     frame = bytes(buf.getvalue())
     assert pz.inspect_frame(frame)[2] is None  # no declared content size
-    monkeypatch.setattr(fastpath, "_CODECS", None)
-    with pytest.raises(ValueError, match="inflates past"):
-        fastpath.zstd_decompress_stream(frame, max_bytes=4096)
-    assert fastpath.zstd_decompress_stream(
-        frame, max_bytes=len(data)) == data
+    with pytest.raises(pz.ZstdBoundError, match="exceeds 4096-byte bound"):
+        pz.decompress(frame, max_bytes=4096)
+    assert pz.decompress(frame, max_bytes=len(data)) == data
 
 
-def test_corrupt_frame_not_mislabeled_as_bomb(monkeypatch):
+def test_corrupt_frame_not_mislabeled_as_bomb():
     """Review finding: the pure decoder's corruption errors whose text
     contains 'exceeds' ('sequence literal length exceeds literals') must
-    surface as corruption, not be remapped to the bomb refusal."""
+    surface as corruption, not as the bomb refusal."""
     import pyarrow as pa
 
-    from bravo_spark.codecs import zstd as pz
+    from codec_oracles import zstd as pz
 
-    monkeypatch.setattr(fastpath, "_CODECS", None)
     data = b"corrupt me " * 400
     buf = pa.BufferOutputStream()
     with pa.CompressedOutputStream(buf, "zstd") as s:
         s.write(data)
     frame = bytearray(buf.getvalue())
     # flip bytes until the decode fails somewhere (any corruption error
-    # must keep its own message; only the bound refusal remaps)
+    # must keep its own message and type; only the bound refuses as one)
     seen = None
     for i in range(12, len(frame)):
         cand = bytes(frame[:i]) + bytes([frame[i] ^ 0xFF]) + bytes(frame[i+1:])
@@ -250,11 +223,42 @@ def test_corrupt_frame_not_mislabeled_as_bomb(monkeypatch):
             break
     assert seen is not None
     cand, msg = seen
-    try:
-        fastpath.zstd_decompress_stream(cand, max_bytes=1 << 20)
-        raised = None
-    except ValueError as e:
-        raised = str(e)
-    assert raised is not None
-    assert "inflates past" not in raised or msg.startswith(
+    with pytest.raises(pz.ZstdError) as raised:
+        pz.decompress(cand, max_bytes=1 << 20)
+    assert not isinstance(raised.value, pz.ZstdBoundError) or msg.startswith(
         "decoded output exceeds")
+
+
+def test_runtime_has_one_codec_path():
+    """The runtime has no pure-codec fallback to branch to: nothing under
+    bravo_spark/ imports the test oracles or keeps the old availability
+    switch and injection parameters, and the xxHash and LEB128 helpers
+    exist once."""
+    import ast
+    import pathlib
+    import re
+
+    import bravo_spark
+
+    root = pathlib.Path(bravo_spark.__file__).parent
+    banned = re.compile(
+        r"\b_CODECS\b|\bfastpath\.available\b|\b_compress=|\b_decompress=")
+    defs: dict[str, list[str]] = {}
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = str(path.relative_to(root))
+        assert not banned.search(src), rel
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            else:
+                if isinstance(node, ast.FunctionDef):
+                    defs.setdefault(node.name, []).append(rel)
+                continue
+            assert not any("codec_oracles" in m or m.startswith("tests")
+                           for m in mods), rel
+    assert defs["xxh32"] == defs["xxh64"] == ["codecs/xxh.py"]
+    assert defs["read_uvarint"] == defs["write_uvarint"] == ["codecs/varint.py"]
+    assert not {"_xxh64", "_read_uvarint", "_write_uvarint", "_varint"} & set(defs)

@@ -200,14 +200,9 @@ def test_native_xpress_block_raises_named_error(jvm, tmp_path):
 
 def test_our_writer_accepted_by_native_reader(jvm, tmp_path):
     """SstWriter output iterates cleanly under real RocksDB with checksum
-    verification on — the write side of the format contract. lz4 and zstd
-    blocks come from the codecs/fastpath.py native encoders (zstd write
-    exists only through it)."""
-    from bravo_spark.codecs import fastpath
-
-    codecs = [("plain", 0), ("snappy", 1), ("lz4", 4)]
-    if fastpath.available:
-        codecs.append(("zstd", 7))
+    verification on — the write side of the format contract. Snappy, lz4
+    and zstd blocks come from the codecs/fastpath.py native encoders."""
+    codecs = [("plain", 0), ("snappy", 1), ("lz4", 4), ("zstd", 7)]
     for codec, codec_id in codecs:
         path = str(tmp_path / f"ours_{codec}.sst")
         w = sstmod.SstWriter(path, compression=codec_id)

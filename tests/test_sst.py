@@ -16,9 +16,9 @@ from os import path as os_path
 import pytest
 
 from bravo_spark.codecs import crc32c, flink as fc
-from bravo_spark.codecs import snappy as psnappy
 from bravo_spark.sources import checkpoint as ck
 from bravo_spark.sources import sst
+from codec_oracles import snappy as psnappy
 
 
 def _uvar(v: int) -> bytes:
@@ -749,7 +749,8 @@ def test_crc32c_batch_matches_scalar():
     import random
 
     from bravo_spark.codecs import crc32c as C
-    from bravo_spark.codecs.crc32c import crc32c, crc32c_batch, crc32c_bytewise
+    from bravo_spark.codecs.crc32c import crc32c, crc32c_batch
+    from codec_oracles.crc32c import crc32c_bytewise
 
     rng = random.Random(0xC32C)
     L, kmin, slab = C._L, C._KERNEL_MIN, C._SLAB

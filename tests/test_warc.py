@@ -162,7 +162,7 @@ def test_zstd_warc_roundtrip_one_frame_per_record():
         (h["WARC-Target-URI"], p) for h, p in recs
     ]
     # pure RFC 8878 decoder agrees on the same bytes
-    from bravo_spark.codecs import zstd as pz
+    from codec_oracles import zstd as pz
 
     assert b"doc://2" in pz.decompress(blob)
 

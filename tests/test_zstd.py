@@ -1,4 +1,4 @@
-"""Pure-Python zstd decoder (codecs/zstd.py) vs the real libzstd.
+"""Pure-Python zstd decoder (tests/codec_oracles/zstd.py) vs the real libzstd.
 
 pyarrow bundles libzstd; every payload here is compressed by the genuine
 implementation and must decode byte-exactly. Payload shapes are chosen to
@@ -15,7 +15,7 @@ import random
 
 import pytest
 
-from bravo_spark.codecs import zstd
+from codec_oracles import zstd
 
 pa = pytest.importorskip("pyarrow")
 

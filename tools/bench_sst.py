@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Microbench the pure-Python SST codec (sources/sst.py) at realistic
+"""Microbench the SST reader and writer (sources/sst.py) at realistic
 block counts — the per-byte hot loop a 100 TB checkpoint scan spends its
 executor-CPU in (each Spark task decodes whole SSTs; task parallelism
 hides latency but per-core throughput bounds cluster cost).
@@ -32,6 +32,7 @@ def main() -> None:
         "none": sstmod.NO_COMPRESSION,
         "snappy": sstmod.SNAPPY_COMPRESSION,
         "lz4": sstmod.LZ4_COMPRESSION,
+        "zstd": sstmod.ZSTD_COMPRESSION,
     }[comp_name]
 
     # deterministic keys in sorted order; values of varied small sizes
