@@ -235,21 +235,13 @@ class OperatorStateWriter:
             # state before the metadata commits, so no reader opens a
             # savepoint without it
             if self.source is not None:
-                if self._nk_transform is not None:
-                    ops.transform_operator_state(
-                        self.source.path, self.new_path, self._nk_transform
-                    )
-                else:
-                    backends = ops.read_operator_state(self.source.path)
-                    if backends:
-                        ops.write_operator_state(self.new_path, backends)
-            elif self._nk_transform is not None:
-                backends = [
-                    ops.OperatorStateBackend() for _ in range(self.parallelism)
-                ]
+                backends = ops.read_operator_state(self.source.path)
+            else:
+                backends = [ops.OperatorStateBackend() for _ in range(self.parallelism)]
+            if self._nk_transform is not None:
                 for i, b in enumerate(backends):
                     self._nk_transform(i, b)
-                ops.write_operator_state(self.new_path, backends)
+            ops.write_operator_state(self.new_path, backends)
             return sp.commit_savepoint(self.new_path, meta, overwrite=True)
 
 
@@ -308,9 +300,9 @@ def rescale_savepoint(
         state_ids=dict(reader.meta.state_ids),
     )
     with sp.discard_on_failure(dst_path, meta):
-        backends = ops.read_operator_state(src_path, parallelism=new_parallelism)
-        if backends:
-            ops.write_operator_state(dst_path, backends)
+        ops.write_operator_state(
+            dst_path, ops.read_operator_state(src_path, parallelism=new_parallelism)
+        )
         return sp.commit_savepoint(dst_path, meta, overwrite=True)
 
 

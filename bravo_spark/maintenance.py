@@ -414,7 +414,7 @@ def audit_savepoint(spark, path: str, *, deep: bool = False):
     seen: dict[int, str] = {}
     spans_to_probe: list[tuple[str, int, int, int, int]] = []
     for fmeta in meta.files:
-        fpath, op = fmeta["path"], int(fmeta.get("op_index", 0))
+        fpath, op = _sp.section_path(path, fmeta), int(fmeta.get("op_index", 0))
         if not os.path.exists(fpath):
             rows.append((
                 "missing_state_file", op, fpath, None, "error",

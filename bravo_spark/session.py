@@ -5,6 +5,11 @@ Scale posture: these configs are the local-mode analog of what we'd set on a
 partition coalescing), generous broadcast threshold for star-schema dims,
 Arrow for any Python exchange, and shuffle partitions sized to the
 parallelism at hand rather than the 200 default.
+
+Python workers start through ``bravo_worker.py`` (beside this package),
+which drops PySpark's zip archives from the worker's import path when the
+interpreter has the same PySpark installed, so no task pays the per-task
+``importlib.invalidate_caches()`` re-read of those archives.
 """
 
 from __future__ import annotations
@@ -14,6 +19,8 @@ import os
 from pyspark.sql import SparkSession
 
 APP_NAME = "bravo_spark"
+WORKER_DAEMON = "bravo_worker"
+_WORKER_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpus() -> int:
@@ -74,15 +81,28 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _worker_daemon_importable(master: str) -> bool:
+    """Whether Spark's Python workers can import ``bravo_worker``: in local
+    mode they start in this process's working directory with its
+    ``PYTHONPATH``; elsewhere the stock daemon runs."""
+    if not master.startswith("local"):
+        return False
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return os.path.realpath(_WORKER_DIR) in {os.path.realpath(d) for d in dirs}
+
+
 def get_spark(app_name: str = APP_NAME, master: str | None = None) -> SparkSession:
     cpus = _cpus()
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.driver.memory", os.environ.get("BRAVO_SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(256 * 1024 * 1024))
     )
+    if _worker_daemon_importable(master):
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
     spark = builder.getOrCreate()
     return tune(spark)

@@ -27,7 +27,13 @@ def atomic_write(path: str, mode: str = "wb"):
         with suppress(FileNotFoundError):
             os.remove(tmp)
         raise
-    fd = os.open(d, os.O_RDONLY)
+    fsync_path(d)
+
+
+def fsync_path(path: str) -> None:
+    """fsync a file or directory by name (a directory, to make a rename in
+    it durable)."""
+    fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
     finally:

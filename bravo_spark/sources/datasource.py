@@ -243,7 +243,7 @@ class SavepointWriter(DataSourceArrowWriter):
     def abort(self, messages):
         from bravo_spark.sources import savepoint as sp
 
-        sp.discard_files(self._new_files(messages))
+        sp.discard_files(self.path, self._new_files(messages))
 
 
 class CheckpointDataSource(DataSource):

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import suppress
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -67,7 +68,14 @@ def _unbkey(s: str) -> Any:
 
 
 def write_operator_state(path: str, backends: list[OperatorStateBackend]) -> None:
-    """Snapshot per-subtask backends into the savepoint directory."""
+    """Snapshot per-subtask backends into the savepoint directory. When
+    none holds state the savepoint gets no operator-state file: a prior
+    one at ``path`` is removed, like a write replaces it."""
+    fp = os.path.join(path, OPERATOR_STATE_FILE)
+    if not any(b.list_states or b.union_states or b.broadcast_states for b in backends):
+        with suppress(FileNotFoundError):
+            os.remove(fp)
+        return
     os.makedirs(path, exist_ok=True)
     payload = [
         {
@@ -80,7 +88,7 @@ def write_operator_state(path: str, backends: list[OperatorStateBackend]) -> Non
         }
         for b in backends
     ]
-    with atomic_write(os.path.join(path, OPERATOR_STATE_FILE), "w") as f:
+    with atomic_write(fp, "w") as f:
         json.dump({"version": 1, "subtasks": payload}, f, indent=1)
 
 

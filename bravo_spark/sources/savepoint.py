@@ -72,7 +72,8 @@ class SavepointMeta:
     compression: bool = False  # per-key-group Snappy (framed) when True
     files: list[dict] = field(default_factory=list)
     # each file entry: {"path": str, "op_index": int,
-    #                   "offsets": {key_group(str): byte offset}}
+    #                   "offsets": {key_group(str): byte offset}};
+    # readers find a file by section_path
 
     def to_json(self) -> str:
         return json.dumps(
@@ -272,7 +273,7 @@ def write_task_sections(
     except BaseException:
         if f is not None:
             f.close()
-        discard_files(handles)
+        discard_files(path, handles)
         raise
     return handles
 
@@ -297,8 +298,8 @@ def commit_savepoint(path: str, meta: SavepointMeta, *, overwrite: bool) -> Save
     with atomic_write(mpath, "w") as f:
         f.write(meta.to_json())
     if prior is not None and overwrite:
-        keep = {fm["path"] for fm in meta.files}
-        discard_files([fm for fm in prior.files if fm["path"] not in keep])
+        keep = {section_path(path, fm) for fm in meta.files}
+        discard_files(path, [fm for fm in prior.files if section_path(path, fm) not in keep])
     return meta
 
 
@@ -326,11 +327,21 @@ def _append_meta(prior: SavepointMeta, meta: SavepointMeta) -> SavepointMeta:
     )
 
 
-def discard_files(handles: Iterable[dict]) -> None:
-    """Delete the section files ``handles`` name, skipping missing ones."""
+def section_path(path: str, fmeta: dict) -> str:
+    """The section file a metadata entry names in the savepoint at
+    ``path``: the file of that name in the savepoint directory, where the
+    writers put them, so a copied or moved savepoint reads its own files;
+    failing that, the recorded ``path`` (relative to the directory)."""
+    local = os.path.join(path, os.path.basename(fmeta["path"]))
+    return local if os.path.exists(local) else os.path.join(path, fmeta["path"])
+
+
+def discard_files(path: str, handles: Iterable[dict]) -> None:
+    """Delete the section files ``handles`` name in the savepoint at
+    ``path``, skipping missing ones."""
     for h in handles:
         with suppress(OSError):
-            os.remove(h["path"])
+            os.remove(section_path(path, h))
 
 
 @contextmanager
@@ -343,10 +354,10 @@ def discard_on_failure(path: str, staged: SavepointMeta):
         yield
     except BaseException:
         try:
-            listed = {fm["path"] for fm in read_savepoint_meta(path).files}
+            listed = {section_path(path, fm) for fm in read_savepoint_meta(path).files}
         except (OSError, ValueError):
             listed = set()
-        discard_files(h for h in staged.files if h["path"] not in listed)
+        discard_files(path, (h for h in staged.files if section_path(path, h) not in listed))
         raise
 
 
@@ -405,7 +416,8 @@ def _plan_scan(path, state_names, state_filter, splits_per_file=None):
 
     splits: list[tuple[str, list[tuple[int, int, int]]]] = []
     for fmeta in meta.files:
-        size = os.path.getsize(fmeta["path"])
+        fpath = section_path(path, fmeta)
+        size = os.path.getsize(fpath)
         # valid-offset iteration (S5): only key groups with recorded offsets
         kgs = sorted((int(k), v) for k, v in fmeta["offsets"].items())
         if not kgs:
@@ -424,7 +436,7 @@ def _plan_scan(path, state_names, state_filter, splits_per_file=None):
         else:
             n = max(1, min(splits_per_file, len(spans)))
         if n == 1:
-            splits.append((fmeta["path"], spans))
+            splits.append((fpath, spans))
             continue
         # greedy byte-balanced packing: key-group sizes skew (hot keys),
         # so cut on accumulated bytes rather than span count
@@ -435,11 +447,11 @@ def _plan_scan(path, state_names, state_filter, splits_per_file=None):
             cur.append(span)
             acc += span[2] - span[1]
             if acc >= budget:
-                splits.append((fmeta["path"], cur))
+                splits.append((fpath, cur))
                 cur = []
                 acc = 0
         if cur:
-            splits.append((fmeta["path"], cur))
+            splits.append((fpath, cur))
     return splits, id_to_name, state_filter, meta.compression
 
 

@@ -14,10 +14,13 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import os
 import re
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from bravo_spark.sources.atomic import fsync_path
 
 _BINARYFILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
@@ -76,29 +79,45 @@ def write_shards(
         except StopIteration:
             return
         ctx = TaskContext.get()
-        name = name_fmt.format(ctx.partitionId())
         # resolve from the path STRING inside the task: executors never
         # receive driver-side filesystem handles
         tfs, tbase = _resolve_fs(path)
-        final = f"{tbase.rstrip('/')}/{name}"
-        tmp = f"{tbase.rstrip('/')}/.{name}.{ctx.attemptNumber()}.tmp"
-        try:
-            # compression=None: the codecs emit their own gzip/zstd, and
-            # pyarrow's extension sniffing would double-compress a .gz name
-            with tfs.open_output_stream(tmp, compression=None,
-                                        buffer_size=1 << 20) as out:
-                n = encode(itertools.chain([first], rows), out)
-            if n:
-                tfs.move(tmp, final)
-            else:
-                tfs.delete_file(tmp)
-        except BaseException:
-            with contextlib.suppress(OSError):
-                tfs.delete_file(tmp)
-            raise
+        n = _write_shard(tfs, tbase, name_fmt.format(ctx.partitionId()),
+                         ctx.attemptNumber(), encode, itertools.chain([first], rows))
         yield pa.RecordBatch.from_pydict({"n": [n]})
 
     return sum(r.n for r in df.mapInArrow(_write, "n long").collect())
+
+
+def _write_shard(fs, base: str, name: str, attempt: int, encode, rows) -> int:
+    """Stream ``rows`` through ``encode`` into ``.<name>.<attempt>.tmp``
+    under ``base`` and rename it to ``name`` if ``encode`` counted any
+    record; return that count. On a local filesystem the temp file is
+    fsynced before the rename and the directory after it, so a published
+    shard survives a crash. On any exception the temp file is deleted."""
+    from pyarrow import fs as pafs
+
+    final = f"{base.rstrip('/')}/{name}"
+    tmp = f"{base.rstrip('/')}/.{name}.{attempt}.tmp"
+    local = isinstance(fs, pafs.LocalFileSystem)
+    try:
+        # compression=None: the codecs emit their own gzip/zstd, and
+        # pyarrow's extension sniffing would double-compress a .gz name
+        with fs.open_output_stream(tmp, compression=None, buffer_size=1 << 20) as out:
+            n = encode(rows, out)
+        if n:
+            if local:
+                fsync_path(tmp)
+            fs.move(tmp, final)
+            if local:
+                fsync_path(os.path.dirname(final))
+        else:
+            fs.delete_file(tmp)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            fs.delete_file(tmp)
+        raise
+    return n
 
 
 def read_shards(

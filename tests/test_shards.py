@@ -124,3 +124,33 @@ def test_commit_renames_and_skips_empty_shards(spark, tmp_path):
     assert names == ["s_00001.txt", "s_00002.txt", "s_00003.txt",
                      "s_00004.txt", "s_00005.txt", "s_00006.txt",
                      "s_00007.txt"], names
+
+
+@pytest.mark.parametrize("count", [3, 0])
+def test_local_shard_is_fsynced_around_its_rename(tmp_path, monkeypatch, count):
+    """On a local filesystem a published shard costs two fsyncs: its temp
+    file before the rename and the directory after it. A zero-count shard
+    is deleted unsynced."""
+    from pyarrow import fs as pafs
+
+    from bravo_spark.sources import shards
+
+    synced = []
+    real = os.fsync
+
+    def fsync(fd):
+        synced.append(os.readlink(f"/proc/self/fd/{fd}"))
+        real(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+
+    def encode(rows, out):
+        out.write(b"".join(b"%d\n" % r["id"] for r in rows))
+        return count
+
+    rows = iter([{"id": i} for i in range(3)])
+    assert shards._write_shard(pafs.LocalFileSystem(), str(tmp_path), "s.txt", 0,
+                               encode, rows) == count
+    assert os.listdir(tmp_path) == (["s.txt"] if count else [])
+    d = os.path.realpath(tmp_path)
+    assert synced == ([os.path.join(d, ".s.txt.0.tmp"), d] if count else [])

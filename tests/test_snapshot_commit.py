@@ -11,9 +11,11 @@ import os
 import pytest
 
 from bravo_spark import api
+from bravo_spark import maintenance as mt
 from bravo_spark.codecs import flink as fc
 from bravo_spark.sources import checkpoint as ck
 from bravo_spark.sources import datasource as ds
+from bravo_spark.sources import operator_state as ops
 from bravo_spark.sources import savepoint as sp
 from bravo_spark.sources import staterows as sr
 
@@ -48,6 +50,12 @@ def _write(spark, rows, path, writer, mode="overwrite"):
 def _snapshot(path):
     with open(os.path.join(path, sp.METADATA_FILE), "rb") as f:
         return f.read(), sorted(os.listdir(path))
+
+
+def _with_operator_state(path):
+    b = ops.OperatorStateBackend()
+    b.get_list_state("offsets").extend([3, 5, 8])
+    ops.write_operator_state(path, [b])
 
 
 def _assert_prior_intact(spark, path, before):
@@ -151,12 +159,15 @@ def test_failed_commit_leaves_no_staged_files(spark, tmp_path, monkeypatch, writ
     """A raise before the metadata rename deletes the section files the
     write staged, and only those: the directory lists what it listed
     before the write, and the prior savepoint still reads. The prior
-    savepoint is a rescale, so it already holds the operator-state file
-    that write_all and rescale_savepoint rewrite before their commit."""
+    savepoint is a rescale of one with operator state, so it holds the
+    operator-state file that write_all and rescale_savepoint rewrite
+    before their commit."""
     src, path = str(tmp_path / "src"), str(tmp_path / "sp")
     _write(spark, _rows(spark, range(60)), src, "write_savepoint")
+    _with_operator_state(src)
     api.rescale_savepoint(spark, src, path, new_parallelism=1)
     before = _snapshot(path)
+    assert ops.OPERATOR_STATE_FILE in before[1]
     monkeypatch.setattr(os, "replace", _fail_metadata_replace(os.replace))
     with pytest.raises(OSError, match="injected"):
         if writer == "write_savepoint":
@@ -227,6 +238,59 @@ def test_successful_write_leaves_no_temp_file(spark, tmp_path, writer):
     assert names == sorted(
         [sp.METADATA_FILE] + [os.path.basename(f["path"]) for f in meta.files]
     )
+
+
+def test_keyed_only_savepoint_gets_no_operator_state_file(spark, tmp_path):
+    """write_all from a keyed-only source and rescale_savepoint of one write
+    no operator-state file, and remove a prior savepoint's from the path
+    they overwrite; a source with operator state still carries it over."""
+    src, path = str(tmp_path / "src"), str(tmp_path / "sp")
+    _write(spark, _rows(spark, range(60)), src, "write_savepoint")
+    _write(spark, _rows(spark, range(60)), path, "write_savepoint")
+    _with_operator_state(path)
+
+    api.rescale_savepoint(spark, src, path, new_parallelism=2)
+    assert ops.OPERATOR_STATE_FILE not in os.listdir(path)
+    w = api.OperatorStateWriter(api.OperatorStateReader(spark, src), path)
+    w.add_keyed_state_rows(_rows(spark, range(10)))
+    w.write_all()
+    assert ops.OPERATOR_STATE_FILE not in os.listdir(path)
+    assert sp.read_savepoint(spark, path).count() == 10
+
+    _with_operator_state(src)
+    api.rescale_savepoint(spark, src, path, new_parallelism=2)
+    restored = ops.read_operator_state(path)
+    assert len(restored) == 2
+    assert sorted(v for b in restored for v in b.list_states["offsets"]) == [3, 5, 8]
+
+
+@pytest.mark.parametrize("entries", ["as_written", "relative"])
+def test_copied_savepoint_reads_its_own_files(spark, tmp_path, entries):
+    """A savepoint copied elsewhere reads its own section files after the
+    original is deleted, whether its metadata holds the writer's paths or
+    names relative to the directory; overwriting the copy then deletes
+    only the copy's files."""
+    import shutil
+
+    src, copy = str(tmp_path / "src"), str(tmp_path / "copy")
+    _write(spark, _rows(spark, range(60)), src, "write_savepoint")
+    want = sorted(map(tuple, sp.read_savepoint(spark, src).collect()))
+    shutil.copytree(src, copy)
+    shutil.rmtree(src)
+    if entries == "relative":
+        meta = sp.read_savepoint_meta(copy)
+        for fm in meta.files:
+            fm["path"] = os.path.basename(fm["path"])
+        with open(os.path.join(copy, sp.METADATA_FILE), "w") as f:
+            f.write(meta.to_json())
+    assert sorted(map(tuple, sp.read_savepoint(spark, copy).collect())) == want
+    assert mt.audit_savepoint(spark, copy, deep=True).count() == 0
+
+    _write(spark, _rows(spark, range(10)), copy, "write_savepoint")
+    meta = sp.read_savepoint_meta(copy)
+    assert sorted(os.listdir(copy)) == sorted(
+        [sp.METADATA_FILE] + [os.path.basename(f["path"]) for f in meta.files])
+    assert sp.read_savepoint(spark, copy).count() == 10
 
 
 def test_truncated_metadata_is_refused_by_name(spark, tmp_path):
