@@ -44,7 +44,8 @@ class OperatorStateReader:
 
     The all-state scan is built lazily and memoized (the reference
     memoizes ``allKeyedStateRows``, :125-158); each typed reader scans
-    only its own state, with the name pushed into the byte scan.
+    only its own state, with the name pushed into the byte scan, and
+    decodes it inside that scan (``savepoint.SavepointScan``).
     """
 
     def __init__(self, spark: SparkSession, path: str, uid: str | None = None):
@@ -53,6 +54,7 @@ class OperatorStateReader:
         self.uid = uid
         self.operator_id = operator_id(uid).hex() if uid else None
         self.meta = sp.read_savepoint_meta(path)
+        self._scan = sp.SavepointScan(spark, path)
         self._rows: DataFrame | None = None
         self._read_names: set[str] = set()
 
@@ -83,28 +85,26 @@ class OperatorStateReader:
 
     def read_value_kv(self, name, key_codec, value_codec, *, ttl=False) -> DataFrame:
         self._mark(name)
-        return sp.read_savepoint_kv(
-            self.spark, self.path, name, key_codec, value_codec,
+        return sr.read_value_kv(
+            self._scan, name, key_codec, value_codec,
             max_parallelism=self.max_parallelism, ttl=ttl,
         )
 
     def read_value_values(self, name, value_codec, *, ttl=False) -> DataFrame:
         self._mark(name)
-        return sr.read_value_values(
-            self.keyed_state_rows([name]), name, value_codec, ttl=ttl
-        )
+        return sr.read_value_values(self._scan, name, value_codec, ttl=ttl)
 
     def read_list_flatten(self, name, key_codec, element_codec, *, ttl=False) -> DataFrame:
         self._mark(name)
         return sr.read_list_flatten(
-            self.keyed_state_rows([name]), name, key_codec, element_codec,
+            self._scan, name, key_codec, element_codec,
             max_parallelism=self.max_parallelism, ttl=ttl,
         )
 
     def read_list_as_list(self, name, key_codec, element_codec, *, ttl=False) -> DataFrame:
         self._mark(name)
         return sr.read_list_as_list(
-            self.keyed_state_rows([name]), name, key_codec, element_codec,
+            self._scan, name, key_codec, element_codec,
             max_parallelism=self.max_parallelism, ttl=ttl,
         )
 
@@ -113,20 +113,18 @@ class OperatorStateReader:
     ) -> DataFrame:
         self._mark(name)
         return sr.read_map_entries(
-            self.keyed_state_rows([name]), name, key_codec, map_key_codec,
+            self._scan, name, key_codec, map_key_codec,
             value_codec, max_parallelism=self.max_parallelism, ttl=ttl,
         )
 
     def read_map_values(self, name, value_codec, *, ttl=False) -> DataFrame:
         self._mark(name)
-        return sr.read_map_values(
-            self.keyed_state_rows([name]), name, value_codec, ttl=ttl
-        )
+        return sr.read_map_values(self._scan, name, value_codec, ttl=ttl)
 
     def read_window_kv(self, key_codec, value_codec, *, ttl=False) -> DataFrame:
         self._mark(sr.WINDOW_STATE_NAME)
         return sr.read_window_kv(
-            self.keyed_state_rows([sr.WINDOW_STATE_NAME]), key_codec, value_codec,
+            self._scan, key_codec, value_codec,
             max_parallelism=self.max_parallelism, ttl=ttl,
         )
 
@@ -134,14 +132,14 @@ class OperatorStateReader:
         """P7 full — window-contents with TimeWindow (start, end) decoded."""
         self._mark(sr.WINDOW_STATE_NAME)
         return sr.read_window_kv_with_bounds(
-            self.keyed_state_rows([sr.WINDOW_STATE_NAME]), key_codec, value_codec,
+            self._scan, key_codec, value_codec,
             max_parallelism=self.max_parallelism, ttl=ttl,
         )
 
     def read_custom(self, name, decode_row, schema) -> DataFrame:
         """X1 — user-defined reader fn(key_ns, value) -> iterable of tuples."""
         self._mark(name)
-        return sr.read_custom(self.keyed_state_rows([name]), name, decode_row, schema)
+        return sr.read_custom(self._scan, name, decode_row, schema)
 
     # --- non-keyed state (EP3 read side) ---
 

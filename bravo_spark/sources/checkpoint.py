@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from bravo_spark.sources import sst as sstmod
 from bravo_spark.sources.atomic import atomic_write
+from bravo_spark.sources.savepoint import task_frame
 
 CHECKPOINT_MANIFEST = "_bravo_checkpoint.json"
 _SCAN_SCHEMA = "key_ns binary, seq long, vtype int, value binary"
@@ -160,11 +161,7 @@ def _scan_column_family(
 ) -> DataFrame:
     """One task per SST of one column family; ``state_name`` is a literal,
     so a filter on another state folds this whole branch away."""
-    n = len(paths)
-    frame = spark.range(n, numPartitions=n).select(
-        F.element_at(F.lit(paths), (F.col("id") + 1).cast("int")).alias("path")
-    )
-    scanned = frame.mapInPandas(
+    scanned = task_frame(spark, "path", paths).mapInPandas(
         lambda it: _scan_ssts(it, verify_checksums), schema=_SCAN_SCHEMA
     )
     return scanned.select(F.lit(name).alias("state_name"), "key_ns", "seq", "vtype", "value")

@@ -2,9 +2,9 @@
 
 ``spark.read.format("bravo_savepoint").load(path)`` yields the universal
 state-row relation (state_name, key_ns, value) through Spark's own source
-integration (``pyspark.sql.datasource``, Spark 4.x) instead of the
-mapInPandas fallback — same bytes, same splits, but the scan now
-participates in Spark's planning like any native source:
+integration (``pyspark.sql.datasource``, Spark 4.x) — the same bytes,
+splits and per-split gather (``savepoint.gather_split``) as
+``read_savepoint``'s mapInPandas scan, planned like any native source:
 
 - **State selection per load**: ``.option("state_names", "A,B")``
   narrows the byte scan to those states — the decoder length-skips every
@@ -117,7 +117,7 @@ class SavepointScanReader(_StateNameReader):
     def read(self, partition: InputPartition):
         import pyarrow as pa
 
-        from bravo_spark.sources.savepoint import iter_file_spans
+        from bravo_spark.sources.savepoint import gather_split
 
         spec = json.loads(partition.value)
         if spec["file"] is None:
@@ -125,22 +125,18 @@ class SavepointScanReader(_StateNameReader):
         id_to_name = {int(k): v for k, v in spec["ids"].items()}
         allowed = set(spec["names"]) if spec["names"] is not None else None
         state_filter = (lambda n: n in allowed) if allowed is not None else (lambda _n: True)
-        names, keys, vals = [], [], []
-        for name, key, val in iter_file_spans(
-            spec["file"], spec["spans"], id_to_name, state_filter,
-            spec["compressed"],
-        ):
-            names.append(name)
-            keys.append(key)
-            vals.append(val)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(names, type=pa.string()),
-                pa.array(keys, type=pa.binary()),
-                pa.array(vals, type=pa.binary()),
-            ],
-            names=["state_name", "key_ns", "value"],
+        names, keys, vals = gather_split(
+            spec["file"], spec["spans"], id_to_name, state_filter, spec["compressed"]
         )
+        if keys:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(names, type=pa.string()),
+                    pa.array(keys, type=pa.binary()),
+                    pa.array(vals, type=pa.binary()),
+                ],
+                names=["state_name", "key_ns", "value"],
+            )
 
 
 class SavepointWriter(DataSourceArrowWriter):

@@ -22,9 +22,11 @@ Mirrors the reference's savepoint lifecycle (SURVEY.md §2.1 S2/S3/S7/S8,
   section files only through it, so a savepoint exists once it commits.
 - **Read** (S2/S3/S5): splits are (file, key-group-ranges); empty key groups
   (no offset recorded) are skipped like ValidOffsetsIterator.java:25-46. One
-  Spark partition per split; finer-than-subtask parallelism (split by key
-  group) is supported — the reference noted this as future work
-  (RocksDBKeyedStateInputFormat.java:46-47).
+  task per split, with no exchange in front of the scan (:func:`task_frame`);
+  finer-than-subtask parallelism (split by key group) is supported — the
+  reference noted this as future work (RocksDBKeyedStateInputFormat.java:
+  46-47). A typed read over a :class:`SavepointScan` runs staterows'
+  decoder inside the scan, one Python hop like the reference's readers.
 - **State-name pushdown** (F1): the reader takes a state-name filter that
   skips key/value payload bytes without decoding
   (RocksDBSavepointIterator.java:178-191 semantics, implemented in
@@ -57,6 +59,7 @@ from bravo_spark.codecs import flink as fc
 from bravo_spark.sources.atomic import atomic_write
 from bravo_spark.sources.staterows import (
     STATE_ROW_SCHEMA,
+    read_value_kv,
     with_key_group_column,
     with_operator_index_column,
 )
@@ -392,10 +395,36 @@ def read_savepoint(
     out across the cluster. ``splits_per_file`` overrides with a fixed
     per-file count.
     """
-    splits, id_to_name, state_filter, compressed = _plan_scan(
-        path, state_names, state_filter, splits_per_file
+
+    def state_rows(names, keys, vals):
+        return pd.DataFrame({"state_name": names, "key_ns": keys, "value": vals})
+
+    return _scan(
+        spark, path, state_rows, STATE_ROW_SCHEMA, state_names=state_names,
+        state_filter=state_filter, splits_per_file=splits_per_file,
     )
-    return _scan_df(spark, splits, id_to_name, state_filter, compressed)
+
+
+@dataclass(frozen=True)
+class SavepointScan:
+    """A savepoint's byte scan, handed to a typed reader in ``staterows``
+    in place of a state-row DataFrame: the reader's decoder then runs
+    inside the scan (:meth:`map_state`), which filters, projects and
+    deserializes in one Python hop like the reference's flatMap readers
+    (reader/ValueStateKVReader.java:39-62)."""
+
+    spark: SparkSession
+    path: str
+    splits_per_file: int | None = None
+
+    def map_state(self, state_name: str, decode, schema) -> DataFrame:
+        """Scan only ``state_name``; ``decode(key_ns list, value list)``
+        turns each split holding rows of it into a pandas frame of
+        ``schema``."""
+        return _scan(
+            self.spark, self.path, lambda _names, keys, vals: decode(keys, vals),
+            schema, state_names=[state_name], splits_per_file=self.splits_per_file,
+        )
 
 
 # Per-split byte target for the adaptive scan plan — the Python-side
@@ -455,22 +484,22 @@ def _plan_scan(path, state_names, state_filter, splits_per_file=None):
     return splits, id_to_name, state_filter, meta.compression
 
 
-def _split_frame(spark: SparkSession, splits):
-    rows = [
-        (fpath, json.dumps(spans)) for fpath, spans in splits
-    ]
-    n = max(1, len(rows))
-    return (
-        spark.createDataFrame(rows, schema="file string, spans string")
-        .repartition(n)  # one scan split per task
+def task_frame(spark: SparkSession, col: str, items: list[str]) -> DataFrame:
+    """A one-column frame of ``items``, one row per partition and no
+    exchange: ``spark.range`` puts row i in partition i, and
+    ``element_at`` looks its item up in a literal array. Each item then
+    becomes one task of the Python map over the frame."""
+    n = len(items)
+    # an empty literal array has no element type; with no rows it is never read
+    return spark.range(n, numPartitions=max(n, 1)).select(
+        F.element_at(F.lit(items or [""]), (F.col("id") + 1).cast("int")).alias(col)
     )
 
 
 def iter_file_spans(fpath, spans, id_to_name, state_filter, compressed=False):
-    """The byte-scan inner loop shared by every scan front end (mapInPandas
-    readers here, the bravo_savepoint DataSource): open one section file,
-    read the given (key_group, start, end) spans, decompress when the
-    savepoint is Snappy-framed, and decode → (state_name, key_ns, value)."""
+    """The byte-scan inner loop: open one section file, read the given
+    (key_group, start, end) spans, decompress when the savepoint is
+    Snappy-framed, and decode → (state_name, key_ns, value)."""
     with open(fpath, "rb") as f:
         for _kg, off, end in spans:
             f.seek(off)
@@ -480,32 +509,42 @@ def iter_file_spans(fpath, spans, id_to_name, state_filter, compressed=False):
             yield from fc.iter_key_group_section(buf, id_to_name, state_filter)
 
 
-def _scan_splits(pdf_iter, id_to_name, state_filter, compressed=False):
-    for pdf in pdf_iter:
-        for fpath, spans_json in zip(pdf["file"], pdf["spans"]):
-            names, keys, vals = [], [], []
-            for name, key, val in iter_file_spans(
-                fpath, json.loads(spans_json), id_to_name, state_filter,
-                compressed,
-            ):
-                names.append(name)
-                keys.append(key)
-                vals.append(val)
-            yield pd.DataFrame(
-                {"state_name": names, "key_ns": keys, "value": vals},
-                columns=["state_name", "key_ns", "value"],
-            )
+def gather_split(fpath, spans, id_to_name, state_filter, compressed=False):
+    """One split's selected rows as three lists (state names, key_ns,
+    values): the per-split gather behind every savepoint scan front end,
+    the mapInPandas scans here and the ``bravo_savepoint`` DataSource."""
+    names, keys, vals = [], [], []
+    for name, key, val in iter_file_spans(
+        fpath, spans, id_to_name, state_filter, compressed
+    ):
+        names.append(name)
+        keys.append(key)
+        vals.append(val)
+    return names, keys, vals
 
 
-def _scan_df(spark, splits, id_to_name, state_filter, compressed=False) -> DataFrame:
-    """Arrow-batched scan: split metadata DataFrame → mapInPandas decoder.
-    One Python hop, no row pickling (vs. parallelize+createDataFrame)."""
-    from bravo_spark.sources.staterows import STATE_ROW_SCHEMA as _schema
-
-    return _split_frame(spark, splits).mapInPandas(
-        lambda it: _scan_splits(it, id_to_name, state_filter, compressed),
-        schema=_schema,
+def _scan(spark, path, per_split, schema, *, state_names=None, state_filter=None,
+          splits_per_file=None) -> DataFrame:
+    """The savepoint scan: one task per planned split. Each split's
+    gathered lists go to ``per_split(names, keys, values)``, which returns
+    a pandas frame of ``schema``; a split holding no selected row yields
+    no batch."""
+    splits, id_to_name, state_filter, compressed = _plan_scan(
+        path, state_names, state_filter, splits_per_file
     )
+
+    def scan_splits(pdfs):
+        for pdf in pdfs:
+            for split in pdf["split"]:
+                fpath, spans = json.loads(split)
+                names, keys, vals = gather_split(
+                    fpath, spans, id_to_name, state_filter, compressed
+                )
+                if keys:
+                    yield per_split(names, keys, vals)
+
+    frame = task_frame(spark, "split", [json.dumps(s) for s in splits])
+    return frame.mapInPandas(scan_splits, schema=schema)
 
 
 def read_savepoint_kv(
@@ -519,68 +558,18 @@ def read_savepoint_kv(
     ttl: bool = False,
     splits_per_file: int | None = None,
 ) -> DataFrame:
-    """Fused S2+P1: scan *and* decode one value state in a single Python
-    hop — the exact analog of the reference's flatMap readers, which filter
-    + project + deserialize inside the scan (reader/ValueStateKVReader.java:
-    39-62). Saves one Arrow exchange vs read_savepoint → read_value_kv.
+    """P1 over a savepoint: :func:`~bravo_spark.sources.staterows.
+    read_value_kv` decoding inside the byte scan (:class:`SavepointScan`).
 
     ``max_parallelism`` defaults to the value recorded in the savepoint's
     own metadata — the key-group prefix width (1 vs 2 bytes) depends on it,
     so a wrong value silently mis-splits every key."""
-    from bravo_spark.codecs import flink as _fc
-    from bravo_spark.sources.staterows import spark_type_for
-
-    from pyspark.sql.types import StructField, StructType
-
     if max_parallelism is None:
         max_parallelism = read_savepoint_meta(path).max_parallelism
-    key_codec = _fc.unwrap_tuple1_key(key_codec)  # reference Tuple1 parity
-
-    splits, id_to_name, state_filter, compressed = _plan_scan(
-        path, [state_name], None, splits_per_file
+    return read_value_kv(
+        SavepointScan(spark, path, splits_per_file), state_name, key_codec,
+        value_codec, max_parallelism=max_parallelism, ttl=ttl,
     )
-    prefix = _fc.key_group_prefix_bytes(max_parallelism)
-    schema = StructType(
-        [
-            StructField("key", spark_type_for(key_codec), True),
-            StructField("value", spark_type_for(value_codec), True),
-        ]
-    )
-
-    from bravo_spark.codecs import vectorized as vz
-
-    use_fast = vz.is_fixed(key_codec) and vz.is_fixed(value_codec)
-
-    def scan_decode(pdf_iter):
-        for pdf in pdf_iter:
-            raw_keys: list[bytes] = []
-            raw_vals: list[bytes] = []
-            for fpath, spans_json in zip(pdf["file"], pdf["spans"]):
-                for _n, kns, raw in iter_file_spans(
-                    fpath, json.loads(spans_json), id_to_name, state_filter,
-                    compressed,
-                ):
-                    raw_keys.append(kns)
-                    raw_vals.append(raw)
-            fast = (
-                vz.decode_kv_fixed(
-                    raw_keys, raw_vals, key_codec, value_codec,
-                    max_parallelism, ttl=ttl,
-                )
-                if use_fast
-                else None
-            )
-            if fast is not None:
-                yield pd.DataFrame({"key": fast[0], "value": fast[1]})
-                continue
-            keys, vals = [], []
-            for kns, raw in zip(raw_keys, raw_vals):
-                r = fc.ByteReader(kns, prefix)
-                keys.append(key_codec.decode(r))
-                vals.append(fc.decode_value_state(raw, value_codec, ttl=ttl))
-            yield pd.DataFrame({"key": keys, "value": vals}, columns=["key", "value"])
-
-    return _split_frame(spark, splits).mapInPandas(scan_decode, schema=schema)
 
 
 LATEST_POINTER = "LATEST"

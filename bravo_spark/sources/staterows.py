@@ -3,15 +3,22 @@
 Reference data model (SURVEY.md §1.1): every piece of keyed state is a
 ``KeyedStateRow = (state_name, key_ns_bytes, value_bytes)``
 (types/KeyedStateRow.java:35-45). Here that's a DataFrame with schema
-``STATE_ROW_SCHEMA``; the "readers" of the reference (flatMap filter+project+
-decode, reader/ValueStateKVReader.java:39-62 etc.) become
-``filter(state_name) → mapInPandas(batch decode)`` — Arrow-batched, one
-Python hop total, never row-at-a-time UDFs.
+``STATE_ROW_SCHEMA``. The "readers" of the reference (flatMap filter +
+project + decode, reader/ValueStateKVReader.java:39-62 etc.) each build one
+batch decoder (a numpy fast path for fixed-width layouts, the scalar codecs
+otherwise) and apply it one of two ways, always in one Python hop:
+
+- over any state-row DataFrame (a checkpoint read, a user relation):
+  ``filter(state_name) → mapInPandas(decode)``;
+- over a ``savepoint.SavepointScan`` (what ``api.OperatorStateReader``
+  passes): inside the byte scan, so only the read state's payloads are
+  decoded and no state row crosses the Arrow edge.
 
 Scale note: decode is embarrassingly parallel and preserves partitioning;
 the only shuffle in any snapshot pipeline is the writer's repartition by
-operator index (writer.py). Filter on state_name happens BEFORE decode so
-Catalyst can prune whole partitions when the source partitions by state.
+operator index (``savepoint.write_savepoint``). The state_name filter runs
+BEFORE decode, so Catalyst folds away a checkpoint scan branch of another
+column family.
 """
 
 from __future__ import annotations
@@ -104,41 +111,42 @@ def exclude_states(rows: DataFrame, names: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _decode_batch(pdf: pd.DataFrame, decode_row, out_cols: list[str]) -> pd.DataFrame:
-    out: dict[str, list] = {c: [] for c in out_cols}
-    for key_ns, value in zip(pdf["key_ns"], pdf["value"]):
-        for rec in decode_row(bytes(key_ns), bytes(value)):
-            for c, v in zip(out_cols, rec):
-                out[c].append(v)
-    return pd.DataFrame(out, columns=out_cols)
-
-
 def _reader(
-    rows: DataFrame,
+    rows,
     state_name: str,
     decode_row,
     schema: StructType,
     fast=None,
 ) -> DataFrame:
-    """filter → one Arrow-batched decode. ``fast(key_ns list, value
-    list)`` returns the batch's output columns, or None when the batch
-    must take the scalar ``decode_row`` instead (ragged layout)."""
-    filtered = rows.filter(F.col("state_name") == state_name).select("key_ns", "value")
+    """One typed read through one decoder. ``decode(key_ns list, value
+    list)`` returns a batch's typed frame: ``fast`` (the numpy path)
+    returns its output columns, or None when the batch must take the
+    scalar ``decode_row`` instead (ragged layout). On a state-row
+    DataFrame the decoder runs in a mapInPandas after ``filter(state_name)``;
+    on a ``savepoint.SavepointScan`` it runs inside the byte scan, which
+    hands it only non-empty splits of ``state_name``."""
     cols = [f.name for f in schema.fields]
+
+    def decode(keys: list, vals: list) -> pd.DataFrame:
+        got = None if fast is None else fast(keys, vals)
+        if got is None:
+            got = [[] for _ in cols]
+            for key_ns, value in zip(keys, vals):
+                for rec in decode_row(key_ns, value):
+                    for out, v in zip(got, rec):
+                        out.append(v)
+        return pd.DataFrame(dict(zip(cols, got)), columns=cols)
+
+    if not isinstance(rows, DataFrame):
+        return rows.map_state(state_name, decode, schema)
 
     def run(batches: Iterator[pd.DataFrame]):
         for pdf in batches:
-            got = None
-            if fast is not None:
-                got = fast(
-                    [bytes(b) for b in pdf["key_ns"]],
-                    [bytes(b) for b in pdf["value"]],
-                )
-            if got is None:
-                yield _decode_batch(pdf, decode_row, cols)
-            else:
-                yield pd.DataFrame(dict(zip(cols, got)), columns=cols)
+            yield decode(
+                [bytes(b) for b in pdf["key_ns"]], [bytes(b) for b in pdf["value"]]
+            )
 
+    filtered = rows.filter(F.col("state_name") == state_name).select("key_ns", "value")
     return filtered.mapInPandas(run, schema=schema)
 
 

@@ -316,6 +316,44 @@ def test_snapshot_write_plan_is_single_shuffle(spark, tmp_path):
     assert "pythonUDF" not in p.lower() or "MapInPandas" in p
 
 
+def test_savepoint_typed_reads_decode_inside_the_scan(spark, tmp_path):
+    """Every OperatorStateReader typed read is one Python map over the
+    split frame: the decoder runs inside the byte scan, so there is no
+    second Python hop, no Filter on state_name, and no Exchange in front
+    of the scan (the frame puts one split in each partition)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from bravo_spark import api
+    from bravo_spark.codecs import flink as fc
+    from bravo_spark.sources import savepoint as sp
+    from bravo_spark.sources import staterows as sr
+
+    kv = spark.createDataFrame([(k, k) for k in range(20)], "key long, value long")
+    path = str(tmp_path / "sv")
+    sp.write_savepoint(sr.kv_to_state_rows(kv, "v", fc.LONG, fc.LONG), path,
+                       max_parallelism=128, parallelism=3)
+    r = api.OperatorStateReader(spark, path)
+    L, S = fc.LONG, fc.STRING
+    schema = StructType([StructField("key", LongType())])
+    reads = {
+        "value_kv": r.read_value_kv("v", L, L),
+        "value_values": r.read_value_values("v", L),
+        "list_flatten": r.read_list_flatten("v", L, L),
+        "list_as_list": r.read_list_as_list("v", L, L),
+        "map_entries": r.read_map_entries("v", L, S, L),
+        "map_values": r.read_map_values("v", L),
+        "window": r.read_window_kv(L, L),
+        "window_bounds": r.read_window_kv_with_bounds(L, L),
+        "custom": r.read_custom("v", lambda k, v: [(1,)], schema),
+    }
+    python_nodes = ("MapInPandas", "MapInArrow", "EvalPython")
+    for name, df in reads.items():
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert sum(p.count(n) for n in python_nodes) == 1, (name, p)
+        assert "Filter" not in p and "Exchange" not in p, (name, p)
+        assert "Range (0, 3, step=1, splits=3)" in p, (name, p)
+
+
 def test_checkpoint_typed_reads_scan_only_their_column_family(spark, tmp_path):
     """Two typed reads of a two-column-family checkpoint: the state_name
     filter of each reader constant-folds the other family's branch away,

@@ -229,6 +229,149 @@ def test_compressed_savepoint_roundtrip(spark, tmp_path):
     assert fused == got
 
 
+_TW = fc.Codec("tw", lambda ns: ns, None, 16)  # TimeWindow bytes, fixed 16
+
+
+def _parity_state_rows(maxp):
+    """value, list (key 0's list is empty: a ragged row), map and window
+    rows of long keys, encoded in the driver."""
+    rows = []
+    for k in range(40):
+        rows.append(("v", fc.encode_key_ns(k, fc.LONG, maxp),
+                     fc.encode_value_state(k * 3, fc.LONG)))
+        elements = [] if k == 0 else list(range(k, k + k % 4 + 1))
+        rows.append(("l", fc.encode_key_ns(k, fc.LONG, maxp),
+                     fc.encode_list_state(elements, fc.LONG)))
+        ns = fc.write_long(k * 1000) + fc.write_long(k * 1000 + 500)
+        rows.append((sr.WINDOW_STATE_NAME,
+                     fc.encode_key_ns(k, fc.LONG, maxp, namespace_codec=_TW, namespace=ns),
+                     fc.encode_value_state(-k, fc.LONG)))
+        for mk in ("a", "bb")[: k % 2 + 1]:
+            rows.append(("m", fc.encode_key_ns(k, fc.LONG, maxp, map_key=mk,
+                                               map_key_codec=fc.STRING),
+                         fc.encode_map_value(k + len(mk), fc.LONG)))
+    return rows
+
+
+def _custom_schema():
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    return StructType([StructField("key", LongType()), StructField("n", LongType())])
+
+
+def _custom_row(maxp):
+    prefix = fc.key_group_prefix_bytes(maxp)
+
+    def decode(key_ns, value):
+        key = fc.LONG.decode(fc.ByteReader(key_ns, prefix))
+        for i in range(key % 3):  # 0..2 typed rows per state row
+            yield (key, fc.decode_value_state(value, fc.LONG) + i)
+
+    return decode
+
+
+# reader name -> (OperatorStateReader call, the same read over a relation)
+_PARITY_READS = {
+    "value_kv": (lambda r, m: r.read_value_kv("v", fc.LONG, fc.LONG),
+                 lambda d, m: sr.read_value_kv(d, "v", fc.LONG, fc.LONG, max_parallelism=m)),
+    "value_values": (lambda r, m: r.read_value_values("v", fc.LONG),
+                     lambda d, m: sr.read_value_values(d, "v", fc.LONG)),
+    "list_flatten": (lambda r, m: r.read_list_flatten("l", fc.LONG, fc.LONG),
+                     lambda d, m: sr.read_list_flatten(d, "l", fc.LONG, fc.LONG,
+                                                       max_parallelism=m)),
+    "list_as_list": (lambda r, m: r.read_list_as_list("l", fc.LONG, fc.LONG),
+                     lambda d, m: sr.read_list_as_list(d, "l", fc.LONG, fc.LONG,
+                                                       max_parallelism=m)),
+    "map_entries": (lambda r, m: r.read_map_entries("m", fc.LONG, fc.STRING, fc.LONG),
+                    lambda d, m: sr.read_map_entries(d, "m", fc.LONG, fc.STRING, fc.LONG,
+                                                     max_parallelism=m)),
+    "map_values": (lambda r, m: r.read_map_values("m", fc.LONG),
+                   lambda d, m: sr.read_map_values(d, "m", fc.LONG)),
+    "window": (lambda r, m: r.read_window_kv(fc.LONG, fc.LONG),
+               lambda d, m: sr.read_window_kv(d, fc.LONG, fc.LONG, max_parallelism=m)),
+    "window_bounds": (lambda r, m: r.read_window_kv_with_bounds(fc.LONG, fc.LONG),
+                      lambda d, m: sr.read_window_kv_with_bounds(d, fc.LONG, fc.LONG,
+                                                                 max_parallelism=m)),
+    "custom": (lambda r, m: r.read_custom("v", _custom_row(m), _custom_schema()),
+               lambda d, m: sr.read_custom(d, "v", _custom_row(m), _custom_schema())),
+}
+
+
+@pytest.fixture(scope="module")
+def parity_savepoints(spark, tmp_path_factory):
+    made = {}
+
+    def get(compression, maxp):
+        if (compression, maxp) not in made:
+            path = str(tmp_path_factory.mktemp(f"parity-{compression}-{maxp}"))
+            rows = spark.createDataFrame(_parity_state_rows(maxp), sr.STATE_ROW_SCHEMA)
+            sp.write_savepoint(rows, path, max_parallelism=maxp, parallelism=3,
+                               compression=compression)
+            made[compression, maxp] = path
+        return made[compression, maxp]
+
+    return get
+
+
+@pytest.mark.parametrize("read", sorted(_PARITY_READS))
+@pytest.mark.parametrize("maxp", [128, 4096])
+@pytest.mark.parametrize("compression", [False, True], ids=["plain", "snappy"])
+def test_scan_decoded_read_matches_relation_read(spark, parity_savepoints, compression,
+                                                 maxp, read):
+    """Every OperatorStateReader typed read decodes inside the savepoint
+    scan; it returns what the same staterows reader returns over the
+    read_savepoint relation."""
+    from bravo_spark import api
+    from bravo_spark.codecs import vectorized as vz
+
+    path = parity_savepoints(compression, maxp)
+    in_scan, over_rows = _PARITY_READS[read]
+
+    def rows_of(df):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                      for r in df.collect())
+
+    got = rows_of(in_scan(api.OperatorStateReader(spark, path), maxp))
+    assert got and got == rows_of(over_rows(sp.read_savepoint(spark, path), maxp))
+    if read.startswith("list"):
+        # one split holds key 0's empty list and takes the scalar decoder,
+        # the others take the numpy path
+        splits, ids, keep, comp = sp._plan_scan(path, ["l"], None)
+        fast = [vz.decode_list_fixed(*sp.gather_split(f, s, ids, keep, comp)[1:],
+                                     fc.LONG, fc.LONG, maxp) is not None
+                for f, s in splits]
+        assert sorted(fast) == [False] + [True] * (len(splits) - 1)
+
+
+def test_typed_decoding_lives_in_staterows():
+    """One typed-read path: under bravo_spark/sources/ only staterows.py
+    calls the numpy state decoders, and the savepoint scan gathers a
+    split over iter_file_spans in one place, savepoint.gather_split."""
+    import ast
+    import pathlib
+
+    import bravo_spark.sources
+
+    root = pathlib.Path(bravo_spark.sources.__file__).parent
+    decoders = {"decode_kv_fixed", "decode_list_fixed"}
+    decoder_calls, gathers = set(), []
+    for path in sorted(root.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                    if name in decoders:
+                        decoder_calls.add(path.name)
+                    if name == "iter_file_spans":
+                        gathers.append((path.name, fn.name))
+    assert decoder_calls == {"staterows.py"}
+    assert gathers == [("savepoint.py", "gather_split")]
+
+
 def test_savepoint_file_roundtrip_map_and_list_states(spark, tmp_path):
     # map and list payloads survive the FILE format (not just the in-memory
     # relation): write both through the savepoint and re-read.
