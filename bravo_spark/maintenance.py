@@ -151,140 +151,74 @@ def audit_checkpoint(spark, checkpoint_dir: str):
             ))
         prev_wm = wm if wm is not None else prev_wm
 
-    # --- per-operator/per-store state chains
-    sroot = os.path.join(checkpoint_dir, "state")
-    ops = sorted(
-        int(d) for d in os.listdir(sroot) if d.isdigit()
-    ) if os.path.isdir(sroot) else []
-    for op in ops:
-        sdir = os.path.join(sroot, str(op))
-        stores = _ss.list_store_names(checkpoint_dir, op) or [None]
-        for store in stores:
-            pids = _ss._partitions(sdir, store)
-            specs = []
-            for pid in pids:
-                pdir = _ss._pdir(sdir, pid, store)
-                if store is not None and not os.path.isdir(pdir):
-                    continue
-                specs.append((op, store, pid, pdir))
+    # --- per-operator/per-store state chains, one task per partition
+    specs = list(_ss.iter_store_partitions(checkpoint_dir))
 
-            def check_partition(spec):
-                from bravo_spark.codecs.crc32c import crc32c as _crc32c
+    def check_partition(pdir):
+        files = os.listdir(pdir)
+        found = [["sidecar_crc_mismatch", "error", why]
+                 for _, why in _ss.bad_sidecars(pdir)]
+        versions = {
+            s: _ss._versions(files, s)
+            for s in ("delta", "snapshot", "changelog", "zip")
+        }
+        latest = max(set().union(*versions.values()), default=0)
+        for layout in (_ss.HDFS, _rs.ROCKSDB):
+            if not versions[layout.increment]:
+                continue
+            anchor = max(
+                (v for v in versions[layout.full] if v <= latest), default=0
+            )
+            missing = [v for v in range(anchor + 1, latest + 1)
+                       if v not in versions[layout.increment]]
+            if missing:
+                found.append([
+                    "broken_replay_chain", "error",
+                    f"missing {layout.increment}s {missing} after "
+                    f"{layout.full} {anchor} up to latest {latest}",
+                ])
+        referenced: set[str] = set()
+        for z in sorted(versions["zip"]):
+            # the auditor must REPORT a torn/corrupt zip, not crash on
+            # the very defect it exists to find
+            try:
+                meta = _rs._version_metadata(pdir, z)
+            except Exception as ex:  # noqa: BLE001
+                found.append([
+                    "corrupt_snapshot", "error",
+                    f"version {z} zip unreadable: {str(ex)[:80]}",
+                ])
+                continue
+            referenced.update(e["dfsSstFileName"] for e in meta.get("sstFiles", []))
+        ssts_dir = os.path.join(pdir, "SSTs")
+        orphans = [
+            f for f in (os.listdir(ssts_dir) if os.path.isdir(ssts_dir) else [])
+            # checksum sidecars ride along with their SST — only actual
+            # data files can be orphans
+            if f not in referenced
+            and not f.startswith(".") and not f.endswith(".crc")
+        ]
+        if versions["zip"] and orphans:
+            found.append([
+                "orphan_sst", "info",
+                f"{len(orphans)} unreferenced SST(s); "
+                "gc_rocksdb_checkpoint reclaims them",
+            ])
+        return latest, found
 
-                op_, store_, pid_, pdir_ = spec
-                found: list[tuple] = []
-                files = os.listdir(pdir_)
-                for f in files:
-                    # verify ChecksumCheckpointFileManager sidecars that
-                    # EXIST — absence is tolerated on load, disagreement
-                    # kills the restart
-                    if not f.endswith(
-                        (".delta", ".snapshot", ".zip", ".changelog")
-                    ) or f.startswith(".") or f + ".crc" not in files:
-                        continue
-                    main = os.path.join(pdir_, f)
-                    try:
-                        side = _json.loads(
-                            open(os.path.join(pdir_, f + ".crc")).read()
-                        )
-                        data = open(main, "rb").read()
-                    except (OSError, _json.JSONDecodeError) as ex:
-                        found.append((
-                            "sidecar_crc_mismatch", op_, store_, pid_,
-                            "error", f"{f}.crc unreadable: {str(ex)[:80]}",
-                        ))
-                        continue
-                    v = _crc32c(data)
-                    if v >= 1 << 31:
-                        v -= 1 << 32  # sidecar stores the Java signed int
-                    want_v = side.get("value")
-                    want_n = side.get("mainFileSize")
-                    if want_v != v or (
-                        want_n is not None and want_n != len(data)
-                    ):
-                        found.append((
-                            "sidecar_crc_mismatch", op_, store_, pid_,
-                            "error",
-                            f"{f}: sidecar says crc={want_v} size={want_n},"
-                            f" file has crc={v} size={len(data)}",
-                        ))
-                deltas = {int(f.split(".")[0]) for f in files
-                          if f.endswith(".delta") and f.split(".")[0].isdigit()}
-                snaps = {int(f.split(".")[0]) for f in files
-                         if f.endswith(".snapshot") and f.split(".")[0].isdigit()}
-                zips = {int(f.split(".")[0]) for f in files
-                        if f.endswith(".zip") and f.split(".")[0].isdigit()}
-                logs = {int(f.split(".")[0]) for f in files
-                        if f.endswith(".changelog") and f.split(".")[0].isdigit()}
-                latest = max(deltas | snaps | zips | logs, default=0)
-                if deltas or snaps:  # HDFS-backed chain
-                    anchor = max((s for s in snaps if s <= latest), default=0)
-                    missing = [v for v in range(anchor + 1, latest + 1)
-                               if v not in deltas]
-                    if missing:
-                        found.append((
-                            "broken_replay_chain", op_, store_, pid_, "error",
-                            f"missing deltas {missing} between snapshot "
-                            f"{anchor} and latest {latest}",
-                        ))
-                if logs:  # RocksDB changelog chain
-                    anchor = max((z for z in zips if z <= latest), default=0)
-                    missing = [v for v in range(anchor + 1, latest + 1)
-                               if v not in logs and v not in zips]
-                    if missing:
-                        found.append((
-                            "broken_replay_chain", op_, store_, pid_, "error",
-                            f"missing changelogs {missing} after zip "
-                            f"{anchor} up to latest {latest}",
-                        ))
-                if zips:
-                    referenced: set[str] = set()
-                    bad_zips = []
-                    for z in sorted(zips):
-                        # the auditor must REPORT a torn/corrupt zip, not
-                        # crash on the very defect it exists to find
-                        try:
-                            meta = _rs._version_metadata(pdir_, z)
-                        except Exception as ex:  # noqa: BLE001
-                            bad_zips.append((z, str(ex)[:80]))
-                            continue
-                        referenced.update(
-                            e["dfsSstFileName"] for e in meta.get("sstFiles", [])
-                        )
-                    for z, why in bad_zips:
-                        found.append((
-                            "corrupt_snapshot", op_, store_, pid_, "error",
-                            f"version {z} zip unreadable: {why}",
-                        ))
-                    ssts_dir = os.path.join(pdir_, "SSTs")
-                    orphans = [
-                        f for f in (os.listdir(ssts_dir)
-                                    if os.path.isdir(ssts_dir) else [])
-                        # checksum sidecars ride along with their SST —
-                        # only actual data files can be orphans
-                        if f not in referenced
-                        and not f.startswith(".") and not f.endswith(".crc")
-                    ]
-                    if orphans:
-                        found.append((
-                            "orphan_sst", op_, store_, pid_, "info",
-                            f"{len(orphans)} unreferenced SST(s); "
-                            "gc_rocksdb_checkpoint reclaims them",
-                        ))
-                return (latest, found)
-
-            results = spark.sparkContext.parallelize(
-                specs, max(1, len(specs))
-            ).map(check_partition).collect() if specs else []
-            maxv = max((latest for latest, _ in results), default=0)
-            for (op_, store_, pid_, _pdir), (latest, found) in zip(specs, results):
-                rows.extend(found)
-                if latest < maxv:
-                    rows.append((
-                        "version_skew", op_, store_, pid_, "error",
-                        f"partition latest version {latest} trails store "
-                        f"max {maxv} — partially-written commit",
-                    ))
+    results = _ss.run_per_partition(spark, [d for *_, d in specs], check_partition)
+    maxv: dict[tuple, int] = {}
+    for (op, store, _pid, _d), (latest, _f) in zip(specs, results):
+        maxv[op, store] = max(maxv.get((op, store), 0), latest)
+    for (op, store, pid, _d), (latest, found) in zip(specs, results):
+        rows.extend((check, op, store, pid, sev, detail)
+                    for check, sev, detail in found)
+        if latest < maxv[op, store]:
+            rows.append((
+                "version_skew", op, store, pid, "error",
+                f"partition latest version {latest} trails store "
+                f"max {maxv[op, store]} — partially-written commit",
+            ))
 
     schema = T.StructType([
         T.StructField("check", T.StringType(), False),
@@ -309,56 +243,18 @@ def repair_sidecars(spark, checkpoint_dir: str, *, dry_run: bool = False):
     snapshot and zip/changelog files). One task per state partition;
     ``dry_run=True`` lists without rewriting. Returns the repaired (or
     would-repair) main-file paths."""
-    import json as _json
-    import os
-
     from bravo_spark.sources import spark_state as _ss
 
-    sroot = os.path.join(checkpoint_dir, "state")
-    ops = sorted(
-        int(d) for d in os.listdir(sroot) if d.isdigit()
-    ) if os.path.isdir(sroot) else []
-    specs = []
-    for op in ops:
-        sdir = os.path.join(sroot, str(op))
-        for store in _ss.list_store_names(checkpoint_dir, op) or [None]:
-            for pid in _ss._partitions(sdir, store):
-                pdir = _ss._pdir(sdir, pid, store)
-                if os.path.isdir(pdir):
-                    specs.append(pdir)
-
     def repair_one(pdir: str) -> list[str]:
-        from bravo_spark.codecs.crc32c import crc32c as _crc32c
-
-        fixed: list[str] = []
-        files = os.listdir(pdir)
-        for f in files:
-            if not f.endswith(
-                (".delta", ".snapshot", ".zip", ".changelog")
-            ) or f.startswith(".") or f + ".crc" not in files:
-                continue
-            main = os.path.join(pdir, f)
-            try:
-                side = _json.loads(open(main + ".crc").read())
-            except (OSError, _json.JSONDecodeError):
-                side = {}
-            data = open(main, "rb").read()
-            v = _crc32c(data)
-            if v >= 1 << 31:
-                v -= 1 << 32
-            if side.get("value") == v and side.get("mainFileSize") == len(data):
-                continue
-            if not dry_run:
-                _ss._finalize_state_file(main)
-            fixed.append(main)
+        fixed = [path for path, _ in _ss.bad_sidecars(pdir)]
+        if not dry_run:
+            for path in fixed:
+                _ss._finalize_state_file(path)
         return fixed
 
-    if not specs:
-        return []
-    out = spark.sparkContext.parallelize(specs, max(1, len(specs))).map(
-        repair_one
-    ).collect()  # repaired paths only — file-count-bounded
-    return sorted(p for part in out for p in part)
+    pdirs = [d for *_, d in _ss.iter_store_partitions(checkpoint_dir)]
+    out = _ss.run_per_partition(spark, pdirs, repair_one)
+    return sorted(p for part in out for p in part)  # file-count-bounded
 
 
 def audit_savepoint(spark, path: str, *, deep: bool = False):

@@ -1,9 +1,10 @@
-"""Spark Structured Streaming RocksDB state-store source.
+"""Spark Structured Streaming RocksDB state-store layout.
 
 Completes the state-surgery surface (sources/spark_state.py covers the
-HDFSBackedStateStoreProvider): RocksDBStateStoreProvider checkpoints —
-Spark's recommended backend for large state — are read WITHOUT the native
-RocksDB library, by combining
+HDFSBackedStateStoreProvider and holds the driver both providers share):
+RocksDBStateStoreProvider checkpoints — Spark's recommended backend for
+large state — are read and rewritten WITHOUT the native RocksDB library,
+by combining
 
 - the RocksDBFileManager layout (``<ckpt>/state/<op>/<partition>/
   <version>.zip`` holding a ``metadata`` member that lists the live SST
@@ -22,42 +23,29 @@ self-contained, so LSM resolution (highest seq wins, tombstones drop the
 key) happens task-locally — one Spark task per state partition, zero
 shuffles, the same split the store itself uses. A given ``version``
 selects that commit's zip: reading an older version is state time travel.
+
+This module holds only what differs from the HDFS-backed provider — the
+zip metadata, the SST fold, the changelog rewrite and the zip rebuild —
+plus :func:`gc_rocksdb_checkpoint` and the provider's front doors.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
+import shutil
+import tempfile
+import uuid
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from bravo_spark.sources import sst as sstmod
-from bravo_spark.sources.atomic import atomic_write
-from bravo_spark.sources.spark_state import (
-    _check_schema,
-    decode_unsafe_row,
-    read_state_schema,
-)
+from bravo_spark.sources import spark_state as ss
 
 STATE_ENCODING_VERSION = 0
-
-
-def _state_dir(checkpoint_dir: str, operator_id: int, store_name: str) -> str:
-    return os.path.join(checkpoint_dir, "state", str(operator_id))
-
-
-def _partition_dirs(sdir: str) -> list[int]:
-    return sorted(int(d) for d in os.listdir(sdir) if d.isdigit())
-
-
-def _pdir(sdir: str, pid: int, store_name: str) -> str:
-    """One partition's file dir; named stores (stream-stream join sides)
-    nest one level deeper — ``state/<op>/<pid>/<store_name>/`` — exactly
-    like the HDFS-backed provider's layout."""
-    p = os.path.join(sdir, str(pid))
-    return p if store_name == "default" else os.path.join(p, store_name)
 
 
 def _version_metadata(pdir: str, version: int) -> dict:
@@ -69,89 +57,6 @@ def _version_metadata(pdir: str, version: int) -> dict:
     if header.strip() != b"v1":
         raise ValueError(f"unsupported RocksDB checkpoint metadata {header!r}")
     return json.loads(body)
-
-
-def latest_version(
-    checkpoint_dir: str, operator_id: int = 0, store_name: str = "default"
-) -> int:
-    """The newest version EVERY present partition has (min of
-    per-partition maxes) — the last CONSISTENT version; a killed query's
-    torn in-flight version (only some partitions committed their
-    zip/changelog) is never selected, so reads and rewrites don't fail
-    on the missing files."""
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    per_part: list[int] = []
-    missing: list[int] = []
-    for p in _partition_dirs(sdir):
-        pdir = _pdir(sdir, p, store_name)
-        if not os.path.isdir(pdir):
-            # a partition without the named-store subdirectory: either a
-            # store-name typo (then EVERY partition is missing it) or a
-            # partially-written checkpoint (then only some are) — skip it
-            # here, but name the store if nothing is left
-            missing.append(p)
-            continue
-        vs = [
-            int(stem)
-            for f in os.listdir(pdir)
-            for stem, _, ext in [f.partition(".")]
-            if ext in ("zip", "changelog") and stem.isdigit()
-        ]
-        if vs:
-            per_part.append(max(vs))
-    if not per_part:
-        detail = (
-            f" (store {store_name!r} missing in partition dirs {missing})"
-            if missing
-            else ""
-        )
-        raise FileNotFoundError(
-            f"no committed RocksDB versions for store {store_name!r} under "
-            f"{sdir}{detail}"
-        )
-    return min(per_part)
-
-
-def _load_partition_state(pdir: str, version: int) -> dict[bytes, bytes]:
-    """One partition's state at ``version``.
-
-    Version 0 is the empty pre-first-commit state.
-
-    Two on-disk shapes, matching RocksDBStateStoreProvider's two commit
-    modes: every version has a full ``{v}.zip`` (default), or — with
-    changelog checkpointing (``...stateStore.rocksdb.changelogCheckpointing
-    .enabled``) — a ``{v}.changelog`` of the version's puts/deletes, with
-    zip snapshots only when background maintenance uploads one. State =
-    greatest zip ≤ version, then changelogs replayed up to version. The
-    changelog is lz4-java/snappy framed with the same int-length-prefixed
-    record layout as the HDFS provider's delta files, so the framing and
-    record iterator are shared with sources/spark_state.py."""
-    if version == 0:
-        return {}
-    if os.path.exists(os.path.join(pdir, f"{version}.changelog")):
-        from bravo_spark.sources.spark_state import _iter_records, decode_stream
-
-        zips = [
-            int(f.partition(".")[0])
-            for f in os.listdir(pdir)
-            if f.endswith(".zip")
-            and f.partition(".")[0].isdigit()
-            and int(f.partition(".")[0]) <= version
-        ]
-        state = _load_zip_state(pdir, max(zips)) if zips else {}
-        for ver in range(max(zips) + 1 if zips else 1, version + 1):
-            path = os.path.join(pdir, f"{ver}.changelog")
-            if not os.path.exists(path):
-                raise FileNotFoundError(
-                    f"missing changelog {path} for version {version}"
-                )
-            for k, v in _iter_records(decode_stream(open(path, "rb").read())):
-                if v is None:
-                    state.pop(k, None)
-                else:
-                    state[k] = v
-        return state
-    return _load_zip_state(pdir, version)
 
 
 def _load_zip_state(pdir: str, version: int) -> dict[bytes, bytes]:
@@ -181,13 +86,113 @@ def _load_zip_state(pdir: str, version: int) -> dict[bytes, bytes]:
     }
 
 
-def _strip_version_byte(buf: bytes, what: str) -> bytes:
-    if not buf or buf[0] != STATE_ENCODING_VERSION:
-        raise ValueError(
-            f"unexpected {what} encoding version "
-            f"{buf[:1].hex() if buf else '<empty>'}"
+class RocksDBLayout(ss.StoreLayout):
+    """RocksDBStateStoreProvider's two commit modes: a full ``{v}.zip``
+    per version (default), or — with changelog checkpointing
+    (``...stateStore.rocksdb.changelogCheckpointing.enabled``) — a
+    ``{v}.changelog`` of the version's puts/deletes, with zips only when
+    background maintenance uploads one. The changelog is framed like the
+    HDFS provider's delta files, with the same record layout."""
+
+    name, increment, full = "RocksDB", "changelog", "zip"
+    committed = ("changelog", "zip")
+    prefix = bytes([STATE_ENCODING_VERSION])
+    drops_shadowed_full = True
+
+    def load_full(self, pdir: str, version: int) -> dict[bytes, bytes]:
+        return _load_zip_state(pdir, version)
+
+    def rewrite(self, pdir, version, desired, stage) -> None:
+        """Changelog mode: rewrite ``{version}.changelog`` (puts +
+        tombstones). Zip-per-version mode (no changelog): rebuild
+        ``{version}.zip``. A zip that merely SHADOWS a changelog
+        (maintenance snapshot) is deleted on publish, since the loader
+        prefers it and would ignore the rewritten changelog — so the
+        changelog chain must replay without it."""
+        if not os.path.exists(os.path.join(pdir, f"{version}.changelog")):
+            self.snapshot(pdir, version, desired, stage)
+            return
+        zip_path = os.path.join(pdir, f"{version}.zip")
+        if os.path.exists(zip_path):
+            files = os.listdir(pdir)
+            start = max(
+                (v for v in ss._versions(files, "zip") if v < version), default=0
+            ) + 1
+            logs = ss._versions(files, "changelog")
+            chain = [v for v in range(start, version + 1) if v not in logs]
+            if chain:
+                raise ValueError(
+                    f"cannot drop shadowing snapshot {zip_path}: changelog "
+                    f"chain broken at versions {chain}"
+                )
+        ss.stage_increment(self, pdir, version, desired, stage)
+
+    def snapshot(self, pdir, version, desired, stage) -> None:
+        """Stage ``{version}.zip`` as a fresh single-SST RocksDB checkpoint
+        holding exactly ``desired`` (a zip IS the full state, so no
+        tombstones). The member layout mirrors what RocksDBFileManager
+        uploads: a ``metadata`` json naming the SST (stored beside the zip
+        under ``SSTs/`` with a ``<local>-<uuid>.sst`` dfs name, the uuid
+        being the write's) plus the MANIFEST/CURRENT/empty-WAL files
+        RocksDB needs to open the directory (sources/rocksdb_manifest.py).
+        Old SST files of the replaced version stay behind as orphans for
+        :func:`gc_rocksdb_checkpoint`."""
+        from bravo_spark.sources.rocksdb_manifest import build_db_dir
+
+        tmp = tempfile.mkdtemp(prefix="bravo_rocksdb_zip_")
+        try:
+            sizes = build_db_dir(tmp, sorted(desired.items()))
+            sst_local = next(n for n in sizes if n.endswith(".sst"))
+            dfs_name = f"{sst_local.split('.')[0]}-{uuid.UUID(stage.token)}.sst"
+            ssts_dir = os.path.join(pdir, "SSTs")
+            os.makedirs(ssts_dir, exist_ok=True)
+            with open(os.path.join(tmp, sst_local), "rb") as f:
+                stage(os.path.join(ssts_dir, dfs_name), f.read(), sidecar=False)
+            meta = {
+                "sstFiles": [{
+                    "localFileName": sst_local,
+                    "dfsSstFileName": dfs_name,
+                    "sizeBytes": sizes[sst_local],
+                }],
+                "numKeys": len(desired),
+                "numInternalKeys": 0,
+                "columnFamilyMapping": {},
+                "columnFamilyTypeMap": {},
+                "maxColumnFamilyId": 0,
+            }
+            buf = io.BytesIO()
+            with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+                for name in sizes:
+                    if not name.endswith(".sst"):  # SSTs travel via SSTs/
+                        z.write(os.path.join(tmp, name), name)
+                z.writestr("metadata", "v1\n" + json.dumps(meta))
+            stage(os.path.join(pdir, f"{version}.zip"), buf.getvalue())
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def reclaim(self, spark, checkpoint_dir, operator_id, store) -> list[str]:
+        return gc_rocksdb_checkpoint(
+            spark, checkpoint_dir, operator_id=operator_id,
+            store_name=store or "default",
         )
-    return buf[1:]
+
+
+ROCKSDB = RocksDBLayout()
+
+
+def _load_partition_state(pdir: str, version: int) -> dict[bytes, bytes]:
+    """One partition's state at ``version``: the greatest zip ≤ version,
+    then changelogs replayed up to version."""
+    return ss.replay(ROCKSDB, pdir, version)
+
+
+def latest_version(
+    checkpoint_dir: str, operator_id: int = 0, store_name: str = "default"
+) -> int:
+    """The last consistent version of a RocksDB store: the newest version
+    (zip or changelog) EVERY present partition has committed (see
+    ``spark_state.latest_state_version``)."""
+    return ss.latest_state_version(ROCKSDB, checkpoint_dir, operator_id, store_name)
 
 
 def read_rocksdb_spark_state(
@@ -207,43 +212,11 @@ def read_rocksdb_spark_state(
     stream-stream join's four per-partition stores) write no checkpoint
     schema file — pass explicit ``key_schema``/``value_schema``, exactly
     as with the HDFS-backed reader."""
-    if version is None:
-        version = latest_version(checkpoint_dir, operator_id, store_name)
-    if key_schema is None or value_schema is None:
-        if store_name != "default":
-            raise ValueError(
-                "named stores have no checkpoint schema file; pass "
-                "key_schema and value_schema explicitly"
-            )
-        key_schema, value_schema = read_state_schema(checkpoint_dir, operator_id)
-    _check_schema(key_schema)
-    _check_schema(value_schema)
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    parts = _partition_dirs(sdir)
-
-    key_names = [f.name for f in key_schema.fields]
-    val_names = [
-        (f"value_{f.name}" if f.name in key_names else f.name)
-        for f in value_schema.fields
-    ]
-    out_schema = T.StructType(
-        [T.StructField("partition_id", T.IntegerType(), False)]
-        + [T.StructField(n, f.dataType, True) for n, f in zip(key_names, key_schema.fields)]
-        + [T.StructField(n, f.dataType, True) for n, f in zip(val_names, value_schema.fields)]
+    return ss.read_state(
+        ROCKSDB, spark, checkpoint_dir, operator_id=operator_id,
+        version=version, store_name=store_name, key_schema=key_schema,
+        value_schema=value_schema,
     )
-
-    def scan(pids):
-        for pid in pids:
-            state = _load_partition_state(_pdir(sdir, pid, store_name), version)
-            for kb, vb in state.items():
-                yield (
-                    (pid,)
-                    + decode_unsafe_row(_strip_version_byte(kb, "key"), key_schema)
-                    + decode_unsafe_row(_strip_version_byte(vb, "value"), value_schema)
-                )
-
-    rdd = spark.sparkContext.parallelize(parts, max(1, len(parts)))
-    return spark.createDataFrame(rdd.mapPartitions(lambda it: scan(list(it))), out_schema)
 
 
 def write_rocksdb_spark_state(
@@ -260,251 +233,23 @@ def write_rocksdb_spark_state(
 ) -> int:
     """Rewrite one committed version of a RocksDB-provider store so that,
     after the restarted query loads it, the operator's state equals ``df``
-    exactly — the same surgery contract as the HDFS-backed
-    ``write_spark_state``, including its named-store kwargs: explicit
-    ``key_schema``/``value_schema`` for schema-file-less stores and
-    ``partition_key_cols`` for stores routed by a key prefix (a join's
-    ``keyWithIndexToValue``).
+    exactly — the same surgery contract and kwargs as the HDFS-backed
+    ``write_spark_state``.
 
-    Both checkpoint layouts are rewritable. Changelog mode
-    (``spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
-    .enabled``): the version's ``{v}.changelog`` is replaced with puts for
-    ``df``'s rows plus tombstones for every key the replayed base (state at
-    v-1 ∪ keys the original changelog touched) could contain — tombstone
-    semantics mirrored from the HDFS writer. Default (zip-per-version)
-    checkpoints: ``{v}.zip`` is rebuilt as a complete single-SST RocksDB
-    checkpoint (pure-Python SST + MANIFEST/CURRENT/empty-WAL via
-    ``rocksdb_manifest.build_db_dir``, plus the ``metadata`` json naming
-    the SST's dfs name under ``SSTs/``) holding exactly ``df`` — no
-    tombstones needed since the zip IS the full state; orphaned SSTs of
-    the replaced version are left for store maintenance to collect.
-
-    If store maintenance also uploaded ``{v}.zip``, RocksDB's loader would
-    prefer it and ignore the changelog — so the zip is deleted after
-    verifying the partition still replays (an older zip or empty base plus
-    an unbroken changelog chain up to ``v``). Rows route to partitions with
-    Spark's own ``pmod(murmur3(key), n)``; key/value columns are cast to
-    the store's exact schema types first (Murmur3 is type-sensitive)."""
-    from pyspark.sql import functions as F
-
-    from bravo_spark.sources.spark_state import encode_unsafe_row
-
-    if version is None:
-        version = latest_version(checkpoint_dir, operator_id, store_name)
-    if key_schema is None or value_schema is None:
-        if store_name != "default":
-            raise ValueError(
-                "named stores have no checkpoint schema file; pass "
-                "key_schema and value_schema explicitly"
-            )
-        key_schema, value_schema = read_state_schema(checkpoint_dir, operator_id)
-    _check_schema(key_schema)
-    _check_schema(value_schema)
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    parts = _partition_dirs(sdir)
-    n = len(parts)
-
-    for pid in parts:
-        pdir = _pdir(sdir, pid, store_name)
-        if not os.path.exists(
-            os.path.join(pdir, f"{version}.changelog")
-        ) and not os.path.exists(os.path.join(pdir, f"{version}.zip")):
-            raise ValueError(
-                f"partition {pid} has neither {version}.changelog nor "
-                f"{version}.zip — version {version} was never committed "
-                "there"
-            )
-
-    key_names = [f.name for f in key_schema.fields]
-    val_names = [
-        (f"value_{f.name}" if f.name in key_names else f.name)
-        for f in value_schema.fields
-    ]
-    missing = [c for c in key_names + val_names if c not in df.columns]
-    if missing:
-        raise ValueError(f"state DataFrame missing columns: {missing}")
-
-    typed = df.select(
-        *[
-            F.col(c).cast(f.dataType).alias(c)
-            for c, f in zip(
-                key_names + val_names,
-                list(key_schema.fields) + list(value_schema.fields),
-            )
-        ]
+    Both checkpoint layouts are rewritable. Changelog mode: the version's
+    ``{v}.changelog`` is replaced with puts for ``df``'s rows plus
+    tombstones for every key the replayed base (state at v-1 ∪ keys the
+    original changelog touched) could contain; a ``{v}.zip`` that
+    maintenance uploaded over it is deleted (after verifying the
+    changelog chain still replays). Default (zip-per-version) checkpoints:
+    ``{v}.zip`` is rebuilt as a complete single-SST RocksDB checkpoint
+    holding exactly ``df``; the replaced version's SSTs are left for
+    :func:`gc_rocksdb_checkpoint`. A failed rewrite publishes nothing."""
+    return ss.write_state(
+        ROCKSDB, spark, checkpoint_dir, df, operator_id=operator_id,
+        version=version, store_name=store_name, key_schema=key_schema,
+        value_schema=value_schema, partition_key_cols=partition_key_cols,
     )
-    part_cols = partition_key_cols if partition_key_cols is not None else key_names
-    unknown = [c for c in part_cols if c not in key_names]
-    if unknown:
-        raise ValueError(
-            f"partition_key_cols {unknown} are not key columns {key_names}"
-        )
-    routed = typed.select(
-        F.pmod(F.hash(*part_cols), F.lit(n)).cast("int").alias("_pid"),
-        *key_names,
-        *val_names,
-    ).repartition(n, "_pid")
-
-    nk = len(key_names)
-    vb = bytes([STATE_ENCODING_VERSION])
-
-    def write_partition(rows):
-        by_pid: dict[int, dict[bytes, bytes]] = {}
-        for r in rows:
-            pid = r["_pid"]
-            kb = vb + encode_unsafe_row(tuple(r[1 : 1 + nk]), key_schema)
-            val = vb + encode_unsafe_row(tuple(r[1 + nk :]), value_schema)
-            by_pid.setdefault(pid, {})[kb] = val
-        for pid in by_pid:
-            _rewrite_changelog_version(
-                _pdir(sdir, pid, store_name), version, by_pid[pid]
-            )
-            yield pid
-
-    # distributed for the same reason as the HDFS writer: the tombstone
-    # pass replays each untouched partition's prior state, which must not
-    # serialize through the driver
-    touched = set(routed.rdd.mapPartitions(write_partition).collect())
-    untouched = [pid for pid in parts if pid not in touched]
-    if untouched:
-        spark.sparkContext.parallelize(untouched, len(untouched)).foreach(
-            lambda pid: _rewrite_changelog_version(
-                _pdir(sdir, pid, store_name), version, {}
-            )
-        )
-    return version
-
-
-def _rewrite_changelog_version(
-    pdir: str, version: int, desired: dict[bytes, bytes]
-) -> None:
-    """Replace one partition's committed ``version`` so loaded state equals
-    ``desired``.
-
-    Changelog mode: rewrite ``{version}.changelog`` (puts + tombstones).
-    Zip-per-version mode (no changelog): rebuild ``{version}.zip`` as a
-    complete RocksDB checkpoint — pure-Python SST + MANIFEST/CURRENT
-    (sources/rocksdb_manifest.py) — that Spark's real RocksDB opens on
-    restart. A zip that merely SHADOWS a changelog (maintenance snapshot)
-    is deleted after verifying the changelog chain still replays, since
-    the loader prefers snapshots and would ignore the rewritten
-    changelog."""
-    import struct
-
-    from bravo_spark.sources.spark_state import (
-        _finalize_state_file,
-        _iter_records,
-        decode_stream,
-        encode_stream_like,
-    )
-
-    zip_path = os.path.join(pdir, f"{version}.zip")
-    if not os.path.exists(os.path.join(pdir, f"{version}.changelog")):
-        _rewrite_zip_version(pdir, version, desired)
-        return
-    if os.path.exists(zip_path):
-        # replay must work from the pre-version base once the zip is gone
-        older = [
-            int(f.partition(".")[0])
-            for f in os.listdir(pdir)
-            if f.endswith(".zip")
-            and f.partition(".")[0].isdigit()
-            and int(f.partition(".")[0]) < version
-        ]
-        start = max(older) + 1 if older else 1
-        chain = [
-            v
-            for v in range(start, version + 1)
-            if not os.path.exists(os.path.join(pdir, f"{v}.changelog"))
-        ]
-        if chain:
-            raise ValueError(
-                f"cannot drop shadowing snapshot {zip_path}: changelog "
-                f"chain broken at versions {chain}"
-            )
-        os.remove(zip_path)
-        for crc in (
-            os.path.join(pdir, f"{version}.zip.crc"),
-            os.path.join(pdir, f".{version}.zip.crc"),
-        ):
-            if os.path.exists(crc):
-                os.remove(crc)
-
-    base_keys = set(_load_partition_state(pdir, version - 1))
-    clog = os.path.join(pdir, f"{version}.changelog")
-    old_raw = open(clog, "rb").read()
-    for kb, _ in _iter_records(decode_stream(old_raw)):
-        base_keys.add(kb)
-
-    payload = bytearray()
-    for kb, val in desired.items():
-        payload += struct.pack(">i", len(kb)) + kb
-        payload += struct.pack(">i", len(val)) + val
-    for kb in base_keys:
-        if kb not in desired:
-            payload += struct.pack(">i", len(kb)) + kb
-            payload += struct.pack(">i", -1)
-    payload += struct.pack(">i", -1)
-    with atomic_write(clog) as f:
-        f.write(encode_stream_like(old_raw, bytes(payload)))
-    _finalize_state_file(clog)
-
-
-def _rewrite_zip_version(
-    pdir: str, version: int, desired: dict[bytes, bytes]
-) -> None:
-    """Rebuild ``{version}.zip`` as a fresh single-SST RocksDB checkpoint
-    holding exactly ``desired`` (zip-per-version stores carry full state,
-    so no tombstones are needed — the zip IS the state). The member layout
-    mirrors what RocksDBFileManager uploads: a ``metadata`` json naming
-    the SST (stored beside the zip under ``SSTs/`` with a
-    ``<local>-<uuid>.sst`` dfs name) plus the MANIFEST/CURRENT/empty-WAL
-    files RocksDB needs to open the directory. Table properties include
-    the raw-size/deletion counters compaction divides by (sources/sst.py).
-    Old SST files of the replaced version stay behind as orphans — the
-    store's own maintenance deletes unreferenced files."""
-    import json as _json
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    from bravo_spark.sources.rocksdb_manifest import build_db_dir
-    from bravo_spark.sources.spark_state import _finalize_state_file
-
-    tmp = tempfile.mkdtemp(prefix="bravo_rocksdb_zip_")
-    try:
-        sizes = build_db_dir(tmp, sorted(desired.items()))
-        sst_local = next(n for n in sizes if n.endswith(".sst"))
-        dfs_name = f"{sst_local.split('.')[0]}-{_uuid.uuid4()}.sst"
-        ssts_dir = os.path.join(pdir, "SSTs")
-        os.makedirs(ssts_dir, exist_ok=True)
-        shutil.copyfile(
-            os.path.join(tmp, sst_local), os.path.join(ssts_dir, dfs_name)
-        )
-        meta = {
-            "sstFiles": [
-                {
-                    "localFileName": sst_local,
-                    "dfsSstFileName": dfs_name,
-                    "sizeBytes": sizes[sst_local],
-                }
-            ],
-            "numKeys": len(desired),
-            "numInternalKeys": 0,
-            "columnFamilyMapping": {},
-            "columnFamilyTypeMap": {},
-            "maxColumnFamilyId": 0,
-        }
-        with atomic_write(os.path.join(pdir, f"{version}.zip")) as f, \
-                zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as z:
-            for name in sizes:
-                if name.endswith(".sst"):
-                    continue  # SSTs travel via SSTs/, not the zip
-                z.write(os.path.join(tmp, name), name)
-            z.writestr("metadata", "v1\n" + _json.dumps(meta))
-        _finalize_state_file(os.path.join(pdir, f"{version}.zip"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def compact_rocksdb_checkpoint(
@@ -521,28 +266,15 @@ def compact_rocksdb_checkpoint(
     restarted at ``version`` then opens the zip's SST directly with ZERO
     changelog replay (both Spark's restore and our reader pick the
     greatest snapshot ≤ version first). Changelogs stay behind, so time
-    travel to older versions is unaffected; the zip write is tmp+rename
-    crash-safe; replaced-version SST orphans are left for the store's own
-    maintenance, like the surgery writer. One task per state partition;
-    the driver sees partition ids only. Returns the compacted version."""
-    if version is None:
-        version = latest_version(checkpoint_dir, operator_id, store_name)
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    pids = [
-        p for p in _partition_dirs(sdir)
-        if os.path.isdir(_pdir(sdir, p, store_name))
-    ]
-
-    def compact_one(pid: int) -> int:
-        pdir = _pdir(sdir, pid, store_name)
-        desired = _load_partition_state(pdir, version)
-        _rewrite_zip_version(pdir, version, desired)
-        return pid
-
-    spark.sparkContext.parallelize(pids, max(1, len(pids))).map(
-        compact_one
-    ).collect()  # partition ids only
-    return version
+    travel to older versions is unaffected; a failed compaction publishes
+    nothing; replaced-version SST orphans are left for
+    :func:`gc_rocksdb_checkpoint`, like the surgery writer. One task per
+    state partition; the driver sees partition ids only. Returns the
+    compacted version."""
+    return ss.compact_state(
+        ROCKSDB, spark, checkpoint_dir, operator_id=operator_id,
+        store_name=store_name, version=version,
+    )
 
 
 def gc_rocksdb_checkpoint(
@@ -566,25 +298,17 @@ def gc_rocksdb_checkpoint(
     partition; the driver sees only the (file-count-bounded) removed
     paths. Run against a quiescent checkpoint — a running query may be
     mid-upload of a not-yet-committed version's files."""
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    pids = [
-        p for p in _partition_dirs(sdir)
-        if os.path.isdir(_pdir(sdir, p, store_name))
-    ]
+    sdir = ss._state_dir(checkpoint_dir, operator_id)
+    pdirs = [d for _, d in ss.store_partitions(sdir, ss._store(store_name))]
 
-    def gc_one(pid: int) -> list[str]:
-        pdir = _pdir(sdir, pid, store_name)
+    def gc_one(pdir: str) -> list[str]:
         ssts_dir = os.path.join(pdir, "SSTs")
         if not os.path.isdir(ssts_dir):
             return []
         referenced: set[str] = set()
-        for f in os.listdir(pdir):
-            stem, _, ext = f.partition(".")
-            if ext == "zip" and stem.isdigit():
-                meta = _version_metadata(pdir, int(stem))
-                referenced.update(
-                    e["dfsSstFileName"] for e in meta.get("sstFiles", [])
-                )
+        for v in ss._versions(os.listdir(pdir), "zip"):
+            meta = _version_metadata(pdir, v)
+            referenced.update(e["dfsSstFileName"] for e in meta.get("sstFiles", []))
         removed = []
         for f in sorted(os.listdir(ssts_dir)):
             # a checksum sidecar ("name.crc" / Hadoop ".name.crc") lives
@@ -602,10 +326,7 @@ def gc_rocksdb_checkpoint(
                 removed.append(path)
         return removed
 
-    out = spark.sparkContext.parallelize(pids, max(1, len(pids))).map(
-        gc_one
-    ).collect()
-    return [p for part in out for p in part]
+    return [p for part in ss.run_per_partition(spark, pdirs, gc_one) for p in part]
 
 
 def prune_rocksdb_checkpoint(
@@ -624,38 +345,7 @@ def prune_rocksdb_checkpoint(
     Restores at any version ≥ floor keep working; time travel below the
     floor is given up — that is the reclaim. Returns the deleted paths.
     Run against a quiescent checkpoint."""
-    if retain_versions < 1:
-        raise ValueError("retain_versions must be >= 1")
-    latest = latest_version(checkpoint_dir, operator_id, store_name)
-    floor = latest - retain_versions + 1
-    if floor <= 1:
-        return []
-    compact_rocksdb_checkpoint(
-        spark, checkpoint_dir, operator_id=operator_id,
-        store_name=store_name, version=floor,
+    return ss.prune_state(
+        ROCKSDB, spark, checkpoint_dir, retain_versions=retain_versions,
+        operator_id=operator_id, store_name=store_name,
     )
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    removed: list[str] = []
-    for pid in _partition_dirs(sdir):
-        pdir = _pdir(sdir, pid, store_name)
-        if not os.path.isdir(pdir):
-            continue
-        for f in sorted(os.listdir(pdir)):
-            stem = f
-            if stem.startswith("."):
-                stem = stem[1:]
-            stem, _, ext = stem.partition(".")
-            if not stem.isdigit() or int(stem) >= floor:
-                continue
-            if not (".zip" in f or ".changelog" in f):
-                continue
-            path = os.path.join(pdir, f)
-            os.remove(path)
-            removed.append(path)
-    removed.extend(
-        gc_rocksdb_checkpoint(
-            spark, checkpoint_dir, operator_id=operator_id,
-            store_name=store_name,
-        )
-    )
-    return removed

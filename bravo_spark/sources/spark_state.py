@@ -12,12 +12,12 @@ against Structured Streaming checkpoints.
 On-disk format (sql/execution/streaming/state/HDFSBackedStateStoreProvider):
 
 - each file is a compression stream (``spark.sql.streaming.stateStore.
-  compression.codec``): lz4-java block framing (default) or xerial-snappy
-  framing — both implemented here in pure Python, read AND write (the
-  lz4-java framing incl. its 28-bit XXH32 block checksums is bit-exact to
-  the real library; rewrites sniff the original file and keep its codec,
-  since a restarted query decompresses with its session-configured codec,
-  not by sniffing);
+  compression.codec``): lz4-java block framing (default), xerial-snappy
+  framing or zstd frames, read AND written here over pyarrow's block
+  codecs (the lz4-java framing incl. its 28-bit XXH32 block checksums is
+  bit-exact to the real library; rewrites sniff the original file and
+  keep its codec, since a restarted query decompresses with its
+  session-configured codec, not by sniffing);
 - inside: records ``[keyLen int BE][key][valueLen int BE][value]``,
   valueLen -1 = tombstone (delta files only), keyLen -1 = EOF;
 - key/value bytes are UnsafeRow: 8-byte null-bit header word(s), 8-byte
@@ -31,15 +31,23 @@ On-disk format (sql/execution/streaming/state/HDFSBackedStateStoreProvider):
 - per-partition ``_metadata/schema`` carries the key/value StructType
   JSONs, so reading needs no schema from the caller.
 
-Scale: one Spark task per state partition (mapPartitions over partition
-ids); each task touches only its partition's files — the same split the
-store itself uses. The writer routes rows with ``pmod(hash(key), n)`` —
-Spark's Murmur3 HashPartitioning — so rewritten files land exactly where
-the restarted query expects them. Tasks access checkpoint files with
+The module also holds the one state-store driver both providers share
+(read, write, compact, prune, the per-partition job runner, staging and
+publish); a provider contributes only a :class:`StoreLayout` — its file
+names, its full-state load and rewrite, its key/value framing.
+``sources/rocksdb_state.py`` holds the RocksDB layout.
+
+Scale: one Spark task per state partition (a ``mapInArrow`` over the
+partition-id frame of ``savepoint.task_frame``); each task touches only
+its partition's files — the same split the store itself uses. The writer
+routes rows with ``pmod(hash(key), n)`` — Spark's Murmur3
+HashPartitioning — so rewritten files land exactly where the restarted
+query expects them; tasks stage the new files and the driver publishes
+them only after the job succeeded. Tasks access checkpoint files with
 plain ``open()``/``os``, so on a multi-node cluster the checkpoint path
-must be a filesystem every executor mounts (NFS/FUSE-mounted object
-store); the per-partition task split means no single node ever holds
-more than one partition's state.
+must be a filesystem every executor (and the driver) mounts
+(NFS/FUSE-mounted object store); the per-partition task split means no
+single node ever holds more than one partition's state.
 """
 
 from __future__ import annotations
@@ -48,16 +56,20 @@ import json
 import os
 import re
 import struct
+import time
+import uuid
+from contextlib import suppress
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-import time
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from bravo_spark.codecs import fastpath
 from bravo_spark.codecs.crc32c import crc32c
-from bravo_spark.sources.atomic import atomic_write
+from bravo_spark.sources.atomic import atomic_write, fsync_path
+from bravo_spark.sources.savepoint import task_frame
 
 SNAPPY_MAGIC = b"\x82SNAPPY\x00"
 LZ4_MAGIC = b"LZ4Block"
@@ -135,7 +147,8 @@ def encode_stream_like(original: bytes | None, payload: bytes) -> bytes:
     sniffing, so a rewritten file must keep the original's framing. With
     no original to imitate, use lz4 (Spark's default codec). The lz4-java
     framing is bit-exact to the real library's reader, checksum included
-    (codecs/lz4.py, cross-validated in test_spark_state)."""
+    (``fastpath.lz4_java_encode_stream``, cross-validated in
+    test_spark_state)."""
     if original is not None and original[:8] == SNAPPY_MAGIC:
         return encode_stream_snappy(payload)
     if original is not None and original[:4] == ZSTD_FRAME_MAGIC:
@@ -247,13 +260,17 @@ def _ts_encode(v) -> int:
     """Exact integer microseconds since epoch from the timedelta COMPONENTS —
     ``total_seconds()*1e6`` is a float round-trip that truncates ~1.2% of
     microsecond-resolution timestamps off by 1us (2**53 < microseconds in a
-    century), silently drifting fields a rewrite never touched."""
+    century), silently drifting fields a rewrite never touched. An aware
+    datetime (what Arrow hands a worker) is converted to UTC first; a
+    naive one is taken as UTC."""
     import datetime as _dt
 
     global _EPOCH
     if _EPOCH is None:
         _EPOCH = _dt.datetime(1970, 1, 1)
-    d = v.replace(tzinfo=None) - _EPOCH
+    if v.tzinfo is not None:
+        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    d = v - _EPOCH
     return d.days * 86_400_000_000 + d.seconds * 1_000_000 + d.microseconds
 
 
@@ -430,11 +447,15 @@ def _encode_region(v, dt: T.DataType) -> bytes:
         bl = (~unscaled).bit_length() if unscaled < 0 else unscaled.bit_length()
         return unscaled.to_bytes(bl // 8 + 1, "big", signed=True)
     if isinstance(dt, T.StructType):
+        # a Row or tuple, or the dict an Arrow struct converts to
+        if isinstance(v, dict):
+            v = [v[f.name] for f in dt.fields]
         return encode_unsafe_row(tuple(v), dt)
     if isinstance(dt, T.ArrayType):
         return _encode_array(list(v), dt.elementType)
     if isinstance(dt, T.MapType):
-        items = list(v.items())
+        # a dict, or the (key, value) pairs an Arrow map converts to
+        items = list(v.items()) if isinstance(v, dict) else list(v)
         karr = _encode_array([k for k, _ in items], dt.keyType)
         varr = _encode_array([x for _, x in items], dt.valueType)
         return struct.pack("<q", len(karr)) + karr + varr
@@ -505,29 +526,72 @@ def encode_unsafe_row(values: tuple, schema: T.StructType) -> bytes:
     return bytes(fixed) + bytes(var)
 
 
-def _finalize_state_file(path: str) -> None:
-    """Re-issue the integrity metadata Spark checks on load: the
-    ChecksumCheckpointFileManager sidecar (``<file>.crc`` JSON with the
-    CRC32C and size of the main file — stale ones fail the restart with
-    CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED) and Hadoop's own
-    ``.<name>.crc`` dotfiles for both."""
-    data = open(path, "rb").read()
+# ---------------------------------------------------------------------------
+# integrity sidecars
+# ---------------------------------------------------------------------------
+
+
+def _crc_signed(data: bytes) -> int:
     v = crc32c(data)
-    if v >= 1 << 31:
-        v -= 1 << 32  # Java signed int
+    return v - (1 << 32) if v >= 1 << 31 else v  # Java signed int
+
+
+def _sidecar(data: bytes) -> bytes:
+    """The ChecksumCheckpointFileManager sidecar (``<file>.crc`` JSON with
+    the CRC32C and size of the main file) for a file holding ``data``."""
     doc = {
         "algorithm": "CRC32C",
-        "value": v,
+        "value": _crc_signed(data),
         "mainFileSize": len(data),
         "timestampMs": int(time.time() * 1000),
     }
-    with atomic_write(path + ".crc", "w") as f:
-        json.dump(doc, f, separators=(",", ":"))
+    return json.dumps(doc, separators=(",", ":")).encode()
+
+
+def _drop_hadoop_crcs(path: str) -> None:
     d, name = os.path.split(path)
     for stale in (f".{name}.crc", f".{name}.crc.crc"):
-        p = os.path.join(d, stale)
-        if os.path.exists(p):
-            os.remove(p)
+        with suppress(FileNotFoundError):
+            os.remove(os.path.join(d, stale))
+
+
+def _finalize_state_file(path: str) -> None:
+    """Re-issue the integrity metadata Spark checks on load: the
+    ChecksumCheckpointFileManager sidecar (stale ones fail the restart
+    with CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED) and Hadoop's own
+    ``.<name>.crc`` dotfiles for both."""
+    with open(path, "rb") as f:
+        data = f.read()
+    with atomic_write(path + ".crc") as f:
+        f.write(_sidecar(data))
+    _drop_hadoop_crcs(path)
+
+
+def bad_sidecars(pdir: str) -> list[tuple[str, str]]:
+    """(path, reason) of every version file in a partition dir (either
+    provider's) whose ``<file>.crc`` sidecar disagrees with it. A missing
+    sidecar is fine: the manager tolerates absence on load, and a
+    disagreeing sidecar kills the restart."""
+    out = []
+    for f in sorted(os.listdir(pdir)):
+        path = os.path.join(pdir, f)
+        if (f.startswith(".") or not os.path.exists(path + ".crc")
+                or not f.endswith((".delta", ".snapshot", ".zip", ".changelog"))):
+            continue
+        try:
+            with open(path + ".crc") as fh:
+                side = json.loads(fh.read())
+            with open(path, "rb") as fh:
+                data = fh.read()
+            want_v, want_n = side.get("value"), side.get("mainFileSize")
+        except (OSError, ValueError, AttributeError) as ex:
+            out.append((path, f"{f}.crc unreadable: {str(ex)[:80]}"))
+            continue
+        v = _crc_signed(data)
+        if want_v != v or want_n not in (None, len(data)):
+            out.append((path, f"{f}: sidecar says crc={want_v} size={want_n}, "
+                              f"file has crc={v} size={len(data)}"))
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -535,14 +599,12 @@ def _finalize_state_file(path: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _state_dir(checkpoint_dir: str, operator_id: int, store_name: str | None = None) -> str:
+def _state_dir(checkpoint_dir: str, operator_id: int) -> str:
     return os.path.join(checkpoint_dir, "state", str(operator_id))
 
 
-def _partitions(sdir: str, store_name: str | None = None) -> list[int]:
-    return sorted(
-        int(d) for d in os.listdir(sdir) if d.isdigit()
-    )
+def _partitions(sdir: str) -> list[int]:
+    return sorted(int(d) for d in os.listdir(sdir) if d.isdigit())
 
 
 def _pdir(sdir: str, pid: int, store_name: str | None = None) -> str:
@@ -550,6 +612,38 @@ def _pdir(sdir: str, pid: int, store_name: str | None = None) -> str:
     nest one level deeper: ``state/<op>/<pid>/<store_name>/``."""
     p = os.path.join(sdir, str(pid))
     return p if store_name is None else os.path.join(p, store_name)
+
+
+def _store(store_name: str | None) -> str | None:
+    """Both providers keep the default store in the partition dir itself;
+    the HDFS front doors call it None and the RocksDB ones "default"."""
+    return None if store_name in (None, "default") else store_name
+
+
+def store_partitions(sdir: str, store: str | None) -> list[tuple[int, str]]:
+    """(pid, dir) of every partition holding ``store``. A partition
+    without a named store's subdirectory (a partially-written checkpoint)
+    has nothing to read or rewrite and is skipped."""
+    out = []
+    for pid in _partitions(sdir):
+        pdir = _pdir(sdir, pid, store)
+        if os.path.isdir(pdir):
+            out.append((pid, pdir))
+    return out
+
+
+def iter_store_partitions(checkpoint_dir: str):
+    """Every (operator_id, store, pid, dir) of a checkpoint's state, for
+    each operator and each of its stores (None = the default store)."""
+    sroot = os.path.join(checkpoint_dir, "state")
+    ops = sorted(
+        int(d) for d in os.listdir(sroot) if d.isdigit()
+    ) if os.path.isdir(sroot) else []
+    for op in ops:
+        sdir = _state_dir(checkpoint_dir, op)
+        for store in list_store_names(checkpoint_dir, op) or [None]:
+            for pid, pdir in store_partitions(sdir, store):
+                yield op, store, pid, pdir
 
 
 def _read_java_utf(raw: bytes, pos: int) -> tuple[str, int]:
@@ -604,8 +698,9 @@ def _parse_schema_file(raw: bytes) -> tuple[T.StructType, T.StructType]:
 def write_state_schema(
     pdir: str, key_schema: T.StructType, value_schema: T.StructType
 ) -> None:
-    """Write a ``_metadata/schema`` file in the v2 layout (used when
-    bootstrapping a store directory, and by tests as a fixture writer)."""
+    """Replace a partition's ``_metadata/schema`` file (v2 layout) through
+    :func:`atomic_write`, dropping the stale checksum files of the old
+    one. Used by schema migration, and by tests as a fixture writer."""
     def utf(s: str) -> bytes:
         b = s.encode("utf-8")
         return struct.pack(">H", len(b)) + b
@@ -615,9 +710,13 @@ def write_state_schema(
         chunks = [js[i : i + 65535] for i in range(0, len(js), 65535)] or [""]
         return struct.pack(">i", len(chunks)) + b"".join(utf(c) for c in chunks)
 
-    os.makedirs(os.path.join(pdir, "_metadata"), exist_ok=True)
-    with open(os.path.join(pdir, "_metadata", "schema"), "wb") as f:
+    meta = os.path.join(pdir, "_metadata")
+    os.makedirs(meta, exist_ok=True)
+    with atomic_write(os.path.join(meta, "schema")) as f:
         f.write(utf("v2") + chunked(key_schema) + chunked(value_schema))
+    for stale in (".schema.crc", "schema.crc", ".schema.crc.crc"):
+        with suppress(FileNotFoundError):
+            os.remove(os.path.join(meta, stale))
 
 
 def read_state_schema(
@@ -646,59 +745,51 @@ def migrate_spark_state_schema(
     Changing a stateful query's state schema between runs fails Spark's
     StateSchemaCompatibilityChecker (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE)
     because the checkpoint's ``_metadata/schema`` still records the old
-    layout. This rewrites both halves of the contract: every existing
-    schema file is re-serialized with the new StructTypes (same v2
-    ``writeUTF`` framing the checker parses; stale Hadoop checksum
-    dotfiles dropped), and the state rows are rewritten as ``df`` —
-    already transformed by the caller to the new shape (e.g. the old
-    state with a null-initialized new column). After this, restarting the
-    EVOLVED query finds schema equality and continues from the migrated
-    values — the Spark analog of the reference's X2 type-change
-    migration for Flink state (KeyedStateReader custom deserializers).
+    layout. This rewrites both halves of the contract: the state rows are
+    rewritten as ``df`` — already transformed by the caller to the new
+    shape (e.g. the old state with a null-initialized new column) — and
+    every existing schema file is re-serialized with the new StructTypes
+    (same v2 ``writeUTF`` framing the checker parses; stale Hadoop checksum
+    dotfiles dropped). After this, restarting the EVOLVED query finds
+    schema equality and continues from the migrated values — the Spark
+    analog of the reference's X2 type-change migration for Flink state
+    (KeyedStateReader custom deserializers).
 
-    ``provider`` picks the row-rewrite backend: ``"hdfs"`` (default,
-    delta files) or ``"rocksdb"`` (changelog/zip checkpoints via
-    ``write_rocksdb_spark_state``) — both providers keep the schema file
-    in the same per-partition ``_metadata/schema`` location, so the
-    schema half is shared.
+    ``provider`` picks the row-rewrite layout: ``"hdfs"`` (default, delta
+    files) or ``"rocksdb"`` (changelog/zip checkpoints); both keep the
+    schema file in the same per-partition ``_metadata/schema`` location.
+    The schema files are replaced only after the row rewrite published, so
+    a failed migration leaves both halves as they were.
 
     Returns the version written. Scale: schema files are one per store
-    (driver-side metadata); the row rewrite is the provider writer's
-    one task per state partition."""
+    (driver-side metadata); the row rewrite is one task per state
+    partition."""
     if provider not in ("hdfs", "rocksdb"):
         raise ValueError(f"provider must be 'hdfs' or 'rocksdb', got {provider!r}")
     old_key, _old_val = read_state_schema(checkpoint_dir, operator_id)
-    key_schema = new_key_schema if new_key_schema is not None else old_key
-    _check_schema(key_schema)
-    _check_schema(new_value_schema)
     sdir = _state_dir(checkpoint_dir, operator_id)
-    wrote = False
-    for pid in _partitions(sdir):
-        meta = os.path.join(sdir, str(pid), "_metadata")
-        if os.path.exists(os.path.join(meta, "schema")):
-            write_state_schema(
-                os.path.join(sdir, str(pid)), key_schema, new_value_schema
-            )
-            for stale in (".schema.crc", "schema.crc", ".schema.crc.crc"):
-                p = os.path.join(meta, stale)
-                if os.path.exists(p):
-                    os.remove(p)
-            wrote = True
-    if not wrote:
+    schema_dirs = [
+        os.path.join(sdir, str(pid)) for pid in _partitions(sdir)
+        if os.path.exists(os.path.join(sdir, str(pid), "_metadata", "schema"))
+    ]
+    if not schema_dirs:
         raise FileNotFoundError(
             f"no _metadata/schema under any partition of {sdir}"
         )
-    # the row rewrite reads the JUST-EVOLVED schema file, so rows encode
-    # and route in the new layout; tombstones cover old keys by raw bytes
+    layout = HDFS
     if provider == "rocksdb":
-        from bravo_spark.sources.rocksdb_state import write_rocksdb_spark_state
-
-        return write_rocksdb_spark_state(
-            spark, checkpoint_dir, df, operator_id=operator_id, version=version
-        )
-    return write_spark_state(
-        spark, checkpoint_dir, df, operator_id=operator_id, version=version
+        from bravo_spark.sources.rocksdb_state import ROCKSDB as layout
+    return write_state(
+        layout, spark, checkpoint_dir, df, operator_id=operator_id,
+        version=version,
+        key_schema=new_key_schema if new_key_schema is not None else old_key,
+        value_schema=new_value_schema, schema_dirs=schema_dirs,
     )
+
+
+# ---------------------------------------------------------------------------
+# version files: records, replay, the tombstone increment
+# ---------------------------------------------------------------------------
 
 
 def _iter_records(payload: bytes):
@@ -719,70 +810,576 @@ def _iter_records(payload: bytes):
             pos += vlen
 
 
+def _records(puts: dict[bytes, bytes], tombstones=()) -> bytes:
+    """A record stream: the puts, the tombstones (valueLen -1), then the
+    keyLen -1 EOF."""
+    out = bytearray()
+    for kb, vb in puts.items():
+        out += struct.pack(">i", len(kb)) + kb + struct.pack(">i", len(vb)) + vb
+    for kb in tombstones:
+        out += struct.pack(">i", len(kb)) + kb + struct.pack(">i", -1)
+    out += struct.pack(">i", -1)
+    return bytes(out)
+
+
+def _versions(files, suffix: str) -> set[int]:
+    """Versions named ``<v>.<suffix>`` among ``files``."""
+    out = set()
+    for f in files:
+        stem, _, rest = f.partition(".")
+        if rest == suffix and stem.isdigit():
+            out.add(int(stem))
+    return out
+
+
+class StoreLayout:
+    """What differs between the two providers' state files; the driver
+    below owns the rest (version discovery, replay, the tombstone
+    increment, staging and publish, and the per-partition jobs).
+
+    - ``increment``/``full``: the suffixes of a version's changes and of
+      a full state; ``committed``: the suffixes that commit a version;
+    - ``prefix``: the bytes framing every key and value;
+    - ``load_full(pdir, v)``: the state a full file holds;
+    - ``rewrite(pdir, v, desired, stage)``: stage the files that make the
+      state at ``v`` equal ``desired``;
+    - ``snapshot(pdir, v, desired, stage)``: stage a full file of ``desired``;
+    - ``drops_shadowed_full``: publishing an increment deletes the full
+      file of the same version (the loader would prefer it);
+    - ``reclaim(...)``: what pruning deletes beyond the version files."""
+
+    name = increment = full = ""
+    committed: tuple[str, ...] = ()
+    prefix = b""
+    drops_shadowed_full = False
+
+    def reclaim(self, spark, checkpoint_dir, operator_id, store) -> list[str]:
+        return []
+
+
+class HdfsLayout(StoreLayout):
+    """HDFSBackedStateStoreProvider: ``{v}.delta`` per version and a
+    ``{v}.snapshot`` when maintenance uploaded one."""
+
+    name, increment, full, committed = "HDFS", "delta", "snapshot", ("delta",)
+
+    def load_full(self, pdir: str, version: int) -> dict[bytes, bytes]:
+        with open(os.path.join(pdir, f"{version}.snapshot"), "rb") as f:
+            records = _iter_records(decode_stream(f.read()))
+            return {k: v for k, v in records if v is not None}
+
+    def rewrite(self, pdir, version, desired, stage) -> None:
+        """If store maintenance already wrote ``{version}.snapshot``, Spark
+        and our reader load it directly and never replay the delta, so the
+        snapshot is rewritten too (it carries no tombstones)."""
+        stage_increment(self, pdir, version, desired, stage)
+        if os.path.exists(os.path.join(pdir, f"{version}.snapshot")):
+            self.snapshot(pdir, version, desired, stage)
+
+    def snapshot(self, pdir, version, desired, stage) -> None:
+        """Stage ``{version}.snapshot`` — the file the provider's background
+        maintenance (``doSnapshot``) uploads. It is framed like the store's
+        own files (a restarted query decompresses with its configured
+        codec, not by sniffing): the version's snapshot, else its delta,
+        else any state file; only a store with no files falls back to lz4
+        (Spark's default codec)."""
+        snap = os.path.join(pdir, f"{version}.snapshot")
+        candidates = [snap, os.path.join(pdir, f"{version}.delta")] + sorted(
+            os.path.join(pdir, f) for f in os.listdir(pdir)
+            if f.endswith((".delta", ".snapshot"))
+        )
+        like = next((c for c in candidates if os.path.exists(c)), None)
+        old = None
+        if like is not None:
+            with open(like, "rb") as f:
+                old = f.read()
+        stage(snap, encode_stream_like(old, _records(desired)))
+
+
+HDFS = HdfsLayout()
+
+
+def replay(layout: StoreLayout, pdir: str, version: int) -> dict[bytes, bytes]:
+    """One partition's state at ``version``: the greatest full file ≤
+    version, then every increment after it up to version, applying
+    tombstones. Version 0 is the empty pre-first-commit state."""
+    files = os.listdir(pdir) if version > 0 else []
+    base = max((v for v in _versions(files, layout.full) if v <= version), default=0)
+    state = layout.load_full(pdir, base) if base else {}
+    for ver in range(base + 1, version + 1):
+        path = os.path.join(pdir, f"{ver}.{layout.increment}")
+        if not os.path.exists(path):
+            raise FileNotFoundError(
+                f"missing {layout.increment} {path} for version {version}"
+            )
+        with open(path, "rb") as f:
+            for k, v in _iter_records(decode_stream(f.read())):
+                if v is None:
+                    state.pop(k, None)
+                else:
+                    state[k] = v
+    return state
+
+
 def _load_partition_state(pdir: str, version: int) -> dict[bytes, bytes]:
     """Replay greatest snapshot ≤ version + deltas up to version."""
-    snaps = [
-        int(f.split(".")[0])
-        for f in os.listdir(pdir)
-        if f.endswith(".snapshot") and int(f.split(".")[0]) <= version
+    return replay(HDFS, pdir, version)
+
+
+def stage_increment(layout, pdir, version, desired, stage) -> None:
+    """Stage ``{version}.<increment>`` so that replay gives ``desired``.
+
+    Tombstones must cover every key that could exist in the state the
+    restarted query replays the new file ON TOP OF — state at
+    ``version - 1`` — plus every key the ORIGINAL increment touched (a key
+    it tombstoned is absent from state AT ``version``, so diffing against
+    that would silently resurrect it). Extra tombstones for never-present
+    keys are harmless no-ops. The new file keeps the old one's framing."""
+    path = os.path.join(pdir, f"{version}.{layout.increment}")
+    base = set(replay(layout, pdir, version - 1))
+    old = None
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            old = f.read()
+        base.update(k for k, _ in _iter_records(decode_stream(old)))
+    tombstones = [k for k in base if k not in desired]
+    stage(path, encode_stream_like(old, _records(desired, tombstones)))
+
+
+# ---------------------------------------------------------------------------
+# staging and publish: a failed job publishes nothing
+# ---------------------------------------------------------------------------
+# Tasks write every new file (and its sidecar) under a hidden per-write
+# name, fsynced; once the job succeeded the driver renames them into place,
+# and on any failure it deletes them. Staged names sort out of every
+# listing the readers and Spark make (leading dot, no version suffix).
+
+
+class Stager:
+    """Write files of one rewrite under ``.<name>.<token>.staged``."""
+
+    def __init__(self, token: str):
+        self.token = token
+
+    def __call__(self, path: str, data: bytes, sidecar: bool = True) -> None:
+        d, name = os.path.split(path)
+        files = [(name, data)] + ([(name + ".crc", _sidecar(data))] if sidecar else [])
+        for n, blob in files:
+            with open(os.path.join(d, f".{n}.{self.token}.staged"), "wb") as f:
+                f.write(blob)
+                f.flush()
+                os.fsync(f.fileno())
+
+
+def _staged(pdir: str, token: str) -> list[tuple[str, str]]:
+    """(staged, final) paths of one rewrite in a partition: SSTs first (a
+    zip must not name an SST before it is in place), sidecars last."""
+    suffix = f".{token}.staged"
+    out = []
+    for d in (os.path.join(pdir, "SSTs"), pdir):
+        if os.path.isdir(d):
+            out += [
+                (os.path.join(d, f), os.path.join(d, f[1 : -len(suffix)]))
+                for f in sorted(os.listdir(d))
+                if f.startswith(".") and f.endswith(suffix)
+            ]
+    return sorted(out, key=lambda p: p[1].endswith(".crc"))
+
+
+def _publish(layout: StoreLayout, pdirs: list[str], token: str) -> None:
+    for pdir in pdirs:
+        moves = _staged(pdir, token)
+        for tmp, final in moves:
+            os.replace(tmp, final)
+            if final.endswith(".crc"):
+                continue
+            _drop_hadoop_crcs(final)
+            stem, _, ext = os.path.basename(final).partition(".")
+            if layout.drops_shadowed_full and ext == layout.increment:
+                shadow = os.path.join(pdir, f"{stem}.{layout.full}")
+                for p in (shadow, shadow + ".crc"):
+                    with suppress(FileNotFoundError):
+                        os.remove(p)
+                _drop_hadoop_crcs(shadow)
+        for d in {os.path.dirname(final) for _, final in moves}:
+            fsync_path(d)
+
+
+def _await_group(sc, group: str, timeout: float = 120.0) -> None:
+    """Wait until no task of job group ``group`` runs: when a job fails,
+    its other tasks are cancelled, and a cancelled Python task can still
+    stage a file until its worker is stopped."""
+    st = sc.statusTracker()
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        stages = [st.getStageInfo(s) for j in jobs if j for s in j.stageIds]
+        if not any(s and s.numActiveTasks for s in stages):
+            return
+        time.sleep(0.1)
+
+
+def _commit(spark: SparkSession, layout: StoreLayout, pdirs: list[str], job) -> None:
+    """Run ``job(token)`` (Spark jobs staging files under ``token``), then
+    publish what it staged. On any failure, once the jobs' tasks have
+    stopped, delete every staged file."""
+    token = uuid.uuid4().hex
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", token)
+    try:
+        job(token)
+        _publish(layout, pdirs, token)
+    except BaseException:
+        _await_group(sc, token)
+        for pdir in pdirs:
+            for tmp, _ in _staged(pdir, token):
+                with suppress(FileNotFoundError):
+                    os.remove(tmp)
+        raise
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+
+
+# ---------------------------------------------------------------------------
+# the driver: one implementation of every state-store operation
+# ---------------------------------------------------------------------------
+
+
+def run_per_partition(spark: SparkSession, items: list[str], fn) -> list:
+    """One task per item (a partition dir): ``fn(item)`` runs on an
+    executor and its JSON-able result comes back in item order. The
+    driver sends and receives metadata only."""
+    if not items:
+        return []
+
+    def task(batches):
+        for b in batches:
+            got = b.column(0).to_pylist()
+            res = [json.dumps(fn(i)) for i in got]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(got, pa.string()), pa.array(res, pa.string())],
+                names=["item", "result"],
+            )
+
+    out = dict(
+        task_frame(spark, "item", items)
+        .mapInArrow(task, "item string, result string")
+        .collect()
+    )
+    return [json.loads(out[i]) for i in items]
+
+
+def latest_state_version(
+    layout: StoreLayout, checkpoint_dir: str, operator_id: int = 0,
+    store_name: str | None = None,
+) -> int:
+    """The newest version EVERY partition has (min of per-partition
+    maxes) — the last CONSISTENT version. A killed query can leave a torn
+    in-flight version that only some partitions committed; the raw max
+    would select it and every read/rewrite of the others would fail on the
+    missing file. Partitions with no version files, or without a named
+    store's subdirectory, are skipped; if nothing is left the error names
+    the store and the partitions missing it.
+
+    Nor is it past the version the last committed batch produced (batch
+    ``b`` commits version ``b + 1``): a query stopped after every
+    partition wrote a version but before the batch reached ``commits/``
+    re-runs that batch from the version before it on restart, so a patch
+    to the newer files would be overwritten."""
+    store = _store(store_name)
+    sdir = _state_dir(checkpoint_dir, operator_id)
+    per_part: list[int] = []
+    missing: list[int] = []
+    for p in _partitions(sdir):
+        pdir = _pdir(sdir, p, store)
+        if not os.path.isdir(pdir):
+            missing.append(p)
+            continue
+        files = os.listdir(pdir)
+        vs = set().union(*(_versions(files, s) for s in layout.committed))
+        if vs:
+            per_part.append(max(vs))
+    if not per_part:
+        detail = (
+            f" (store {store!r} missing in partition dirs {missing})"
+            if missing else ""
+        )
+        raise FileNotFoundError(
+            f"no committed {layout.name} state versions under {sdir}{detail}"
+        )
+    cdir = os.path.join(checkpoint_dir, "commits")
+    batches = [int(f) for f in os.listdir(cdir) if f.isdigit()] if os.path.isdir(cdir) else []
+    if batches:
+        per_part.append(max(batches) + 1)
+    return min(per_part)
+
+
+def _resolve(layout, checkpoint_dir, operator_id, version, store_name,
+             key_schema, value_schema):
+    """The store, version and schemas a read or write works on: the latest
+    consistent version unless one is given, and the checkpoint's schema
+    file unless both schemas are (named stores have none)."""
+    store = _store(store_name)
+    if version is None:
+        version = latest_state_version(layout, checkpoint_dir, operator_id, store)
+    if key_schema is None or value_schema is None:
+        if store is not None:
+            raise ValueError(
+                "named stores have no checkpoint schema file; pass "
+                "key_schema and value_schema explicitly"
+            )
+        key_schema, value_schema = read_state_schema(checkpoint_dir, operator_id)
+    _check_schema(key_schema)
+    _check_schema(value_schema)
+    return store, version, key_schema, value_schema
+
+
+def _column_names(key_schema, value_schema) -> tuple[list[str], list[str]]:
+    key_names = [f.name for f in key_schema.fields]
+    val_names = [
+        (f"value_{f.name}" if f.name in key_names else f.name)
+        for f in value_schema.fields
     ]
-    state: dict[bytes, bytes] = {}
-    start = 1
-    if snaps:
-        sv = max(snaps)
-        payload = decode_stream(open(os.path.join(pdir, f"{sv}.snapshot"), "rb").read())
-        for k, v in _iter_records(payload):
-            if v is not None:
-                state[k] = v
-        start = sv + 1
-    for ver in range(start, version + 1):
-        path = os.path.join(pdir, f"{ver}.delta")
-        if not os.path.exists(path):
-            raise FileNotFoundError(f"missing delta {path} for version {version}")
-        for k, v in _iter_records(decode_stream(open(path, "rb").read())):
-            if v is None:
-                state.pop(k, None)
-            else:
-                state[k] = v
-    return state
+    return key_names, val_names
+
+
+def _unframe(buf: bytes, prefix: bytes, what: str) -> bytes:
+    if buf[: len(prefix)] != prefix:
+        raise ValueError(
+            f"unexpected {what} encoding version {buf[:1].hex() or '<empty>'}"
+        )
+    return buf[len(prefix):]
+
+
+def partition_scan(layout, sdir, store, version, key_schema, value_schema, out_schema):
+    """The read task: partition ids in, one Arrow batch of decoded rows
+    per partition out. Timestamps reach Arrow as naive UTC datetimes,
+    which pyarrow converts field by field, so the worker's local timezone
+    never touches the stored microseconds."""
+    arrow_schema = to_arrow_schema(out_schema)
+    prefix = layout.prefix
+
+    def scan(batches):
+        for batch in batches:
+            for pid in batch.column(0).to_pylist():
+                pid = int(pid)
+                state = replay(layout, _pdir(sdir, pid, store), version)
+                rows = [
+                    (pid,)
+                    + decode_unsafe_row(_unframe(kb, prefix, "key"), key_schema)
+                    + decode_unsafe_row(_unframe(vb, prefix, "value"), value_schema)
+                    for kb, vb in state.items()
+                ]
+                if rows:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, f.type) for c, f in zip(zip(*rows), arrow_schema)],
+                        schema=arrow_schema,
+                    )
+
+    return scan
+
+
+def read_state(
+    layout: StoreLayout, spark: SparkSession, checkpoint_dir: str, *,
+    operator_id: int = 0, version: int | None = None,
+    store_name: str | None = None, key_schema: T.StructType | None = None,
+    value_schema: T.StructType | None = None,
+) -> DataFrame:
+    """A store's state at ``version`` (default: the latest consistent one)
+    as ``partition_id`` + key columns + value columns: one task per state
+    partition over the partition-id frame, each replaying only its own
+    files inside a ``mapInArrow``."""
+    store, version, key_schema, value_schema = _resolve(
+        layout, checkpoint_dir, operator_id, version, store_name,
+        key_schema, value_schema,
+    )
+    key_names, val_names = _column_names(key_schema, value_schema)
+    out_schema = T.StructType(
+        [T.StructField("partition_id", T.IntegerType(), False)]
+        + [T.StructField(n, f.dataType, True) for n, f in zip(key_names, key_schema.fields)]
+        + [T.StructField(n, f.dataType, True) for n, f in zip(val_names, value_schema.fields)]
+    )
+    sdir = _state_dir(checkpoint_dir, operator_id)
+    pids = [str(pid) for pid, _ in store_partitions(sdir, store)]
+    scan = partition_scan(
+        layout, sdir, store, version, key_schema, value_schema, out_schema
+    )
+    return task_frame(spark, "pid", pids).mapInArrow(scan, out_schema)
+
+
+def partition_rewrite(layout, sdir, store, version, key_schema, value_schema, token):
+    """The write task: routed rows in (``_pid``, ``_put``, key columns,
+    value columns; a ``_put`` false row only marks its partition), each
+    partition's new files staged under ``token``, the partition ids out.
+    Arrow hands structs over as dicts, maps as (key, value) pairs and
+    timestamps as aware datetimes; the UnsafeRow encoder takes all three."""
+    prefix = layout.prefix
+    nk = len(key_schema.fields)
+
+    def write(batches):
+        stage = Stager(token)
+        by_pid: dict[int, dict[bytes, bytes]] = {}
+        for b in batches:
+            for pid, put, *vals in zip(*(c.to_pylist() for c in b.columns)):
+                desired = by_pid.setdefault(pid, {})
+                if put:
+                    kb = prefix + encode_unsafe_row(vals[:nk], key_schema)
+                    desired[kb] = prefix + encode_unsafe_row(vals[nk:], value_schema)
+        for pid, desired in by_pid.items():
+            layout.rewrite(_pdir(sdir, pid, store), version, desired, stage)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(list(by_pid), pa.int32())], names=["pid"]
+        )
+
+    return write
+
+
+def write_state(
+    layout: StoreLayout, spark: SparkSession, checkpoint_dir: str,
+    df: DataFrame, *, operator_id: int = 0, version: int | None = None,
+    store_name: str | None = None, key_schema: T.StructType | None = None,
+    value_schema: T.StructType | None = None,
+    partition_key_cols: list[str] | None = None, schema_dirs: list[str] = (),
+) -> int:
+    """Rewrite one committed version so the state after replay equals
+    ``df`` exactly; see :func:`write_spark_state`. One job: ``df``'s rows
+    plus one marker row per state partition are routed with Spark's own
+    ``pmod(murmur3(key), n)`` and every partition's files are rewritten in
+    a ``mapInArrow``, staged; the driver publishes them only after the
+    job succeeded, then replaces the ``_metadata/schema`` files of
+    ``schema_dirs`` with the given schemas."""
+    store, version, key_schema, value_schema = _resolve(
+        layout, checkpoint_dir, operator_id, version, store_name,
+        key_schema, value_schema,
+    )
+    sdir = _state_dir(checkpoint_dir, operator_id)
+    parts = _partitions(sdir)
+    n = len(parts)
+    pdirs = [_pdir(sdir, pid, store) for pid in parts]
+    for pid, pdir in zip(parts, pdirs):
+        if not any(
+            os.path.exists(os.path.join(pdir, f"{version}.{s}"))
+            for s in (layout.increment, layout.full)
+        ):
+            raise ValueError(
+                f"partition {pid} has neither {version}.{layout.increment} "
+                f"nor {version}.{layout.full} — version {version} was never "
+                "committed there"
+            )
+    key_names, val_names = _column_names(key_schema, value_schema)
+    names = key_names + val_names
+    fields = list(key_schema.fields) + list(value_schema.fields)
+    missing = [c for c in names if c not in df.columns]
+    if missing:
+        raise ValueError(f"state DataFrame missing columns: {missing}")
+    part_cols = partition_key_cols if partition_key_cols is not None else key_names
+    unknown = [c for c in part_cols if c not in key_names]
+    if unknown:
+        raise ValueError(
+            f"partition_key_cols {unknown} are not key columns {key_names}"
+        )
+
+    # Cast to the store's exact field types before hashing/encoding: Spark's
+    # Murmur3 hashes IntegerType and LongType differently, so a drifted key
+    # type (int vs long) would route keys to the wrong partition — and a
+    # restarted query would then duplicate the key in the right one.
+    typed = df.select(
+        *[F.col(c).cast(f.dataType).alias(c) for c, f in zip(names, fields)]
+    )
+    rows = typed.select(
+        F.pmod(F.hash(*part_cols), F.lit(n)).cast("int").alias("_pid"),
+        F.lit(True).alias("_put"),
+        *names,
+    )
+    # partitions with no desired rows still need their tombstone-only
+    # rewrite: one marker row each puts every partition in the same job
+    markers = task_frame(spark, "_pid", [str(p) for p in parts]).select(
+        F.col("_pid").cast("int").alias("_pid"),
+        F.lit(False).alias("_put"),
+        *[F.lit(None).cast(f.dataType).alias(c) for c, f in zip(names, fields)],
+    )
+    routed = rows.unionByName(markers).repartition(n, "_pid")
+
+    def job(token):
+        write = partition_rewrite(
+            layout, sdir, store, version, key_schema, value_schema, token
+        )
+        routed.mapInArrow(write, "pid int").collect()  # partition ids only
+
+    _commit(spark, layout, pdirs, job)
+    for d in schema_dirs:
+        write_state_schema(d, key_schema, value_schema)
+    return version
+
+
+def compact_state(
+    layout: StoreLayout, spark: SparkSession, checkpoint_dir: str, *,
+    operator_id: int = 0, store_name: str | None = None,
+    version: int | None = None,
+) -> int:
+    """Fold each partition's replay chain into one full file at
+    ``version``, staged by one task per partition and published after
+    the job; returns the compacted version."""
+    store = _store(store_name)
+    if version is None:
+        version = latest_state_version(layout, checkpoint_dir, operator_id, store)
+    sdir = _state_dir(checkpoint_dir, operator_id)
+    pdirs = [pdir for _, pdir in store_partitions(sdir, store)]
+
+    def job(token):
+        def one(pdir):
+            desired = replay(layout, pdir, version)
+            layout.snapshot(pdir, version, desired, Stager(token))
+
+        run_per_partition(spark, pdirs, one)
+
+    _commit(spark, layout, pdirs, job)
+    return version
+
+
+def prune_state(
+    layout: StoreLayout, spark: SparkSession, checkpoint_dir: str, *,
+    retain_versions: int = 2, operator_id: int = 0,
+    store_name: str | None = None,
+) -> list[str]:
+    """Compact a full file at ``floor = latest - retain_versions + 1``,
+    delete every older version file (and sidecars), then what the layout
+    reclaims beyond them. Returns the deleted paths."""
+    if retain_versions < 1:
+        raise ValueError("retain_versions must be >= 1")
+    store = _store(store_name)
+    latest = latest_state_version(layout, checkpoint_dir, operator_id, store)
+    floor = latest - retain_versions + 1
+    if floor <= 1:
+        return []
+    compact_state(
+        layout, spark, checkpoint_dir, operator_id=operator_id,
+        store_name=store, version=floor,
+    )
+    marks = (f".{layout.increment}", f".{layout.full}")
+    removed: list[str] = []
+    for _, pdir in store_partitions(_state_dir(checkpoint_dir, operator_id), store):
+        for f in sorted(os.listdir(pdir)):
+            stem = (f[1:] if f.startswith(".") else f).partition(".")[0]
+            if stem.isdigit() and int(stem) < floor and any(m in f for m in marks):
+                path = os.path.join(pdir, f)
+                os.remove(path)
+                removed.append(path)
+    return removed + layout.reclaim(spark, checkpoint_dir, operator_id, store)
+
+
+# ---------------------------------------------------------------------------
+# HDFS-backed provider front doors
+# ---------------------------------------------------------------------------
 
 
 def latest_version(
     checkpoint_dir: str, operator_id: int = 0, store_name: str | None = None
 ) -> int:
-    """The newest version EVERY partition has (min of per-partition
-    maxes) — the last CONSISTENT version. A killed query can leave a
-    torn in-flight version where only some partitions wrote their delta;
-    the raw max would select it and every read/rewrite of that partition
-    would fail on the missing file. Partitions with no state files, or
-    (for a named store) without the store's subdirectory, are skipped —
-    the RocksDB twin's contract."""
-    sdir = _state_dir(checkpoint_dir, operator_id)
-    per_part: list[int] = []
-    missing: list[int] = []
-    for p in _partitions(sdir):
-        pdir = _pdir(sdir, p, store_name)
-        if not os.path.isdir(pdir):
-            # named store absent in this partition: a store-name typo
-            # (every partition missing) or a partially-written checkpoint
-            # (some missing) — skip, but name the store if nothing is left
-            missing.append(p)
-            continue
-        vs = [
-            int(f.split(".")[0])
-            for f in os.listdir(pdir)
-            if f.endswith(".delta")
-        ]
-        if vs:
-            per_part.append(max(vs))
-    if not per_part:
-        detail = (
-            f" (store {store_name!r} missing in partition dirs {missing})"
-            if missing
-            else ""
-        )
-        raise FileNotFoundError(f"no state versions under {sdir}{detail}")
-    return min(per_part)
+    """The last consistent version of an HDFS-backed store (see
+    :func:`latest_state_version`)."""
+    return latest_state_version(HDFS, checkpoint_dir, operator_id, store_name)
 
 
 def read_spark_state(
@@ -807,43 +1404,10 @@ def read_spark_state(
     so pass ``store_name`` plus explicit ``key_schema``/``value_schema``:
     e.g. keyToNumValues has the join key as key schema and one LongType
     ``count`` value column."""
-    if version is None:
-        version = latest_version(checkpoint_dir, operator_id, store_name)
-    if key_schema is None or value_schema is None:
-        if store_name is not None:
-            raise ValueError(
-                "named stores have no checkpoint schema file; pass "
-                "key_schema and value_schema explicitly"
-            )
-        key_schema, value_schema = read_state_schema(checkpoint_dir, operator_id)
-    _check_schema(key_schema)
-    _check_schema(value_schema)
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    parts = _partitions(sdir, store_name)
-
-    key_names = [f.name for f in key_schema.fields]
-    val_names = [
-        (f"value_{f.name}" if f.name in key_names else f.name)
-        for f in value_schema.fields
-    ]
-    out_schema = T.StructType(
-        [T.StructField("partition_id", T.IntegerType(), False)]
-        + [T.StructField(n, f.dataType, True) for n, f in zip(key_names, key_schema.fields)]
-        + [T.StructField(n, f.dataType, True) for n, f in zip(val_names, value_schema.fields)]
+    return read_state(
+        HDFS, spark, checkpoint_dir, operator_id=operator_id, version=version,
+        store_name=store_name, key_schema=key_schema, value_schema=value_schema,
     )
-
-    def scan(pids):
-        for pid in pids:
-            state = _load_partition_state(_pdir(sdir, pid, store_name), version)
-            for kb, vb in state.items():
-                yield (
-                    (pid,)
-                    + decode_unsafe_row(kb, key_schema)
-                    + decode_unsafe_row(vb, value_schema)
-                )
-
-    rdd = spark.sparkContext.parallelize(parts, max(1, len(parts)))
-    return spark.createDataFrame(rdd.mapPartitions(lambda it: scan(list(it))), out_schema)
 
 
 def write_spark_state(
@@ -864,6 +1428,7 @@ def write_spark_state(
     value columns (names per ``read_state_schema``); rows are routed to
     partitions with Spark's own ``pmod(murmur3(key), n)`` so a restarted
     query finds every key where it expects it. Returns the version written.
+    A failed rewrite publishes nothing.
 
     Named stores (the write twin of ``read_spark_state``'s
     ``store_name``): a stream-stream join keeps four schema-file-less
@@ -876,134 +1441,11 @@ def write_spark_state(
     loses it. Sibling stores must be patched coherently
     (``keyToNumValues``'s count == that key's index count in
     ``keyWithIndexToValue``); this writer patches one store per call."""
-    if version is None:
-        version = latest_version(checkpoint_dir, operator_id, store_name)
-    if key_schema is None or value_schema is None:
-        if store_name is not None:
-            raise ValueError(
-                "named stores have no checkpoint schema file; pass "
-                "key_schema and value_schema explicitly"
-            )
-        key_schema, value_schema = read_state_schema(checkpoint_dir, operator_id)
-    _check_schema(key_schema)
-    _check_schema(value_schema)
-    sdir = _state_dir(checkpoint_dir, operator_id, store_name)
-    parts = _partitions(sdir, store_name)
-    n = len(parts)
-    key_names = [f.name for f in key_schema.fields]
-    val_names = [
-        (f"value_{f.name}" if f.name in key_names else f.name)
-        for f in value_schema.fields
-    ]
-    missing = [c for c in key_names + val_names if c not in df.columns]
-    if missing:
-        raise ValueError(f"state DataFrame missing columns: {missing}")
-
-    # Cast to the store's exact field types before hashing/encoding: Spark's
-    # Murmur3 hashes IntegerType and LongType differently, so a drifted key
-    # type (int vs long) would route keys to the wrong partition — and a
-    # restarted query would then duplicate the key in the right one.
-    typed = df.select(
-        *[
-            F.col(c).cast(f.dataType).alias(c)
-            for c, f in zip(
-                key_names + val_names,
-                list(key_schema.fields) + list(value_schema.fields),
-            )
-        ]
+    return write_state(
+        HDFS, spark, checkpoint_dir, df, operator_id=operator_id,
+        version=version, store_name=store_name, key_schema=key_schema,
+        value_schema=value_schema, partition_key_cols=partition_key_cols,
     )
-    part_cols = partition_key_cols if partition_key_cols is not None else key_names
-    unknown = [c for c in part_cols if c not in key_names]
-    if unknown:
-        raise ValueError(
-            f"partition_key_cols {unknown} are not key columns {key_names}"
-        )
-    routed = typed.select(
-        F.pmod(F.hash(*part_cols), F.lit(n)).cast("int").alias("_pid"),
-        *key_names,
-        *val_names,
-    ).repartition(n, "_pid")
-
-    nk = len(key_names)
-
-    def write_partition(rows):
-        by_pid: dict[int, dict[bytes, bytes]] = {}
-        for r in rows:
-            pid = r["_pid"]
-            kb = encode_unsafe_row(tuple(r[1 : 1 + nk]), key_schema)
-            vb = encode_unsafe_row(tuple(r[1 + nk :]), value_schema)
-            by_pid.setdefault(pid, {})[kb] = vb
-        for pid in by_pid:
-            _rewrite_partition_version(
-                _pdir(sdir, pid, store_name), version, by_pid[pid]
-            )
-            yield pid
-
-    # partitions with no desired rows still need their tombstone-only delta;
-    # distributed like the data partitions — the driver loop this replaces
-    # would load each partition's full prior state driver-side, a
-    # bottleneck when most of a wide store is being cleared
-    touched = set(routed.rdd.mapPartitions(write_partition).collect())
-    untouched = [pid for pid in parts if pid not in touched]
-    if untouched:
-        spark.sparkContext.parallelize(untouched, len(untouched)).foreach(
-            lambda pid: _rewrite_partition_version(
-                _pdir(sdir, pid, store_name), version, {}
-            )
-        )
-    return version
-
-
-def _rewrite_partition_version(
-    pdir: str, version: int, desired: dict[bytes, bytes]
-) -> None:
-    """Replace one partition's ``{version}.delta`` (and, if present,
-    ``{version}.snapshot``) so the operator's state at ``version`` equals
-    ``desired`` exactly, whichever load path Spark takes.
-
-    Tombstones must cover every key that could exist in the state the
-    restarted query replays the new delta ON TOP OF — state at
-    ``version - 1`` — plus every key the ORIGINAL ``{version}.delta``
-    touched (a key the old delta tombstoned is absent from state AT
-    ``version``, so diffing against that would silently resurrect it).
-    Extra tombstones for never-present keys are harmless no-ops.
-
-    If store maintenance already wrote ``{version}.snapshot``, both Spark's
-    HDFSBackedStateStoreProvider and our reader load it directly and never
-    replay the delta — so the snapshot is rewritten too (snapshots carry no
-    tombstones: exactly the desired entries)."""
-    base_keys = set(_load_partition_state(pdir, version - 1))
-    old_delta = os.path.join(pdir, f"{version}.delta")
-    old_raw = None
-    if os.path.exists(old_delta):
-        old_raw = open(old_delta, "rb").read()
-        for kb, _ in _iter_records(decode_stream(old_raw)):
-            base_keys.add(kb)
-
-    payload = bytearray()
-    for kb, vb in desired.items():
-        payload += struct.pack(">i", len(kb)) + kb
-        payload += struct.pack(">i", len(vb)) + vb
-    for kb in base_keys:
-        if kb not in desired:
-            payload += struct.pack(">i", len(kb)) + kb
-            payload += struct.pack(">i", -1)
-    payload += struct.pack(">i", -1)
-    with atomic_write(old_delta) as f:
-        f.write(encode_stream_like(old_raw, bytes(payload)))
-    _finalize_state_file(old_delta)
-
-    snap = os.path.join(pdir, f"{version}.snapshot")
-    if os.path.exists(snap):
-        old_snap = open(snap, "rb").read()
-        spayload = bytearray()
-        for kb, vb in desired.items():
-            spayload += struct.pack(">i", len(kb)) + kb
-            spayload += struct.pack(">i", len(vb)) + vb
-        spayload += struct.pack(">i", -1)
-        with atomic_write(snap) as f:
-            f.write(encode_stream_like(old_snap, bytes(spayload)))
-        _finalize_state_file(snap)
 
 
 def _source_log_cuts(checkpoint_dir: str, batch_id: int) -> dict[str, int]:
@@ -1368,53 +1810,14 @@ def compact_spark_checkpoint(
     "N quick batches, restore replays N deltas" restart cliff on
     checkpoints whose maintenance never caught up. Deltas stay behind
     (time travel to older versions is unaffected); an existing snapshot
-    at ``version`` is rewritten idempotently; writes are tmp+rename
-    crash-safe via the shared finalizer. One task per state partition;
-    the driver sees partition ids only. Returns the compacted version."""
-    if version is None:
-        version = latest_version(checkpoint_dir, operator_id, store_name)
-    sdir = _state_dir(checkpoint_dir, operator_id)
-    # a partition without the named store's subdirectory has nothing to
-    # compact (see latest_version) — skip it rather than crash the job
-    pids = [
-        p for p in _partitions(sdir, store_name)
-        if os.path.isdir(_pdir(sdir, p, store_name))
-    ]
+    at ``version`` is rewritten idempotently; a failed compaction
+    publishes nothing. One task per state partition; the driver sees
+    partition ids only. Returns the compacted version."""
+    return compact_state(
+        HDFS, spark, checkpoint_dir, operator_id=operator_id,
+        store_name=store_name, version=version,
+    )
 
-    def compact_one(pid: int) -> int:
-        pdir = _pdir(sdir, pid, store_name)
-        desired = _load_partition_state(pdir, version)
-        payload = bytearray()
-        for kb, vb in desired.items():
-            payload += struct.pack(">i", len(kb)) + kb
-            payload += struct.pack(">i", len(vb)) + vb
-        payload += struct.pack(">i", -1)
-        # frame like the store's own files (a restarted query decompresses
-        # with its configured codec, not by sniffing): the version's
-        # snapshot, else its delta, else ANY state file in the partition —
-        # only a store with no files at all falls back to lz4 (Spark's
-        # default codec)
-        like = None
-        snap = os.path.join(pdir, f"{version}.snapshot")
-        delta = os.path.join(pdir, f"{version}.delta")
-        candidates = [snap, delta] + sorted(
-            os.path.join(pdir, f)
-            for f in os.listdir(pdir)
-            if f.endswith((".delta", ".snapshot"))
-        )
-        for c in candidates:
-            if os.path.exists(c):
-                like = open(c, "rb").read()
-                break
-        with atomic_write(snap) as f:
-            f.write(encode_stream_like(like, bytes(payload)))
-        _finalize_state_file(snap)
-        return pid
-
-    spark.sparkContext.parallelize(pids, max(1, len(pids))).map(
-        compact_one
-    ).collect()  # partition ids only
-    return version
 
 
 def patch_watermark(
@@ -1492,37 +1895,11 @@ def prune_spark_checkpoint(
     chain); time travel below the floor is deliberately given up — that
     is the reclaim. Returns the deleted paths. Run against a quiescent
     checkpoint."""
-    if retain_versions < 1:
-        raise ValueError("retain_versions must be >= 1")
-    latest = latest_version(checkpoint_dir, operator_id, store_name)
-    floor = latest - retain_versions + 1
-    if floor <= 1:
-        return []
-    compact_spark_checkpoint(
-        spark, checkpoint_dir, operator_id=operator_id,
-        store_name=store_name, version=floor,
+    return prune_state(
+        HDFS, spark, checkpoint_dir, retain_versions=retain_versions,
+        operator_id=operator_id, store_name=store_name,
     )
-    sdir = _state_dir(checkpoint_dir, operator_id)
-    removed: list[str] = []
-    for pid in _partitions(sdir, store_name):
-        pdir = _pdir(sdir, pid, store_name)
-        if not os.path.isdir(pdir):
-            # named store absent in this partition (see latest_version) —
-            # skipping beats crashing mid-prune after deletions started
-            continue
-        for f in sorted(os.listdir(pdir)):
-            stem = f
-            if stem.startswith("."):
-                stem = stem[1:]
-            stem, _, ext = stem.partition(".")
-            if not stem.isdigit() or int(stem) >= floor:
-                continue
-            if not (".delta" in f or ".snapshot" in f):
-                continue
-            path = os.path.join(pdir, f)
-            os.remove(path)
-            removed.append(path)
-    return removed
+
 
 
 def list_store_names(checkpoint_dir: str, operator_id: int = 0) -> list[str]:

@@ -202,14 +202,6 @@ def iter_index_handles_delta(block: bytes) -> Iterator[BlockHandle]:
 _U64_FROM = struct.Struct("<Q").unpack_from
 
 
-def parse_internal_key(ikey: bytes) -> tuple[bytes, int, int]:
-    """internal key = user_key + fixed64 LE (seq << 8 | type)."""
-    if len(ikey) < 8:
-        raise ValueError("internal key shorter than 8-byte trailer")
-    (trailer,) = _U64_FROM(ikey, len(ikey) - 8)
-    return ikey[:-8], trailer >> 8, trailer & 0xFF
-
-
 _U64_PACK = struct.Struct("<Q").pack
 
 

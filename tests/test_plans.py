@@ -1074,3 +1074,58 @@ def test_shard_write_is_one_map_in_arrow_and_read_is_one_scan(spark, tmp_path):
     assert "FileScan binaryFile" in r
     assert r.count("MapInPandas") == 1
     assert "Exchange" not in r
+
+
+def test_state_store_reads_are_one_arrow_map_over_range(spark, tmp_path):
+    """read_spark_state and read_rocksdb_spark_state replay each state
+    partition inside one MapInArrow over the partition-id Range: no state
+    row crosses the RDD API (no ExistingRDD scan, no SerializeFromObject)."""
+    import os
+    import struct
+
+    from pyspark.sql import types as T
+
+    from bravo_spark.sources import rocksdb_state as rs
+    from bravo_spark.sources import spark_state as ss
+
+    K = T.StructType([T.StructField("k", T.StringType())])
+    V = T.StructType([T.StructField("cnt", T.LongType())])
+    reads = {}
+    for name, prefix, suffix, read in (
+        ("hdfs", b"", "delta", ss.read_spark_state),
+        ("rocksdb", bytes([rs.STATE_ENCODING_VERSION]), "changelog",
+         rs.read_rocksdb_spark_state),
+    ):
+        ckpt = str(tmp_path / name)
+        for pid in range(3):
+            pdir = os.path.join(ss._state_dir(ckpt, 0), str(pid))
+            os.makedirs(pdir)
+            ss.write_state_schema(pdir, K, V)
+            kb = prefix + ss.encode_unsafe_row((f"k{pid}",), K)
+            vb = prefix + ss.encode_unsafe_row((pid,), V)
+            payload = (struct.pack(">i", len(kb)) + kb + struct.pack(">i", len(vb))
+                       + vb + struct.pack(">i", -1))
+            with open(os.path.join(pdir, f"1.{suffix}"), "wb") as f:
+                f.write(ss.encode_stream_snappy(payload))
+        reads[name] = read(spark, ckpt)
+    for name, df in reads.items():
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert p.count("MapInArrow") == 1, (name, p)
+        assert "Range (0, 3, step=1, splits=3)" in p, (name, p)
+        assert "ExistingRDD" not in p and "SerializeFromObject" not in p, (name, p)
+        assert sorted((r.k, r.cnt) for r in df.collect()) == [
+            ("k0", 0), ("k1", 1), ("k2", 2)
+        ], name
+
+
+def test_state_store_modules_do_not_use_the_rdd_api():
+    """Guard: the state-store driver and both provider layouts read and
+    write through DataFrame Arrow maps only."""
+    import inspect
+
+    from bravo_spark.sources import rocksdb_state as rs
+    from bravo_spark.sources import spark_state as ss
+
+    for mod in (ss, rs):
+        src = inspect.getsource(mod)
+        assert ".rdd" not in src and "parallelize(" not in src, mod.__name__
